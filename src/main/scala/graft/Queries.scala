@@ -481,11 +481,14 @@ object Queries {
       // the foreachBatch band joins to it (Streams.withStatePartitions).
       // AQE off for the scoped session (r19): the streaming plan itself
       // already runs without AQE (unsupported), but the foreachBatch
-      // body's batch actions (band fill, verify probe, checkpoint, two
-      // writes) re-planned every exchange adaptively — pure stage-job
-      // latency on small fixed per-batch plans whose joins are already
-      // explicit broadcasts/semi-joins (the tuneForServing rationale at
-      // micro-batch cadence; measured r19: 63 → ~40 jobs, −2 s wall)
+      // body's batch actions (band fill, candidate / token-set / verify
+      // snapshots, novel snapshot, two writes) re-planned every exchange
+      // adaptively — pure stage-job latency on small fixed per-batch
+      // plans whose joins are already explicit broadcasts/semi-joins
+      // (the tuneForServing rationale at micro-batch cadence; measured
+      // r19: 63 → ~40 jobs, −2 s wall). With one exact-Jaccard verify per
+      // batch the two micro-batches run 16 + 20 jobs (the two-pass body
+      // ran 15 + 23; sf0.1, local[4]).
       graft.streaming.Streams.withStatePartitions(s, 8,
         extraConf = Map("spark.sql.adaptive.enabled" -> "false")) { scoped =>
         graft.streaming.Streams.awaitDone(run(scoped, 0))

@@ -271,10 +271,15 @@ object Dedup {
         TextFns.distinctTokens(col(textCol)).as("shingles"))
       .select(col("doc_id"), col("shingles"), size(col("shingles")).as("n_sh"))
 
-  /** Exact-Jaccard verify over a precomputed [[tokenSetsSized]] frame. */
+  /** Exact-Jaccard verify over a precomputed [[tokenSetsSized]] frame
+    * whose rows carry an int `side` tag, for pairs (a, a_side, b, b_side):
+    * each pair end joins only its own side's token set, so one verify can
+    * compare two frames (a micro-batch and its corpus) whose doc_ids
+    * overlap without a shared id merging their rows. Output is
+    * (a, a_side, b, b_side, jacc). */
   private[graft] def verifyPairs(sized: DataFrame, pairs: DataFrame,
                                  threshold: Double): DataFrame =
-    shingleJaccard(sized, pairs, threshold)
+    shingleJaccard(sized, pairs, threshold, sided = true)
 
   /** Cap + project an already-built band frame into the persisted-index
     * shape — [[bandIndex]]'s core for callers holding cached bands. */
@@ -420,20 +425,28 @@ object Dedup {
     * could never ride a broadcast anyway, while these shuffles are linear
     * in pairs×|doc| with no wide rows. Pairs sharing zero shingles drop
     * out of the inner join — correct, since jacc=0 never meets a positive
-    * threshold. */
-  private def shingleJaccard(sized: DataFrame, pairs: DataFrame, threshold: Double): DataFrame = {
-    val ex = sized.select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val sizes = sized.select(col("doc_id"), col("n_sh"))
+    * threshold. `sided` keys every join on (doc_id, side) instead of
+    * doc_id alone (see [[verifyPairs]]). */
+  private def shingleJaccard(sized: DataFrame, pairs: DataFrame, threshold: Double,
+                             sided: Boolean = false): DataFrame = {
+    val side = if (sided) Seq("side") else Nil
+    // one pair end's key columns, renamed from sized's (doc_id[, side])
+    def key(end: String) = end +: side.map(s => s"${end}_$s")
+    def keyCols(end: String) =
+      col("doc_id").as(end) +: side.map(s => col(s).as(s"${end}_$s"))
+    val ex = sized.select((col("doc_id") +: side.map(col)) :+
+      explode(col("shingles")).as("sh"): _*)
+    val sizes = sized.select((col("doc_id") +: side.map(col)) :+ col("n_sh"): _*)
     val inter = pairs
-      .join(ex.select(col("doc_id").as("a"), col("sh")), "a")
-      .join(ex.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy("a", "b").agg(count("*").as("inter"))
+      .join(ex.select(keyCols("a") :+ col("sh"): _*), key("a"))
+      .join(ex.select(keyCols("b") :+ col("sh"): _*), key("b") :+ "sh")
+      .groupBy((key("a") ++ key("b")).map(col): _*).agg(count("*").as("inter"))
     inter
-      .join(sizes.select(col("doc_id").as("a"), col("n_sh").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n_sh").as("nb")), "b")
+      .join(sizes.select(keyCols("a") :+ col("n_sh").as("na"): _*), key("a"))
+      .join(sizes.select(keyCols("b") :+ col("n_sh").as("nb"): _*), key("b"))
       .withColumn("jacc", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .where(col("jacc") >= threshold)
-      .select(col("a"), col("b"), col("jacc"))
+      .select((key("a") ++ key("b")).map(col) :+ col("jacc"): _*)
   }
 
   /** Connected components over an undirected near-dup pair set — the
@@ -453,12 +466,13 @@ object Dedup {
     * lineage. (For adversarially long path graphs at extreme scale the
     * alternating small-star/large-star variant gives O(log n) rounds;
     * this is the GraphX-style form.) */
-  // ── iterative-loop localCheckpoint lifecycle (shared by both CC forms):
-  // each localCheckpoint registers one RDD-level persist that
-  // spark.catalog.clearCache cannot see; track the ids per generation and
-  // free the PREVIOUS generation as soon as the next one is materialized,
-  // so a loop holds at most two snapshots at a time ─────────────────────
-  private def ccSnapshot(df: DataFrame): (DataFrame, Set[Int]) = {
+  // ── localCheckpoint lifecycle (both CC forms, the streaming ingest's
+  // per-batch snapshots): each localCheckpoint registers one RDD-level
+  // persist that spark.catalog.clearCache cannot see; track its ids so
+  // the owner frees it — a CC loop the PREVIOUS generation as soon as the
+  // next one is materialized (at most two snapshots at a time), a
+  // micro-batch all of its own at the end of the batch ───────────────
+  private[graft] def trackedSnapshot(df: DataFrame): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
     val out = df.localCheckpoint()
     // Track ONLY the snapshot's own persisted RDD: localCheckpoint persists
@@ -468,7 +482,7 @@ object Dedup {
     // (A global before/after diff of getPersistentRDDs here would also
     // capture unrelated persists that happen to register DURING the eager
     // job — a lazily-registered .cache() buffer of a frame the snapshot
-    // reads, or a concurrent persist from another thread — and ccFree
+    // reads, or a concurrent persist from another thread — and freeTracked
     // would later silently drop those caches.)
     val persisted = sc.getPersistentRDDs.keySet.toSet
     val seen = scala.collection.mutable.Set[Int]()
@@ -477,7 +491,7 @@ object Dedup {
     walk(out.queryExecution.toRdd)
     (out, seen.toSet & persisted)
   }
-  private def ccFree(spark: org.apache.spark.sql.SparkSession, ids: Set[Int]): Unit =
+  private[graft] def freeTracked(spark: org.apache.spark.sql.SparkSession, ids: Set[Int]): Unit =
     ids.foreach(id =>
       spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
@@ -524,8 +538,8 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 100,
                           smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     val spark = pairs.sparkSession
-    def snapshot(df: DataFrame) = ccSnapshot(df)
-    def free(ids: Set[Int]): Unit = ccFree(spark, ids)
+    def snapshot(df: DataFrame) = trackedSnapshot(df)
+    def free(ids: Set[Int]): Unit = freeTracked(spark, ids)
     val e = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
     // Hybrid threshold via ONE bounded evaluation that both decides and
     // supplies the driver fast path: limit(threshold+1).collect() is an
@@ -597,8 +611,8 @@ object Dedup {
     * spec pins on random graphs. */
   def connectedComponentsAlternating(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
-    def snapshot(df: DataFrame) = ccSnapshot(df)
-    def free(ids: Set[Int]): Unit = ccFree(spark, ids)
+    def snapshot(df: DataFrame) = trackedSnapshot(df)
+    def free(ids: Set[Int]): Unit = freeTracked(spark, ids)
     // star phase over the symmetric adjacency: neighbors on the `keep`
     // side of each center u reconnect to m = min(closed neighborhood of
     // u). The center edge (m, u) is ALWAYS emitted — without it a

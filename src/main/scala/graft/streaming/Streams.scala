@@ -4,6 +4,7 @@ import graft.operators.{Dedup, Incremental}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Structured Streaming surface (builder brief; SURVEY §2.10 notes the
   * reference's incremental behaviors are checkpointed batch — these are
@@ -435,9 +436,10 @@ object Streams {
     }
   }
 
-  /** Streaming near-duplicate ingest: each micro-batch dedupes against
-    * the persisted corpus THROUGH its band index (an equi-join probe on
-    * (band, band_key) — never batch × corpus), and within itself, then
+  /** Streaming near-duplicate ingest: each micro-batch dedupes within
+    * itself and against the persisted corpus THROUGH its band index (an
+    * equi-join probe on (band, band_key) — never batch × corpus), with
+    * ONE exact-Jaccard verify over both kinds of candidate pair, then
     * appends only NOVEL documents to the corpus and their bands to the
     * index. This is the reference's incremental doctrine
     * (quran_mcp/embeddings.py:139-144) at stream cadence, and the shape a
@@ -449,9 +451,16 @@ object Streams {
     * Intra-batch near-dups resolve to the min-id survivor of each
     * verified component (two copies arriving in one micro-batch must not
     * both be "novel" — the same rule `near_dup_survivors` applies at
-    * batch scale). [[Dedup.bandIndex]]'s hot-bucket cap applies per
-    * append; a bucket that only crosses the cap across many appends is
-    * capped at the NEXT index rebuild, not retroactively — the audit view
+    * batch scale). A batch doc verified against the corpus is dropped
+    * even when it is its component's survivor, and then the whole
+    * component goes: A ~ B in the batch (A < B) and A ~ C in the corpus
+    * drop both A and B. A document re-sent in a later batch with the
+    * same id and text is dropped against its stored copy. Out of
+    * contract: repeated ids within one batch, and a re-sent id whose
+    * text changed (see [[nearDupIngestBatch]]).
+    * [[Dedup.bandIndex]]'s hot-bucket cap applies per append; a bucket
+    * that only crosses the cap across many appends is capped at the NEXT
+    * index rebuild, not retroactively — the audit view
     * ([[Dedup.hotBuckets]]) over the index shows what a rebuild would
     * drop.
     *
@@ -558,7 +567,7 @@ object Streams {
     * `ingest_batch=<id>` partition subdir per batch in BOTH stores,
     * written with overwrite. A crash anywhere — between the two writes,
     * or after both but before the checkpoint commit — replays the batch,
-    * and the replay (a) recomputes the same deterministic survivor set
+    * and the replay (a) recomputes the same deterministic novel set
     * (hash-keyed dedup over the offset-replayed batch), because the
     * cross-batch probe reads only PRIOR batches' partitions (partition
     * pruning on `ingest_batch != id` — the current batch's own partial
@@ -568,7 +577,26 @@ object Streams {
     * here would permanently duplicate doc_ids in the very corpus the
     * operator exists to deduplicate (round-8 advice). Prior batches'
     * partitions are always complete: Structured Streaming commits batch
-    * N to the checkpoint before starting batch N+1. */
+    * N to the checkpoint before starting batch N+1.
+    *
+    * One exact-Jaccard verify per batch covers both dedup directions.
+    * The candidate pairs are the batch's own band collisions (both ends
+    * batch-side) plus its bands' hits in the persisted index (far end
+    * corpus-side); the token sets are the batch's plus the corpus sets
+    * of colliding ids only. Each is snapshotted once, as are the verified
+    * pairs, and every snapshot is freed when the batch ends. The novel
+    * set is the batch minus the non-min members of each verified
+    * intra-batch component minus every doc verified against the corpus —
+    * the same set as deduping within the batch first and probing the
+    * corpus with the survivors, since the corpus probe only removes rows
+    * and a doc's corpus verdict does not depend on the other batch docs.
+    *
+    * Batch and corpus token sets stay apart by a side tag, not by id, so
+    * a document re-sent in a later batch with the same id and text
+    * verifies at Jaccard 1.0 against its stored copy and is dropped. Out
+    * of contract: repeated ids within one batch, and a re-sent id whose
+    * text changed — it is verified against its old text like any other
+    * doc and, when novel, stored a second time under the same id. */
   private[graft] def nearDupIngestBatch(batch0: DataFrame, batchId: Long,
       corpusPath: String, indexPath: String, idCol: String, textCol: String,
       threshold: Double = 0.9, numHashes: Int = 16, rowsPerBand: Int = 16,
@@ -577,92 +605,99 @@ object Streams {
     val batch = batch0.cache()
     // The batch's token sets and band keys are built ONCE and cached —
     // both are |batch|-scale (one row per doc / per doc·band, never
-    // pair-scale) and feed FOUR consumers below: the intra-batch
-    // candidate self-join, both exact-Jaccard verifies, the cross-batch
-    // index probe, and the index append. Before r14 each consumer
-    // re-tokenized and re-hashed the batch from scratch (~3 redundant
-    // pipeline evaluations per micro-batch, the bulk of the stream's
-    // fixed cost). Pair-scale frames stay LAZY: an r14 A/B measured the
-    // localCheckpoint snapshots of the ~7·10⁴-pair frames costing MORE
-    // than their single evaluation saves at stream cadence.
+    // pair-scale). The token sets feed the signature build and the
+    // verify's batch side; the band keys feed both candidate kinds and
+    // the index append. One count fills both before any consumer runs
+    // (banded's fill reads sized's): over a lazily-marked cache the
+    // consumers' concurrent stage jobs stampede, each re-running the
+    // batch tokenize+sign (measured r19, guide §2.4).
     val sized = Dedup.tokenSetsSized(batch, idCol, textCol).cache()
     val banded = Dedup.bandKeys(
       Dedup.minhashFromElems(
         sized.select(col("doc_id"), explode(col("shingles")).as("elem")),
         numHashes),
       rowsPerBand).cache()
-    // fill the two cached layers ONCE before the consumers evaluate:
-    // the intra-batch verify's subtrees (band self-join sides, both
-    // exact-Jaccard explode legs) run as concurrent AQE stage jobs, and
-    // over a lazily-marked cache they stampede — measured r19 (OptProbe,
-    // 32 cores): four concurrent ~6.3 s-task-time stages each re-ran the
-    // batch tokenize+sign per micro-batch (guide §2.4). banded's fill
-    // reads sized's, so one count fills both in dependency order.
-    banded.count()
-    // 1. intra-batch: min-id survivor per verified near-dup component
-    val intraPairs = Dedup.verifyPairs(sized,
-      Dedup.candidatesFromBands(banded, maxBucket), threshold)
-    val intraDup = Dedup.connectedComponents(intraPairs)
-      .where(col("doc_id") =!= col("component"))
-      .select(col("doc_id").as("dup"))
-    val survivors = batch.join(intraDup,
-      col(idCol).cast("long") === col("dup"), "left_anti")
-    // 2. cross-batch: survivors probe the persisted band index through
-    //    the CACHED band frame (bands are per-doc, so a semi-join on the
-    //    survivor ids equals re-banding the survivors); only colliding
-    //    pairs pay the exact-Jaccard verify, with the delta side's token
-    //    sets read from the cache and the corpus side's from the store.
-    //    Both reads prune away this batch's own partition (idempotency
-    //    note above).
-    def prior(path: String): DataFrame =
-      spark.read.parquet(path)
+    val snapshots = scala.collection.mutable.Set.empty[Int]
+    def snapshot(df: DataFrame): DataFrame = {
+      val (out, ids) = Dedup.trackedSnapshot(df)
+      snapshots ++= ids
+      out
+    }
+    // prior state, read with its known schema (no footer-inference job
+    // per store) and pruned to OTHER batches' partitions (idempotency
+    // note above)
+    def prior(path: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(path)
         .where(col("ingest_batch") =!= batchId).drop("ingest_batch")
-    val dupVsCorpus =
-      if (hasPriorBatches(spark, corpusPath, batchId) &&
-          hasPriorBatches(spark, indexPath, batchId)) {
-        val survivorBands = banded.join(
-          survivors.select(col(idCol).cast("long").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-        val cand = survivorBands.select(col("band"), col("band_key"), col("doc_id").as("a"))
-          .join(prior(indexPath).select(col("band"), col("band_key"), col("doc_id").as("b")),
-            Seq("band", "band_key"))
-          .select("a", "b").distinct()
-        // corpus-side token sets only for docs that actually collide
-        // (r19): the verify's joins restrict to candidate partners
-        // anyway, but feeding them the WHOLE prior corpus tokenized
-        // re-paid the corpus tokenize every micro-batch — the semi-join
-        // prune re-evaluates cand once more, which is a band equi-join
-        // over the cached band frame and the (small) persisted index,
-        // orders of magnitude cheaper than tokenizing non-colliding
-        // corpus docs. Results identical by construction.
-        val priorCorpus = prior(corpusPath)
-        val priorNeeded = priorCorpus.join(
-          cand.select(col("b").as("__cand_b")),
-          priorCorpus(idCol).cast("long") === col("__cand_b"), "left_semi")
-        val sizedBoth = sized.unionByName(
-          Dedup.tokenSetsSized(priorNeeded, idCol, textCol))
-        Dedup.verifyPairs(sizedBoth, cand, threshold)
-          .select(col("a").as("dup")).distinct()
-      } else batch.select(col(idCol).cast("long").as("dup")).limit(0)
-    // localCheckpoint: evaluated once, feeds both writes below
-    val novel = survivors.join(dupVsCorpus,
-      col(idCol).cast("long") === col("dup"), "left_anti")
-      .localCheckpoint()
-    // 3. append-only state growth — at the BATCH granularity: new
-    //    partitions accrete, existing ones are never rewritten (except a
-    //    retry overwriting its own), so per batch the I/O is
-    //    O(|batch| + collisions) regardless of corpus size. The index
-    //    append derives from the same cached bands (semi-join on the
-    //    novel ids == Dedup.bandIndex(novel), minus the rebuild).
-    novel.write.mode("overwrite")
-      .parquet(s"$corpusPath/ingest_batch=$batchId")
-    Dedup.indexFromBands(
-      banded.join(novel.select(col(idCol).cast("long").as("doc_id")),
-        Seq("doc_id"), "left_semi"),
-      maxBucket)
-      .write.mode("overwrite").parquet(s"$indexPath/ingest_batch=$batchId")
-    sized.unpersist(); banded.unpersist(); batch.unpersist(); ()
+    try {
+      banded.count()
+      val hasPrior = hasPriorBatches(spark, corpusPath, batchId) &&
+        hasPriorBatches(spark, indexPath, batchId)
+      // 1. candidates (a, a_side, b, b_side), side 0 = batch, 1 = corpus:
+      //    the batch's own band pairs plus its bands' hits in the index
+      // 2. token sets: the batch's cached sets, plus corpus-side sets for
+      //    colliding ids only — tokenizing the whole prior corpus per
+      //    batch is what the index probe exists to avoid
+      // Both are snapshotted when a corpus exists: the candidates feed
+      // the corpus-side prune and the verify, and the verify reads the
+      // token sets four times. Without one, both are batch-only frames
+      // read straight from the caches.
+      def tagged(pairs: DataFrame, bSide: Int): DataFrame =
+        pairs.select(col("a"), lit(0).as("a_side"), col("b"), lit(bSide).as("b_side"))
+      val intraCand = tagged(Dedup.candidatesFromBands(banded, maxBucket), 0)
+      val batchSets = sized.withColumn("side", lit(0))
+      val (cand, sets) =
+        if (!hasPrior) (intraCand, batchSets)
+        else {
+          val cand = snapshot(intraCand.unionByName(tagged(
+            banded.select(col("band"), col("band_key"), col("doc_id").as("a"))
+              .join(prior(indexPath, IngestIndexSchema)
+                .select(col("band"), col("band_key"), col("doc_id").as("b")),
+                Seq("band", "band_key"))
+              .select("a", "b").distinct(), 1)))
+          val priorCorpus = prior(corpusPath,
+            batch.schema.add("ingest_batch", LongType))
+          val colliding = priorCorpus.join(
+            cand.where(col("b_side") === 1).select(col("b").as("__cand_b")),
+            priorCorpus(idCol).cast("long") === col("__cand_b"), "left_semi")
+          (cand, snapshot(batchSets.unionByName(
+            Dedup.tokenSetsSized(colliding, idCol, textCol).withColumn("side", lit(1)))))
+        }
+      // 3. one verify; intra-batch edges close into min-id components,
+      //    every batch doc verified against the corpus is a dup outright
+      val verified = snapshot(Dedup.verifyPairs(sets, cand, threshold))
+      val intraDup = Dedup.connectedComponents(verified.where(col("b_side") === 0))
+        .where(col("doc_id") =!= col("component"))
+        .select(col("doc_id").as("dup"))
+      val crossDup = verified.where(col("b_side") === 1).select(col("a").as("dup"))
+      // evaluated once, feeds both writes below; the dup ids are a
+      // subset of the batch's, one long each, so they ride a broadcast
+      val novel = snapshot(batch.join(broadcast(intraDup.unionByName(crossDup)),
+        col(idCol).cast("long") === col("dup"), "left_anti"))
+      // 4. append-only state growth — at the BATCH granularity: new
+      //    partitions accrete, existing ones are never rewritten (except a
+      //    retry overwriting its own), so per batch the I/O is
+      //    O(|batch| + collisions) regardless of corpus size. The index
+      //    append derives from the same cached bands (semi-join on the
+      //    novel ids == Dedup.bandIndex(novel), minus the rebuild).
+      novel.write.mode("overwrite")
+        .parquet(s"$corpusPath/ingest_batch=$batchId")
+      Dedup.indexFromBands(
+        banded.join(novel.select(col(idCol).cast("long").as("doc_id")),
+          Seq("doc_id"), "left_semi"),
+        maxBucket)
+        .write.mode("overwrite").parquet(s"$indexPath/ingest_batch=$batchId")
+    } finally {
+      Dedup.freeTracked(spark, snapshots.toSet)
+      sized.unpersist(); banded.unpersist(); batch.unpersist()
+    }
   }
+
+  /** Row schema of the [[nearDupIngest]] band index store: what
+    * [[Dedup.indexFromBands]] writes plus the partition column. */
+  private val IngestIndexSchema = StructType(Seq(
+    StructField("band", IntegerType), StructField("band_key", LongType),
+    StructField("doc_id", LongType), StructField("ingest_batch", LongType)))
 
   /** True when `path` holds state from a batch OTHER than `batchId`:
     * non-hidden entries besides the current batch's own

@@ -426,6 +426,88 @@ class StreamsSpec extends SparkSpec {
     assert(corpusIds === Seq(1L, 3L, 5L))
   }
 
+  test("near-dup ingest drops a re-sent document instead of appending it twice") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-nds").toString
+    def runBatch(rows: Seq[(Long, String)], id: Long): Unit =
+      Streams.nearDupIngestBatch(rows.toDF("doc_id", "text"), id,
+        s"$dir/corpus", s"$dir/index", "doc_id", "text")
+    def corpusIds: Seq[Long] = spark.read.parquet(s"$dir/corpus")
+      .select("doc_id").as[Long].collect().toSeq.sorted
+    val one = "spark shuffles partition data across the cluster"
+    runBatch(Seq((1L, one),
+      (3L, "an entirely different document about turtles and rivers")), 0L)
+    assert(corpusIds === Seq(1L, 3L))
+    // the same id and text again: Jaccard 1.0 against its stored copy
+    runBatch(Seq((1L, one)), 1L)
+    assert(corpusIds === Seq(1L, 3L), "a re-sent document was appended again")
+    // a doubled stored id doubled the intersection count of every pair
+    // probing it, so na + nb - inter hit 0 and the batch failed
+    runBatch(Seq((9L, one)), 2L)
+    assert(corpusIds === Seq(1L, 3L))
+  }
+
+  test("near-dup ingest drops both ends of a batch chain that reaches the corpus") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-ndc").toString
+    def runBatch(rows: Seq[(Long, String)], id: Long): Unit =
+      Streams.nearDupIngestBatch(rows.toDF("doc_id", "text"), id,
+        s"$dir/corpus", s"$dir/index", "doc_id", "text",
+        threshold = 0.92, numHashes = 16, rowsPerBand = 1)
+    def words(r: Range) = r.map(i => s"w$i").mkString(" ")
+    // J(a, b) = J(a, c) = 19/20 clear 0.92; J(b, c) = 18/20 does not, so
+    // b is a dup only through a, and a only through the corpus doc c
+    runBatch(Seq((1L, words(2 to 20))), 0L) // c
+    runBatch(Seq((5L, words(1 to 20)), (6L, words(1 to 19))), 1L) // a, b
+    assert(spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long]
+      .collect().toSeq === Seq(1L))
+  }
+
+  test("near-dup ingest stays within its Spark-job ceiling per micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-ndj").toString
+    // jobs per micro-batch, keyed by the batch id Structured Streaming
+    // stamps on every job a foreachBatch body launches
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.merge(b, 1, (x, y) => x + y))
+    }
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
+      s"$dir/corpus", s"$dir/index", s"$dir/ckpt", "doc_id", "text")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      mem.addData(
+        (1L, "spark shuffles partition data across the cluster"),
+        (2L, "spark shuffles partition data across the cluster"),
+        (3L, "an entirely different document about turtles and rivers"))
+      q.processAllAvailable()
+      // batches 1 and 2 run every step: intra dups, corpus dups, novel docs
+      for (b <- 1 to 2) {
+        mem.addData(
+          (10L * b, "spark shuffles partition data across the cluster"),
+          (10L * b + 1, s"fresh content number $b that matches nothing ingested"),
+          (10L * b + 2, s"fresh content number $b that matches nothing ingested"))
+        q.processAllAvailable()
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      val perBatch = (0 to 2).map(b => jobs.getOrDefault(b.toString, 0).intValue)
+      // the counts measured on this suite's session (local[4], AQE on) for
+      // the first batch (nothing stored to probe) and every later one: a
+      // lazy intermediate that two consumers re-derive adds jobs here
+      // long before it shows as wall time
+      val (firstCeiling, ceiling) = (24, 29)
+      assert(perBatch(0) <= firstCeiling && perBatch.tail.forall(_ <= ceiling),
+        s"jobs per micro-batch ${perBatch.mkString(", ")} exceed the ceiling " +
+          s"($firstCeiling for the first, $ceiling after)")
+      assert(spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long]
+        .collect().toSet === Set(1L, 3L, 11L, 21L))
+    } finally { spark.sparkContext.removeSparkListener(l); q.stop() }
+  }
+
   test("a 1-row batch rewrites only its own bucket partition, not the table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
