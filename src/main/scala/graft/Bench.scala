@@ -189,7 +189,7 @@ object Bench {
           // index — the warm row must measure the query users actually
           // run, in the shape a serving session holds it (stored codes,
           // predicate spill-dedupe: scan → filter → two TakeOrdereds)
-          val df = graft.operators.Similarity.ivfSq8ProbeCoded(ivfAsg, ivfCents,
+          val df = graft.operators.Similarity.ivfSq8Probe(ivfAsg, ivfCents,
             ev, graft.operators.Similarity.nProbeWideFor(ivfLists), k = 20)
           () => df.collect(): Unit
         })

@@ -1037,8 +1037,9 @@ object GraftIndexes {
     * appending onto a [[writeIvfSq8]] layout (whose assign schema
     * carries `c8`) would leave every delta row's c8 NULL — and because
     * [[openIvf]] reads the directory without mergeSchema, coded probes
-    * ([[ivfSq8ProbeSplit]], [[graft.operators.Similarity.ivfSq8ProbeCoded]],
-    * stored-codes [[graft.operators.Similarity.ivfSq8ProbeJoin]])
+    * ([[ivfSq8ProbeSplit]] and the stored-codes branches of
+    * [[graft.operators.Similarity.ivfSq8Probe]] and
+    * [[graft.operators.Similarity.ivfSq8ProbeJoin]])
     * would either silently exclude every appended vector from the code
     * rank or fail nondeterministically depending on which footer Spark
     * samples for schema. The mirror direction ([[appendIvfSq8]] onto a

@@ -483,38 +483,6 @@ object Oracles {
        |${pqCtes(m, ksub, iters)},
        |${pqRankTail("e", rerank, k)}""".stripMargin
 
-  /** Integer-grid Lloyd-trained IVF replay, parameterized ONLY by the
-    * probe width — kept for the `ann_ivf_wide` high-recall rung
-    * (nProbe=10 of 16); the scale-aware spill default has its own
-    * emitter above. */
-  private def ivfGridOracle(nProbe: Int): String =
-    s"""WITH $EmbQ,
-       |c0 AS (SELECT row_number() OVER (ORDER BY vec_id)-1 i, qv cqv
-       |       FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-       |a0 AS (SELECT vec_id, qv, i centroid FROM (
-       |  SELECT e.vec_id, e.qv, c0.i,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_dot_product(e.qv, c0.cqv) DESC, c0.i) rn
-       |  FROM e CROSS JOIN c0) WHERE rn=1),
-       |cells AS (SELECT centroid i, p, sum(CAST(qv[p+1] AS BIGINT)) s, count(*) n
-       |  FROM a0 CROSS JOIN (SELECT unnest(range(0, ${Queries.Dim})) p)
-       |  GROUP BY 1, 2),
-       |c1 AS (SELECT i, list(CAST(s // n AS DOUBLE) ORDER BY p) cqv
-       |       FROM cells GROUP BY i),
-       |cf AS (SELECT c0.i, coalesce(c1.cqv, c0.cqv) cqv
-       |       FROM c0 LEFT JOIN c1 USING(i)),
-       |a1 AS (SELECT vec_id, qv, i centroid FROM (
-       |  SELECT e.vec_id, e.qv, cf.i,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY list_dot_product(e.qv, cf.cqv) DESC, cf.i) rn
-       |  FROM e CROSS JOIN cf) WHERE rn=1),
-       |q AS (SELECT qv qq FROM e WHERE vec_id=0),
-       |probe AS (SELECT cf.i FROM cf CROSS JOIN q
-       |          ORDER BY list_dot_product(qq, cf.cqv) DESC, cf.i LIMIT $nProbe)
-       |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM a1 CROSS JOIN q
-       |WHERE centroid IN (SELECT i FROM probe)
-       |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin
-
   /** Parity-scoped near-dup closure CTEs for the two-phase streaming
     * ingest oracle: capped bands of one parity half → candidate
     * self-join → exact-Jaccard verify → min-label recursive closure →

@@ -119,13 +119,6 @@ object VecFns {
       d => coalesce(element_at(m, d.cast(LongType)), lit(0.0)))
   }
 
-  /** L2-normalized form of hashEmbed, rounded for stable serialization. */
-  def hashEmbedNormed(toks: Column, dim: Int, roundTo: Int = 6): Column = {
-    val v = hashEmbed(toks, dim)
-    val n = norm2(v)
-    transform(v, x => when(n > lit(0.0), round(x / n, roundTo)).otherwise(lit(0.0)))
-  }
-
   /** Scala-side twin of [[hashEmbed]] for encoding the query string on the
     * driver (reference encodes queries in-process too:
     * mcp_server/apps/embeddings.py:288-290). Bit-identical to the column

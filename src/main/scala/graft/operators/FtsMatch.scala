@@ -474,9 +474,6 @@ object FtsMatch {
     (ts.distinct, ps.distinct)
   }
 
-  /** Back-compat view of [[positiveAtoms]]: the exact positive tokens. */
-  def positiveTokens(e: MatchExpr): Seq[String] = positiveAtoms(e)._1
-
   /** The scoring-term predicate over a `term` column — exact tokens
     * plus any stem matches (ONE derivation; the oracle twin is
     * [[positiveTermPredSql]]). */

@@ -52,26 +52,6 @@ object Hybrid {
       .orderBy(desc("bm25"), asc("doc_id")).limit(k)
   }
 
-  /** Semantic candidates: hashed-embedding cosine top-k (E2/E3), computed
-    * in SPARSE form — the doc embeddings live as (doc_id, bucket, v)
-    * entries (Embed.hashEmbedEntries, an explode/groupBy job), the query
-    * vector is a broadcast array literal, and the dot product is a
-    * map-side-combinable sum over the entries. Never materializes a dense
-    * vector per row (the dense scalar form re-evaluates its norm per slot
-    * in interpreted eval — unusable in a scan). All partial sums are exact
-    * integers on the quantized grid, so the result is order-independent
-    * and oracle-reproducible. */
-  def vectorCandidates(docs: DataFrame, idCol: String, textCol: String,
-                       queryTokens: Seq[String], dim: Int, k: Int): DataFrame = {
-    // P8 guard: a token-less query has a zero vector — cosine would be
-    // NaN (and Spark sorts NaN above every number). Empty probe instead.
-    if (queryTokens.isEmpty)
-      return docs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0.0).as("cos")).limit(0)
-    vectorCandidatesFromSlots(embedSlots(docs, idCol, textCol, dim),
-      queryTokens, dim, k)
-  }
-
   /** Query-INDEPENDENT half of the semantic probe: per-doc sparse
     * vectors as bucket-sorted parallel arrays plus the precomputed norm
     * — (doc_id, buckets, qs, na). A serving session builds this once,

@@ -207,67 +207,22 @@ object Similarity {
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, queryVec: Column,
               nCentroids: Int, nProbe: Int, k: Int): DataFrame = {
     val q = quantized(emb, idCol, vecCol)
-    ivfTopKWith(q, seedCentroids(q, nCentroids), queryVec, nProbe, k)
+    val cents = seedCentroids(q, nCentroids)
+    val assigned = q.withColumn("centroid", bestCentroid(col("qv"), cents))
+    // centroid ranking for the query happens on the driver (K tiny)
+    val qRow = q.sparkSession.range(1).select(VecFns.quantize(queryVec).as("qv"))
+      .head().getSeq[Double](0).toArray
+    val probeSet = cents.zipWithIndex
+      .map { case (cv, i) => (dotLocal(qRow, cv), i) }
+      .sortBy { case (d, i) => (-d, i) }.take(nProbe).map(_._2)
+    assigned.where(col("centroid").isin(probeSet: _*))
+      // qRow (the query's quantized values, already evaluated once)
+      // enters as a LITERAL — a quantize expression would re-quantize
+      // the query per scanned row
+      .select(col("vec_id"),
+        round(VecFns.cosineQ(col("qv"), typedLit(qRow.toSeq)), 6).as("cos"))
+      .orderBy(desc("cos"), asc("vec_id")).limit(k)
   }
-
-  /** Trained variant: `lloydIters` k-means refinements of the seed
-    * centroids before probing. Still fully deterministic (seeds are the
-    * first-K vectors; per-cluster means are exact integral sums divided
-    * by counts, order-independent), but the centroids now SPREAD over the
-    * data instead of being whatever the first K vectors happened to be —
-    * better cluster balance and recall at the same nProbe. The untrained
-    * form stays the oracle path (its assignment is reproducible in SQL;
-    * a trained quantizer's is not worth the oracle complexity). */
-  def ivfTopKTrained(emb: DataFrame, idCol: String, vecCol: String, queryVec: Column,
-                     nCentroids: Int, nProbe: Int, k: Int,
-                     lloydIters: Int = 1): DataFrame = {
-    val q = quantized(emb, idCol, vecCol).cache()
-    // the Lloyd passes re-scan q per iteration; the top-k result is tiny,
-    // so snapshot it and release the cache (Dedup.scoped doctrine)
-    Dedup.scoped(materialize = true, q)(
-      ivfTopKWith(q, lloydCentroids(q, nCentroids, lloydIters), queryVec, nProbe, k))
-  }
-
-  /** Integer-GRID trained IVF — the shippable default ANN rung (r13):
-    * [[ivfTopKTrained]]'s recall at [[ivfTopK]]'s oracle-reproducibility.
-    * The Lloyd refinement keeps every centroid coordinate ON the
-    * quantized integer grid by taking the TRUNCATED integer mean
-    * `sum / n` (Scala `Long` division; DuckDB `//` — identical
-    * truncate-toward-zero semantics, probed before shipping), so all
-    * downstream dot products stay exact integer arithmetic in doubles
-    * (order-independent below 2^53) and the whole trained assignment +
-    * probe replays bit-for-bit in the DuckDB oracle — which a
-    * double-mean centroid cannot (its dot sums become rounding-order-
-    * dependent). Truncation costs <1 part in ~1e7 per coordinate:
-    * unmeasurable against recall.
-    *
-    * Scale shape (100 TB): identical to [[ivfTopK]] — one narrow
-    * assignment scan against K broadcast centroid literals per Lloyd
-    * iteration (the per-iteration `K·dim` cell collect is planning
-    * data, not row data), then each query reads ~nProbe/K of the
-    * corpus (registered default: nProbe=5 of 16 ≈ 31% nominal scan at
-    * recall@20 0.72 on the worst-case uniform fixture — measured per
-    * round in the bench recall section, floor ≥0.6 pinned in
-    * AnnRecallSpec; the 4/16 point is the UNTRAINED ivf_topk
-    * registered form at 0.67). */
-  def ivfTopKTrainedGrid(emb: DataFrame, idCol: String, vecCol: String, queryVec: Column,
-                         nCentroids: Int, nProbe: Int, k: Int,
-                         lloydIters: Int = 1,
-                         materialize: Boolean = true): DataFrame = {
-    val q = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    Dedup.scoped(materialize, q)(
-      ivfTopKWith(q, lloydCentroidsGrid(q, nCentroids, lloydIters), queryVec, nProbe, k))
-  }
-
-  /** `iters` integer-grid Lloyd steps from the deterministic seeds:
-    * [[lloydLoop]] with the per-cluster per-dim TRUNCATED integer mean
-    * (`sum / n` on `Long`s — exact, order-independent, and equal to
-    * DuckDB's `//`). Empty clusters keep their previous centroid. The
-    * refined centroids remain integer-valued doubles, so
-    * [[bestCentroid]]'s dots stay exact — see [[ivfTopKTrainedGrid]]. */
-  def lloydCentroidsGrid(q: DataFrame, nCentroids: Int, iters: Int = 1): Array[Array[Double]] =
-    lloydLoop(q, nCentroids, iters, sum(col("v").cast("long")),
-      r => (r.getLong(2) / r.getLong(3)).toDouble)
 
   private def quantized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("vec_id"), VecFns.quantize(col(vecCol)).as("qv"))
@@ -345,13 +300,37 @@ object Similarity {
     (array_position(dn, array_max(dn)) - 1).cast("int")
   }
 
-  /** Integer-grid Lloyd under SPHERICAL assignment: [[lloydCentroidsGrid]]'s
-    * truncated-integer-mean update (centroids stay on the quantized grid,
-    * oracle-replayable) with cluster membership decided by cosine-to-
-    * centroid instead of raw dot. */
-  def lloydCentroidsSphGrid(q: DataFrame, nCentroids: Int, iters: Int = 1): Array[Array[Double]] =
-    lloydLoop(q, nCentroids, iters, sum(col("v").cast("long")),
-      r => (r.getLong(2) / r.getLong(3)).toDouble, bestCentroidSph)
+  /** The Lloyd trainer: `iters` steps from the deterministic seeds
+    * ([[seedCentroids]]), each a spherical assignment
+    * ([[bestCentroidSph]]) → per-(cluster, dim) cell aggregate
+    * (posexplode/groupBy — one narrow shuffle of K·dim cells) → new
+    * centroid. The update is the per-cell TRUNCATED integer mean
+    * `sum / n` on `Long`s (DuckDB `//` — identical truncate-toward-zero
+    * semantics), so every centroid coordinate stays on the quantized
+    * integer grid, all downstream dots stay exact integer arithmetic in
+    * doubles (order-independent below 2^53), and the DuckDB oracle
+    * replays the training bit-for-bit. Truncation costs < 1 part in
+    * ~1e7 per coordinate. Empty clusters keep their previous centroid. */
+  def lloydCentroidsSphGrid(q: DataFrame, nCentroids: Int, iters: Int = 1): Array[Array[Double]] = {
+    var cents = seedCentroids(q, nCentroids)
+    for (_ <- 0 until iters) {
+      val assigned = q.withColumn("centroid", bestCentroidSph(col("qv"), cents))
+      val cells = assigned
+        .select(col("centroid"), posexplode(col("qv")).as(Seq("pos", "v")))
+        .groupBy("centroid", "pos")
+        .agg(sum(col("v").cast("long")).as("s"), count("*").as("n"))
+        .collect() // K·dim cells — driver-side planning data, tiny
+      val byC = cells.groupBy(_.getInt(0))
+      cents = cents.indices.map { i =>
+        byC.get(i) match {
+          case Some(rows) =>
+            rows.sortBy(_.getInt(1)).map(r => (r.getLong(2) / r.getLong(3)).toDouble)
+          case None => cents(i)
+        }
+      }.toArray
+    }
+    cents
+  }
 
   /** Spherical grid-trained IVF index WITH boundary spill — the
     * scale-aware ANN default (r14). Each vector is indexed under its
@@ -590,7 +569,7 @@ object Similarity {
     * bytes. The byte-narrow scan shapes are the single-query forms,
     * where the candidate cut is a bounded driver literal
     * ([[graft.GraftIndexes.ivfSq8ProbeSplit]]'s two-phase read,
-    * [[ivfSq8ProbeCoded]] over a cached coded index); a batched job
+    * [[ivfSq8Probe]] over a cached coded index); a batched job
     * that must stay byte-narrow at 100 TB should run the code-rank
     * pass as its own job and join the bounded winners back.
     *
@@ -689,10 +668,20 @@ object Similarity {
     * SQ8 codes shrink the BYTES of what remains (ADC over int8 codes;
     * with [[graft.GraftIndexes]]-persisted codes partitioned by
     * centroid the probe reads nProbe partitions × 1 byte/dim), and the
-    * exact rerank touches only k·rerank full vectors. Zero-norm
-    * candidates are dropped before coding ([[sq8Codes]]'s guard). Same
-    * dedup rule as [[ivfProbeSpill]] (spill double-assignments keep one
-    * row per vec_id). */
+    * exact rerank touches only k·rerank full vectors. Same dedup rule
+    * as [[ivfProbeSpill]] (spill double-assignments keep one row per
+    * vec_id).
+    *
+    * An index whose rows already CARRY their codes in a `c8` column (an
+    * open — cached or not — of the [[graft.GraftIndexes.writeIvfSq8]]
+    * layout) is ranked on the STORED codes — the warm serving form,
+    * and at disk scale the stored codes are the scan column (the byte
+    * claim). Zero-norm rows were dropped at coding time there. Any
+    * other index derives the codes from qv per probe call, dropping
+    * zero-norm candidates first ([[sq8Codes]]'s guard). The two forms
+    * are bit-identical (codes are integral values; the byte→double
+    * cast is exact — spec-pinned), the same choice [[ivfSq8ProbeJoin]]
+    * makes. */
   def ivfSq8Probe(assigned: DataFrame, cents: Array[Array[Double]],
                   q: Array[Float], nProbe: Int, k: Int,
                   rerank: Int = 4): DataFrame = {
@@ -701,40 +690,15 @@ object Similarity {
       case Some(c) => c
       case None => return emptyTopK(assigned)
     }
-    val probeSet = spillProbeSet(cents, q, nProbe)
-    val cand = probeDeduped(assigned, probeSet)
-      .withColumn("qm", sq8Max(col("qv")))
-      .where(col("qm") > 0)
+    val probed = probeDeduped(assigned, spillProbeSet(cents, q, nProbe))
+    val (cand, codes) =
+      if (assigned.columns.contains("c8"))
+        (probed, col("c8").cast("array<double>"))
+      else
+        (probed.withColumn("qm", sq8Max(col("qv"))).where(col("qm") > 0),
+          sq8Codes(col("qv"), col("qm")))
     cand.select(col("vec_id"), col("qv"),
-        round(VecFns.cosineQ(sq8Codes(col("qv"), col("qm")), typedLit(q8)), 6).as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
-  }
-
-  /** [[ivfSq8Probe]] over an index whose rows already CARRY their SQ8
-    * codes in a `c8` column (an open — cached or not — of the
-    * [[graft.GraftIndexes.writeIvfSq8]] layout): ranks on the STORED
-    * codes instead of re-deriving them from qv per probe call — the
-    * warm serving form, and at disk scale the stored codes are the
-    * scan column (the byte claim). Zero-norm rows were dropped at
-    * coding time, so no qm guard is needed. Results are bit-identical
-    * to [[ivfSq8Probe]] (codes are integral values; the byte→double
-    * cast is exact — spec-pinned). */
-  def ivfSq8ProbeCoded(coded: DataFrame, cents: Array[Array[Double]],
-                       q: Array[Float], nProbe: Int, k: Int,
-                       rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(q)
-    val q8 = VecFns.sq8CodesLocal(qq) match {
-      case Some(c) => c
-      case None => return emptyTopK(coded)
-    }
-    val probeSet = spillProbeSet(cents, q, nProbe)
-    probeDeduped(coded, probeSet)
-      .select(col("vec_id"), col("qv"),
-        round(VecFns.cosineQ(col("c8").cast("array<double>"), typedLit(q8)), 6)
-          .as("approx"))
+        round(VecFns.cosineQ(codes, typedLit(q8)), 6).as("approx"))
       .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
       .select(col("vec_id"),
         round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
@@ -808,7 +772,7 @@ object Similarity {
   /** Train PQ codebooks (the FAISS PQ design, Jégou et al. 2011): the
     * dim-dimensional grid splits into `m` contiguous subspaces of
     * dim/m dims; each runs its own `iters`-step EUCLIDEAN Lloyd on the
-    * integer grid through the ONE shared [[lloydLoop]] scaffolding
+    * integer grid under [[lloydCentroidsSphGrid]]'s rules
     * (deterministic lowest-id seeds, truncated-integer means, empty
     * cells keep their seed) — every arithmetic step exact, so the
     * DuckDB replay is bit-for-bit. Returns books(j)(i) = sub-centroid
@@ -1160,100 +1124,11 @@ object Similarity {
     (array_position(dots, array_max(dots)) - 1).cast("int")
   }
 
-  /** `iters` Lloyd steps from the deterministic seeds: assign → per-
-    * cluster elementwise mean (posexplode/groupBy — one narrow shuffle of
-    * K·dim cells, order-independent exact sums) → repeat. Empty clusters
-    * keep their previous centroid. */
-  def lloydCentroids(q: DataFrame, nCentroids: Int, iters: Int = 1): Array[Array[Double]] =
-    lloydLoop(q, nCentroids, iters, sum("v"),
-      r => r.getDouble(2) / r.getLong(3))
-
-  /** The ONE Lloyd training loop all variants share (assign →
-    * per-(cluster, dim) cell aggregate → keep-seed-on-empty), so the
-    * scaffolding can never diverge between them; only the per-cell
-    * mean (exact double vs truncated integer) and the assignment
-    * geometry (raw dot vs spherical) differ. */
-  private def lloydLoop(q: DataFrame, nCentroids: Int, iters: Int,
-                        sumExpr: Column,
-                        mean: org.apache.spark.sql.Row => Double,
-                        best: (Column, Array[Array[Double]]) => Column = bestCentroid)
-      : Array[Array[Double]] = {
-    var cents = seedCentroids(q, nCentroids)
-    for (_ <- 0 until iters) {
-      val assigned = q.withColumn("centroid", best(col("qv"), cents))
-      val cells = assigned
-        .select(col("centroid"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("centroid", "pos").agg(sumExpr.as("s"), count("*").as("n"))
-        .collect() // K·dim cells — driver-side planning data, tiny
-      val byC = cells.groupBy(_.getInt(0))
-      cents = cents.indices.map { i =>
-        byC.get(i) match {
-          case Some(rows) => rows.sortBy(_.getInt(1)).map(mean).toArray
-          case None => cents(i)
-        }
-      }.toArray
-    }
-    cents
-  }
-
   private def dotLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }; s
   }
 
-  private def ivfTopKWith(q: DataFrame, cents: Array[Array[Double]],
-                          queryVec: Column, nProbe: Int, k: Int): DataFrame = {
-    val assigned = q.withColumn("centroid", bestCentroid(col("qv"), cents))
-    val qvec = VecFns.quantize(queryVec)
-    // centroid ranking for the query happens on the driver (K tiny)
-    val qRow = q.sparkSession.range(1).select(qvec.as("qv")).head().getSeq[Double](0).toArray
-    ivfProbe(assigned, cents, qRow, nProbe, k)
-  }
-
-  /** Query-independent trained-IVF index — the IVF face of [[annIndex]]:
-    * (vec_id, qv, centroid) rows plus the trained centroids (planning
-    * data, K·dim doubles). Build ONCE per corpus version; a serving
-    * session caches the assignment (or persists it partitioned by
-    * `centroid`, making every probe partition pruning) and answers each
-    * query with [[ivfProbeGrid]]'s nProbe-list scan + exact rerank. The
-    * caller owns caching `emb` if `lloydIters` > 1 (each iteration
-    * re-scans it once). */
-  def ivfIndexGrid(emb: DataFrame, idCol: String, vecCol: String,
-                   nCentroids: Int, lloydIters: Int = 1)
-      : (DataFrame, Array[Array[Double]]) = {
-    val q = quantized(emb, idCol, vecCol)
-    val cents = lloydCentroidsGrid(q, nCentroids, lloydIters)
-    (q.withColumn("centroid", bestCentroid(col("qv"), cents)), cents)
-  }
-
-  /** Array-query probe of a prebuilt [[ivfIndexGrid]]: quantization and
-    * centroid ranking on the DRIVER (bit-equal to the column form —
-    * `VecFns.quantizeLocal` is pinned element-identical to `quantize`),
-    * so the centroid filter is a LITERAL isin over ≤nProbe ints — a
-    * cached or bucket-partitioned assignment prunes on it without
-    * re-deriving anything per row (the [[annTopKWith]] doctrine). */
-  def ivfProbeGrid(assigned: DataFrame, cents: Array[Array[Double]],
-                   q: Array[Float], nProbe: Int, k: Int): DataFrame =
-    ivfProbe(assigned, cents, graft.functions.VecFns.quantizeLocal(q), nProbe, k)
-
-  private def ivfProbe(assigned: DataFrame, cents: Array[Array[Double]],
-                       qRow: Array[Double], nProbe: Int, k: Int): DataFrame = {
-    val probeSet = cents.zipWithIndex
-      .map { case (cv, i) => (dotLocal(qRow, cv), i) }
-      .sortBy { case (d, i) => (-d, i) }.take(nProbe).map(_._2)
-    assigned.where(col("centroid").isin(probeSet: _*))
-      // qRow (the query's quantized values, already evaluated once)
-      // enters as a LITERAL — a quantize expression would re-quantize
-      // the query per scanned row
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qRow.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
-  }
-
-  /** Query-independent ANN index: quantized vectors with their LSH
-    * bucket, computed ONCE. A serving session caches this (or persists it
-    * partitioned by bucket, making every probe partition pruning); the
-    * per-query work is then [[annTopKWith]]'s filtered scan + rerank. */
   /** SemDeDup-style cluster-scoped semantic dedup (Abbas et al. 2023,
     * arXiv:2303.09540 — "SemDeDup: data-efficient learning at web-scale
     * through semantic deduplication"): coarse k-means clusters scope the
@@ -1268,21 +1143,15 @@ object Similarity {
     * centroid literals; the duplicate probe is an equi-join on centroid
     * — shuffle on the cluster key only — and pair volume is Σ|cluster|²,
     * bounded by scaling nCentroids with the corpus (the paper runs 50k
-    * clusters for LAION-scale). Seed centroids (first-K vectors) keep
-    * the assignment SQL-reproducible — the DuckDB oracle replays it
-    * exactly; [[lloydCentroids]] is the drop-in trained variant for
-    * better cluster balance at scale (same join shape, not worth the
-    * oracle complexity). */
+    * clusters for LAION-scale). The centroids are the seeds (first-K
+    * vectors), which keeps the assignment SQL-reproducible — the DuckDB
+    * oracle replays it exactly. */
   def semanticDedupSurvivors(emb: DataFrame, idCol: String, vecCol: String,
                              nCentroids: Int, tau: Double,
-                             lloydIters: Int = 0,
                              materialize: Boolean = true): DataFrame = {
     val q = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val cents =
-      if (lloydIters > 0) lloydCentroids(q, nCentroids, lloydIters)
-      else seedCentroids(q, nCentroids)
-    val asg = Dedup.maybeCache(
-      q.withColumn("centroid", bestCentroid(col("qv"), cents)), materialize)
+    val asg = Dedup.maybeCache(q.withColumn("centroid",
+      bestCentroid(col("qv"), seedCentroids(q, nCentroids))), materialize)
     val a = asg.select(col("centroid"), col("vec_id").as("a"), col("qv").as("qa"))
     val b = asg.select(col("centroid"), col("vec_id").as("b"), col("qv").as("qb"))
     val dups = a.join(b, "centroid").where(col("a") < col("b"))
@@ -1293,6 +1162,10 @@ object Similarity {
         .select("vec_id", "centroid").orderBy("vec_id"))
   }
 
+  /** Query-independent ANN index: quantized vectors with their LSH
+    * bucket, computed ONCE. A serving session caches this (or persists it
+    * partitioned by bucket, making every probe partition pruning); the
+    * per-query work is then [[annTopKWith]]'s filtered scan + rerank. */
   def annIndex(emb: DataFrame, idCol: String, vecCol: String,
                dim: Int, nBits: Int): DataFrame =
     emb.select(col(idCol).cast("long").as("vec_id"), VecFns.quantize(col(vecCol)).as("qv"))

@@ -48,11 +48,6 @@ class AnnRecallSpec extends SparkSpec {
       nCentroids = 2, tau = 1.1)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(all === Seq(0L, 1L, 2L, 3L, 4L))
-    // trained-centroid variant: same survivors policy, same answer here
-    val trained = Similarity.semanticDedupSurvivors(rows, "vec_id", "embedding",
-      nCentroids = 2, tau = 0.95, lloydIters = 2)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(trained === Seq(0L, 3L))
   }
 
   test("ivfTopK recall@20 vs exact cosine (16 centroids, nProbe=4 — 1/4 of the corpus scanned)") {
@@ -117,17 +112,6 @@ class AnnRecallSpec extends SparkSpec {
         qv, Queries.Dim, nBits = 6, k = K + 1, hamming = 1))
     info(f"multi-probe recall@20 = $r%.3f")
     assert(r >= 0.1, f"multi-probe recall degraded: $r%.3f")
-  }
-
-  test("grid-trained IVF 16/5 rung (the r13 default) holds recall@20 >= 0.6") {
-    // superseded as the registered default by the scale-aware spill
-    // form below, kept as a measured ladder point: 31% nominal scan,
-    // deterministic integer-grid training, measured 0.72
-    val r = recallAt(Seq(0L, 7L, 42L, 99L, 123L), (e, qv) =>
-      Similarity.ivfTopKTrainedGrid(e, "vec_id", "embedding", typedLit(qv),
-        nCentroids = 16, nProbe = 5, k = K + 1, lloydIters = 1))
-    info(f"ivf 16/5 recall@20 = $r%.3f")
-    assert(r >= 0.6, f"IVF 16/5 rung degraded: $r%.3f")
   }
 
   test("REGISTERED default ann_topk (wide spill IVF x SQ8 codes) holds recall@20 >= 0.85 at <= 8% byte scan") {
@@ -417,7 +401,7 @@ class AnnRecallSpec extends SparkSpec {
     assert(r >= 0.4, f"multi-probe h1 recall degraded: $r%.3f")
   }
 
-  test("lloydCentroidsGrid stays on the integer grid and keeps seeds for empty clusters") {
+  test("lloydCentroidsSphGrid stays on the integer grid, keeps seeds for empty clusters") {
     import spark.implicits._
     // three tight groups + a far singleton; 4 centroids, seeds = ids 0-3
     val rows = Seq(
@@ -427,14 +411,15 @@ class AnnRecallSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val q = rows.select(col("vec_id"),
       graft.functions.VecFns.quantize(col("embedding")).as("qv"))
-    val cents = Similarity.lloydCentroidsGrid(q, nCentroids = 4, iters = 2)
+    val cents = Similarity.lloydCentroidsSphGrid(q, nCentroids = 4, iters = 2)
     assert(cents.length === 4)
     // every trained coordinate is integer-valued (the exactness contract
     // that lets the DuckDB oracle replay the training bit-for-bit)
     for (c <- cents; x <- c) assert(x == math.floor(x) && !x.isNaN,
       s"non-integer trained centroid coordinate $x")
-    // cluster 0 absorbed vec 4: its mean over {(1e8,0,..),(1e8,1e7,..)}
-    // truncates to (1e8, 5e6, 0, 0)
+    // cluster 0 absorbed vec 4 (spherical score 1e8 against seed 0, 1e7
+    // against seed 1): its mean over {(1e8,0,..),(1e8,1e7,..)} truncates
+    // to (1e8, 5e6, 0, 0)
     assert(cents(0).toSeq === Seq(1e8, 5e6, 0.0, 0.0))
     // a centroid whose list goes EMPTY keeps its previous value: seeds 0
     // and 1 identical → every member ties → lowest centroid index wins →
@@ -445,7 +430,7 @@ class AnnRecallSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .select(col("vec_id"),
         graft.functions.VecFns.quantize(col("embedding")).as("qv"))
-    val cents2 = Similarity.lloydCentroidsGrid(dup, nCentroids = 2, iters = 1)
+    val cents2 = Similarity.lloydCentroidsSphGrid(dup, nCentroids = 2, iters = 1)
     assert(cents2(1).toSeq === Seq(1e8, 0.0, 0.0, 0.0),
       "empty cluster must keep its seed centroid")
     assert(cents2(0).toSeq === Seq(1e8, (2e7.toLong / 3).toDouble, 0.0, 0.0))

@@ -39,24 +39,22 @@ class PlanAuditSpec extends SparkSpec {
       val p = plan(Queries.all(q)(spark, sf))
       assert(p.contains("TakeOrderedAndProject"), s"$q lacks TakeOrdered")
     }
-    // the registered ann_topk (grid-trained IVF) snapshots its ≤k rows
-    // (Dedup.scoped), so its returned plan is a checkpoint scan — audit
-    // the LAZY pipeline, the near-dup-paths doctrine
+    // the registered ivf_topk (seed-centroid IVF) is a lazy pipeline
     import graft.operators.Similarity
     import org.apache.spark.sql.functions.typedLit
     val e = Tables(spark, sf, "embeddings")
     val qv = e.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
-    val lazyGrid = Similarity.ivfTopKTrainedGrid(e, "vec_id", "embedding",
-      typedLit(qv), nCentroids = 16, nProbe = 5, k = 20, lloydIters = 1,
-      materialize = false)
-    val p = plan(lazyGrid)
-    assert(p.contains("TakeOrderedAndProject"), "ivf grid (lazy) lacks TakeOrdered")
+    val p = plan(Similarity.ivfTopK(e, "vec_id", "embedding",
+      typedLit(qv), nCentroids = 16, nProbe = 5, k = 20))
+    assert(p.contains("TakeOrderedAndProject"), "ivf_topk lacks TakeOrdered")
     // the probe is partition pruning on the centroid literal set, never
     // a join against the centroid table
-    assert(!p.contains("Join"), "ivf grid probe plans a join")
-    // the r14 scale-aware spill default: same doctrine — centroid-literal
-    // filter (partition pruning), no join, top-k as TakeOrdered
+    assert(!p.contains("Join"), "ivf_topk probe plans a join")
+    // the scale-aware spill IVF snapshots its ≤k rows (Dedup.scoped), so
+    // its returned plan is a checkpoint scan — audit the LAZY pipeline,
+    // the near-dup-paths doctrine: centroid-literal filter (partition
+    // pruning), no join, top-k as TakeOrdered
     val lazySpill = Similarity.ivfTopKSpill(e, "vec_id", "embedding", qv,
       k = 20, nCentroids = 16, nProbe = 2, lloydIters = 1,
       materialize = false)
@@ -667,10 +665,13 @@ class PlanAuditSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq === mem,
       "persisted split probe diverged from the in-memory composed rung")
-    // the warm serving form (rank on STORED codes, one plan) is also
-    // bit-identical — byte→double cast of integral codes is exact
-    val codedProbe = Similarity.ivfSq8ProbeCoded(asg, cents, q, nProbe = 3, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the warm serving form (one plan over the opened c8 layout) ranks
+    // on the STORED codes and is also bit-identical — byte→double cast
+    // of integral codes is exact
+    val coded = Similarity.ivfSq8Probe(asg, cents, q, nProbe = 3, k = 10)
+    val codedProbe = coded.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert("""ReadSchema: [^\n]*c8""".r.findFirstIn(plan(coded)).isDefined,
+      s"probe over the coded layout does not read the stored codes:\n${plan(coded).take(500)}")
     assert(codedProbe === mem,
       "coded warm probe diverged from the in-memory composed rung")
     // the batched join's stored-codes branch (rank on persisted c8)

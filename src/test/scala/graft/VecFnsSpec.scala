@@ -64,27 +64,6 @@ class VecFnsSpec extends SparkSpec {
     assert(pruned.nonEmpty)
   }
 
-  test("one Lloyd iteration: trained IVF recall@20 on sf0.01 vs deterministic seeds") {
-    val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
-    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
-    val probes = Seq(0L, 7L, 23L)
-    val (baseR, trainedR) = probes.map { p =>
-      val q = typedLit(e.where($"vec_id" === p).head().getSeq[Float](1).toArray)
-      val exact = ids(Similarity.cosineTopK(e, "vec_id", "embedding", q, 20))
-      val base = ids(Similarity.ivfTopK(e, "vec_id", "embedding", q, 16, 4, 20))
-      val trained = ids(Similarity.ivfTopKTrained(e, "vec_id", "embedding", q, 16, 4, 20))
-      (base.intersect(exact).size / 20.0, trained.intersect(exact).size / 20.0)
-    }.unzip
-    val (b, t) = (baseR.sum / probes.size, trainedR.sum / probes.size)
-    info(f"recall@20 nProbe=4/16: seeds=$b%.2f lloyd1=$t%.2f")
-    assert(t >= 0.4, s"trained recall too low: $t")
-    assert(t >= b - 0.05, s"training degraded recall: $b -> $t")
-    // determinism: same call twice, same result
-    val q0 = typedLit(e.where($"vec_id" === 0).head().getSeq[Float](1).toArray)
-    assert(ids(Similarity.ivfTopKTrained(e, "vec_id", "embedding", q0, 16, 4, 20)) ===
-      ids(Similarity.ivfTopKTrained(e, "vec_id", "embedding", q0, 16, 4, 20)))
-  }
-
   test("random projection: exact signed sums, linearity, and JL rank preservation") {
     import graft.operators.Embed
     // hand-check: qv of all-ones → y_j = Σ_d s_{j,d} exactly
