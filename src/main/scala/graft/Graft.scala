@@ -512,8 +512,7 @@ object GraftIndexes {
     * same guard as the rung. */
   private def sq8CodeFrame(emb: DataFrame, idCol: String,
                            vecCol: String): DataFrame =
-    emb.select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    Similarity.quantized(emb, idCol, vecCol)
       .withColumn("qm", Similarity.sq8Max(col("qv")))
       .where(col("qm") > 0)
       .select(col("vec_id"),
@@ -524,7 +523,7 @@ object GraftIndexes {
     sq8CodeFrame(emb, idCol, vecCol)
       .write.mode("overwrite").parquet(s"$dir/codes")
 
-  /** [[appendIvf]]'s SQ8 sibling — and the easier half of the
+  /** The flat SQ8 layer's append — the easier half of the
     * incremental-index story: the code layer has NO trained state
     * (per-vector max scaling), so appending a delta is just encoding
     * it with the same per-row rule and appending the files; a
@@ -559,10 +558,7 @@ object GraftIndexes {
     val qq = VecFns.quantizeLocal(queryVec)
     val q8 = VecFns.sq8CodesLocal(qq) match {
       case Some(c) => c
-      case None => // zero query: empty, matching the in-memory rung
-        val s = codes.sparkSession
-        import s.implicits._
-        return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
+      case None => return Similarity.emptyTopK(codes) // zero query
     }
     val cand = codes
       .select(col("vec_id"),
@@ -570,12 +566,9 @@ object GraftIndexes {
           .as("approx"))
       .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
       .select("vec_id")
-    emb.select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    Similarity.quantized(emb, idCol, vecCol)
       .join(broadcast(cand), "vec_id")
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(Similarity.exactTopK(typedLit(qq), k))
   }
 
   /** Persist the PQ layer — (vec_id, pcode array<TINYINT>) codes plus
@@ -590,27 +583,38 @@ object GraftIndexes {
   def writePq(spark: SparkSession, emb: DataFrame, idCol: String,
               vecCol: String, dir: String, dim: Int, m: Int = 8,
               ksub: Int = 16, iters: Int = 1): Unit = {
-    val qd = emb.select(col(idCol).cast("long").as("vec_id"),
-      VecFns.quantize(col(vecCol)).as("qv")).cache()
+    val qd = Similarity.quantized(emb, idCol, vecCol).cache()
     try {
       val books = Similarity.pqTrain(qd, dim, m, ksub, iters)
       qd.select(col("vec_id"),
           Similarity.pqCodeExpr(col("qv"), books, dim / m).as("pcode"))
         .write.mode("overwrite").parquet(s"$dir/codes")
-      import spark.implicits._
-      books.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cv, i) => (j, i, cv.toSeq) }
-      }.toSeq.toDF("j", "i", "cqv").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/books")
+      writeBooks(spark, dir, books)
     } finally qd.unpersist()
+  }
+
+  /** The codebook sidecar of [[writePq]] and [[writeRpq]]: m·ksub rows
+    * (j, i, cqv), read back by [[readBooks]]. */
+  private def writeBooks(spark: SparkSession, dir: String,
+                         books: Array[Array[Array[Double]]]): Unit = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (cb, j) =>
+      cb.zipWithIndex.map { case (cv, i) => (j, i, cv.toSeq) }
+    }.toSeq.toDF("j", "i", "cqv").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/books")
+  }
+
+  private def readBooks(spark: SparkSession,
+                        dir: String): Array[Array[Array[Double]]] = {
+    val rows = spark.read.parquet(s"$dir/books").orderBy("j", "i").collect()
+    rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
+      .sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)).toArray
   }
 
   /** Open a persisted PQ layer: (codes frame, codebooks). */
   def openPq(spark: SparkSession,
              dir: String): (DataFrame, Array[Array[Array[Double]]]) = {
-    val rows = spark.read.parquet(s"$dir/books").orderBy("j", "i").collect()
-    val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
-      .sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)).toArray
+    val books = readBooks(spark, dir)
     (spark.read.parquet(s"$dir/codes"), books)
   }
 
@@ -625,8 +629,7 @@ object GraftIndexes {
                vecCol: String, dir: String): Unit = {
     val (codes, books) = openPq(spark, dir)
     val dim = books.length * books.head.head.length
-    delta.select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    Similarity.quantized(delta, idCol, vecCol)
       .select(col("vec_id"),
         Similarity.pqCodeExpr(col("qv"), books, dim / books.length).as("pcode"))
       .join(codes.select("vec_id"), Seq("vec_id"), "left_anti")
@@ -643,18 +646,11 @@ object GraftIndexes {
               vecCol: String, books: Array[Array[Array[Double]]],
               queryVec: Array[Float], k: Int, rerank: Int = 4): DataFrame = {
     val qq = VecFns.quantizeLocal(queryVec)
-    if (qq.map(x => x * x).sum == 0) {
-      val s = codes.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-    }
+    if (qq.map(x => x * x).sum == 0) return Similarity.emptyTopK(codes)
     val ids = Similarity.pqRankIds(codes, books, qq, k * rerank)
-    emb.select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    Similarity.quantized(emb, idCol, vecCol)
       .join(broadcast(ids), "vec_id")
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(Similarity.exactTopK(typedLit(qq.toSeq), k))
   }
 
   /** Persist the scale-aware spill-IVF index (the r14 `ann_topk`
@@ -667,12 +663,21 @@ object GraftIndexes {
     * to the in-memory one). `nCentroids = 0` derives K from the
     * corpus size ([[graft.operators.Similarity.nListsFor]]). */
   def writeIvf(spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
-               dir: String, nCentroids: Int = 0, lloydIters: Int = 3,
-               spillDelta: Double = Similarity.SpillDelta): Unit = {
+               dir: String, nCentroids: Int = 0, lloydIters: Int = 3): Unit =
+    writeSpillIvf(spark, emb, idCol, vecCol, dir, nCentroids, lloydIters)((a, _) => a)
+
+  /** The build shared by every spill-IVF layout: derive K (when
+    * `nCentroids = 0`), train + spill-assign, write `code`'s rows of
+    * the assignment clustered and partitioned by `centroid`, then the
+    * trained-centroid sidecar. `code` may run jobs of its own (the
+    * residual books); this writer adds none. */
+  private def writeSpillIvf(spark: SparkSession, emb: DataFrame, idCol: String,
+                            vecCol: String, dir: String, nCentroids: Int,
+                            lloydIters: Int)(
+      code: (DataFrame, Array[Array[Double]]) => DataFrame): Unit = {
     val k = if (nCentroids > 0) nCentroids else Similarity.nListsFor(emb.count())
-    val (asg, cents) = Similarity.ivfIndexSpill(emb, idCol, vecCol, k,
-      lloydIters, spillDelta)
-    clusterForWrite(asg, "centroid", k)
+    val (asg, cents) = Similarity.ivfIndexSpill(emb, idCol, vecCol, k, lloydIters)
+    clusterForWrite(code(asg, cents), "centroid", k)
       .write.mode("overwrite").partitionBy("centroid").parquet(s"$dir/assign")
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -698,21 +703,12 @@ object GraftIndexes {
     * `nCentroids = 0` derives K from the corpus size. */
   def writeIvfSq8(spark: SparkSession, emb: DataFrame, idCol: String,
                   vecCol: String, dir: String, nCentroids: Int = 0,
-                  lloydIters: Int = 3,
-                  spillDelta: Double = Similarity.SpillDelta): Unit = {
-    val k = if (nCentroids > 0) nCentroids else Similarity.nListsFor(emb.count())
-    val (asg, cents) = Similarity.ivfIndexSpill(emb, idCol, vecCol, k,
-      lloydIters, spillDelta)
-    clusterForWrite(ivfSq8Rows(asg), "centroid", k)
-      .write.mode("overwrite").partitionBy("centroid").parquet(s"$dir/assign")
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "cvec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-  }
+                  lloydIters: Int = 3): Unit =
+    writeSpillIvf(spark, emb, idCol, vecCol, dir, nCentroids, lloydIters)(
+      (asg, _) => ivfSq8Rows(asg))
 
   /** The composed layout's row projection — ONE derivation shared by
-    * [[writeIvfSq8]], [[appendIvfSq8]], and the bench's warm coded
+    * [[writeIvfSq8]], [[appendIvf]], and the bench's warm coded
     * index, so base build, delta append, and the cached serving form
     * cannot drift on what a code row is (the appendSq8 doctrine).
     * Zero-norm vectors drop. */
@@ -723,27 +719,10 @@ object GraftIndexes {
         transform(Similarity.sq8Codes(col("qv"), col("qm")), x => x.cast("byte")))
       .select("vec_id", "qv", "c8", "primary", "centroid")
 
-  /** INCREMENTAL maintenance of a [[writeIvfSq8]] layout — the
-    * composed twin of [[appendIvf]]: the delta assigns against the
-    * read-back trained centroids (same spill rule as the base build,
-    * no retrain), encodes through the same [[ivfSq8Rows]] projection,
-    * and appends only its partitions. Same IDEMPOTENT-APPEND rule as
-    * [[appendIvf]]/[[appendSq8]] (r16): existing (vec_id, centroid)
-    * pairs are anti-joined away, so a retried append is a no-op and
-    * the phase-1 code-rank cut can never be diluted by duplicates.
-    * Retrain cadence is caller policy — re-run [[writeIvfSq8]] when N
-    * crosses the next K ∝ √N boundary. */
+  /** [[appendIvf]] under its earlier composed-layout name. */
   def appendIvfSq8(spark: SparkSession, delta: DataFrame, idCol: String,
-                   vecCol: String, dir: String,
-                   spillDelta: Double = Similarity.SpillDelta): Unit = {
-    val (asg, cents) = openIvf(spark, dir)
-    requirePrimary(asg, dir)
-    requireCodeParity(asg, dir, coded = true)
-    clusterForWrite(freshAssignRows(
-      ivfSq8Rows(Similarity.ivfAssignSpill(delta, idCol, vecCol, cents, spillDelta)),
-      asg), "centroid", cents.length)
-      .write.mode("append").partitionBy("centroid").parquet(s"$dir/assign")
-  }
+                   vecCol: String, dir: String): Unit =
+    appendIvf(spark, delta, idCol, vecCol, dir)
 
   /** Persist a RESIDUAL IVF×PQ layer (the r17 `ann_ivf_rpq` rung's
     * serving face — FAISS IVFADC on disk): spill-IVF assignment rows
@@ -755,25 +734,14 @@ object GraftIndexes {
   def writeRpq(spark: SparkSession, emb: DataFrame, idCol: String,
                vecCol: String, dir: String, dim: Int, m: Int = 8,
                ksub: Int = 16, iters: Int = 1, nCentroids: Int = 0,
-               lloydIters: Int = 3,
-               spillDelta: Double = Similarity.SpillDelta): Unit = {
-    val k = if (nCentroids > 0) nCentroids else Similarity.nListsFor(emb.count())
-    val (asg0, cents) = Similarity.ivfIndexSpill(emb, idCol, vecCol, k,
-      lloydIters, spillDelta)
-    val asg = asg0.cache() // books training + the row write both scan it
-    try {
+               lloydIters: Int = 3): Unit = {
+    var cached: Option[DataFrame] = None // books training + the row write both scan it
+    try writeSpillIvf(spark, emb, idCol, vecCol, dir, nCentroids, lloydIters) { (asg, cents) =>
+      cached = Some(asg.cache())
       val books = Similarity.rpqTrain(asg, cents, dim, m, ksub, iters)
-      clusterForWrite(Similarity.rpqRows(asg, cents, books), "centroid", k)
-        .write.mode("overwrite").partitionBy("centroid").parquet(s"$dir/assign")
-      import spark.implicits._
-      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("i", "cvec").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
-      books.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cv, i) => (j, i, cv.toSeq) }
-      }.toSeq.toDF("j", "i", "cqv").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/books")
-    } finally { asg.unpersist(): Unit }
+      writeBooks(spark, dir, books)
+      Similarity.rpqRows(asg, cents, books)
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Open a persisted residual layer: (assignment+codes frame, coarse
@@ -784,39 +752,6 @@ object GraftIndexes {
       : (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val (asg, cents) = openIvf(spark, dir)
     (asg, cents, readBooks(spark, dir))
-  }
-
-  private def readBooks(spark: SparkSession,
-                        dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/books").orderBy("j", "i").collect()
-    rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
-      .sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)).toArray
-  }
-
-  /** INCREMENTAL maintenance of a [[writeRpq]] layer: the delta
-    * assigns against the read-back coarse centroids and residual-codes
-    * against the read-back books (no retrain on either layer — both
-    * assignments are per-row) through the same [[rpqRows]] projection.
-    * Same IDEMPOTENT-APPEND rule as every other face: existing
-    * (vec_id, centroid) pairs anti-join away, so a retried append is a
-    * no-op. Retrain cadence is caller policy. */
-  def appendRpq(spark: SparkSession, delta: DataFrame, idCol: String,
-                vecCol: String, dir: String,
-                spillDelta: Double = Similarity.SpillDelta): Unit = {
-    // layout guards run BEFORE the books read, so a wrong-layout append
-    // fails with the actionable message, not a missing-path error
-    val (asg, cents) = openIvf(spark, dir)
-    requirePrimary(asg, dir)
-    require(asg.columns.contains("pcode"),
-      s"$dir/assign is not a writeRpq layout (no `pcode` column); " +
-        "use the append face matching the layout's write face")
-    val books = readBooks(spark, dir)
-    clusterForWrite(freshAssignRows(
-      Similarity.rpqRows(
-        Similarity.ivfAssignSpill(delta, idCol, vecCol, cents, spillDelta),
-        cents, books),
-      asg), "centroid", cents.length)
-      .write.mode("append").partitionBy("centroid").parquet(s"$dir/assign")
   }
 
   /** Probe a persisted [[writeIvfSq8]] layout in the two-phase
@@ -842,24 +777,15 @@ object GraftIndexes {
     val qq = VecFns.quantizeLocal(q)
     val q8 = VecFns.sq8CodesLocal(qq) match {
       case Some(c) => c
-      case None => // zero query: empty, matching the in-memory rung
-        val s = assigned.sparkSession
-        import s.implicits._
-        return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
+      case None => return Similarity.emptyTopK(assigned) // zero query
     }
     val probeSet = Similarity.spillProbeSet(cents, q, nProbe)
     val ids = sq8CodeRankFrame(assigned, probeSet, q8, k * rerank)
       .collect().map(_.getLong(0)).toSeq
-    if (ids.isEmpty) {
-      val s = assigned.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-    }
+    if (ids.isEmpty) return Similarity.emptyTopK(assigned)
     Similarity.probeDeduped(assigned, probeSet)
       .where(col("vec_id").isin(ids: _*))
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(Similarity.exactTopK(typedLit(qq), k))
   }
 
   /** [[ivfSq8ProbeSplit]]'s phase-1 code-rank frame, factored out so
@@ -909,14 +835,12 @@ object GraftIndexes {
     * and phase 2 its exact window over the identical candidate set. */
   def ivfSq8ProbeJoinSplit(assigned: DataFrame, cents: Array[Array[Double]],
                            probes: DataFrame, idCol: String, vecCol: String,
-                           nProbe: Int, k: Int, rerank: Int = 4,
-                           broadcastProbes: Boolean = true): DataFrame = {
+                           nProbe: Int, k: Int, rerank: Int = 4): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val schedule = Similarity.sq8ScheduleFrame(probes, idCol, vecCol, cents,
       nProbe)
-    val winners = sq8CodeRankJoinFrame(assigned, schedule, k * rerank,
-      broadcastProbes).collect()
+    val winners = sq8CodeRankJoinFrame(assigned, schedule, k * rerank).collect()
     if (winners.isEmpty)
       return Seq.empty[(Long, Long, Double, Int)]
         .toDF("probe_id", "vec_id", "cos", "rn")
@@ -958,13 +882,11 @@ object GraftIndexes {
     * partition rides along so phase 2 prunes to exactly the winners'
     * directories. */
   private[graft] def sq8CodeRankJoinFrame(assigned: DataFrame,
-                                          schedule: DataFrame, cut: Int,
-                                          broadcastProbes: Boolean): DataFrame = {
-    val sched = if (broadcastProbes) broadcast(schedule) else schedule
+                                          schedule: DataFrame, cut: Int): DataFrame = {
     val narrow = assigned.select("vec_id", "c8", "primary", "centroid")
-    val base = narrow.join(sched, "centroid")
+    val base = narrow.join(broadcast(schedule), "centroid")
       .withColumn("a8", col("c8").cast("array<double>"))
-    val cand = Similarity.scheduleDeduped(base, schedule, broadcastProbes)
+    val cand = Similarity.scheduleDeduped(base, schedule)
       .select(col("probe_id"), col("vec_id"), col("centroid"),
         round(VecFns.cosineQ(col("a8"), col("p8")), 6).as("approx"))
     val wa = org.apache.spark.sql.expressions.Window
@@ -973,16 +895,20 @@ object GraftIndexes {
       .select("probe_id", "vec_id", "centroid")
   }
 
-  /** INCREMENTAL maintenance of a persisted spill-IVF — the
-    * hourly-append face of the nightly-retrain index: new vectors are
-    * assigned against the EXISTING trained centroids (same spill rule
-    * as the base build — read back bitwise from the sidecar, so the
-    * appended assignment is exactly what a from-scratch assignment
+  /** INCREMENTAL maintenance of every persisted spill-IVF layout —
+    * the hourly-append face of the nightly-retrain index: new vectors
+    * are assigned against the EXISTING trained centroids (same spill
+    * rule as the base build — read back bitwise from the sidecar, so
+    * the appended assignment is exactly what a from-scratch assignment
     * over base+delta with these centroids produces) and appended to
     * the partitioned layout; only the delta's partitions gain files.
-    * Retraining cadence is the caller's policy — the K ∝ √N sizing
-    * drifts as the corpus grows, so re-run [[writeIvf]] when the
-    * corpus has grown past the next power-of-two boundary.
+    * The layout's schema (the footer [[openIvf]] reads) picks the code:
+    * `c8` → [[ivfSq8Rows]] ([[writeIvfSq8]]), `pcode` →
+    * [[graft.operators.Similarity.rpqRows]] against the read-back books
+    * ([[writeRpq]]; no retrain), neither → raw rows ([[writeIvf]]) — so
+    * an append can never mix coded and code-less files. Retraining
+    * cadence is the caller's policy: re-run the layout's write when
+    * the corpus has grown past the next K ∝ √N power-of-two boundary.
     *
     * IDEMPOTENT-APPEND (r16, was exactly-once-by-contract): the delta's
     * assignment anti-joins the layout's existing (vec_id, centroid)
@@ -997,18 +923,20 @@ object GraftIndexes {
     * no-op, not an update — updates rebuild or go through the
     * [[graft.operators.Incremental]] upsert path. */
   def appendIvf(spark: SparkSession, delta: DataFrame, idCol: String,
-                vecCol: String, dir: String,
-                spillDelta: Double = Similarity.SpillDelta): Unit = {
+                vecCol: String, dir: String): Unit = {
     val (asg, cents) = openIvf(spark, dir)
     requirePrimary(asg, dir)
-    requireCodeParity(asg, dir, coded = false)
-    clusterForWrite(freshAssignRows(
-      Similarity.ivfAssignSpill(delta, idCol, vecCol, cents, spillDelta), asg),
-      "centroid", cents.length)
+    val assigned = Similarity.ivfAssignSpill(delta, idCol, vecCol, cents)
+    val rows =
+      if (asg.columns.contains("c8")) ivfSq8Rows(assigned)
+      else if (asg.columns.contains("pcode"))
+        Similarity.rpqRows(assigned, cents, readBooks(spark, dir))
+      else assigned
+    clusterForWrite(freshAssignRows(rows, asg), "centroid", cents.length)
       .write.mode("append").partitionBy("centroid").parquet(s"$dir/assign")
   }
 
-  /** The idempotence filter of [[appendIvf]]/[[appendIvfSq8]]: delta
+  /** The idempotence filter of [[appendIvf]]: delta
     * assignment rows whose (vec_id, centroid) pair already exists in
     * the layout are dropped. Anti-join on the pair (not vec_id alone)
     * so a spill copy whose primary landed in an earlier partial run
@@ -1031,33 +959,6 @@ object GraftIndexes {
       s"$dir/assign is a pre-r15 layout without the `primary` column; " +
         "appending r15 rows would mix schemas and make probes silently " +
         "drop the base corpus — rebuild the layout with writeIvf/writeIvfSq8")
-
-  /** Refuse a code-schema mismatch between an append and its base
-    * layout (ADVICE r15): [[appendIvf]] writes code-LESS rows, so
-    * appending onto a [[writeIvfSq8]] layout (whose assign schema
-    * carries `c8`) would leave every delta row's c8 NULL — and because
-    * [[openIvf]] reads the directory without mergeSchema, coded probes
-    * ([[ivfSq8ProbeSplit]] and the stored-codes branches of
-    * [[graft.operators.Similarity.ivfSq8Probe]] and
-    * [[graft.operators.Similarity.ivfSq8ProbeJoin]])
-    * would either silently exclude every appended vector from the code
-    * rank or fail nondeterministically depending on which footer Spark
-    * samples for schema. The mirror direction ([[appendIvfSq8]] onto a
-    * plain [[writeIvf]] layout) mixes the same way. Loud error, with
-    * the right entry point named. */
-  private def requireCodeParity(asg: DataFrame, dir: String,
-                                coded: Boolean): Unit =
-    if (coded)
-      require(asg.columns.contains("c8"),
-        s"$dir/assign is a plain writeIvf layout (no `c8` codes); " +
-          "appendIvfSq8 would mix coded and code-less files and make " +
-          "coded probes read null codes — use appendIvf, or rebuild " +
-          "the layout with writeIvfSq8")
-    else
-      require(!asg.columns.contains("c8"),
-        s"$dir/assign is a composed writeIvfSq8 layout (carries `c8`); " +
-          "appendIvf would append code-less rows that coded probes " +
-          "silently exclude — use appendIvfSq8")
 
   /** Open a persisted spill-IVF: (assignment frame, trained centroids).
     * Probe via [[graft.operators.Similarity.ivfProbeSpill]] — the

@@ -226,16 +226,17 @@ object Oracles {
       "/(x.n+y.n-len(list_intersect(x.s,y.s))),6)"
 
   /** SCALE-AWARE spherical spill-IVF replay (the r14 `ann_topk`
-    * default — Similarity.ivfTopKSpill): derives K and nProbe from
-    * count(*) with the same pow2(round(log2(3·√N))) / max(2, 7K//128)
-    * formulas as nListsFor/nProbeFor, trains `iters` spherical Lloyd
-    * steps on the truncated-integer-mean grid (assignment ranks
-    * dot/|c| — |v| cancels; the norm guard CASE mirrors centNorms),
-    * double-assigns boundary vectors whose top-2 centroid cosines are
-    * within `delta`, probes the nProbe spherically-nearest lists, and
-    * exact-reranks. Every arithmetic step is either exact integer
-    * math or one correctly-rounded IEEE sqrt/division of identical
-    * inputs, so the replay is bit-for-bit. `trainPred` restricts the
+    * default — Similarity.withSpillIvf + ivfProbeSpill): derives K and
+    * nProbe from count(*) with the same pow2(round(log2(3·√N))) /
+    * max(2, 7K//128) formulas as nListsFor/nProbeFor, trains `iters`
+    * spherical Lloyd steps on the truncated-integer-mean grid
+    * (assignment ranks dot/|c| — |v| cancels; the norm guard CASE
+    * mirrors centNorms), double-assigns boundary vectors whose top-2
+    * centroid cosines are within Similarity.SpillDelta, probes the
+    * nProbe spherically-nearest lists, and exact-reranks. Every
+    * arithmetic step is either exact integer math or one
+    * correctly-rounded IEEE sqrt/division of identical inputs, so the
+    * replay is bit-for-bit. `trainPred` restricts the
     * TRAINING corpus (K sizing, seeds, Lloyd refinement) while
     * assignment and probe stay corpus-wide — the incremental-append
     * twin (`ivf_append_probe`): per-vector assignment to fixed
@@ -247,7 +248,7 @@ object Oracles {
     * output is (probe_id, vec_id, cos, rn ≤ batchK) ordered by
     * (probe_id, rn) — ONE emitter for the single and batched replays,
     * so their training/spill/probe semantics can never drift. */
-  private def ivfSpillOracle(iters: Int, delta: Double,
+  private def ivfSpillOracle(iters: Int,
                              probeMult: Int = 7, probeFloor: Int = 2,
                              sq8Rerank: Int = 0,
                              trainPred: String = "TRUE",
@@ -296,7 +297,7 @@ object Oracles {
        |  UNION ALL
        |  SELECT a2.vec_id, a2.qv, a2.i, a1.i FROM ax a2 JOIN ax a1
        |    ON a1.vec_id=a2.vec_id AND a1.rn=1 AND a2.rn=2
-       |  WHERE (a1.dn - a2.dn)/sqrt(list_dot_product(a2.qv,a2.qv)) <= $delta),
+       |  WHERE (a1.dn - a2.dn)/sqrt(list_dot_product(a2.qv,a2.qv)) <= ${graft.operators.Similarity.SpillDelta}),
        |${if (batchPred.nonEmpty)
            // batched tail (Similarity.ivfProbeSpillJoin): probe_id
            // flows through probe schedule, candidate dedup, and rank
@@ -1193,19 +1194,16 @@ object Oracles {
     // integers, bit-identical cross-engine); boundary vectors within
     // cosine margin 0.03 of their second list are double-assigned.
     "ann_topk" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, sq8Rerank = 80),
     // batched probe-join twin (Similarity.ivfProbeSpillJoin): the SAME
     // spill replay in batched mode — probes vec_id < 5, per-probe
     // schedule/dedup/rank partitioned by probe_id, top-10 each
     "ann_probe_join" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       batchPred = "vec_id < 5", batchK = 10),
     // composed batched twin (Similarity.ivfSq8ProbeJoin): the batched
     // replay at the default rung's wide schedule with the per-probe
     // code-rank cut (k·4 = 40) before the exact rescore
     "ann_probe_join_sq8" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, sq8Rerank = 40,
       batchPred = "vec_id < 5", batchK = 10),
     // byte-narrow split twin (GraftIndexes.ivfSq8ProbeJoinSplit): the
@@ -1213,7 +1211,6 @@ object Oracles {
     // ann_probe_join_sq8 — identical training, schedule, code-rank
     // window, and exact rerank — so its oracle is the identical replay
     "ann_probe_join_split" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, sq8Rerank = 40,
       batchPred = "vec_id < 5", batchK = 10),
     // incremental-append twin: train (K sizing + Lloyd) on the EVEN
@@ -1221,29 +1218,24 @@ object Oracles {
     // assignment is lifecycle-invariant, so the SQL needs no notion of
     // "append", just a restricted training corpus
     "ivf_append_probe" -> ivfSpillOracle(iters = 1,
-      delta = graft.operators.Similarity.SpillDelta,
       trainPred = "vec_id % 2 = 0", fixedK = 64),
     // composed IVF+SQ8 twin: the spill replay with the code-rank tail
-    "ann_ivf_sq8" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta, sq8Rerank = 80),
+    "ann_ivf_sq8" -> ivfSpillOracle(iters = 3, sq8Rerank = 80),
     // PQ twin (Similarity.pqTopK): 8 subspaces × 16 sub-centroids,
     // 1 euclidean Lloyd step each, ADC rank, top-160 exact rerank
     "ann_pq" -> pqOracle(m = 8, ksub = 16, iters = 1, rerank = 8),
-    // composed IVF×PQ twin (Similarity.ivfPqTopK): the spill replay at
+    // composed IVF×PQ twin (Similarity.ivfPqProbe): the spill replay at
     // the wide schedule with the PQ ADC tail over the candidates
     "ann_ivf_pq" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, pqRerank = 8),
     // residual IVF×PQ (r17): same spill replay, residual-trained books,
     // per-list ADC reconstruction — see the rpqRerank branch
     "ann_ivf_rpq" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, rpqRerank = 8),
     // persisted-layout probe of the SAME residual rung (r19): the
     // layout round-trip is engine plumbing — stored codes, identical
     // probe math — so the oracle is ann_ivf_rpq's replay verbatim
     "ann_rpq_probe_layout" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4, rpqRerank = 8),
     // SQ8 twin (Similarity.sq8TopK): per-vector int8 codes
     // round(qv·127/max|qv|) — exact products, one rounded division, the
@@ -1263,7 +1255,6 @@ object Oracles {
     // HNSW-class tier the r13 grid-16/10 rung hit at a 62% scan,
     // reached scanning ~21% of rows
     "ann_ivf_wide" -> ivfSpillOracle(iters = 3,
-      delta = graft.operators.Similarity.SpillDelta,
       probeMult = 26, probeFloor = 4),
     // single-bucket scan-fraction floor twin
     "ann_bucket_floor" ->

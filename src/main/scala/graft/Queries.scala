@@ -990,8 +990,8 @@ object Queries {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfSq8TopK(e, "vec_id", "embedding", q.toArray, k = 20,
-        nCentroids = nLists, nProbe = Similarity.nProbeWideFor(nLists))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
+        Similarity.ivfSq8Probe(asg, cents, q.toArray, Similarity.nProbeWideFor(nLists), k = 20))
     }),
     // incremental index LIFECYCLE, driver-oracled end-to-end: build the
     // persisted spill-IVF on the even half, APPEND the odd half against
@@ -1034,10 +1034,10 @@ object Queries {
     "ann_probe_join" -> ((s, dir) => {
       val e = emb(s, dir)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfTopKSpillJoin(e, e.where(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10,
-        nCentroids = nLists, nProbe = Similarity.nProbeFor(nLists))
-        .withColumn("rn", col("rn").cast("int"))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (_, asg, cents) =>
+        Similarity.ivfProbeSpillJoin(asg, cents, e.where(col("vec_id") < 5),
+          "vec_id", "embedding", nProbe = Similarity.nProbeFor(nLists), k = 10)
+      }.withColumn("rn", col("rn").cast("int"))
         .orderBy("probe_id", "rn")
     }),
     // the COMPOSED batched form (r15): the same schedule join through
@@ -1049,10 +1049,10 @@ object Queries {
     "ann_probe_join_sq8" -> ((s, dir) => {
       val e = emb(s, dir)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfSq8TopKJoin(e, e.where(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10,
-        nCentroids = nLists, nProbe = Similarity.nProbeWideFor(nLists))
-        .withColumn("rn", col("rn").cast("int"))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (_, asg, cents) =>
+        Similarity.ivfSq8ProbeJoin(asg, cents, e.where(col("vec_id") < 5),
+          "vec_id", "embedding", nProbe = Similarity.nProbeWideFor(nLists), k = 10)
+      }.withColumn("rn", col("rn").cast("int"))
         .orderBy("probe_id", "rn")
     }),
     // the BYTE-NARROW batched form (r16): same semantics as
@@ -1107,9 +1107,11 @@ object Queries {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfPqTopK(e, "vec_id", "embedding", q.toArray, k = 20,
-        dim = Dim, nCentroids = nLists,
-        nProbe = Similarity.nProbeWideFor(nLists))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (qd, asg, cents) =>
+        Similarity.ivfPqProbe(asg, cents,
+          Similarity.pqTrain(qd, Dim, m = 8, ksub = 16, iters = 1), q.toArray,
+          nProbe = Similarity.nProbeWideFor(nLists), k = 20)
+      }
     }),
     // RESIDUAL IVF×PQ (r17 — r16 verdict #3, FAISS IVFADC): books train
     // on (vector − own-list centroid) residuals instead of raw vectors,
@@ -1120,9 +1122,10 @@ object Queries {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfRpqTopK(e, "vec_id", "embedding", q.toArray, k = 20,
-        dim = Dim, nCentroids = nLists,
-        nProbe = Similarity.nProbeWideFor(nLists))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (_, asg, cents) =>
+        Similarity.ivfRpqProbe(asg, cents, Similarity.rpqTrain(asg, cents, Dim),
+          q.toArray, nProbe = Similarity.nProbeWideFor(nLists), k = 20)
+      }
     }),
     // PROBE-VISIBLE persisted residual rung (r19, r18 verdict #5): the
     // deep rung's bench row was all build (b=3.1/p=0.0 — Lloyd + rpq
@@ -1184,8 +1187,8 @@ object Queries {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfTopKSpill(e, "vec_id", "embedding", q.toArray, k = 20,
-        nCentroids = nLists, nProbe = Similarity.nProbeWideFor(nLists))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
+        Similarity.ivfProbeSpill(asg, cents, q.toArray, Similarity.nProbeWideFor(nLists), k = 20))
     }),
     // COMPOSED 100 TB stack (r14): spill IVF prunes rows (~5.9% nominal
     // scan at the default sizing), SQ8 codes shrink the surviving bytes
@@ -1195,8 +1198,8 @@ object Queries {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
-      Similarity.ivfSq8TopK(e, "vec_id", "embedding", q.toArray, k = 20,
-        nCentroids = nLists, nProbe = Similarity.nProbeFor(nLists))
+      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
+        Similarity.ivfSq8Probe(asg, cents, q.toArray, Similarity.nProbeFor(nLists), k = 20))
     }),
     // MEMORY-BANDWIDTH rung (r14): SQ8 scalar quantization — full-row
     // scan over int8 codes (8x less bandwidth than the grid where codes

@@ -4,12 +4,28 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The requested row names that match no registered row, sorted — a
+    * typo in the optional row list must stop the gate, not silently
+    * gate nothing for that row. */
+  def unknownRows(requested: Set[String], registered: Set[String]): Seq[String] =
+    (requested -- registered).toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (dev only — the driver passes two): comma-list of
     // query names to dump/compare, for fast single-oracle iteration
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+    }
+    // checked before the Spark session starts: a mistyped name fails
+    // in a second instead of after the whole selected dump
+    only.foreach { names =>
+      val unknown = unknownRows(names, SparkEntry.queries.keySet)
+      if (unknown.nonEmpty) {
+        System.err.println(
+          s"[verify] unknown row name(s), not in SparkEntry.queries: ${unknown.mkString(", ")}")
+        sys.exit(2)
+      }
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -51,11 +51,18 @@ object Similarity {
     * QUERY vector (matches the oracle twins, whose qm > 0 filter drops
     * the query row and yields zero rows — error vs empty must not
     * diverge between the engine and its replay). */
-  private def emptyTopK(like: DataFrame): DataFrame = {
+  private[graft] def emptyTopK(like: DataFrame): DataFrame = {
     val s = like.sparkSession
     import s.implicits._
     Seq.empty[(Long, Double)].toDF("vec_id", "cos")
   }
+
+  /** The exact-rerank tail every ANN probe ends in (apply with
+    * `.transform`): round-6 cosine of each candidate's quantized `qv`
+    * against the query `q`, top k by (cos desc, vec_id asc). */
+  private[graft] def exactTopK(q: Column, k: Int)(cand: DataFrame): DataFrame =
+    cand.select(col("vec_id"), round(VecFns.cosineQ(col("qv"), q), 6).as("cos"))
+      .orderBy(desc("cos"), asc("vec_id")).limit(k)
 
   /** SQ8 cosine top-k — the MEMORY-BANDWIDTH rung of the ANN ladder
     * (scalar quantization, the FAISS SQ8 design): rank the corpus by
@@ -76,17 +83,13 @@ object Similarity {
       case Some(c) => c
       case None => return emptyTopK(emb) // zero query: no direction to rank
     }
-    val coded = emb
-      .select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    val coded = quantized(emb, idCol, vecCol)
       .withColumn("qm", sq8Max(col("qv")))
       .where(col("qm") > 0) // a zero vector has no direction to rank
       .select(col("vec_id"), col("qv"),
         round(VecFns.cosineQ(sq8Codes(col("qv"), col("qm")), typedLit(q8)), 6).as("approx"))
     coded.orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qq), k))
   }
 
   /** k-NN join: top-k neighbors for every probe row. Probes are broadcast
@@ -219,12 +222,13 @@ object Similarity {
       // qRow (the query's quantized values, already evaluated once)
       // enters as a LITERAL — a quantize expression would re-quantize
       // the query per scanned row
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qRow.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qRow.toSeq), k))
   }
 
-  private def quantized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+  /** (vec_id, qv): the id cast to long and the vector on the
+    * quantized integer grid — the one input projection of every index
+    * build and probe. */
+  private[graft] def quantized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("vec_id"), VecFns.quantize(col(vecCol)).as("qv"))
 
   /** Scale-aware IVF list count: the power of two nearest (in log
@@ -335,7 +339,7 @@ object Similarity {
   /** Spherical grid-trained IVF index WITH boundary spill — the
     * scale-aware ANN default (r14). Each vector is indexed under its
     * nearest centroid (by cosine), and ALSO under its second-nearest
-    * when the two centroid cosines are within `spillDelta` (boundary
+    * when the two centroid cosines are within [[SpillDelta]] (boundary
     * vectors are the ones an nProbe cut misses; duplicating just them
     * costs ~0.5% extra rows at δ=0.03 on the uniform fixture).
     *
@@ -349,19 +353,17 @@ object Similarity {
     * (vec_id, qv, centroid), trained centroids). The caller owns
     * caching `emb`'s quantized scan if lloydIters > 1. */
   def ivfIndexSpill(emb: DataFrame, idCol: String, vecCol: String,
-                    nCentroids: Int, lloydIters: Int = 3,
-                    spillDelta: Double = SpillDelta)
+                    nCentroids: Int, lloydIters: Int = 3)
       : (DataFrame, Array[Array[Double]]) =
-    ivfIndexSpillQ(quantized(emb, idCol, vecCol), nCentroids, lloydIters, spillDelta)
+    ivfIndexSpillQ(quantized(emb, idCol, vecCol), nCentroids, lloydIters)
 
   /** [[ivfIndexSpill]] over an ALREADY-quantized (vec_id, qv) frame —
-    * the shared core, so a caller that caches the quantized scan (the
-    * cold [[ivfTopKSpill]]) cannot accidentally quantize twice. */
-  private def ivfIndexSpillQ(q: DataFrame, nCentroids: Int, lloydIters: Int,
-                             spillDelta: Double)
+    * the shared core, so a caller that caches the quantized scan
+    * ([[withSpillIvf]]) cannot accidentally quantize twice. */
+  private def ivfIndexSpillQ(q: DataFrame, nCentroids: Int, lloydIters: Int)
       : (DataFrame, Array[Array[Double]]) = {
     val cents = lloydCentroidsSphGrid(q, nCentroids, lloydIters)
-    (assignSpillQ(q, cents, spillDelta), cents)
+    (assignSpillQ(q, cents), cents)
   }
 
   /** Spill assignment to FIXED centroids — [[ivfIndexSpillQ]]'s
@@ -381,8 +383,7 @@ object Similarity {
     * instead of a dropDuplicates SHUFFLE per probe (r15: the shuffle
     * was ~130 ms of the warm composed probe's latency; the predicate
     * form probes shuffle-free). */
-  private def assignSpillQ(q: DataFrame, cents: Array[Array[Double]],
-                           spillDelta: Double): DataFrame = {
+  private def assignSpillQ(q: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     // dn is consumed by four downstream expressions — materialize it as
     // a column so CollapseProject cannot inline four copies of the
     // K·dim dot loop into one row pass
@@ -396,7 +397,7 @@ object Similarity {
       .withColumn("i2", (array_position(col("dn2"), col("m2")) - 1).cast("int"))
       // spill test is on TRUE cosine: (dot/|c|)/|v| margins
       .withColumn("spill",
-        (col("m1") - col("m2")) / VecFns.norm2(col("qv")) <= lit(spillDelta))
+        (col("m1") - col("m2")) / VecFns.norm2(col("qv")) <= lit(SpillDelta))
     masked.select(col("vec_id"), col("qv"),
       explode(when(col("spill"), array(col("i1"), col("i2")))
         .otherwise(array(col("i1")))).as("centroid"),
@@ -422,23 +423,21 @@ object Similarity {
   /** [[assignSpillQ]] over raw (id, vector) columns — the incremental
     * index-maintenance entry ([[graft.GraftIndexes.appendIvf]]). */
   def ivfAssignSpill(emb: DataFrame, idCol: String, vecCol: String,
-                     cents: Array[Array[Double]],
-                     spillDelta: Double = SpillDelta): DataFrame =
-    assignSpillQ(quantized(emb, idCol, vecCol), cents, spillDelta)
+                     cents: Array[Array[Double]]): DataFrame =
+    assignSpillQ(quantized(emb, idCol, vecCol), cents)
 
   /** Probe a prebuilt [[ivfIndexSpill]]: centroids ranked on the DRIVER
     * by spherical score (K tiny — planning data), the nProbe list
     * filter is a LITERAL isin (partition pruning on a persisted
-    * layout), spilled duplicates collapse via dropDuplicates(vec_id)
-    * (both copies carry identical qv), then exact cosine rerank. */
+    * layout), spilled duplicates collapse through [[probeDeduped]]'s
+    * row-local `primary` predicate (r15; both copies carry identical
+    * qv, so keeping either is exact), then exact cosine rerank. */
   def ivfProbeSpill(assigned: DataFrame, cents: Array[Array[Double]],
                     q: Array[Float], nProbe: Int, k: Int): DataFrame = {
     val qRow = VecFns.quantizeLocal(q)
     val probeSet = spillProbeSet(cents, q, nProbe)
     probeDeduped(assigned, probeSet)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qRow.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qRow.toSeq), k))
   }
 
   /** BATCHED probe of a prebuilt [[ivfIndexSpill]] — the trained-index
@@ -471,21 +470,17 @@ object Similarity {
     *
     * Scan cost is nProbe/K of the corpus PER PROBE, same as the
     * single-query path; the join visits each (probe, candidate) pair
-    * once. `broadcastProbes` broadcasts the exploded schedule (right
-    * for probe sets up to millions of rows — nProbe ints + one
-    * quantized vector each); beyond broadcast size pass false and the
-    * join degrades to a shuffle hash join on `centroid`, still never a
-    * nested loop. Returns (probe_id, vec_id, cos, rn) like
-    * [[knnJoin]]; the probe's own row is NOT excluded (parity with
-    * [[ivfProbeSpill]], whose query is free to be a corpus member). */
+    * once. The exploded schedule is broadcast (right for probe sets up
+    * to millions of rows — nProbe ints + one quantized vector each).
+    * Returns (probe_id, vec_id, cos, rn) like [[knnJoin]]; the probe's
+    * own row is NOT excluded (parity with [[ivfProbeSpill]], whose
+    * query is free to be a corpus member). */
   def ivfProbeSpillJoin(assigned: DataFrame, cents: Array[Array[Double]],
                         probes: DataFrame, idCol: String, vecCol: String,
-                        nProbe: Int, k: Int,
-                        broadcastProbes: Boolean = true): DataFrame = {
+                        nProbe: Int, k: Int): DataFrame = {
     val schedule = spillScheduleFrame(probes, idCol, vecCol, cents, nProbe)
-    val sched = if (broadcastProbes) broadcast(schedule) else schedule
-    val cand = scheduleDeduped(assigned.join(sched, "centroid"), schedule,
-        broadcastProbes)
+    val cand = scheduleDeduped(assigned.join(broadcast(schedule), "centroid"),
+        schedule)
       .select(col("probe_id"), col("vec_id"),
         round(VecFns.cosineQ(col("pv"), col("qv")), 6).as("cos"))
     val w = Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc("vec_id"))
@@ -504,14 +499,13 @@ object Similarity {
     * primary list is unprobed. Falls back to a (probe_id, vec_id)
     * max-agnostic dropDuplicates for indexes without the `primary`
     * column (pre-r15 frames). */
-  private[graft] def scheduleDeduped(cand: DataFrame, schedule: DataFrame,
-                                     broadcastProbes: Boolean): DataFrame =
+  private[graft] def scheduleDeduped(cand: DataFrame,
+                                     schedule: DataFrame): DataFrame =
     if (!cand.columns.contains("primary")) cand.dropDuplicates("probe_id", "vec_id")
     else {
       val keys = schedule.select(col("probe_id"),
         col("centroid").as("primary"), lit(1).as("__pin"))
-      val marked = if (broadcastProbes) broadcast(keys) else keys
-      cand.join(marked, Seq("probe_id", "primary"), "left")
+      cand.join(broadcast(keys), Seq("probe_id", "primary"), "left")
         .where(col("centroid") === col("primary") || col("__pin").isNull)
         .drop("__pin")
     }
@@ -552,6 +546,21 @@ object Similarity {
         explode(col("probe_list")).as("centroid"))
   }
 
+  /** [[spillScheduleFrame]] with the probe's own SQ8 codes riding along
+    * as `p8` (zero-norm probe rows dropped — no direction to rank):
+    * the shared schedule of the code-ranked batched probes
+    * ([[ivfSq8ProbeJoin]] and the byte-narrow split form
+    * [[graft.GraftIndexes.ivfSq8ProbeJoinSplit]]). */
+  private[graft] def sq8ScheduleFrame(probes: DataFrame, idCol: String,
+                                      vecCol: String,
+                                      cents: Array[Array[Double]],
+                                      nProbe: Int): DataFrame =
+    spillScheduleFrame(probes, idCol, vecCol, cents, nProbe)
+      .withColumn("pm", sq8Max(col("pv")))
+      .where(col("pm") > 0)
+      .withColumn("p8", sq8Codes(col("pv"), col("pm")))
+      .drop("pm")
+
   /** BATCHED probe through the SQ8 code path — [[ivfProbeSpillJoin]]'s
     * composed twin: the schedule equi-joins the index on `centroid`
     * exactly as the exact form does (broadcast → dynamic partition
@@ -577,27 +586,11 @@ object Similarity {
     * [[sq8TopK]] query guard, mirrored by the oracle's qm > 0
     * filter); zero-norm corpus rows drop the same way. Returns
     * (probe_id, vec_id, cos, rn) like [[ivfProbeSpillJoin]]. */
-  /** [[spillScheduleFrame]] with the probe's own SQ8 codes riding along
-    * as `p8` (zero-norm probe rows dropped — no direction to rank):
-    * the shared schedule of the code-ranked batched probes
-    * ([[ivfSq8ProbeJoin]] and the byte-narrow split form
-    * [[graft.GraftIndexes.ivfSq8ProbeJoinSplit]]). */
-  private[graft] def sq8ScheduleFrame(probes: DataFrame, idCol: String,
-                                      vecCol: String,
-                                      cents: Array[Array[Double]],
-                                      nProbe: Int): DataFrame =
-    spillScheduleFrame(probes, idCol, vecCol, cents, nProbe)
-      .withColumn("pm", sq8Max(col("pv")))
-      .where(col("pm") > 0)
-      .withColumn("p8", sq8Codes(col("pv"), col("pm")))
-      .drop("pm")
-
   def ivfSq8ProbeJoin(assigned: DataFrame, cents: Array[Array[Double]],
                       probes: DataFrame, idCol: String, vecCol: String,
-                      nProbe: Int, k: Int, rerank: Int = 4,
-                      broadcastProbes: Boolean = true): DataFrame = {
+                      nProbe: Int, k: Int, rerank: Int = 4): DataFrame = {
     val schedule = sq8ScheduleFrame(probes, idCol, vecCol, cents, nProbe)
-    val sched = if (broadcastProbes) broadcast(schedule) else schedule
+    val sched = broadcast(schedule)
     val hasStoredCodes = assigned.columns.contains("c8")
     val base =
       if (hasStoredCodes) assigned.join(sched, "centroid")
@@ -606,7 +599,7 @@ object Similarity {
         .withColumn("qm", sq8Max(col("qv")))
         .where(col("qm") > 0)
         .withColumn("a8", sq8Codes(col("qv"), col("qm")))
-    val cand = scheduleDeduped(base, schedule, broadcastProbes)
+    val cand = scheduleDeduped(base, schedule)
       .select(col("probe_id"), col("vec_id"), col("qv"), col("pv"),
         round(VecFns.cosineQ(col("a8"), col("p8")), 6).as("approx"))
     val wa = Window.partitionBy(col("probe_id"))
@@ -620,34 +613,25 @@ object Similarity {
       .select("probe_id", "vec_id", "cos", "rn")
   }
 
-  /** Cold form of [[ivfSq8ProbeJoin]]: train + index + batched
-    * code-ranked probe (the registered `ann_probe_join_sq8` shape). */
-  def ivfSq8TopKJoin(emb: DataFrame, probes: DataFrame, idCol: String,
-                     vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
-                     rerank: Int = 4, lloydIters: Int = 3,
-                     spillDelta: Double = SpillDelta,
-                     materialize: Boolean = true): DataFrame = {
+  /** The cold spill-IVF scope of the registered IVF rows: quantize
+    * the corpus ONCE and cache it for the call (the Lloyd passes and
+    * the final assignment re-scan it lloydIters + 1 times), train +
+    * spill-assign ([[ivfIndexSpill]]), run `probe` on (quantized
+    * corpus, assignment, centroids) — a probe that trains codebooks
+    * ([[pqTrain]] on the quantized corpus, [[rpqTrain]] on the
+    * assignment) does so inside the scope — then snapshot its ≤k-row
+    * result and release the cache ([[Dedup.scoped]]). With
+    * `materialize = false` nothing is cached and the lazy plan comes
+    * back (plan audits). Serving sessions build ([[ivfIndexSpill]]) or
+    * open ([[graft.GraftIndexes.openIvf]]) the index once and call the
+    * probe directly. */
+  def withSpillIvf(emb: DataFrame, idCol: String, vecCol: String,
+                   nCentroids: Int, lloydIters: Int = 3,
+                   materialize: Boolean = true)(
+      probe: (DataFrame, DataFrame, Array[Array[Double]]) => DataFrame): DataFrame = {
     val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    Dedup.scoped(materialize, qd)(
-      ivfSq8ProbeJoin(assigned, cents, probes, idCol, vecCol, nProbe, k, rerank))
-  }
-
-  /** Cold form of [[ivfProbeSpillJoin]]: train + index + batched probe
-    * in one call (the registered `ann_probe_join` shape). Serving
-    * sessions build [[ivfIndexSpill]] (or open a persisted
-    * [[graft.GraftIndexes.writeIvf]] layout) once and call
-    * [[ivfProbeSpillJoin]] per batch. */
-  def ivfTopKSpillJoin(emb: DataFrame, probes: DataFrame, idCol: String,
-                       vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
-                       lloydIters: Int = 3, spillDelta: Double = SpillDelta,
-                       materialize: Boolean = true): DataFrame = {
-    val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    // probe rows re-quantize from the raw frame (tiny side); the corpus
-    // side reuses the cached quantized scan through `assigned`
-    Dedup.scoped(materialize, qd)(
-      ivfProbeSpillJoin(assigned, cents, probes, idCol, vecCol, nProbe, k))
+    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters)
+    Dedup.scoped(materialize, qd)(probe(qd, assigned, cents))
   }
 
   /** The nProbe spherically-nearest centroid indices for a query —
@@ -700,48 +684,7 @@ object Similarity {
     cand.select(col("vec_id"), col("qv"),
         round(VecFns.cosineQ(codes, typedLit(q8)), 6).as("approx"))
       .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
-  }
-
-  /** Cold form of [[ivfSq8Probe]]: train + index + code-rank + rerank.
-    * At the WIDE probe schedule ([[nProbeWideFor]]) this is the
-    * registered `ann_topk` DEFAULT (r15): recall@20 0.91 on the
-    * worst-case uniform sf0.1 fixture at 21.5% scanned rows whose scan
-    * column is the 1-byte SQ8 code — ~6.7% of brute-force BYTES incl.
-    * the fixed 80-row rerank (→ 2.7% asymptotically), inside the r14
-    * narrow-probe default's byte envelope at +18 recall points.
-    * Serving sessions persist the composed layout
-    * ([[graft.GraftIndexes.writeIvfSq8]]) so the code-rank scan reads
-    * only the (vec_id, c8) columns of the probed partitions. */
-  def ivfSq8TopK(emb: DataFrame, idCol: String, vecCol: String,
-                 q: Array[Float], k: Int, nCentroids: Int, nProbe: Int,
-                 rerank: Int = 4, lloydIters: Int = 3,
-                 spillDelta: Double = SpillDelta,
-                 materialize: Boolean = true): DataFrame = {
-    val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    Dedup.scoped(materialize, qd)(
-      ivfSq8Probe(assigned, cents, q, nProbe, k, rerank))
-  }
-
-  /** Cold form of the scale-aware spill IVF: train + index + probe in
-    * one call — the row-pruning-only rung (registered `ann_ivf_wide`
-    * at the wide schedule; the r14 default before the SQ8-code
-    * composition [[ivfSq8TopK]] superseded it as `ann_topk`). Serving
-    * sessions should build [[ivfIndexSpill]] once and probe with
-    * [[ivfProbeSpill]]. */
-  def ivfTopKSpill(emb: DataFrame, idCol: String, vecCol: String,
-                   q: Array[Float], k: Int, nCentroids: Int, nProbe: Int,
-                   lloydIters: Int = 3, spillDelta: Double = SpillDelta,
-                   materialize: Boolean = true): DataFrame = {
-    // the Lloyd passes + final assignment re-scan the quantized corpus
-    // (lloydIters + 1)×: cache it for the cold call's duration
-    val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    Dedup.scoped(materialize, qd)(
-      ivfProbeSpill(assigned, cents, q, nProbe, k))
+      .transform(exactTopK(typedLit(qq), k))
   }
 
   // ---- Product quantization (PQ) — the byte rung BELOW SQ8 ----
@@ -778,7 +721,7 @@ object Similarity {
     * DuckDB replay is bit-for-bit. Returns books(j)(i) = sub-centroid
     * i of subspace j (m·ksub·dsub integral doubles — planning data).
     * Training is (iters+1) scans per subspace; cache the quantized
-    * corpus for the call's duration (the [[ivfTopKSpill]] doctrine).
+    * corpus for the call's duration (the [[withSpillIvf]] doctrine).
     * At 100 TB train on a sample — codebook quality converges long
     * before the corpus is exhausted; ENCODING stays corpus-wide. */
   def pqTrain(qd: DataFrame, dim: Int, m: Int, ksub: Int,
@@ -857,27 +800,36 @@ object Similarity {
   private[graft] def pqRankIds(coded: DataFrame,
                                books: Array[Array[Array[Double]]],
                                qq: Array[Double], cut: Int): DataFrame = {
-    val m = books.length
-    val dsub = qq.length / m
-    val qn = math.sqrt(dotLocal(qq, qq))
-    val dotLut = books.zipWithIndex.map { case (cb, j) =>
-      val qs = qq.slice(j * dsub, (j + 1) * dsub)
-      cb.map(cv => dotLocal(qs, cv)).toSeq
-    }
-    val n2Lut = books.map(_.map(cv => dotLocal(cv, cv)).toSeq)
+    val (num, den2) = adcTerms(books, qq)
+    adcRankIds(coded.withColumn("num", num).withColumn("den2", den2), qq, cut)
+  }
+
+  /** The flat ADC (numerator, norm²) columns over `pcode`: Σⱼ of the
+    * per-subspace query×book dot LUT and book norm² LUT, each a
+    * literal indexed by the code byte — shared by [[pqRankIds]] and the
+    * residual [[rpqProbeCoded]], which adds its per-list terms. */
+  private def adcTerms(books: Array[Array[Array[Double]]],
+                       qq: Array[Double]): (Column, Column) = {
+    val dsub = books.head.head.length
     def lutSum(luts: Array[Seq[Double]]): Column =
       luts.zipWithIndex.map { case (l, j) =>
         element_at(typedLit(l), col("pcode")(j).cast("int") + 1)
       }.reduce(_ + _)
-    coded
-      .withColumn("num", lutSum(dotLut))
-      .withColumn("den2", lutSum(n2Lut))
-      .where(col("den2") > 0)
-      .select(col("vec_id"),
-        round(col("num") / (lit(qn) * sqrt(col("den2"))), 6).as("approx"))
+    (lutSum(books.zipWithIndex.map { case (cb, j) =>
+      val qs = qq.slice(j * dsub, (j + 1) * dsub)
+      cb.map(cv => dotLocal(qs, cv)).toSeq
+    }), lutSum(books.map(_.map(cv => dotLocal(cv, cv)).toSeq)))
+  }
+
+  /** Rank a frame carrying ADC `num`/`den2` columns by approx cosine
+    * (zero-norm reconstructions drop; round 6, vec_id tie-break) and
+    * keep the top `cut` ids. */
+  private def adcRankIds(scored: DataFrame, qq: Array[Double], cut: Int): DataFrame =
+    scored.where(col("den2") > 0)
+      .select(col("vec_id"), round(col("num") /
+        (lit(math.sqrt(dotLocal(qq, qq))) * sqrt(col("den2"))), 6).as("approx"))
       .orderBy(desc("approx"), asc("vec_id")).limit(cut)
       .select("vec_id")
-  }
 
   /** ADC rank + exact rerank over a coded frame that CARRIES its
     * vectors (vec_id, qv, pcode) — the warm serving form (train/encode
@@ -890,9 +842,7 @@ object Similarity {
     if (dotLocal(qq, qq) == 0) return emptyTopK(coded) // no direction to rank
     val ids = pqRankIds(coded, books, qq, k * rerank)
     coded.join(broadcast(ids), "vec_id")
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qq.toSeq), k))
   }
 
   /** PQ cosine top-k — the 100 TB byte ladder's rung BELOW SQ8: scan
@@ -927,22 +877,6 @@ object Similarity {
     val coded = probeDeduped(assigned, probeSet)
       .withColumn("pcode", pqCodeExpr(col("qv"), books, dim / books.length))
     pqProbeCoded(coded, books, q, k, rerank)
-  }
-
-  /** Cold form of [[ivfPqProbe]]: train spill IVF + PQ books + probe
-    * (the registered `ann_ivf_pq` shape). Serving sessions persist
-    * both layers and probe warm. */
-  def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
-                q: Array[Float], k: Int, dim: Int, nCentroids: Int,
-                nProbe: Int, m: Int = 8, ksub: Int = 16, iters: Int = 1,
-                rerank: Int = 8, lloydIters: Int = 3,
-                spillDelta: Double = SpillDelta,
-                materialize: Boolean = true): DataFrame = {
-    val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    val books = pqTrain(qd, dim, m, ksub, iters)
-    Dedup.scoped(materialize, qd)(
-      ivfPqProbe(assigned, cents, books, q, nProbe, k, rerank))
   }
 
   // ---- Residual IVF×PQ (rPQ) — recall lift at IDENTICAL byte cost ----
@@ -1044,12 +978,6 @@ object Similarity {
       return emptyTopK(coded.select(col("vec_id"), col("qv")))
     val m = books.length
     val dsub = books.head.head.length
-    val qn = math.sqrt(dotLocal(qq, qq))
-    val dotLut = books.zipWithIndex.map { case (cb, j) =>
-      val qs = qq.slice(j * dsub, (j + 1) * dsub)
-      cb.map(cv => dotLocal(qs, cv)).toSeq
-    }
-    val n2Lut = books.map(_.map(cv => dotLocal(cv, cv)).toSeq)
     val crossLut: Map[Int, Seq[Seq[Double]]] = probeSet.map { l =>
       l -> books.zipWithIndex.map { case (cb, j) =>
         val cs = cents(l).slice(j * dsub, (j + 1) * dsub)
@@ -1060,32 +988,21 @@ object Similarity {
       probeSet.map(l => l -> dotLocal(qq, cents(l))).toMap
     val cn2: Map[Int, Double] =
       probeSet.map(l => l -> dotLocal(cents(l), cents(l))).toMap
-    def lutSum(luts: Array[Seq[Double]]): Column =
-      luts.zipWithIndex.map { case (l, j) =>
-        element_at(typedLit(l), col("pcode")(j).cast("int") + 1)
-      }.reduce(_ + _)
     val crossCol = (0 until m).map { j =>
       element_at(element_at(element_at(typedLit(crossLut), col("centroid")),
         j + 1), col("pcode")(j).cast("int") + 1)
     }.reduce(_ + _)
-    val ranked = coded
-      .withColumn("num",
-        element_at(typedLit(qdotc), col("centroid")) + lutSum(dotLut))
+    val (num, den2) = adcTerms(books, qq)
+    val ranked = adcRankIds(coded
+      .withColumn("num", element_at(typedLit(qdotc), col("centroid")) + num)
       .withColumn("den2", element_at(typedLit(cn2), col("centroid")) +
-        lit(2.0) * crossCol + lutSum(n2Lut))
-      .where(col("den2") > 0)
-      .select(col("vec_id"),
-        round(col("num") / (lit(qn) * sqrt(col("den2"))), 6).as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .select("vec_id")
+        lit(2.0) * crossCol + den2), qq, k * rerank)
     coded.join(broadcast(ranked), "vec_id")
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qq.toSeq), k))
   }
 
   /** The residual layout's row projection — ONE derivation shared by
-    * [[graft.GraftIndexes.writeRpq]] and [[graft.GraftIndexes.appendRpq]]
+    * [[graft.GraftIndexes.writeRpq]] and [[graft.GraftIndexes.appendIvf]]
     * (the ivfSq8Rows doctrine): each assignment row coded against ITS
     * list's centroid. */
   private[graft] def rpqRows(asg: DataFrame, cents: Array[Array[Double]],
@@ -1094,21 +1011,6 @@ object Similarity {
       .withColumn("pcode",
         pqCodeExpr(col("rqv"), books, books.head.head.length))
       .select("vec_id", "qv", "pcode", "primary", "centroid")
-
-  /** Cold form of [[ivfRpqProbe]]: spill IVF + residual books + probe
-    * (the registered `ann_ivf_rpq` shape). */
-  def ivfRpqTopK(emb: DataFrame, idCol: String, vecCol: String,
-                 q: Array[Float], k: Int, dim: Int, nCentroids: Int,
-                 nProbe: Int, m: Int = 8, ksub: Int = 16, iters: Int = 1,
-                 rerank: Int = 8, lloydIters: Int = 3,
-                 spillDelta: Double = SpillDelta,
-                 materialize: Boolean = true): DataFrame = {
-    val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val (assigned, cents) = ivfIndexSpillQ(qd, nCentroids, lloydIters, spillDelta)
-    val books = rpqTrain(assigned, cents, dim, m, ksub, iters)
-    Dedup.scoped(materialize, qd)(
-      ivfRpqProbe(assigned, cents, books, q, nProbe, k, rerank))
-  }
 
   /** Deterministic coarse-quantizer seeds: the K lowest-id vectors. */
   private def seedCentroids(q: DataFrame, nCentroids: Int): Array[Array[Double]] =
@@ -1168,7 +1070,7 @@ object Similarity {
     * per-query work is then [[annTopKWith]]'s filtered scan + rerank. */
   def annIndex(emb: DataFrame, idCol: String, vecCol: String,
                dim: Int, nBits: Int): DataFrame =
-    emb.select(col(idCol).cast("long").as("vec_id"), VecFns.quantize(col(vecCol)).as("qv"))
+    quantized(emb, idCol, vecCol)
       .withColumn("bucket", lshBucket(col("qv"), dim, nBits))
 
   /** Probe a prebuilt [[annIndex]]: candidates share the query's bucket,
@@ -1180,8 +1082,7 @@ object Similarity {
     val qvec = VecFns.quantize(queryVec)
     val qBucket = lshBucket(qvec, dim, nBits)
     idx.where(col("bucket") === qBucket)
-      .select(col("vec_id"), round(VecFns.cosineQ(col("qv"), qvec), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(qvec, k))
   }
 
   /** Array-query probe: bucket and quantization computed ON THE DRIVER
@@ -1196,9 +1097,7 @@ object Similarity {
                   dim: Int, nBits: Int, k: Int): DataFrame = {
     val qq = graft.functions.VecFns.quantizeLocal(q)
     idx.where(col("bucket") === queryBucket(q, dim, nBits))
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qq.toSeq), k))
   }
 
   /** Bucketed ANN, cold form — builds the index inline.
@@ -1265,16 +1164,13 @@ object Similarity {
                       q: Array[Float], dim: Int, nBits: Int, nTables: Int,
                       k: Int): DataFrame = {
     val qq = graft.functions.VecFns.quantizeLocal(q)
-    val base = emb.select(col(idCol).cast("long").as("vec_id"),
-      VecFns.quantize(col(vecCol)).as("qv"))
+    val base = quantized(emb, idCol, vecCol)
     val hit = (0 until nTables).map { t =>
       lshBucket(col("qv"), dim, nBits, s"b$t") ===
         lit(queryBucket(q, dim, nBits, s"b$t"))
     }.reduce(_ || _)
     base.where(hit)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("qv"), typedLit(qq.toSeq)), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(typedLit(qq.toSeq), k))
   }
 
   /** Multi-probe ANN over a prebuilt [[annIndex]]: candidates from the
@@ -1290,8 +1186,7 @@ object Similarity {
     // form re-quantizes the query per row (see annTopKWith overload)
     val qvec = typedLit(VecFns.quantizeLocal(q).toSeq)
     idx.where(col("bucket").isin(buckets: _*))
-      .select(col("vec_id"), round(VecFns.cosineQ(col("qv"), qvec), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id")).limit(k)
+      .transform(exactTopK(qvec, k))
   }
 
   /** Maximal-marginal-relevance rerank: the diversified top-k a serving
@@ -1322,9 +1217,7 @@ object Similarity {
     require(lambda >= 0.0 && lambda <= 1.0, "lambda must be in [0,1]")
     val spark = emb.sparkSession
     val qvec = typedLit(VecFns.quantizeLocal(q).toSeq)
-    val cand = emb
-      .select(col(idCol).cast("long").as("vec_id"),
-        VecFns.quantize(col(vecCol)).as("qv"))
+    val cand = quantized(emb, idCol, vecCol)
       .withColumn("cos", round(VecFns.cosineQ(col("qv"), qvec), 6))
       // NaN (a zero-norm vector's 0/0) sorts ABOVE every real double in
       // desc order — drop it with the nulls or it becomes pick #1

@@ -33,6 +33,7 @@ import javax.net.ssl.{KeyManagerFactory, SSLContext}
 final class HttpTransport(collections: Map[String, Graft.HadithEngine],
                           port: Int = 8000,
                           tls: Option[HttpTransport.Tls] = None) {
+  HttpTransport.preferNoDelay()
   private val server = tls match {
     case None => HttpServer.create(new InetSocketAddress(port), 0)
     case Some(t) =>
@@ -64,10 +65,14 @@ final class HttpTransport(collections: Map[String, Graft.HadithEngine],
       try { val (c, b) = f(ex); respond(ex, c, b) }
       catch {
         case e: Throwable =>
+          // the exception goes to the server's log, never to the client
+          System.err.println(
+            s"[http] ${ex.getRequestMethod} ${ex.getRequestURI.getPath} failed")
+          e.printStackTrace()
           // a respond() that failed mid-write (client reset) cannot
           // send a second set of headers — swallow that, the exchange
           // close below is what actually matters
-          try respond(ex, 500, ServeJson.err(e.toString).toString)
+          try respond(ex, 500, ServeJson.err("internal error").toString)
           catch { case _: Throwable => () }
       } finally ex.close()
 
@@ -86,14 +91,10 @@ final class HttpTransport(collections: Map[String, Graft.HadithEngine],
           case ("GET", List("status", "fts")) =>
             (200, ServeJson.ftsStatus(eng).toString)
           case ("POST", List("search", "hybrid")) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-            val node = ServeJson.mapper.readTree(if (body.isEmpty) "{}" else body)
-            val query = Option(node.get("query")).map(_.asText()).filter(_.nonEmpty)
-            query match {
-              case None => (400, ServeJson.err("Missing 'query'").toString)
-              case Some(q) =>
-                val n = Option(node.get("n_results")).map(_.asInt()).getOrElse(10)
-                val mode = Option(node.get("mode")).map(_.asText()).getOrElse("balanced")
+            HttpTransport.parseHybrid(
+                new String(ex.getRequestBody.readAllBytes(), UTF_8)) match {
+              case Left(msg) => (400, ServeJson.err(msg).toString)
+              case Right((q, n, mode)) =>
                 (200, ServeJson.searchEnvelopeTyped(eng, q, n, mode).toString)
             }
           case _ => (404, ServeJson.err("not found").toString)
@@ -108,6 +109,38 @@ final class HttpTransport(collections: Map[String, Graft.HadithEngine],
 }
 
 object HttpTransport {
+  /** Turn Nagle off on the server's sockets unless the user already
+    * chose: the JDK server writes a response's headers and body as two
+    * segments, and with Nagle on the body waits for the client's
+    * delayed ACK of the headers — ~40 ms per keep-alive request for a
+    * plain client. The JDK reads `sun.net.httpserver.nodelay` ONCE,
+    * when the first server of the JVM is created, so every
+    * [[HttpTransport]] calls this before `HttpServer.create`. */
+  private def preferNoDelay(): Unit =
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true"): Unit
+
+  /** Parse a `POST …/search/hybrid` body into (query, n_results,
+    * mode), or the message of a 400: malformed JSON (the reference's
+    * Flask `get_json` answers it with 400), a missing or empty
+    * `query`, or an `n_results` that is not an integer. Defaults:
+    * n_results 10, mode "balanced"; an empty body is `{}`. */
+  private[graft] def parseHybrid(body: String): Either[String, (String, Int, String)] = {
+    val node =
+      try Option(ServeJson.mapper.readTree(if (body.isEmpty) "{}" else body))
+      catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
+    def field(name: String) = node.flatMap(n => Option(n.get(name)))
+    if (node.isEmpty) Left("Malformed JSON body")
+    else field("query").map(_.asText()).filter(_.nonEmpty) match {
+      case None => Left("Missing 'query'")
+      case Some(q) => field("n_results") match {
+        case Some(n) if !(n.isIntegralNumber && n.canConvertToInt) =>
+          Left("'n_results' must be an integer")
+        case n => Right((q, n.fold(10)(_.asInt()),
+          field("mode").map(_.asText()).getOrElse("balanced")))
+      }
+    }
+  }
+
   /** TLS keying: a PKCS12 keystore path + password, or (both defaults)
     * an EPHEMERAL self-signed localhost keypair minted at first use —
     * the dev analog of the reference's `ssl_context` dev runner

@@ -55,9 +55,10 @@ class PlanAuditSpec extends SparkSpec {
     // its returned plan is a checkpoint scan — audit the LAZY pipeline,
     // the near-dup-paths doctrine: centroid-literal filter (partition
     // pruning), no join, top-k as TakeOrdered
-    val lazySpill = Similarity.ivfTopKSpill(e, "vec_id", "embedding", qv,
-      k = 20, nCentroids = 16, nProbe = 2, lloydIters = 1,
-      materialize = false)
+    val lazySpill = Similarity.withSpillIvf(e, "vec_id", "embedding", 16,
+        lloydIters = 1, materialize = false) { (_, asg, cents) =>
+      Similarity.ivfProbeSpill(asg, cents, qv, nProbe = 2, k = 20)
+    }
     val ps = plan(lazySpill)
     assert(ps.contains("TakeOrderedAndProject"), "ann_topk spill (lazy) lacks TakeOrdered")
     assert(!ps.contains("Join"), "ann_topk spill probe plans a join")
@@ -699,8 +700,8 @@ class PlanAuditSpec extends SparkSpec {
     // byte envelope (r15 verdict #1).
     val schedule = Similarity.sq8ScheduleFrame(probes, "vec_id", "embedding",
       cents, 3)
-    val p1 = GraftIndexes.sq8CodeRankJoinFrame(asg, schedule, 40,
-      broadcastProbes = true).queryExecution.executedPlan.toString
+    val p1 = GraftIndexes.sq8CodeRankJoinFrame(asg, schedule, 40)
+      .queryExecution.executedPlan.toString
     assert(p1.contains("BroadcastHashJoin"),
       "batched code rank does not broadcast the schedule")
     assert("""PartitionFilters: \[[^\]]*dynamicpruning""".r.findFirstIn(p1).isDefined,
@@ -771,7 +772,9 @@ class PlanAuditSpec extends SparkSpec {
     GraftIndexes.writeIvfSq8(spark, base, "vec_id", "embedding", s"$dir/ivf",
       nCentroids = 16, lloydIters = 1)
     val centsBefore = GraftIndexes.openIvf(spark, s"$dir/ivf")._2
-    GraftIndexes.appendIvfSq8(spark, delta, "vec_id", "embedding", s"$dir/ivf")
+    // the one append reads `c8` off the layout and codes the delta with
+    // ivfSq8Rows (appendIvfSq8 forwards here)
+    GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir/ivf")
     val (asg, cents) = GraftIndexes.openIvf(spark, s"$dir/ivf")
     // no retrain on append
     assert(cents.map(_.toSeq).toSeq === centsBefore.map(_.toSeq).toSeq)
@@ -799,14 +802,14 @@ class PlanAuditSpec extends SparkSpec {
     // spill dedupe and occupy probe top-k slots twice
     GraftIndexes.writeIvfSq8(spark, base, "vec_id", "embedding", s"$dir/ivf",
       nCentroids = 16, lloydIters = 1)
-    GraftIndexes.appendIvfSq8(spark, delta, "vec_id", "embedding", s"$dir/ivf")
+    GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir/ivf")
     val (asg1, cents) = GraftIndexes.openIvf(spark, s"$dir/ivf")
     val rowsOnce = asg1.count()
     val probeOnce = GraftIndexes.ivfSq8ProbeSplit(asg1, cents, q, nProbe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    GraftIndexes.appendIvfSq8(spark, delta, "vec_id", "embedding", s"$dir/ivf")
+    GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir/ivf")
     val (asg2, _) = GraftIndexes.openIvf(spark, s"$dir/ivf")
-    assert(asg2.count() === rowsOnce, "retried appendIvfSq8 duplicated rows")
+    assert(asg2.count() === rowsOnce, "retried composed-layout appendIvf duplicated rows")
     val probeTwice = GraftIndexes.ivfSq8ProbeSplit(asg2, cents, q, nProbe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probeTwice === probeOnce, "double-append changed probe results")
@@ -915,9 +918,10 @@ class PlanAuditSpec extends SparkSpec {
     val persisted = Similarity.rpqProbeLayout(asg, cents, books, q,
         nProbe, k = 20).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val mem = Similarity.ivfRpqTopK(emb, "vec_id", "embedding", q, k = 20,
-        dim = Queries.Dim, nCentroids = nLists, nProbe = nProbe).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val mem = Similarity.withSpillIvf(emb, "vec_id", "embedding", nLists) {
+        (_, a, c) => Similarity.ivfRpqProbe(a, c,
+          Similarity.rpqTrain(a, c, Queries.Dim), q, nProbe, k = 20)
+      }.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(persisted === mem,
       "persisted residual probe diverged from the in-memory rung")
     // append face: assign + encode only against the read-back sidecars
@@ -928,13 +932,13 @@ class PlanAuditSpec extends SparkSpec {
     GraftIndexes.writeRpq(spark, base, "vec_id", "embedding", s"$dir2/rpq",
       dim = Queries.Dim)
     val booksBefore = GraftIndexes.openRpq(spark, s"$dir2/rpq")._3
-    GraftIndexes.appendRpq(spark, delta, "vec_id", "embedding", s"$dir2/rpq")
+    GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir2/rpq")
     val once = GraftIndexes.openRpq(spark, s"$dir2/rpq")._1.count()
-    GraftIndexes.appendRpq(spark, delta, "vec_id", "embedding", s"$dir2/rpq")
+    GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir2/rpq")
     val (asg2, cents2, booksAfter) = GraftIndexes.openRpq(spark, s"$dir2/rpq")
-    assert(asg2.count() === once, "retried appendRpq duplicated rows")
+    assert(asg2.count() === once, "retried residual-layout appendIvf duplicated rows")
     assert(booksAfter.map(_.map(_.toSeq).toSeq).toSeq ===
-      booksBefore.map(_.map(_.toSeq).toSeq).toSeq, "appendRpq retrained books")
+      booksBefore.map(_.map(_.toSeq).toSeq).toSeq, "appendIvf retrained books")
     // appended rows code through the ONE rpqRows projection: equal to a
     // one-shot encode of the delta against the same sidecars
     val oneShot = Similarity.rpqRows(
@@ -948,13 +952,6 @@ class PlanAuditSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getAs[Int]("centroid"),
         r.getSeq[Byte](2))).toSet
     assert(appended === oneShot, "appended rPQ codes drifted from one-shot encode")
-    // layout guard: appendRpq refuses a code-less writeIvf layout
-    val dir3 = java.nio.file.Files.createTempDirectory("plan-rpq-guard").toString
-    GraftIndexes.writeIvf(spark, base, "vec_id", "embedding", s"$dir3/ivf")
-    val err = intercept[IllegalArgumentException] {
-      GraftIndexes.appendRpq(spark, delta, "vec_id", "embedding", s"$dir3/ivf")
-    }
-    assert(err.getMessage.contains("pcode"))
   }
 
   test("persisted SQ8 layer: byte codes on disk, probe bit-identical to the in-memory rung (E3)") {

@@ -55,9 +55,56 @@ class ServeTransportsSpec extends SparkSpec {
       assert(hit.get("doc_id").asText === direct.head.getAs[String]("doc_id"))
 
       assert(post("/api/riyadussalihin/search/hybrid", "{}").statusCode() === 400)
+      val bad = post("/api/riyadussalihin/search/hybrid", """{"query": "x",""")
+      assert(bad.statusCode() === 400)
+      assert(!bad.body().contains("Exception"))
       assert(post("/api/nope/search/hybrid", """{"query":"x"}""").statusCode() === 404)
       assert(get("/api/riyadussalihin/unknown").statusCode() === 404)
     } finally t.stop()
+  }
+
+  test("hybrid search body parse: 400 for malformed JSON, missing query, non-integer n_results") {
+    import HttpTransport.parseHybrid
+    assert(parseHybrid("""{"query":"patience","n_results":3,"mode":"spec"}""") ===
+      Right(("patience", 3, "spec")))
+    assert(parseHybrid("""{"query":"patience"}""") === Right(("patience", 10, "balanced")))
+    assert(parseHybrid("""{"query": "x",""") === Left("Malformed JSON body"))
+    assert(parseHybrid("") === Left("Missing 'query'"))
+    assert(parseHybrid("""{"n_results":3}""") === Left("Missing 'query'"))
+    Seq("\"3\"", "2.5", "null", "10000000000").foreach { n =>
+      assert(parseHybrid(s"""{"query":"x","n_results":$n}""") ===
+        Left("'n_results' must be an integer"), n)
+    }
+  }
+
+  test("http keep-alive requests see no delayed-ACK stall (median < 15 ms over 200)") {
+    // a plain client: one socket, no quick-ACK option, each request
+    // written only after the previous response was read in full
+    val t = new HttpTransport(Map.empty, port = 0)
+    val sock = try new java.net.Socket("127.0.0.1", t.boundPort)
+      catch { case e: Throwable => t.stop(); throw e }
+    try {
+      sock.setSoTimeout(10000)
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val req = "GET /health HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes(UTF_8)
+      def readResponse(): String = {
+        val head = new StringBuilder
+        while (!head.toString.endsWith("\r\n\r\n")) {
+          val b = in.read(); assert(b >= 0, "connection closed"); head += b.toChar
+        }
+        val len = "(?i)content-length: *(\\d+)".r.findFirstMatchIn(head)
+          .map(_.group(1).toInt).getOrElse(0)
+        new String(in.readNBytes(len), UTF_8)
+      }
+      val ms = (0 until 200).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        assert(readResponse() === """{"ok":true}""")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(100) < 15.0, f"median keep-alive request took ${ms(100)}%.1f ms")
+    } finally { sock.close(); t.stop() }
   }
 
   test("mcp stdio transport answers initialize, tools/list, tools/call over jsonrpc") {
