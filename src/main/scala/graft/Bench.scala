@@ -1,4 +1,5 @@
 package graft
+import graft.obs.SparkTally
 import graft.operators.{Bm25, Postings}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -31,39 +32,6 @@ object Bench {
   // decimal-comma locale (de_DE, tr_TR, …) would render invalid JSON
   private[graft] def fmt(v: Double, decimals: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
-
-  /** Cumulative shuffle/spill tally across all tasks — wall time on 32
-    * local cores hides shuffle-VOLUME regressions that dominate at
-    * cluster scale, so the artifact records per-query shuffle bytes
-    * (delta of this counter around each cold run). Listener events are
-    * async; [[stableDelta]] polls until the counters settle, which is
-    * exact enough for telemetry (queries run strictly sequentially). */
-  private[graft] final class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-      }
-    }
-    def snapshot: (Long, Long, Long) = (write.get, read.get, spill.get)
-    /** snapshot once the async listener queue has gone quiet (two equal
-      * reads 20 ms apart, 500 ms cap). */
-    def settled(): (Long, Long, Long) = {
-      var prev = snapshot
-      var i = 0
-      while (i < 25) {
-        Thread.sleep(20)
-        val cur = snapshot
-        if (cur == prev) i = 25 else { prev = cur; i += 1 }
-      }
-      prev
-    }
-  }
 
   /** Rotation pools for the two point-lookup warm queries: repeated
     * IDENTICAL keys would let any JVM/plan-level residue make the timed
@@ -101,12 +69,9 @@ object Bench {
       val buildWidth = math.max(1, sys.env.get("SPARK_GRAFT_SERVE_BUILD_WIDTH")
         .flatMap(_.toIntOption).getOrElse(8))
       spark.conf.set("spark.sql.shuffle.partitions", buildWidth.toString)
-      val tOpen0 = System.nanoTime()
-      val hadith = Graft.openHadith(spark, Queries.HadithBooks)
-      val hadithOpenS = (System.nanoTime() - tOpen0) / 1e9
-      val tOpen1 = System.nanoTime()
-      val quran = Graft.openQuran(spark, Queries.QuranDir, Some(Queries.NpzPath))
-      val quranOpenS = (System.nanoTime() - tOpen1) / 1e9
+      val (hadith, hadithOpenS) = secs(Graft.openHadith(spark, Queries.HadithBooks))
+      val (quran, quranOpenS) =
+        secs(Graft.openQuran(spark, Queries.QuranDir, Some(Queries.NpzPath)))
       val qv = quran.emb.get.where(col("verse_key") === "1:1")
         .head().getSeq[Float](1).toArray
 
@@ -199,14 +164,11 @@ object Bench {
       // CPU burst inflates. One per round; rounds whose sentinel runs
       // > 2× the quietest round are flagged and excluded from the
       // *_adj stats (the raw p50/p95 still report every run).
-      def sentinelMs(): Double = {
-        val t0 = System.nanoTime()
-        // 8 partitions, not defaultParallelism: 32 micro-tasks made the
-        // sentinel itself scheduling-noise-bound (its own variance
-        // flagged 14/15 rounds on a moderately busy host)
-        spark.range(0L, 1L << 22, 1L, 8).agg(sum("id")).head()
-        (System.nanoTime() - t0) / 1e6
-      }
+      // 8 partitions, not defaultParallelism: 32 micro-tasks made the
+      // sentinel itself scheduling-noise-bound (its own variance
+      // flagged 14/15 rounds on a moderately busy host)
+      def sentinelMs(): Double =
+        secs(spark.range(0L, 1L << 22, 1L, 8).agg(sum("id")).head())._2 * 1e3
 
       // warm-up every query first (JIT + codegen + broadcast reuse), then
       // measure in ROUND-ROBIN rounds (run 1 of every query, run 2, …) —
@@ -232,9 +194,7 @@ object Bench {
             // GC pauses from the previous query's garbage landing inside
             // the next query's timed window
             System.gc()
-            val t0 = System.nanoTime(); run()
-            times(name) = times.getOrElse(name, Nil) :+
-              ((round, (System.nanoTime() - t0) / 1e6))
+            times(name) = times.getOrElse(name, Nil) :+ ((round, secs(run())._2 * 1e3))
           }
         }
         // a contended round must clear BOTH a relative and an absolute
@@ -274,22 +234,18 @@ object Bench {
       var persistedTimes = Map.empty[String, Double]
       var persistedEntries = Seq.empty[String]
       var noisyPersisted = 0
-      if (!sys.env.get("SPARK_GRAFT_SERVE_PERSISTED").contains("0")) try {
+      if (!sys.env.get("SPARK_GRAFT_SERVE_PERSISTED").contains("0")) orSkip("persisted serve") {
         // writes/opens are batch work: restore batch conf, re-tune after
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", buildWidth.toString)
         val dir = java.nio.file.Files.createTempDirectory("graft-serve-idx").toString
-        val tW0 = System.nanoTime()
-        GraftIndexes.writeHadith(spark, Queries.HadithBooks, s"$dir/hadith")
-        GraftIndexes.writeQuran(spark, Queries.QuranDir, s"$dir/quran",
-          Some(Queries.NpzPath))
-        val writeS = (System.nanoTime() - tW0) / 1e9
-        val tP0 = System.nanoTime()
-        val ph = GraftIndexes.openHadith(spark, s"$dir/hadith")
-        val phOpenS = (System.nanoTime() - tP0) / 1e9
-        val tP1 = System.nanoTime()
-        val pq = GraftIndexes.openQuran(spark, s"$dir/quran")
-        val pqOpenS = (System.nanoTime() - tP1) / 1e9
+        val (_, writeS) = secs {
+          GraftIndexes.writeHadith(spark, Queries.HadithBooks, s"$dir/hadith")
+          GraftIndexes.writeQuran(spark, Queries.QuranDir, s"$dir/quran",
+            Some(Queries.NpzPath))
+        }
+        val (ph, phOpenS) = secs(GraftIndexes.openHadith(spark, s"$dir/hadith"))
+        val (pq, pqOpenS) = secs(GraftIndexes.openQuran(spark, s"$dir/quran"))
         persistedTimes = Map("index_write_s" -> writeS,
           "hadith_open_persisted_s" -> phOpenS, "quran_open_persisted_s" -> pqOpenS)
         GraftSession.tuneForServing(spark)
@@ -299,9 +255,6 @@ object Bench {
           "quran_hybrid_warm_persisted" -> (() =>
             pq.search(Queries.QuranQuery, 5, "hybrid", Some(qv)).collect(): Unit)))
         persistedEntries = pe; noisyPersisted = np
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] persisted serve skipped: $e")
       }
       // typed-path THROUGHPUT: aggregate QPS over a fixed thread pool and
       // rotated queries (every call re-runs its probes — no result cache
@@ -313,11 +266,8 @@ object Bench {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
         try {
           (0 until threads * 8).foreach(body) // warm
-          val t0 = System.nanoTime()
-          val futs = (0 until iters).map(i =>
-            pool.submit(new Runnable { def run(): Unit = body(i) }))
-          futs.foreach(_.get())
-          iters / ((System.nanoTime() - t0) / 1e9)
+          iters / secs((0 until iters).map(i =>
+            pool.submit(new Runnable { def run(): Unit = body(i) })).foreach(_.get()))._2
         } finally pool.shutdown()
       }
       // same doctrine as the persisted phase: a throughput failure must
@@ -327,7 +277,7 @@ object Bench {
         "patience and gratitude in hardship", "honesty in trade",
         "kindness to parents", "\"actions are judged by intentions\"")
       var qpsRows = Seq.empty[String]
-      try {
+      orSkip("qps phase") {
         val hadithQps = qps(16, 2000)(i =>
           hadith.searchTyped(HadithQs(i % HadithQs.length), 10): Unit)
         val quranQps = qps(16, 1000)(i =>
@@ -335,9 +285,6 @@ object Bench {
         qpsRows = Seq(
           s""""hadith_search_typed_qps16":${fmt(hadithQps, 0)}""",
           s""""quran_hybrid_typed_qps16":${fmt(quranQps, 0)}""")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] qps phase skipped: $e")
       }
 
       val persistedJson = persistedEntries ++ persistedTimes.toSeq.sortBy(_._1)
@@ -529,24 +476,90 @@ object Bench {
     }
   }
 
+  /** Run an optional bench phase: a failure costs only that phase's
+    * fields and is logged as skipped. */
+  private def orSkip(phase: String)(body: => Unit): Unit =
+    try body catch { case e: Throwable => System.err.println(s"[bench] $phase skipped: $e") }
+
+  /** `f`'s value and its wall seconds. */
+  private[graft] def secs[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val v = f
+    (v, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Per-query wall cap (seconds) of every cold run; generous vs the
+    * ~18 s worst honest cold query at sf0.1 — it exists to catch wedged
+    * queries, not slow ones. */
+  private[graft] def queryCapS: Int = math.max(30,
+    sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT_S").flatMap(_.toIntOption).getOrElse(300))
+
+  /** One cold run: `totalS` wall seconds, `buildS` the part spent inside
+    * the query function, `err` set when it failed or hit the cap. */
+  private[graft] final case class ColdRun(totalS: Double, buildS: Option[Double],
+                                          err: Option[String], timedOut: Boolean)
+
+  /** Time one registered query cold — the one timer of Bench, BenchSkew
+    * and Probe. Its jobs run under job group `group`, cancelled after
+    * `capS` seconds. */
+  private[graft] def coldRun(spark: SparkSession, sfDir: String, name: String,
+                             fn: Queries.Q, group: String, capS: Int): ColdRun = {
+    // each run measured against a clean block manager: several
+    // operators cache intra-query frames, and the suite's accumulated
+    // (never-revisited) entries otherwise squeeze execution memory for
+    // the later queries — eviction thrash, not honest cold cost.
+    // clearCache only drops CacheManager entries; the dedup operators'
+    // localCheckpoint snapshots are RDD-level persists freed lazily by
+    // the ContextCleaner, so drop those explicitly too — EXCEPT the
+    // stage memo's snapshots: those are the one cross-query residency
+    // that IS re-read (near_dup_survivors derives from the pairs that
+    // near_dup_groups staged; on a cluster they'd be persisted tables).
+    spark.catalog.clearCache()
+    val staged = graft.operators.Dedup.stagedSnapshotIds
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!staged.contains(id)) rdd.unpersist(false)
+    }
+    val t0 = System.nanoTime()
+    // lifecycle mark: nanoTime when the query FUNCTION returned (index
+    // build+persist + driver-side planning done) and the measured
+    // action is about to start; −1 until then
+    val buildMark = new java.util.concurrent.atomic.AtomicLong(-1L)
+    // The cap: a deadline that only fires BETWEEN queries would let one
+    // wedged query eat the whole window (r8 died mid-query). The job
+    // group is thread-local — set it inside the query's own (pool)
+    // thread so cancelJobGroup reaches its jobs, and clear it after.
+    // noop-sink write: forces full evaluation of every column (a bare
+    // count() would let Catalyst prune the projections being measured).
+    val fut = scala.concurrent.Future {
+      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
+      try {
+        val df = fn(spark, sfDir)
+        buildMark.set(System.nanoTime())
+        df.write.format("noop").mode("overwrite").save()
+      } finally spark.sparkContext.clearJobGroup()
+    }(scala.concurrent.ExecutionContext.global)
+    val (err, timedOut) =
+      try {
+        scala.concurrent.Await.result(fut,
+          scala.concurrent.duration.Duration(capS.toLong, "s"))
+        (None, false)
+      } catch {
+        case _: java.util.concurrent.TimeoutException =>
+          spark.sparkContext.cancelJobGroup(group)
+          System.err.println(s"[bench] TIMEOUT $name after ${capS}s")
+          (Some(s"timeout after ${capS}s"), true)
+        case e: Throwable =>
+          System.err.println(s"[bench] FAIL $name: $e")
+          (Some(e.toString), false)
+      }
+    val mark = buildMark.get()
+    ColdRun((System.nanoTime() - t0) / 1e9,
+      if (mark >= 0) Some((mark - t0) / 1e9) else None, err, timedOut)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // 160 distinct cold queries × several codegen stages each: the
-      // default 100-entry generated-class cache THRASHES, and every
-      // eviction is a Janino recompile on the evicted stage's next
-      // planning. Measured r16 (same-host A/B): quran_search_fts 4.27 s
-      // at the default vs 2.37 s sized-to-workload — the cross-round
-      // "in-session heavy-neighbor slowdown" was this eviction, not GC.
-      // STATIC conf: must be set on the JVM's first session.
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", GraftSession.envCores)
 
     // wall-clock budget: the driver's bench window is finite and a killed
     // run that wrote nothing is a lost round (r7 AND r8 both ended with
@@ -583,10 +596,6 @@ object Bench {
     // the cause; non-numeric would throw before any artifact is written.
     val coldRuns = math.max(1,
       sys.env.get("SPARK_GRAFT_COLD_RUNS").flatMap(_.toIntOption).getOrElse(3))
-    // per-query wall cap (seconds); generous vs the ~18 s worst honest
-    // cold query at sf0.1 — it exists to catch wedged queries, not slow ones
-    val queryCapS = math.max(30,
-      sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT_S").flatMap(_.toIntOption).getOrElse(300))
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     // per query: (seconds, error, pass index) — pass index keys into
     // passSentinelS for the noise flag
@@ -598,12 +607,10 @@ object Bench {
     // put ~80% build noise into the number the regression tracker
     // watches. Keyed (name → (build_s, pass)); probe_s = total − build.
     val buildSecs = scala.collection.mutable.Map.empty[String, List[(Double, Int)]]
-    // per query: (shuffle_write, shuffle_read, spill) bytes from the
-    // first successful pass (passes are plan-identical; re-measuring
-    // would only add listener noise)
-    val shuffleStats = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    // per query: the tally's total deltas (shuffle write/read, spill)
+    // from the first successful pass (passes are plan-identical)
+    val shuffleStats = scala.collection.mutable.Map.empty[String, SparkTally.Totals]
+    val tally = SparkTally.attach(spark.sparkContext)
     // telemetry quarantine after a TIMEOUT: cancelJobGroup is async and
     // non-interruptible tasks run on, still incrementing the tally —
     // recording the next queries' deltas would bill the zombie's bytes
@@ -695,10 +702,10 @@ object Bench {
       val qs = results.map { case (k, v, _, _, _, _) => s""""$k":${fmt(v, 3)}""" }
         .mkString("{", ",", "}")
       val detail = results.collect { case (k, v, None, passes, noisy, build) =>
-        val sh = shuffleStats.get(k).map { case (w, r, sp) =>
-          s""","shuffle_w_mb":${fmt(w / 1048576.0, 1)}""" +
-            s""","shuffle_r_mb":${fmt(r / 1048576.0, 1)}""" +
-            s""","spill_mb":${fmt(sp / 1048576.0, 1)}"""
+        val sh = shuffleStats.get(k).map { t =>
+          s""","shuffle_w_mb":${fmt(t.shuffleWrite / 1048576.0, 1)}""" +
+            s""","shuffle_r_mb":${fmt(t.shuffleRead / 1048576.0, 1)}""" +
+            s""","spill_mb":${fmt(t.spill / 1048576.0, 1)}"""
         }.getOrElse("")
         // lifecycle split whenever the in-fn phase is non-trivial: the
         // regression tracker reads probe_s for build-dominated rows
@@ -738,70 +745,18 @@ object Bench {
       // the sentinel is pure CPU through the scheduler (no IO, no
       // cache interplay): ~0.2 s quiet, and it scales with exactly the
       // contention that poisons the real measurements
-      val tS = System.nanoTime()
-      spark.range(256L << 20).agg(sum("id")).head()
-      passSentinelS(pass) = (System.nanoTime() - tS) / 1e9
+      passSentinelS(pass) = secs(spark.range(256L << 20).agg(sum("id")).head())._2
     }
     def runOne(name: String, fn: Queries.Q, pass: Int): Unit = {
-      // each run measured against a clean block manager: several
-      // operators cache intra-query frames, and the suite's accumulated
-      // (never-revisited) entries otherwise squeeze execution memory for
-      // the later queries — eviction thrash, not honest cold cost.
-      // clearCache only drops CacheManager entries; the dedup operators'
-      // localCheckpoint snapshots are RDD-level persists freed lazily by
-      // the ContextCleaner, so drop those explicitly too — EXCEPT the
-      // stage memo's snapshots: those are the one cross-query residency
-      // that IS re-read (near_dup_survivors derives from the pairs that
-      // near_dup_groups staged; on a cluster they'd be persisted tables).
-      spark.catalog.clearCache()
-      val staged = graft.operators.Dedup.stagedSnapshotIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!staged.contains(id)) rdd.unpersist(false)
-      }
-      val preShuffle = if (shuffleStats.contains(name)) (0L, 0L, 0L)
-                       else tally.settled()
-      val t0 = System.nanoTime()
-      // lifecycle mark: nanoTime when the query FUNCTION returned (index
-      // build+persist + driver-side planning done) and the measured
-      // action is about to start; −1 until then
-      val buildMark = new java.util.concurrent.atomic.AtomicLong(-1L)
-      // Per-query cap: the deadline only fires BETWEEN queries, so one
-      // wedged query would otherwise eat the whole window (r8 died
-      // mid-query). The job group is thread-local — set it inside the
-      // query's own thread so cancelJobGroup can reach its Spark jobs.
-      val group = s"bench-$name-$pass"
-      // noop-sink write: forces full evaluation of every column (a bare
-      // count() would let Catalyst prune the projections being measured).
-      val fut = scala.concurrent.Future {
-        spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
-        val df = fn(spark, sfDir)
-        buildMark.set(System.nanoTime())
-        df.write.format("noop").mode("overwrite").save()
-      }(scala.concurrent.ExecutionContext.global)
-      val err =
-        try {
-          scala.concurrent.Await.result(fut,
-            scala.concurrent.duration.Duration(queryCapS.toLong, "s"))
-          None
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            spark.sparkContext.cancelJobGroup(group)
-            tallyQuarantine = 3
-            System.err.println(s"[bench] TIMEOUT $name after ${queryCapS}s")
-            Some(s"timeout after ${queryCapS}s")
-          case e: Throwable =>
-            System.err.println(s"[bench] FAIL $name: $e")
-            Some(e.toString)
-        }
-      samples(name) = samples.getOrElse(name, Nil) :+
-        (((System.nanoTime() - t0) / 1e9, err, pass))
-      if (err.isEmpty && buildMark.get() >= 0)
-        buildSecs(name) = buildSecs.getOrElse(name, Nil) :+
-          (((buildMark.get() - t0) / 1e9, pass))
-      if (err.isEmpty && !shuffleStats.contains(name) && tallyQuarantine == 0) {
-        val (w1, r1, s1) = tally.settled()
-        shuffleStats(name) = (w1 - preShuffle._1, r1 - preShuffle._2, s1 - preShuffle._3)
-      } else if (err.isEmpty && tallyQuarantine > 0) tallyQuarantine -= 1
+      val pre = if (shuffleStats.contains(name)) None else Some(tally.totals())
+      val run = coldRun(spark, sfDir, name, fn, s"bench-$name-$pass", queryCapS)
+      if (run.timedOut) tallyQuarantine = 3
+      samples(name) = samples.getOrElse(name, Nil) :+ ((run.totalS, run.err, pass))
+      if (run.err.isEmpty) run.buildS.foreach(b =>
+        buildSecs(name) = buildSecs.getOrElse(name, Nil) :+ ((b, pass)))
+      if (run.err.isEmpty && tallyQuarantine == 0)
+        pre.foreach(p => shuffleStats(name) = tally.totals() - p)
+      else if (run.err.isEmpty && tallyQuarantine > 0) tallyQuarantine -= 1
       writeArtifact("\"pending\"")
     }
 
@@ -866,21 +821,17 @@ object Bench {
     // (build excluded — the aggregate row already tracks it) so
     // query_detail.quran_match_syntax carries per-tag seconds.
     // Deadline-guarded and isolated: a failure costs this field only.
-    if (!deadlineHit && !pastDeadline) try {
+    if (!deadlineHit && !pastDeadline) orSkip("match-tag timing") {
       val idx = graft.operators.Quran.buildIndex(
         graft.operators.Quran.load(spark, Queries.QuranDir), None).warmed()
       val tags = Queries.MatchQueries.map { case (tag, mq) =>
-        val t0 = System.nanoTime()
-        graft.operators.FtsMatch.search(idx, mq, 5).fold(
+        val (_, s) = secs(graft.operators.FtsMatch.search(idx, mq, 5).fold(
           err => sys.error(s"'$mq': $err"),
-          df => df.write.format("noop").mode("overwrite").save())
-        s""""$tag":${fmt((System.nanoTime() - t0) / 1e9, 2)}"""
+          df => df.write.format("noop").mode("overwrite").save()))
+        s""""$tag":${fmt(s, 2)}"""
       }
       matchTagsJson = tags.mkString("{", ",", "}")
       spark.catalog.clearCache()
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] match-tag timing skipped: $e")
     }
 
     // ── part 2: ANN recall + warm serving path ───────────────────────
@@ -897,12 +848,9 @@ object Bench {
       // a green test name. ~30 s warm-index work; deadline-guarded like
       // the soak below (a run that burned its budget in recallSection
       // must not overshoot by the scoreboard's whole cost — r14 review).
-      if (!pastDeadline) try {
+      if (!pastDeadline) orSkip("golden scoreboard") {
         val (full, compact) = Golden.scoreboard(spark)
         goldenJson = full; goldenCompact = Some(compact)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] golden scoreboard skipped: $e")
       }
       // dedup-spine scale soak (1× vs 10× of the zipf twin): wall-clock
       // scaling + shuffle + spill + hot-bucket trips for the three
@@ -910,8 +858,8 @@ object Bench {
       // shapes stay ~linear and spill-free as the corpus grows (see
       // Soak's scaladoc). Skippable via SPARK_GRAFT_SOAK=0; guarded by
       // the same deadline as the rest of part 2.
-      if (!pastDeadline && sys.env.getOrElse("SPARK_GRAFT_SOAK", "1") != "0") {
-        try {
+      if (!pastDeadline && sys.env.getOrElse("SPARK_GRAFT_SOAK", "1") != "0")
+        orSkip("scale soak") {
           val (full, scales) = Soak.run(spark, "/root/repo/testdata-skew/sf0.1", Seq(1, 10))
           soakJson = full
           soakCompact = for {
@@ -940,11 +888,7 @@ object Bench {
               math.max(s1.annBatchS / math.max(s1.annBatchProbes, 1L), 0.001)}%.2f,""" +
             f""""ann_batch_s10":${s10.annBatchS}%.2f,""" +
             f""""ann_train_r":${s10.annTrainS / math.max(s1.annTrainS, 0.01)}%.1f}"""
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] scale soak skipped: $e")
         }
-      }
     }
     val runs = sys.env.getOrElse("SPARK_GRAFT_SERVE_RUNS", "15").toInt
     val serveJson = serveSection(spark, sfDir, runs)
@@ -976,8 +920,9 @@ object Bench {
     // top-5 shuffle movers (write+read MB): the cluster-scale cost the
     // 32-core wall clock hides — full per-query numbers in query_detail
     val shuffleTop = shuffleStats.toSeq
-      .sortBy { case (n, (w, r, _)) => (-(w + r), n) }.take(5)
-      .map { case (n, (w, r, _)) => s""""$n":${fmt((w + r) / 1048576.0, 0)}""" }
+      .map { case (n, t) => (n, t.shuffleWrite + t.shuffleRead) }
+      .sortBy { case (n, b) => (-b, n) }.take(5)
+      .map { case (n, b) => s""""$n":${fmt(b / 1048576.0, 0)}""" }
       .mkString("{", ",", "}")
     // lifecycle split for build-dominated rows (build ≥ 1 s inside the
     // query fn): rides the compact line so NEXT round's regression
@@ -1021,7 +966,7 @@ object Bench {
     * Shape: {"base":"r14","rows":{"q":{"prev":4.1,"cur":7.2},…}} —
     * base null when no prior artifact exists (fresh checkout). The
     * driver-tail A/B discipline still applies before blaming code:
-    * this field FLAGS movers, the AbProbe interleave adjudicates. */
+    * this field FLAGS movers, the Probe interleave adjudicates. */
   private[graft] def regressionsJson(cur: Map[String, Double],
                                      dir: String = ".",
                                      probe: Map[String, Double] = Map.empty): String = {
@@ -1147,21 +1092,11 @@ object BenchSkew {
     val uniform = args.headOption.getOrElse("/root/testdata/sf0.01")
     val skew = if (args.length > 1) args(1)
                else s"testdata-skew/${uniform.stripSuffix("/").split('/').last}"
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench-skew", GraftSession.envCores)
     def time(q: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      val staged = graft.operators.Dedup.stagedSnapshotIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!staged.contains(id)) rdd.unpersist(false)
-      }
-      val t0 = System.nanoTime()
-      Queries.all(q)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      val run = Bench.coldRun(spark, dir, q, Queries.all(q), s"skew-$q", Bench.queryCapS)
+      run.err.foreach(e => sys.error(s"$q on $dir: $e"))
+      run.totalS
     }
     val rows = Sensitive.map { q =>
       // one UNTIMED warm-up per dir (JIT + codegen would otherwise land
@@ -1191,13 +1126,8 @@ object BenchSkew {
 object BenchServe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SERVE_RUNS", "15").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench-serve", GraftSession.envCores)
     val json = s"""{"metric":"serve","serve":${Bench.serveSection(spark, sfDir, runs)},"sf":"$sfDir"}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SERVE.json"),

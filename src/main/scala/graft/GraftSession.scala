@@ -45,6 +45,11 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
 
+  /** Local cores of the timing mains (Bench, BenchServe, BenchSkew, Soak,
+    * Probe): `SPARK_GRAFT_CPUS`, else every processor of the machine. */
+  def envCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def local(appName: String = "graft", cores: String = "32"): SparkSession = {
     val s = builder(appName, cores).master(s"local[$cores]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.SparkTally
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -84,12 +85,7 @@ object Soak {
     val src = args.headOption.getOrElse("/root/repo/testdata-skew/sf0.1")
     val factors = args.lift(1).map(_.split(",").toSeq.map(_.toInt))
       .getOrElse(Seq(1, 10))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-soak", GraftSession.envCores)
     val (json, _) = run(spark, src, factors)
     java.nio.file.Files.write(java.nio.file.Paths.get("SOAK_LOCAL.json"),
       json.getBytes("UTF-8"))
@@ -113,8 +109,9 @@ object Soak {
     * trees would stack round over round (r14 review). */
   def run(spark: SparkSession, src: String, factors: Seq[Int])
       : (String, Seq[(Int, Scale)]) = {
-    val tally = new Bench.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    // total deltas, not per-group figures: the stream leg's jobs run
+    // under the streaming query's own job group
+    val tally = SparkTally.attach(spark.sparkContext)
     val scratches = scala.collection.mutable.ArrayBuffer.empty[String]
     def scratch(tag: String): String = {
       val d = java.nio.file.Files.createTempDirectory(tag).toString
@@ -129,16 +126,14 @@ object Soak {
         .repartition(32).write.mode("overwrite").parquet(scratchDocs)
       val docs = spark.read.parquet(scratchDocs)
       val n = docs.count()
-      def timed(tag: String)(f: => Long): (Double, Long, (Long, Long, Long)) = {
+      def timed(tag: String)(f: => Long): (Double, Long, SparkTally.Totals) = {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(false))
-        val pre = tally.settled()
-        val t0 = System.nanoTime()
-        val rows = f
-        val el = (System.nanoTime() - t0) / 1e9
-        val post = tally.settled()
+        val pre = tally.totals()
+        val (rows, el) = Bench.secs(f)
+        val delta = tally.totals() - pre
         System.err.println(f"[soak] x$factor $tag%-12s $el%7.2f s  rows=$rows")
-        (el, rows, (post._1 - pre._1, post._2 - pre._2, post._3 - pre._3))
+        (el, rows, delta)
       }
       // 1. full-corpus near-dup stage → survivors
       val (tStage, nSurv, shStage) = timed("stage") {
@@ -233,26 +228,22 @@ object Soak {
           // rerank term amortizes ∝ 1/N and the scan fraction falls
           // ∝ 1/√N, so the fraction must be flat-or-falling at 10×.
           val m = 8
-          val tPq0 = System.nanoTime()
-          val books = Similarity.pqTrain(
-            asg.select(col("vec_id"), col("qv")), Queries.Dim, m, 16, 1)
-          val tPq = (System.nanoTime() - tPq0) / 1e9
+          val (books, tPq) = Bench.secs(Similarity.pqTrain(
+            asg.select(col("vec_id"), col("qv")), Queries.Dim, m, 16, 1))
           val pqRec = Bench.recallFrom(emb, pre, (_, qv) =>
             Similarity.ivfPqProbe(asg, cents, books, qv, nProbeW, k = 21))
           val pqFrac = scanW * (m / (Queries.Dim * 4.0)) +
             (21.0 * 8) / nV.toDouble
-          val tB0 = System.nanoTime()
-          Similarity.ivfProbeSpillJoin(asg, cents,
+          val (_, tB) = Bench.secs(Similarity.ivfProbeSpillJoin(asg, cents,
             emb.where(col("vec_id") < nBatchProbes), "vec_id", "embedding",
-            nProbe, k = 20).write.format("noop").mode("overwrite").save()
-          val tB = (System.nanoTime() - tB0) / 1e9
+            nProbe, k = 20).write.format("noop").mode("overwrite").save())
           (scanAt(nProbe), recall, scanW, recallDef, tB, tPq, pqRec, pqFrac)
         } finally { asg.unpersist(); emb.unpersist(): Unit }
       System.err.println(
         f"[soak] x$factor ann          $tTrain%7.2f s  lists=$nLists probe=$nProbe scan=$annScan%.3f recall=$annRecall%.2f def(probe=$nProbeW scan=$defScan%.3f recall=$defRecall%.2f) batch($nBatchProbes probes $batchS%.2f s)")
-      def sh(t: (Long, Long, Long)) =
-        f"""{"w_mb":${t._1 / 1048576.0}%.1f,"r_mb":${t._2 / 1048576.0}%.1f,"spill_mb":${t._3 / 1048576.0}%.1f}"""
-      val spillMb = (shStage._3 + shIncr._3 + shStream._3) / 1048576.0
+      def sh(t: SparkTally.Totals) =
+        f"""{"w_mb":${t.shuffleWrite / 1048576.0}%.1f,"r_mb":${t.shuffleRead / 1048576.0}%.1f,"spill_mb":${t.spill / 1048576.0}%.1f}"""
+      val spillMb = (shStage.spill + shIncr.spill + shStream.spill) / 1048576.0
       val json =
         f""""x$factor":{"n_docs":$n,"stage_s":$tStage%.2f,"survivors":$nSurv,""" +
           f""""incr_s":$tIncr%.2f,"incr_pairs":$nIncrPairs,""" +
@@ -275,7 +266,7 @@ object Soak {
         s""""src":"$src"}"""
       (json, sections.map { case (f, (_, s)) => f -> s })
     } finally {
-      spark.sparkContext.removeSparkListener(tally)
+      tally.detach()
       scratches.foreach { d =>
         val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
         try walk.sorted(java.util.Comparator.reverseOrder())

@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.functions.TextFns
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The lexical inverted index as DataFrames (SURVEY.md §1.4, §7.3).
   *
@@ -24,56 +26,47 @@ object Postings {
     * an engine open on an otherwise idle cluster should saturate it, not
     * walk its layers one count() at a time. Callers group actions into
     * dependency waves (a layer and its parent never share a wave, so a
-    * cached parent is computed once, not raced). */
-  private[graft] def awaitAll(actions: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // every action's outcome is captured (fatal throwables included — a
-    // bare Future(a()) would never complete on OutOfMemoryError and the
-    // Await would hang forever), and ALL siblings are awaited before the
-    // first failure is rethrown, so a failed open never leaves wave
-    // members still running behind the caller's back
-    val results = Await.result(
-      Future.sequence(actions.map(a => Future(
-        try Right(a()) catch { case t: Throwable => Left(t) }))),
-      Duration.Inf)
-    results.collectFirst { case Left(t) => t }.foreach(t => throw t)
-  }
+    * cached parent is computed once, not raced). Every action's outcome
+    * is captured and ALL siblings are awaited before the first failure
+    * is rethrown, so a failed open never leaves wave members still
+    * running behind the caller's back. */
+  private[graft] def awaitAll(actions: Seq[() => Unit]): Unit =
+    actions.map(onPool(_)).map(Await.result(_, Duration.Inf))
+      .collectFirst { case Left(t) => t }.foreach(t => throw t)
 
   /** Run two bounded actions (e.g. the two probe legs of a hybrid
     * search) as CONCURRENT Spark jobs and return both results. Same
-    * failure discipline as [[awaitAll]]: both siblings complete before
-    * the first failure is rethrown.
-    *
-    * The caller's Spark job group is PROPAGATED into the worker threads
-    * (job groups are thread-local, so jobs launched from a pool thread
-    * would otherwise escape it) — a harness that caps a query via
-    * `cancelJobGroup` can still cancel the concurrent probe legs. */
+    * failure discipline as [[awaitAll]]. */
   private[operators] def await2[A, B](a: () => A, b: () => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext)
-    val group = sc.flatMap(c => Option(c.getLocalProperty("spark.jobGroup.id")))
-    val desc = sc.flatMap(c => Option(c.getLocalProperty("spark.job.description")))
-    val interrupt = sc.flatMap(c =>
-      Option(c.getLocalProperty("spark.job.interruptOnCancel"))).contains("true")
-    def wrap[T](f: () => T): T = (sc, group) match {
-      case (Some(c), Some(g)) =>
-        c.setJobGroup(g, desc.getOrElse(g), interruptOnCancel = interrupt)
-        try f() finally c.clearJobGroup()
-      case _ => f()
-    }
-    val fa = Future(try Right(wrap(a)) catch { case t: Throwable => Left(t) })
-    val fb = Future(try Right(wrap(b)) catch { case t: Throwable => Left(t) })
+    val (fa, fb) = (onPool(a), onPool(b))
     (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf)) match {
       case (Right(x), Right(y)) => (x, y)
-      case (ra, rb) =>
-        throw Seq(ra, rb).collectFirst { case Left(t) => t }.get
+      case (ra, rb) => throw Seq(ra, rb).collectFirst { case Left(t) => t }.get
     }
   }
+
+  /** `f` as a pool task whose outcome is captured (fatal throwables
+    * included — a bare Future(f()) would never complete on
+    * OutOfMemoryError and an Await on it would hang forever).
+    *
+    * Spark's job group, description and interrupt flag are thread-local
+    * properties that a pool thread inherits from whichever thread created
+    * it, so the task is given the CALLER's values (or none) and clears
+    * them afterwards: a harness that caps a query via `cancelJobGroup`
+    * reaches its jobs, and no job carries a stale group. */
+  private def onPool[T](f: () => T): Future[Either[Throwable, T]] = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val props = sc.toSeq.flatMap(c => GroupKeys.map(k => k -> c.getLocalProperty(k)))
+    Future {
+      sc.foreach(c => props.foreach { case (k, v) => c.setLocalProperty(k, v) })
+      try Right(f()) catch { case t: Throwable => Left(t) }
+      finally sc.foreach(_.clearJobGroup())
+    }(ExecutionContext.global)
+  }
+
+  private val GroupKeys = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
 
   /** Build postings from a document table — SHUFFLE-FREE (r13): term
     * frequencies are computed inside each document row

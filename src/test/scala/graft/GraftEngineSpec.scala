@@ -38,36 +38,24 @@ class GraftEngineSpec extends SparkSpec {
     assert(resident === distributed)
     // absent citation → empty result, not an error
     assert(eng.search("Riyad as-Salihin 99999", 10, "spec").count() === 0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       assert(eng.search(q, 10, "spec").collect().nonEmpty)
-      Thread.sleep(500)
-      assert(jobs.get === 0, s"warm citation lookup launched ${jobs.get} Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(l)
+      val jobs = tally.totals().jobs
+      assert(jobs === 0, s"warm citation lookup launched $jobs Spark jobs")
+    } finally tally.detach()
   }
 
   test("warm get_verse launches ZERO Spark jobs (driver-resident lookup)") {
     val eng = Graft.openQuran(spark, "/root/reference/data/quran", None)
     eng.getVerse("1:1").collect() // builds the resident cache (one bounded collect)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       val rows = eng.getVerse("2:255").collect()
       assert(rows.length === 1)
-      // job-start events post at submission, before a blocking collect
-      // returns; the sleep only covers listener-bus delivery lag
-      Thread.sleep(500)
-      assert(jobs.get === 0, s"warm lookup launched ${jobs.get} Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(l)
+      val jobs = tally.totals().jobs
+      assert(jobs === 0, s"warm lookup launched $jobs Spark jobs")
+    } finally tally.detach()
   }
 
   test("over-bound corpora are NEVER collected: engines fall back to distributed lookups") {
@@ -78,20 +66,14 @@ class GraftEngineSpec extends SparkSpec {
     val resident = Graft.openHadith(spark, glob)
     val bounded = new Graft.HadithEngine(resident.index, maxResidentRows = 0)
     val q = "Riyad as-Salihin 680"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       assert(bounded.search(q, 10, "spec").collect().toSeq ===
         resident.search(q, 10, "spec").collect().toSeq)
-      Thread.sleep(500)
       // the distributed path RUNS Spark jobs — proof the resident
       // cache was bypassed (its twin test above asserts zero jobs)
-      assert(jobs.get > 0, "over-bound spec lookup did not go distributed")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(tally.totals().jobs > 0, "over-bound spec lookup did not go distributed")
+    } finally tally.detach()
 
     val residentQ = Graft.openQuran(spark, "/root/reference/data/quran", None)
     val boundedQ = new Graft.QuranEngine(residentQ.index, maxResidentRows = 0)
@@ -111,17 +93,12 @@ class GraftEngineSpec extends SparkSpec {
     assert(typed.map(_.snippet) === df.map(_.getAs[String]("snippet")))
     assert(eng.lookupCitation("no citation here") === Nil)
     // resident typed path: NO Spark jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       assert(eng.lookupCitation(q, 10).nonEmpty)
       val qe = Graft.openQuran(spark, "/root/reference/data/quran", None)
       qe.getVerseTyped("1:1") // builds the resident cache (bounded collects run jobs)
-      jobs.set(0)
+      val mark = tally.totals().jobs
       val hits = qe.getVerseTyped("2:255")
       assert(hits.length === 1)
       assert(hits.head.surah === 2 && hits.head.ayah === 255)
@@ -131,17 +108,16 @@ class GraftEngineSpec extends SparkSpec {
       val dfRows = qe.getVerse("2:255").collect().toSeq
       assert(hits.map(_.textPlain).toSet ===
         dfRows.map(_.getAs[String]("text_plain")).toSet)
-      Thread.sleep(500)
-      assert(jobs.get === 0, s"typed lookups launched ${jobs.get} Spark jobs")
+      val resident = tally.totals().jobs - mark
+      assert(resident === 0, s"typed lookups launched $resident Spark jobs")
       // over-bound: the typed accessors fall back to the distributed
       // twins with identical values (and DO run jobs)
       val bounded = new Graft.HadithEngine(eng.index, maxResidentRows = 0)
       assert(bounded.lookupCitation(q, 10) === typed)
       val boundedQ = new Graft.QuranEngine(qe.index, maxResidentRows = 0)
       assert(boundedQ.getVerseTyped("2:255") === hits)
-      Thread.sleep(500)
-      assert(jobs.get > 0, "over-bound typed lookups did not go distributed")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(tally.totals().jobs - mark > 0, "over-bound typed lookups did not go distributed")
+    } finally tally.detach()
   }
 
   test("resident index layers take data-matched widths, not the session's (serve width)") {

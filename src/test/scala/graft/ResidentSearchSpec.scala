@@ -96,39 +96,28 @@ class ResidentSearchSpec extends SparkSpec {
     hadith.searchTyped("patience and gratitude", 5) // builds the layers
     hadith.searchTyped("Riyad as-Salihin 1", 5, "spec") // builds refRows too
     quran.searchTyped("mercy", 5, "hybrid", Some(qv))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       assert(hadith.searchTyped("narrated by Abu Hurairah", 5).nonEmpty)
       assert(hadith.searchTyped("Riyad as-Salihin 680", 5, "spec").nonEmpty)
       assert(quran.searchTyped("mercy forgiveness", 5, "hybrid", Some(qv)).nonEmpty)
-      Thread.sleep(500)
-      assert(jobs.get === 0, s"warm typed search launched ${jobs.get} Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(l)
+      val jobs = tally.totals().jobs
+      assert(jobs === 0, s"warm typed search launched $jobs Spark jobs")
+    } finally tally.detach()
   }
 
   test("over-bound corpora fall back to the distributed search, same answers") {
     val bounded = new Graft.HadithEngine(hadith.index, maxResidentRows = 0)
     val boundedQ = new Graft.QuranEngine(quran.index, maxResidentRows = 0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       assert(bounded.searchTyped("patience and gratitude", 5) ===
         hadith.searchTyped("patience and gratitude", 5))
       assert(boundedQ.searchTyped("mercy forgiveness", 5, "hybrid", Some(qv)) ===
         quran.searchTyped("mercy forgiveness", 5, "hybrid", Some(qv)))
-      Thread.sleep(500)
       // the fallback path RUNS Spark jobs — proof the resident path is off
-      assert(jobs.get > 0)
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(tally.totals().jobs > 0)
+    } finally tally.detach()
   }
 
   test("ftsMatchTyped: resident equals the distributed fallback, AND semantics hold") {

@@ -467,18 +467,10 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-ndj").toString
-    // jobs per micro-batch, keyed by the batch id Structured Streaming
-    // stamps on every job a foreachBatch body launches
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobs.merge(b, 1, (x, y) => x + y))
-    }
     val mem = MemoryStream[(Long, String)]
     val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
       s"$dir/corpus", s"$dir/index", s"$dir/ckpt", "doc_id", "text")
-    spark.sparkContext.addSparkListener(l)
+    val tally = graft.obs.SparkTally.attach(spark.sparkContext)
     try {
       mem.addData(
         (1L, "spark shuffles partition data across the cluster"),
@@ -493,8 +485,10 @@ class StreamsSpec extends SparkSpec {
           (10L * b + 2, s"fresh content number $b that matches nothing ingested"))
         q.processAllAvailable()
       }
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      val perBatch = (0 to 2).map(b => jobs.getOrDefault(b.toString, 0).intValue)
+      // jobs per micro-batch, keyed by the batch id Structured Streaming
+      // stamps on every job a foreachBatch body launches
+      val jobs = tally.jobs()
+      val perBatch = (0 to 2).map(b => jobs.count(_.batchId.contains(b.toString)))
       // the counts measured on this suite's session (local[4], AQE on) for
       // the first batch (nothing stored to probe) and every later one: a
       // lazy intermediate that two consumers re-derive adds jobs here
@@ -505,7 +499,7 @@ class StreamsSpec extends SparkSpec {
           s"($firstCeiling for the first, $ceiling after)")
       assert(spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long]
         .collect().toSet === Set(1L, 3L, 11L, 21L))
-    } finally { spark.sparkContext.removeSparkListener(l); q.stop() }
+    } finally { tally.detach(); q.stop() }
   }
 
   test("a 1-row batch rewrites only its own bucket partition, not the table") {
