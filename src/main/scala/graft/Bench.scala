@@ -45,6 +45,12 @@ object Bench {
   private val VerseKeys = Array(
     "2:255", "1:1", "3:5", "112:1", "18:10", "36:1", "55:13", "2:1")
 
+  /** The two corpus engines of the serve section, with their open
+    * seconds and the `1:1` verse vector the hybrid rows query with. */
+  private final case class ServeEngines(hadith: Graft.HadithEngine,
+      quran: Graft.QuranEngine, qv: Array[Float],
+      hadithOpenS: Double, quranOpenS: Double)
+
   /** The warm serving measurement: open engines + resident indexes once,
     * run each query `runs` times after warm-up, report p50/p95/mean plus
     * sentinel-adjusted tail stats. Returns the serve section as a JSON
@@ -69,11 +75,6 @@ object Bench {
       val buildWidth = math.max(1, sys.env.get("SPARK_GRAFT_SERVE_BUILD_WIDTH")
         .flatMap(_.toIntOption).getOrElse(8))
       spark.conf.set("spark.sql.shuffle.partitions", buildWidth.toString)
-      val (hadith, hadithOpenS) = secs(Graft.openHadith(spark, Queries.HadithBooks))
-      val (quran, quranOpenS) =
-        secs(Graft.openQuran(spark, Queries.QuranDir, Some(Queries.NpzPath)))
-      val qv = quran.emb.get.where(col("verse_key") === "1:1")
-        .head().getSeq[Float](1).toArray
 
       // resident BM25 index over the sf documents table
       val p = Postings.build(Tables(spark, sfDir, "documents"), "doc_id", "text").cache()
@@ -98,6 +99,22 @@ object Bench {
       ivfAsg.count()
       val ev = embT.where(col("vec_id") === 0)
         .head().getSeq[Float](1).toArray
+      // the engines read the bundled corpora, not the sf tables: opened
+      // AFTER the sf indexes and in an isolated step, so a failed open
+      // costs only the engine rows — the section still measures the two
+      // sf rows and reports the open's error beside them
+      val engines: Either[String, ServeEngines] = try {
+        val (hadith, hadithOpenS) = secs(Graft.openHadith(spark, Queries.HadithBooks))
+        val (quran, quranOpenS) =
+          secs(Graft.openQuran(spark, Queries.QuranDir, Some(Queries.NpzPath)))
+        val qv = quran.emb.get.where(col("verse_key") === "1:1")
+          .head().getSeq[Float](1).toArray
+        Right(ServeEngines(hadith, quran, qv, hadithOpenS, quranOpenS))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] serve engines skipped: $e")
+          Left(e.toString)
+      }
       // indexes are built — now the per-QUERY tune (AQE off: stage
       // re-planning is pure latency on small fixed serving plans)
       GraftSession.tuneForServing(spark)
@@ -112,7 +129,8 @@ object Bench {
       // resident index — the prepared-statement shape a serving system
       // amortizes. The artifact's "prepared" list records which rows
       // follow the second regime.
-      val serveQueries: Seq[(String, () => Unit)] = Seq(
+      val engineQueries: Seq[(String, () => Unit)] = engines.toSeq.flatMap {
+        case ServeEngines(hadith, quran, qv, _, _) => Seq[(String, () => Unit)](
         "hadith_search_warm" -> (() =>
           hadith.search("Hadith narrated by Abu Hurairah", 10).collect(): Unit),
         "hadith_thematic_warm" -> (() =>
@@ -143,7 +161,9 @@ object Bench {
         "hadith_search_typed" -> (() =>
           hadith.searchTyped("Hadith narrated by Abu Hurairah", 10): Unit),
         "quran_hybrid_typed" -> (() =>
-          quran.searchTyped(Queries.QuranQuery, 5, "hybrid", Some(qv)): Unit),
+          quran.searchTyped(Queries.QuranQuery, 5, "hybrid", Some(qv)): Unit))
+      }
+      val serveQueries: Seq[(String, () => Unit)] = engineQueries ++ Seq(
         "bm25_topk_warm" -> {
           val df = Bm25.topK(Bm25.score(p, dict, stats, Queries.Bm25Terms), 20)
           () => df.collect(): Unit
@@ -234,7 +254,8 @@ object Bench {
       var persistedTimes = Map.empty[String, Double]
       var persistedEntries = Seq.empty[String]
       var noisyPersisted = 0
-      if (!sys.env.get("SPARK_GRAFT_SERVE_PERSISTED").contains("0")) orSkip("persisted serve") {
+      for (ServeEngines(_, _, qv, _, _) <- engines.toOption
+           if !sys.env.get("SPARK_GRAFT_SERVE_PERSISTED").contains("0")) orSkip("persisted serve") {
         // writes/opens are batch work: restore batch conf, re-tune after
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", buildWidth.toString)
@@ -277,7 +298,7 @@ object Bench {
         "patience and gratitude in hardship", "honesty in trade",
         "kindness to parents", "\"actions are judged by intentions\"")
       var qpsRows = Seq.empty[String]
-      orSkip("qps phase") {
+      for (ServeEngines(hadith, quran, qv, _, _) <- engines.toOption) orSkip("qps phase") {
         val hadithQps = qps(16, 2000)(i =>
           hadith.searchTyped(HadithQs(i % HadithQs.length), 10): Unit)
         val quranQps = qps(16, 1000)(i =>
@@ -289,9 +310,11 @@ object Bench {
 
       val persistedJson = persistedEntries ++ persistedTimes.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":${fmt(v, 2)}""" }
-      val tail = qpsRows ++ Seq(
-        s""""hadith_open_s":${fmt(hadithOpenS, 2)}""",
-        s""""quran_open_s":${fmt(quranOpenS, 2)}""",
+      val engineJson = engines.fold(
+        e => Seq(s""""engine_error":"${esc(e)}""""),
+        en => Seq(s""""hadith_open_s":${fmt(en.hadithOpenS, 2)}""",
+          s""""quran_open_s":${fmt(en.quranOpenS, 2)}"""))
+      val tail = qpsRows ++ engineJson ++ Seq(
         s""""sentinel_p50_ms":${fmt(pct(allSentinels.toArray.sorted, 0.5), 1)}""",
         s""""noisy_rounds":${noisyMain + noisyPersisted}""",
         s""""prepared":["bm25_topk_warm","ann_topk_warm"]""",
@@ -510,15 +533,10 @@ object Bench {
     // the later queries — eviction thrash, not honest cold cost.
     // clearCache only drops CacheManager entries; the dedup operators'
     // localCheckpoint snapshots are RDD-level persists freed lazily by
-    // the ContextCleaner, so drop those explicitly too — EXCEPT the
-    // stage memo's snapshots: those are the one cross-query residency
-    // that IS re-read (near_dup_survivors derives from the pairs that
-    // near_dup_groups staged; on a cluster they'd be persisted tables).
+    // the ContextCleaner, so drop every persisted RDD explicitly too —
+    // no operator keeps state across queries, so nothing here is re-read.
     spark.catalog.clearCache()
-    val staged = graft.operators.Dedup.stagedSnapshotIds
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!staged.contains(id)) rdd.unpersist(false)
-    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val t0 = System.nanoTime()
     // lifecycle mark: nanoTime when the query FUNCTION returned (index
     // build+persist + driver-side planning done) and the measured
@@ -767,13 +785,8 @@ object Bench {
     for (pass <- 1 to coldRuns) {
       runSentinel(pass)
       for ((name, fn) <- named) {
-        // the two staged near-dup queries run ONCE (pass 1): a re-run hits
-        // the stage memo (reporting a memo probe as "cold"), and
-        // invalidating it instead would bill near_dup_survivors for a full
-        // pipeline rebuild it is designed to never pay
-        val once = name == "near_dup_groups" || name == "near_dup_survivors"
         if (pastDeadline) deadlineHit = true
-        if (!deadlineHit && (!once || pass == 1)) runOne(name, fn, pass)
+        if (!deadlineHit) runOne(name, fn, pass)
       }
     }
     // ── adaptive noise top-up (r17) ──────────────────────────────────
@@ -782,8 +795,7 @@ object Bench {
     // of paying another FULL pass, re-run only the still-noisy queries
     // — a fresh quiet-window measurement either lowers the min or
     // clears the flag (the min's own pass sentinel goes quiet). Bounded
-    // and deadline-guarded; the once-queries are excluded (their memo
-    // makes a re-run not cold).
+    // and deadline-guarded.
     val noisyBar = math.max(0,
       sys.env.get("SPARK_GRAFT_NOISY_BAR").flatMap(_.toIntOption).getOrElse(15))
     // default raised 2 → 8 (r19, r18 verdict #2): the artifact run must
@@ -803,8 +815,7 @@ object Bench {
       runSentinel(pass)
       val noisy = coldResults().collect { case (n, _, _, _, true, _) => n }.toSet
       System.err.println(s"[bench] noise top-up pass $pass: ${noisy.size} noisy rows")
-      for ((name, fn) <- named
-           if noisy(name) && name != "near_dup_groups" && name != "near_dup_survivors") {
+      for ((name, fn) <- named if noisy(name)) {
         if (!pastDeadline) runOne(name, fn, pass)
       }
     }

@@ -903,8 +903,9 @@ object Queries {
         .orderBy("a", "b")),
     // pairs→groups: connected components over the verified near-dup
     // pairs — A~B~C collapses into one group keyed by its min doc_id.
-    // Both queries derive from ONE staged pipeline run (Dedup.nearDupStage
-    // memoizes the verified-pairs snapshot + CC labels per session/params)
+    // Each query runs its own Dedup.nearDupStage: one near-dup pipeline
+    // run per call (verified-pairs snapshot, then CC), nothing kept
+    // across queries
     "near_dup_groups" -> ((s, dir) =>
       Dedup.nearDupStage(docs(s, dir), "doc_id", "text").groups.orderBy("doc_id")),
     // the pipeline's terminal step: the corpus with every non-minimal

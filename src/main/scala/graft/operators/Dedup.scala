@@ -54,17 +54,10 @@ object Dedup {
     * marking for sites where a same-window A/B measured the duplicate
     * compute cheaper than serializing the fill (idle local cores soak
     * the duplicates; see sourceOverlap). */
-  /** Fill-policy override for A/B measurement (and as the deployment
-    * knob the optimization brief asks to keep parameterised):
-    * GRAFT_EAGER_FILL=1 forces every maybeCache site eager,
-    * GRAFT_EAGER_FILL=0 forces lazy, unset keeps the per-site default
-    * each site's same-window A/B picked. */
-  private lazy val fillOverride: Option[Boolean] =
-    sys.env.get("GRAFT_EAGER_FILL").map(_.trim == "1")
   private[operators] def maybeCache(df: DataFrame, materialize: Boolean,
                                     eager: Boolean = true): DataFrame =
     if (materialize) {
-      val c = df.cache(); if (fillOverride.getOrElse(eager)) c.count(); c
+      val c = df.cache(); if (eager) c.count(); c
     } else df
 
   /** Exact dedup groups by content hash: survivor = min(doc_id).
@@ -463,10 +456,9 @@ object Dedup {
     * bounded by the largest component's DIAMETER, which for
     * similarity-threshold graphs is small (near-dup clusters are dense).
     * labels are localCheckpoint'ed per round to cut the iterative
-    * lineage. (For adversarially long path graphs at extreme scale the
-    * alternating small-star/large-star variant gives O(log n) rounds;
-    * this is the GraphX-style form.) */
-  // ── localCheckpoint lifecycle (both CC forms, the streaming ingest's
+    * lineage; a component whose diameter exceeds `maxIter` fails
+    * loudly. (This is the GraphX-style form.) */
+  // ── localCheckpoint lifecycle (the CC loop, the streaming ingest's
   // per-batch snapshots): each localCheckpoint registers one RDD-level
   // persist that spark.catalog.clearCache cannot see; track its ids so
   // the owner frees it — a CC loop the PREVIOUS generation as soon as the
@@ -504,13 +496,12 @@ object Dedup {
     * (two shuffles + a checkpoint) regardless of data size; under the
     * threshold the driver closure is exact, deterministic, and runs in
     * milliseconds. 1M edges ≈ tens of MB on the driver — bounded. Above
-    * it, the iterative loop (or the alternating-star form) is the scale
-    * path, unchanged. */
+    * it, the iterative loop is the scale path, unchanged. */
   val SmallGraphEdges: Long = 1L << 20
 
   /** Driver union-find, min-id representative — produces EXACTLY the
     * labels the distributed fixpoint converges to (the equivalence spec
-    * pins all three forms on random graphs). */
+    * pins both forms on random graphs). */
   private def unionFindComponents(spark: org.apache.spark.sql.SparkSession,
                                   edges: Array[(Long, Long)]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -556,9 +547,9 @@ object Dedup {
         probe.map(r => (r.getLong(0), r.getLong(1))))
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().cache()
-    // materialize sym BEFORE the first snapshot (mirrors the alternating
-    // variant's nodes.count()): its cache buffer must register outside the
-    // snapshot's eager job so the loop's free() can never touch it
+    // materialize sym BEFORE the first snapshot: its cache buffer must
+    // register outside the snapshot's eager job so the loop's free() can
+    // never touch it
     sym.count()
     var (labels, labelIds) = snapshot(
       sym.select(col("a").as("node")).distinct().withColumn("label", col("node")))
@@ -594,110 +585,16 @@ object Dedup {
     labels.select(col("node").as("doc_id"), col("label").as("component"))
   }
 
-  /** Alternating large-star/small-star connected components — the
-    * O(log n)-round form for graphs whose DIAMETER defeats plain label
-    * propagation (a drift chain of near-dups thousands of documents
-    * long). Each round rewires edges toward per-neighborhood minima:
-    *
-    *  - large-star: every node's strictly-larger neighbors reconnect to
-    *    the minimum of its closed neighborhood;
-    *  - small-star: its smaller-or-equal neighbors do the same.
-    *
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * public algorithm.) Both phases are an equi-join + map-side min per
-    * node over the current edge list; the edge set converges to stars
-    * rooted at each component's minimum id, the same unique fixpoint
-    * [[connectedComponents]] reaches, which the equivalence property
-    * spec pins on random graphs. */
-  def connectedComponentsAlternating(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    def snapshot(df: DataFrame) = trackedSnapshot(df)
-    def free(ids: Set[Int]): Unit = freeTracked(spark, ids)
-    // star phase over the symmetric adjacency: neighbors on the `keep`
-    // side of each center u reconnect to m = min(closed neighborhood of
-    // u). The center edge (m, u) is ALWAYS emitted — without it a
-    // component's maximum node loses its last edge in the small phase
-    // (its neighbors rewire to (v, m) pairs that no longer mention it);
-    // the extra edges are within-component by construction, so they cost
-    // a little volume but can never merge distinct components.
-    def star(edges: DataFrame, large: Boolean): DataFrame = {
-      val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      val m = sym.groupBy("a").agg(min("b").as("mb"))
-        .select(col("a").as("u"), least(col("mb"), col("a")).as("m"))
-      val keep = if (large) col("b") > col("a") else col("b") <= col("a")
-      val rewired = sym.where(keep)
-        .join(m, col("a") === col("u"))
-        .select(least(col("b"), col("m")).as("a"),
-          greatest(col("b"), col("m")).as("b"))
-      val center = m.select(col("m").as("a"), col("u").as("b")) // m <= u
-      rewired.union(center).where(col("a") =!= col("b")).distinct()
-    }
-    // node list from the RAW pairs — BEFORE self-loops are dropped, so a
-    // node whose only pair is (x,x) still appears as a singleton
-    // component, matching [[connectedComponents]] exactly
-    val raw = pairs.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
-    val nodes = raw.select(col("a").as("node"))
-      .union(raw.select(col("b").as("node"))).distinct().cache()
-    nodes.count() // materialize before the loop starts freeing snapshots
-    var (edges, edgeIds) = snapshot(
-      raw.select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"))
-        .where(col("a") =!= col("b")).distinct())
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val (next, nextIds) = snapshot(star(star(edges, large = true), large = false))
-      // fixpoint ⇔ identical edge sets (both are canonical a<b, distinct)
-      val changed = next.union(edges).except(next.intersect(edges)).limit(1).count()
-      converged = changed == 0
-      free(edgeIds)
-      edges = next
-      edgeIds = nextIds
-      iter += 1
-    }
-    if (!converged) {
-      nodes.unpersist(false)
-      free(edgeIds) // don't strand the last edge snapshot on the throw path
-      throw new IllegalStateException(
-        s"connectedComponentsAlternating did not converge in $maxIter rounds")
-    }
-    // stars: every non-root points at its root (min-side of its edge);
-    // roots never appear on the right side — recover them via the node
-    // list. groupBy-min (not a bare join) keeps the recovery fan-out-safe
-    // even if a fixpoint edge set were not a perfect star.
-    val roots = edges.groupBy(col("b").as("node")).agg(min("a").as("component"))
-    val out = nodes.join(roots, Seq("node"), "left")
-      .select(col("node").as("doc_id"),
-        coalesce(col("component"), col("node")).as("component"))
-    val snap = out.localCheckpoint()
-    nodes.unpersist(false)
-    free(edgeIds)
-    snap
-  }
-
-  /** One staged near-dup pipeline run: minhash → LSH bands → Jaccard
-    * verify executes ONCE (the verified pairs are an eager localCheckpoint
-    * snapshot via [[jaccardVerify]]'s scope); `groups` and `survivors`
-    * derive from the staged frame instead of recomputing the chain. This
-    * mirrors how a 100 TB dedup actually runs — every stage boundary is a
-    * checkpointed table (on a cluster the pairs would be a persisted
-    * table; localCheckpoint is the single-JVM analog). */
+  /** One near-dup pipeline run: [[minhashNearDupPairs]] executes when
+    * the stage is built (the verified pairs are an eager localCheckpoint
+    * snapshot); `groups` and `survivors` derive from that frame instead
+    * of recomputing the chain. Every stage boundary is a checkpointed
+    * frame, as a cluster dedup persists each boundary as a table. Nothing
+    * is kept across calls: each call pays its own pipeline. */
   final class NearDupStage private[operators] (docs: DataFrame, idCol: String,
-                                               val pairs: DataFrame,
-                                               pairsIds: scala.collection.immutable.Set[Int]) {
-    @volatile private var groupsIds = scala.collection.immutable.Set.empty[Int]
+                                               val pairs: DataFrame) {
     /** pairs→groups closure, computed once per stage. */
-    lazy val groups: DataFrame = {
-      val sc = docs.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val g = connectedComponents(pairs)
-      // CC frees its per-generation snapshots itself; the delta is the
-      // result checkpoint `survivors` later re-reads — track it so
-      // live()/snapshotIds cover every block a derived frame needs
-      groupsIds = (sc.getPersistentRDDs.keySet -- before).toSet
-      g
-    }
+    lazy val groups: DataFrame = connectedComponents(pairs)
     /** Terminal step: one survivor (the group's min id) per near-dup
       * group; untouched docs pass through. */
     lazy val survivors: DataFrame = {
@@ -705,96 +602,13 @@ object Dedup {
         .select(col("doc_id").as(idCol))
       docs.join(dupes, Seq(idCol), "left_anti")
     }
-    /** Every persistent-RDD id a frame of this stage still re-reads. */
-    private[operators] def snapshotIds: scala.collection.immutable.Set[Int] =
-      pairsIds ++ groupsIds
-    /** The staged frames are localCheckpoints: lineage is CUT, so if an
-      * outside actor unpersists the snapshot RDDs (a bench isolation
-      * sweep, a memory-pressure janitor), every derived frame dies with
-      * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing. Liveness
-      * = all RDD ids persisted during staging are still registered. */
-    private[operators] def live(): Boolean =
-      snapshotIds.subsetOf(
-        docs.sparkSession.sparkContext.getPersistentRDDs.keySet)
-  }
-
-  // Stage memo: repeated calls with the same (session, docs plan, params)
-  // — e.g. the groups query and the survivors query of one serving session
-  // — share ONE pipeline run. Keyed on the ANALYZED plan's semantic hash,
-  // so two frames reading the same source through different builder calls
-  // still hit. Bounded: on overflow the map is dropped and the orphaned
-  // snapshots are reclaimed by Spark's ContextCleaner once unreferenced.
-  private val stageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, NearDupStage]()
-
-  /** Drop every memoized near-dup stage; the next [[nearDupStage]] call
-    * recomputes from live data. Needed only after mutating input files
-    * IN PLACE under their existing names — the normal Spark overwrite
-    * path writes fresh part-file names, which [[dataFingerprint]]
-    * already catches. */
-  def invalidateStageMemo(): Unit = stageMemo.clear()
-
-  /** Persistent-RDD ids owned by live memoized stages. An isolation
-    * sweep that unpersists "everything not in use" (e.g. a benchmark
-    * clearing per-query caches) must spare these: staged pairs/groups
-    * are exactly the frames a later stage re-reads, and their lineage
-    * is cut — on a cluster they'd be persisted TABLES no cache sweep
-    * could touch. */
-  def stagedSnapshotIds: Set[Int] = {
-    val it = stageMemo.values.iterator()
-    var acc = Set.empty[Int]
-    while (it.hasNext) acc = acc ++ it.next().snapshotIds
-    acc
-  }
-
-  /** Best-effort input-data fingerprint: md5 of the plan's resolved
-    * input-file list. The semantic hash alone keys on the ROOT PATH of a
-    * file relation, so a directory rewritten between calls would hit a
-    * stale memo; every Spark overwrite emits fresh part-file names
-    * (task UUIDs), so folding the file list in catches rewrites without
-    * touching the filesystem (the listing is already in the relation's
-    * FileIndex). A same-name in-place mutation is invisible here — see
-    * [[invalidateStageMemo]]. */
-  private def dataFingerprint(docs: DataFrame): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    docs.inputFiles.sorted.foreach(f => md.update(f.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
   }
 
   def nearDupStage(docs: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 16, rowsPerBand: Int = 16,
-                   threshold: Double = 0.9): NearDupStage = {
-    val s = docs.sparkSession
-    val key = s"${s.sparkContext.applicationId}#${System.identityHashCode(s)}#" +
-      s"${docs.queryExecution.analyzed.semanticHash()}#${dataFingerprint(docs)}#" +
-      s"$idCol#$textCol#$numHashes#$rowsPerBand#$threshold"
-    if (stageMemo.size > 8) stageMemo.clear()
-    // a hit whose checkpoint blocks were unpersisted out from under the
-    // memo must rebuild, not serve frames that can no longer execute
-    val hit = stageMemo.get(key)
-    if (hit != null && !hit.live()) stageMemo.remove(key, hit)
-    stageMemo.computeIfAbsent(key, _ => {
-      // the [[minhashNearDupPairs]] pipeline, inlined so the staged-id
-      // delta below can sit at the right boundary: the corpus is
-      // tokenized ONCE into the shared token-set frame both the
-      // signature build and the verify read (r19, guide §2.4)
-      val sized = maybeCache(tokenSetsSized(docs, idCol, textCol),
-        materialize = true)
-      val sigs = minhashFromElems(
-        sized.select(col("doc_id"), explode(col("shingles")).as("elem")),
-        numHashes)
-      val cand = lshCandidatePairs(sigs, rowsPerBand)
-      // delta taken around the FINAL stage boundary only: cand's own
-      // transient snapshot is reclaimed by the ContextCleaner once
-      // unreferenced, and folding its id into the liveness set would
-      // read that routine cleanup as an invalidation on every hit
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      val pairs = scoped(materialize = true, sized)(
-        shingleJaccard(sized, cand, threshold))
-      val staged = (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
-      new NearDupStage(docs, idCol, pairs, staged)
-    })
-  }
+                   threshold: Double = 0.9): NearDupStage =
+    new NearDupStage(docs, idCol,
+      minhashNearDupPairs(docs, idCol, textCol, numHashes, rowsPerBand, threshold))
 
   /** Banded-minhash index of a corpus: (band, band_key, doc_id) — the
     * persistent form of the LSH buckets, built once over the EXISTING

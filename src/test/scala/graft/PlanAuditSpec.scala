@@ -71,7 +71,6 @@ class PlanAuditSpec extends SparkSpec {
     import graft.operators.{Dedup, Similarity}
     val docs = Tables(spark, sf, "documents")
     val emb = Tables(spark, sf, "embeddings")
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 16)
     val lazyPlans = Map(
       "near_dup_pairs" -> Similarity.nearDupPairs(emb, "vec_id", "embedding",
         0.3, Queries.Dim, nBits = 8, nBands = 2, materialize = false),
@@ -80,9 +79,10 @@ class PlanAuditSpec extends SparkSpec {
         materialize = false),
       "ngram_jaccard_pairs" -> Dedup.ngramJaccardPairs(docs, "doc_id", "text",
         3, 0.1, materialize = false),
-      "minhash_lsh_pairs" -> Dedup.jaccardVerify(docs, "doc_id", "text",
-        Dedup.lshCandidatePairs(sigs, rowsPerBand = 16, materialize = false),
-        0.9, materialize = false),
+      // the registered form: one shared token-set frame feeds the
+      // signature build and the verify
+      "minhash_lsh_pairs" -> Dedup.minhashNearDupPairs(docs, "doc_id", "text",
+        numHashes = 16, rowsPerBand = 16, threshold = 0.9, materialize = false),
       "incremental_near_dup" -> {
         val existing = docs.where(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0)
         val delta = docs.where(org.apache.spark.sql.functions.col("doc_id") % 10 === 0)
