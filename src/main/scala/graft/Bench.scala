@@ -81,16 +81,12 @@ object Bench {
       val dict = Postings.dictionary(p).cache()
       val stats = Postings.corpusStats(p).cache()
       p.count(); dict.count(); stats.count()
-      // resident ANN bucket index over the sf embeddings table
+      // prepared spill-IVF index over the sf embeddings table at the
+      // registered default's sizing (scale-aware K, 3 spherical Lloyd
+      // iterations), CODED: the c8 column is materialized into the cache
+      // (the writeIvfSq8 layout shape) so warm probes rank on stored
+      // codes instead of re-deriving them from qv per call
       val embT = Tables(spark, sfDir, "embeddings")
-      val annIdx = graft.operators.Similarity
-        .annIndex(embT, "vec_id", "embedding", Queries.Dim, nBits = 4).cache()
-      annIdx.count()
-      // prepared spill-IVF index at the registered default's sizing
-      // (scale-aware K, 3 spherical Lloyd iterations), CODED: the c8
-      // column is materialized into the cache (the writeIvfSq8 layout
-      // shape) so warm probes rank on stored codes instead of
-      // re-deriving them from qv per call
       val embN = embT.count()
       val ivfLists = graft.operators.Similarity.nListsFor(embN)
       val (ivfAsg0, ivfCents) = graft.operators.Similarity

@@ -104,18 +104,47 @@ object Graft {
         refSchema.fields.take(refSchema.fields.length - HadithSearch.RefFilterCols.length))
     private lazy val refToInternal =
       org.apache.spark.sql.graftshim.ColumnShim.internalConverter(refOutSchema)
+    /** The four citation-filter columns of [[refRows]] pulled out once
+      * into primitive arrays, each with its own null mask (a null never
+      * matches, as in the column form's `===`): the per-citation filter
+      * then reads arrays instead of a field-index lookup and a boxed
+      * `Row` read per row per call. */
+    private final class RefCols(rows: Array[org.apache.spark.sql.Row]) {
+      private def isNull(name: String): Array[Boolean] = {
+        val j = refFieldIdx(name); rows.map(_.isNullAt(j))
+      }
+      private def longs(name: String): Array[Long] = {
+        val j = refFieldIdx(name); rows.map(r => if (r.isNullAt(j)) 0L else r.getLong(j))
+      }
+      val collNull: Array[Boolean] = isNull("collection")
+      val coll: Array[String] = {
+        val j = refFieldIdx("collection"); rows.map(_.getString(j))
+      }
+      val globalNull: Array[Boolean] = isNull("ref_global")
+      val global: Array[Long] = longs("ref_global")
+      val bookNull: Array[Boolean] = isNull("ref_book")
+      val book: Array[Long] = longs("ref_book")
+      val numNull: Array[Boolean] = isNull("ref_num")
+      val num: Array[Long] = longs("ref_num")
+    }
+    private lazy val refCols = new RefCols(refRows)
+
     /** The shared resident citation probe: filter + order + take over
       * the memoized projection. Both the DataFrame form and the typed
       * form serve from THIS, so the two public paths cannot drift. */
     private def refHits(ref: Router.ExactRef, n: Int): Seq[org.apache.spark.sql.Row] = {
-      val fi = refFieldIdx
-      def fits(r: org.apache.spark.sql.Row): Boolean =
-        ref.collection.forall(c => !r.isNullAt(fi("collection")) && r.getString(fi("collection")) == c) &&
-        ref.global.forall(g => !r.isNullAt(fi("ref_global")) && r.getLong(fi("ref_global")) == g) &&
-        ref.book.forall(b => !r.isNullAt(fi("ref_book")) && r.getLong(fi("ref_book")) == b) &&
-        ref.num.forall(x => !r.isNullAt(fi("ref_num")) && r.getLong(fi("ref_num")) == x)
+      val rc = refCols
+      val c = ref.collection.orNull
+      val (hasG, g) = (ref.global.isDefined, ref.global.getOrElse(0L))
+      val (hasB, b) = (ref.book.isDefined, ref.book.getOrElse(0L))
+      val (hasN, x) = (ref.num.isDefined, ref.num.getOrElse(0L))
+      def fits(i: Int): Boolean =
+        (c == null || (!rc.collNull(i) && rc.coll(i) == c)) &&
+        (!hasG || (!rc.globalNull(i) && rc.global(i) == g)) &&
+        (!hasB || (!rc.bookNull(i) && rc.book(i) == b)) &&
+        (!hasN || (!rc.numNull(i) && rc.num(i) == x))
       // doc_ids are ASCII, so JVM string order == Spark's UTF8 binary order
-      refRows.view.filter(fits).toSeq.sortBy(_.getString(0)).take(n)
+      refRows.indices.filter(fits).map(refRows).sortBy(_.getString(0)).take(n)
     }
     private def lookupRefResident(ref: Router.ExactRef, n: Int): (DataFrame, Int) = {
       val keep = refOutSchema.fields.length
@@ -162,7 +191,8 @@ object Graft {
       * fusion → scoring → rank) per call over the driver-resident layers:
       * no result memoization, zero Spark jobs once the layers are built.
       * Parity with [[search]] is pinned across the reference's 86-query
-      * benchmark corpus (ResidentSearchSpec). */
+      * benchmark corpus (ResidentSearchSpec) and on a generated corpus
+      * (ResidentParitySpec). */
     def searchTyped(query: String, n: Int = 10,
                     mode: String = "balanced"): Seq[Resident.SearchHit] =
       searchTypedScored(query, n, mode)._1

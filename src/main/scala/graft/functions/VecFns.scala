@@ -136,7 +136,11 @@ object VecFns {
 
   def l2NormalizeLocal(v: Array[Double], roundTo: Int = 6): Array[Double] = {
     val n = math.sqrt(v.map(x => x * x).sum)
-    if (n > 0.0) v.map(x => BigDecimal(x / n).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    // a zero component rounds to +0.0 (BigDecimal has no signed zero):
+    // hashed query embeddings are mostly zeros, so skip its BigDecimal
+    if (n > 0.0) v.map(x =>
+      if (x == 0.0) 0.0
+      else BigDecimal(x / n).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble)
     else v
   }
 }

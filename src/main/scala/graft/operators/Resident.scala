@@ -29,7 +29,8 @@ import scala.collection.immutable.TreeMap
   * Every arithmetic step mirrors the column expressions operation-for-
   * operation (same HALF_UP rounding grid, same evaluation order, same
   * null/NaN semantics), and ResidentSearchSpec pins typed == DataFrame
-  * output across the reference's 86-query benchmark corpus. One caveat
+  * output across the reference's 86-query benchmark corpus
+  * (ResidentParitySpec on a generated corpus, on any host). One caveat
   * is inherent: per-doc BM25 sums accumulate in query-term order here
   * and in Spark's aggregation order there — double addition is not
   * associative, so equality at the round-6 grid is empirical (held by
@@ -76,9 +77,17 @@ object Resident {
     * double) / 10^s` is correctly rounded to the same nearest double
     * BigDecimal.toDouble returns. Near a boundary (or for huge inputs)
     * it falls back to BigDecimal. Turns the hot per-candidate rounding
-    * from ~µs (BigDecimal) into ~ns. */
+    * from ~µs (BigDecimal) into ~ns.
+    *
+    * Two exact returns skip BigDecimal where its answer is known: ±0.0
+    * (BigDecimal has no signed zero, so both round to +0.0), and an `x`
+    * already on the grid — `x * 10^s` EXACTLY an integer (the fused
+    * multiply-add sees the unrounded product), so `x` is that integer
+    * over 10^s and HALF_UP leaves it where it is (dyadic scores such as
+    * 0.21875 at scale 6, integral values at scale 0). */
   def roundHalfUp(x: Double, scale: Int): Double = {
     if (x.isNaN || x.isInfinite) return x
+    if (x == 0.0) return 0.0
     if (scale >= 0 && scale < Pow10.length) {
       val p = Pow10(scale)
       val y = x * p
@@ -92,6 +101,7 @@ object Resident {
         // into Double.compare-based tie ordering downstream
         if (frac > 1e-6 && frac < 0.499999) return sign * f / p + 0.0
         if (frac > 0.500001 && frac < 0.999999) return sign * (f + 1) / p
+        if (frac == 0.0 && Math.fma(x, p, -y) == 0.0) return x
       }
     }
     BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -113,8 +123,9 @@ object Resident {
     (a: Double, b: Double) => java.lang.Double.compare(b, a)
 
   /** (score desc NaN-first, id asc) — the candidate-cut order of every
-    * probe leg's `orderBy(desc(score), asc(id)).limit(k)`. */
-  private val byScoreDescIdAsc: Ordering[(Long, Double)] =
+    * probe leg's `orderBy(desc(score), asc(id)).limit(k)`, which [[topK]]
+    * implements over primitive arrays. */
+  private[graft] val byScoreDescIdAsc: Ordering[(Long, Double)] =
     (x: (Long, Double), y: (Long, Double)) => {
       val c = java.lang.Double.compare(y._2, x._2)
       if (c != 0) c else java.lang.Long.compare(x._1, y._1)
@@ -196,8 +207,6 @@ object Resident {
   // ------------------------------------------------------ hadith layers
 
   final case class Posting(doc: Long, tf: Long, dl: Int)
-  final case class Slot(doc: Long, buckets: Array[Int], qs: Array[Double],
-                        na: Double)
   /** `gradingWs` pre-joins the grading ARRAY the way the column form's
     * `concat_ws(" ", grading)` does (null array → "", null elements
     * skipped) — [[specScoreLocal]] then only lowercases it.
@@ -209,15 +218,37 @@ object Resident {
                            gradingWs: String, english: String, arabic: String,
                            englishLower: String)
 
+  /** One hadith term's postings as parallel primitive arrays: `idx` is
+    * the dense doc index into [[HadithLayers.lexDocs]]. */
+  final class TermPostings(val idx: Array[Int], val tf: Array[Int],
+                           val dl: Array[Int])
+
   /** The driver-resident hadith index: the same layers the DataFrame
-    * probes join, collected once. Field → term → postings as primitive-
-    * backed arrays; slots as bucket-sorted parallel arrays (the exact
-    * rows of [[Hybrid.embedSlots]]); docs keyed by the numeric surrogate. */
+    * probes join, collected once into flat primitive arrays.
+    *
+    * Lexical side: field → term → [[TermPostings]], with `lexDocs`
+    * mapping the dense doc index back to the numeric surrogate.
+    *
+    * Semantic side: the rows of [[Hybrid.embedSlots]] as slot-indexed
+    * `slotDoc`/`slotNa` plus a bucket-major CSR — bucket `b`'s entries
+    * are `bSlot`/`bQs` over `bOff(b) until bOff(b + 1)`, in slot order —
+    * so a query dots only the buckets it touches. That is exact, not an
+    * approximation: slot codes and the query are integral doubles of
+    * L2-normalized vectors on the ×1e7 grid, so by Cauchy-Schwarz every
+    * product and every partial sum is an integer ≤ ~1e14 < 2^53 and the
+    * dot does not depend on summation order; and a skipped zero-query
+    * bucket only ever adds ±0.0, which leaves such a sum unchanged (it
+    * starts at +0.0 and is never −0.0). */
   final class HadithLayers(
-      val post: Map[String, Map[String, Array[Posting]]],
+      val post: Map[String, Map[String, TermPostings]],
+      val lexDocs: Array[Long],
       val dicts: Map[String, TreeMap[String, Long]],
       val stats: Map[String, (Long, Long)],
-      val slots: Array[Slot],
+      val slotDoc: Array[Long],
+      val slotNa: Array[Double],
+      val bOff: Array[Int],
+      val bSlot: Array[Int],
+      val bQs: Array[Double],
       val docs: Map[Long, DocMeta],
       val dim: Int)
 
@@ -232,17 +263,38 @@ object Resident {
     val dicts = HadithSearch.Fields.map(f => f -> idx.dictLocal(f)).toMap
     if (dicts.values.exists(_.isEmpty)) return None
     val postRows = idx.post.select("field", "term", "doc_id", "tf", "dl").collect()
-    val post: Map[String, Map[String, Array[Posting]]] = postRows
+    // sorted distinct posting doc ids: a doc's dense index is its rank
+    val lexDocs = {
+      val ids = postRows.map(_.getLong(2))
+      java.util.Arrays.sort(ids)
+      var n = 0
+      for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      java.util.Arrays.copyOf(ids, n)
+    }
+    // tf ≤ dl, so it fits the Int the dl column already is
+    val post: Map[String, Map[String, TermPostings]] = postRows
       .groupBy(_.getString(0))
       .map { case (f, rs) =>
         f -> rs.groupBy(_.getString(1)).map { case (t, ps) =>
-          t -> ps.map(r => Posting(r.getLong(2), r.getLong(3), r.getInt(4)))
+          t -> new TermPostings(
+            ps.map(r => java.util.Arrays.binarySearch(lexDocs, r.getLong(2))),
+            ps.map(_.getLong(3).toInt), ps.map(_.getInt(4)))
         }
       }
-    val slots = idx.slots.select("doc_id", "buckets", "qs", "na").collect()
-      .map(r => Slot(r.getLong(0),
-        r.getSeq[Long](1).toArray.map(_.toInt),
-        r.getSeq[Double](2).toArray, r.getDouble(3)))
+    val slotRows = idx.slots.select("doc_id", "buckets", "qs", "na").collect()
+    val slotB = slotRows.map(_.getSeq[Long](1))
+    val slotQ = slotRows.map(_.getSeq[Double](2))
+    // CSR: count per bucket, prefix-sum into offsets, fill in slot order
+    val bOff = new Array[Int](idx.dim + 1)
+    slotB.foreach(_.foreach(b => bOff(b.toInt + 1) += 1))
+    for (b <- 0 until idx.dim) bOff(b + 1) += bOff(b)
+    val fill = bOff.clone()
+    val bSlot = new Array[Int](bOff(idx.dim))
+    val bQs = new Array[Double](bOff(idx.dim))
+    for (s <- slotRows.indices; i <- slotB(s).indices) {
+      val b = slotB(s)(i).toInt
+      bSlot(fill(b)) = s; bQs(fill(b)) = slotQ(s)(i); fill(b) += 1
+    }
     val docs = idx.docs.select("num_id", "doc_id", "book_id", "narrator",
         "grading", "english_text", "arabic_text").collect()
       .map { r =>
@@ -255,14 +307,75 @@ object Resident {
           if (en == null) null else en.toLowerCase)
       }
       .toMap
-    Some(new HadithLayers(post,
+    Some(new HadithLayers(post, lexDocs,
       dicts.map { case (f, d) => f -> d.get },
       HadithSearch.Fields.map(f => f -> idx.statLocal(f)).toMap,
-      slots, docs, idx.dim))
+      slotRows.map(_.getLong(0)), slotRows.map(_.getDouble(3)),
+      bOff, bSlot, bQs, docs, idx.dim))
+  }
+
+  /** The first `k` of `(ids(i), sc(i))` under [[byScoreDescIdAsc]], in
+    * that order — a k-bounded max-heap of indices (root = the worst kept
+    * entry), then heap-extraction into place. Ids are unique, so the
+    * order is total and the result is exactly the first k of a full sort
+    * under that order (same set, same order, NaN first as in Spark's
+    * `desc`), at O(m log k) instead of O(m log m). */
+  private[graft] def topK(ids: Array[Long], sc: Array[Double], k: Int): Seq[(Long, Double)] = {
+    val m = ids.length
+    val cap = math.min(k, m)
+    if (cap <= 0) return Nil
+    // after(a, b): entry a ranks strictly after entry b
+    @inline def after(a: Int, b: Int): Boolean = {
+      val c = java.lang.Double.compare(sc(b), sc(a))
+      if (c != 0) c > 0 else ids(a) > ids(b)
+    }
+    val heap = new Array[Int](cap)
+    def siftDown(from: Int, size: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= size) done = true
+        else {
+          val r = l + 1
+          val c = if (r < size && after(heap(r), heap(l))) r else l
+          if (after(heap(c), heap(i))) {
+            val t = heap(i); heap(i) = heap(c); heap(c) = t; i = c
+          } else done = true
+        }
+      }
+    }
+    var size = 0
+    var i = 0
+    while (i < m) {
+      if (size < cap) {
+        heap(size) = i
+        var j = size
+        size += 1
+        while (j > 0 && after(heap(j), heap((j - 1) / 2))) {
+          val p = (j - 1) / 2
+          val t = heap(j); heap(j) = heap(p); heap(p) = t; j = p
+        }
+      } else if (after(heap(0), i)) {
+        heap(0) = i
+        siftDown(0, size)
+      }
+      i += 1
+    }
+    // heap-extract: the root (worst) goes to the end of the shrinking heap
+    while (size > 1) {
+      size -= 1
+      val t = heap(0); heap(0) = heap(size); heap(size) = t
+      siftDown(0, size)
+    }
+    heap.toSeq.map(j => (ids(j), sc(j)))
   }
 
   /** Lexical leg twin of [[HadithSearch.fieldProbe]]: prefix expansion by
-    * dictionary range scan, BM25 accumulation, (-bm25, doc) top-k. */
+    * dictionary range scan, BM25 accumulation into a dense per-doc array
+    * (assigned on first touch, then added in expansion-term order — the
+    * same per-doc operation sequence as a map accumulator), (-bm25, doc)
+    * top-k. */
   private def lexProbe(L: HadithLayers, field: String, terms: Seq[String],
                        prefix: Boolean, k: Int): Seq[(Long, Double)] = {
     val dict = L.dicts(field)
@@ -275,24 +388,40 @@ object Resident {
     val (nDocs, sumDl) = L.stats(field)
     val avgdl = sumDl.toDouble / nDocs
     val fieldPost = L.post.getOrElse(field, Map.empty)
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double]()
+    val acc = new Array[Double](L.lexDocs.length)
+    val seen = new Array[Boolean](L.lexDocs.length)
+    val touched = new Array[Int](L.lexDocs.length)
+    var nTouched = 0
     expanded.foreach { case (t, df) =>
-      fieldPost.getOrElse(t, Array.empty[Posting]).foreach { p =>
-        val w = bm25Weight(p.tf, p.dl, df, nDocs, avgdl)
-        val prev = acc.get(p.doc)
-        acc.put(p.doc, if (prev == null) w else prev + w)
+      fieldPost.get(t).foreach { p =>
+        var i = 0
+        while (i < p.idx.length) {
+          val d = p.idx(i)
+          val w = bm25Weight(p.tf(i), p.dl(i), df, nDocs, avgdl)
+          if (seen(d)) acc(d) += w
+          else { seen(d) = true; acc(d) = w; touched(nTouched) = d; nTouched += 1 }
+          i += 1
+        }
       }
     }
-    import scala.jdk.CollectionConverters._
-    acc.asScala.toSeq
-      .map { case (d, w) => (d.longValue, roundHalfUp(w, 6)) }
-      .sorted(byScoreDescIdAsc)
-      .take(k)
+    val ids = new Array[Long](nTouched)
+    val sc = new Array[Double](nTouched)
+    var j = 0
+    while (j < nTouched) {
+      ids(j) = L.lexDocs(touched(j)); sc(j) = roundHalfUp(acc(touched(j)), 6)
+      j += 1
+    }
+    topK(ids, sc, k)
   }
 
   /** Semantic leg twin of [[Hybrid.vectorCandidatesFromSlots]]: the same
-    * driver-quantized query, array-ordered sparse dot, round-6 cosine,
-    * (-cos, doc) top-k. */
+    * driver-quantized query, round-6 cosine, (-cos, doc) top-k. The dot
+    * walks only the query's nonzero buckets of the bucket-major CSR into
+    * a per-slot accumulator; every slot then scores
+    * `roundHalfUp(dot / (na · qnorm), 6)`, so untouched slots score 0.0
+    * (NaN for a zero-norm slot) exactly as the full array-ordered dot
+    * does — the integer-grid argument on [[HadithLayers]] makes the sum
+    * order-free and the skipped ±0.0 terms inert. */
   private def vecProbe(L: HadithLayers, queryTokens: Seq[String],
                        k: Int): Seq[(Long, Double)] = {
     if (queryTokens.isEmpty) return Nil
@@ -301,13 +430,21 @@ object Resident {
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble)
     val qnorm = math.sqrt(qq.map(x => x * x).sum)
     if (qnorm == 0.0) return Nil // zero-norm query: empty leg (see Hybrid)
-    val out = L.slots.map { s =>
-      var dot = 0.0
-      var i = 0
-      while (i < s.qs.length) { dot += s.qs(i) * qq(s.buckets(i)); i += 1 }
-      (s.doc, roundHalfUp(dot / (s.na * qnorm), 6))
+    val m = L.slotDoc.length
+    val dot = new Array[Double](m)
+    var b = 0
+    while (b < L.dim) {
+      val q = qq(b)
+      if (q != 0.0) {
+        var j = L.bOff(b)
+        val end = L.bOff(b + 1)
+        while (j < end) { dot(L.bSlot(j)) += L.bQs(j) * q; j += 1 }
+      }
+      b += 1
     }
-    out.toSeq.sorted(byScoreDescIdAsc).take(k)
+    var s = 0 // each slot's dot becomes its round-6 cosine, in place
+    while (s < m) { dot(s) = roundHalfUp(dot(s) / (L.slotNa(s) * qnorm), 6); s += 1 }
+    topK(L.slotDoc, dot, k)
   }
 
   /** Typed twin of [[HadithSearch.searchWith]] — route, field-scoped
@@ -350,7 +487,10 @@ object Resident {
     // expand once per query, never per candidate; phrase intents stay
     // unexpanded (Router.coverageGroups is the shared decision point)
     val covGroups = Router.coverageGroups(intent)
-    val hits = (bm.keySet ++ co.keySet).toSeq.sorted.flatMap { id =>
+    val pool = (bm.keySet ++ co.keySet).toSeq.sorted
+    // score every candidate; build hits (and their 240-code-point
+    // previews) only for the n the rank keeps
+    val scored = pool.flatMap { id =>
       L.docs.get(id).map { d =>
         val v = clamp01(co.getOrElse(id, 0.0))
         val fts = ftsSignalLocal(bm.get(id), parityFts)
@@ -369,19 +509,24 @@ object Resident {
             specScoreLocal(d.narrator, lnEn, d.arabic, d.gradingWs,
               intent.tokens, v)
           else clamp01(w.wVector * v + w.wFts * fts + pb + 0.0 + w.wCoverage * cov)
-        SearchHit(d.docId, d.bookId, d.narrator,
-          substrCp(trimSpaces(d.english), 240),
-          roundHalfUp(v, 4), roundHalfUp(fts, 4), roundHalfUp(pb, 4),
-          roundHalfUp(cov, 4), roundHalfUp(score, 4))
+        Scored(d, v, fts, pb, cov, roundHalfUp(score, 4))
       }
     }
-    (hits.sorted(new Ordering[SearchHit] {
-      def compare(x: SearchHit, y: SearchHit): Int = {
+    val top = scored.sorted(new Ordering[Scored] {
+      def compare(x: Scored, y: Scored): Int = {
         val c = java.lang.Double.compare(y.score, x.score) // desc, NaN first
-        if (c != 0) c else x.docId.compareTo(y.docId)
+        if (c != 0) c else x.d.docId.compareTo(y.d.docId)
       }
-    }).take(n), (bm.keySet ++ co.keySet).size)
+    }).take(n)
+    (top.map(c => SearchHit(c.d.docId, c.d.bookId, c.d.narrator,
+      substrCp(trimSpaces(c.d.english), 240),
+      roundHalfUp(c.v, 4), roundHalfUp(c.fts, 4), roundHalfUp(c.pb, 4),
+      roundHalfUp(c.cov, 4), c.score)), pool.size)
   }
+
+  /** A fused candidate's signals and its round-4 score, before the cut. */
+  private final case class Scored(d: DocMeta, v: Double, fts: Double,
+                                  pb: Double, cov: Double, score: Double)
 
   /** Typed fts_match hit (the MCP tool's row shape, mcp_stdio.py:156-191). */
   final case class FtsMatchHit(docId: String, narrator: String,

@@ -69,7 +69,7 @@ class DedupSpec extends SparkSpec {
     assert(banded === brute)
   }
 
-  test("nearDupStage memo sees fresh data after a directory rewrite") {
+  test("nearDupStage reads fresh data after a directory rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
     docs.write.mode("overwrite").parquet(dir)
     val first = Dedup.nearDupStage(spark.read.parquet(dir), "doc_id", "text")
@@ -85,7 +85,7 @@ class DedupSpec extends SparkSpec {
     assert(comps.values.toSet === Set(10L))
   }
 
-  test("nearDupStage rebuilds when its checkpoint blocks are swept away") {
+  test("nearDupStage runs again after its checkpoint blocks are swept away") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sweep").toString
     docs.write.mode("overwrite").parquet(dir)
     val staged = Dedup.nearDupStage(spark.read.parquet(dir), "doc_id", "text")
