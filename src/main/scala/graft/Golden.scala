@@ -46,7 +46,7 @@ object Golden {
   def buildIndex(spark: org.apache.spark.sql.SparkSession): HadithSearch.Index =
     HadithSearch.buildIndex(
       HadithSearch.silver(Ingest.validated(
-        Ingest.readBooks(spark, "/root/reference/data/riyadussalihin/book_*.jsonl")))
+        Ingest.readBooks(spark, Queries.HadithBooks)))
     ).materialize()
 
   /** Driver-side corpus projection for the answerability oracles

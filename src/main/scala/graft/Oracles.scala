@@ -26,9 +26,6 @@ object Oracles {
     "st AS (SELECT CAST(count(*) AS BIGINT) n_docs, CAST(sum(dl) AS BIGINT) sum_dl " +
       "FROM (SELECT DISTINCT doc_id, dl FROM p))"
 
-  // as-of twin: the naive per-left max formulation (rank over the range
-  // join); ties mirror AsOf.asofJoin's contract (right-before-left at
-  // equal ts via <=, highest event_id among equal-ts right rows)
   // the direct hourly aggregate — shared by the batch partial-merge
   // query AND its streaming rollup-maintenance twin (decomposability
   // means both must equal exactly this)
@@ -37,6 +34,9 @@ object Oracles {
       |count(*) AS n_events
       |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin
 
+  // as-of twin: the naive per-left max formulation (rank over the range
+  // join); ties mirror AsOf.asofJoin's contract (right-before-left at
+  // equal ts via <=, highest event_id among equal-ts right rows)
   private val AsofSql =
     """WITH ev AS (SELECT event_id, user_id, epoch_ns(ts) tsn, event_type, value FROM events),
       |p AS (SELECT event_id, user_id, tsn, value FROM ev WHERE event_type='purchase'),
@@ -53,8 +53,12 @@ object Oracles {
   private val Cents4 =
     "CAST(round(l_extendedprice*100) AS BIGINT)*CAST(round((1-l_discount)*100) AS BIGINT)"
 
-  // SQL twin of Queries.piiText — the synthetic-PII enrichment both
-  // pii_* queries apply (the fixture corpus has no PII of its own)
+  /** BT.601 integer luma of synthPng image `id`'s pixel (x, y). */
+  private def synthLuma(id: String, x: String, y: String): String =
+    s"""    299*(($id*31 + $x*7 + $y*13) % 256)
+       |  + 587*(($id*17 + $x*11 + $y*3) % 256)
+       |  + 114*(($id*23 + $x*5 + $y*19) % 256)""".stripMargin
+
   /** Sampled-frame twin shared by video_frames (RIFF/AVI) and
     * video_frames_mp4 (ISO-BMFF): both fixtures carry the same PNG
     * frames (synthPng at effective id doc_id·100 + f, 8×6) at the same
@@ -62,13 +66,11 @@ object Oracles {
     * ONE SQL text replays both containers and any demux divergence
     * fails exactly one row. */
   private val videoFramesSql =
-    """WITH d AS (SELECT doc_id, 3 + doc_id % 4 n
+    s"""WITH d AS (SELECT doc_id, 3 + doc_id % 4 n
       |  FROM documents WHERE doc_id < 64),
       |fr AS (SELECT doc_id, n, unnest([0, n // 2]) f FROM d),
       |px AS (SELECT doc_id, f,
-      |    299*(((doc_id*100 + f)*31 + x*7 + y*13) % 256)
-      |  + 587*(((doc_id*100 + f)*17 + x*11 + y*3) % 256)
-      |  + 114*(((doc_id*100 + f)*23 + x*5 + y*19) % 256) l
+      |${synthLuma("(doc_id*100 + f)", "x", "y")} l
       |  FROM fr
       |  CROSS JOIN (SELECT unnest(range(0, 8)) x)
       |  CROSS JOIN (SELECT unnest(range(0, 6)) y))
@@ -76,39 +78,90 @@ object Oracles {
       |  CAST(6 AS INT) height, CAST(sum(l) AS BIGINT) luma_sum
       |FROM px GROUP BY doc_id, f ORDER BY doc_id, frame""".stripMargin
 
+  // SQL twin of Queries.piiText — the synthetic-PII enrichment both
+  // pii_* queries apply (the fixture corpus has no PII of its own)
   private val PiiSql =
     "text || ' contact user' || doc_id::VARCHAR || '@example.com ip 10.0.' || " +
       "(doc_id % 256)::VARCHAR || '.' || (doc_id % 100)::VARCHAR || " +
       "' ssn 123-45-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') || " +
       "' call +1 555-01' || lpad((doc_id % 100)::VARCHAR, 2, '0')"
 
+  private def wordList(ws: Seq[String]): String = ws.map(s => s"'$s'").mkString("[", ",", "]")
+
+  /** Postings' BM25 (k1 = 1.2, b = 0.75) summed per doc, round 6, over
+    * rows of tf, dl, df, n_docs, sum_dl; `ind` indents continuations. */
+  private def bm25Sum(ind: String): String =
+    s"round(sum(\n$ind  ln((n_docs - df + 0.5)/(df + 0.5) + 1.0)\n" +
+      s"$ind  * (tf * 2.2) / (tf + 1.2*(1.0 - 0.75 + 0.75*dl/(CAST(sum_dl AS DOUBLE)/n_docs)))\n" +
+      s"$ind), 6) bm25"
+
   private def bm25Cte(terms: Seq[String]): String = {
-    val termList = terms.map(t => s"'$t'").mkString("[", ",", "]")
     s"""$Toks, $Posting, $Dict, $Stats,
-       |q AS (SELECT unnest($termList) term),
+       |q AS (SELECT unnest(${wordList(terms)}) term),
        |m AS (SELECT p.doc_id, p.dl, p.tf, d.df, st.n_docs, st.sum_dl
        |      FROM p JOIN q USING(term) JOIN d USING(term) CROSS JOIN st),
-       |bm AS (SELECT doc_id, round(sum(
-       |         ln((n_docs - df + 0.5)/(df + 0.5) + 1.0)
-       |         * (tf * 2.2) / (tf + 1.2*(1.0 - 0.75 + 0.75*dl/(CAST(sum_dl AS DOUBLE)/n_docs)))
-       |       ), 6) bm25 FROM m GROUP BY 1)""".stripMargin
+       |bm AS (SELECT doc_id, ${bm25Sum("       ")} FROM m GROUP BY 1)""".stripMargin
+  }
+
+  // ── token statistics (mirror TextAnalysis): one spelling each ──────
+  private val StopEn = wordList(graft.operators.TextAnalysis.StopwordsEn)
+  private val NUniq = "len(list_distinct(t))"
+  private val NStop = s"len(list_filter(t, x -> list_contains($StopEn, x)))"
+  private val SumTokLen = "list_sum(list_transform(t, x -> len(x)))"
+  private def ratio6(num: String) = s"round(CAST($num AS DOUBLE)/len(t),6)"
+
+  /** text_quality's rounded per-doc ratios over `t`. */
+  private val QualityRatios =
+    s"""${ratio6(NUniq)} ttr,
+       |${ratio6(NStop)} stop_ratio,
+       |${ratio6(SumTokLen)} mean_tok_len""".stripMargin
+
+  /** The unrounded composite quality score (empty doc: 0 ratios). */
+  private val QScoreSum = {
+    def arm(num: String) = s"(CASE WHEN len(t)>0 THEN ${ratio6(num)} ELSE 0.0 END)"
+    s"""    ${arm(NStop)}*0.5
+       |  + ${arm(NUniq)}*0.3
+       |  + least(${arm(SumTokLen)}/10.0, 1.0)*0.2""".stripMargin
+  }
+
+  private val ScriptCounts =
+    """  length(text)-length(regexp_replace(text,'[؀-ۿ]','','g')) n_ar,
+      |  length(text)-length(regexp_replace(text,'[一-鿿]','','g')) n_cjk,
+      |  length(text)-length(regexp_replace(text,'[a-zA-Z؀-ۿ一-鿿]','','g')) n_alpha""".stripMargin
+
+  /** TextAnalysis.qualityFilter twin: unrounded stats `st`, script counts
+    * `sc`, and the cascade's `reasons` in the operator's rule order. */
+  private val QualityStatsCtes =
+    s"""st AS (SELECT doc_id, CAST(len(t) AS BIGINT) n_tok,
+       |  CAST($NUniq AS DOUBLE)/NULLIF(len(t),0) ttr,
+       |  CAST($NStop AS DOUBLE)/NULLIF(len(t),0) sr,
+       |  CAST($SumTokLen AS DOUBLE)/NULLIF(len(t),0) mtl
+       |  FROM toks),
+       |sc AS (SELECT doc_id,
+       |$ScriptCounts
+       |  FROM documents)""".stripMargin
+  private val QualityReasons = {
+    val th = graft.operators.TextAnalysis.QualityThresholds()
+    s"""concat_ws(',',
+       |  CASE WHEN n_tok < ${th.minTokens} THEN 'too_short' END,
+       |  CASE WHEN n_tok > ${th.maxTokens} THEN 'too_long' END,
+       |  CASE WHEN n_tok > 0 AND (mtl < ${th.minMeanTokLen} OR mtl > ${th.maxMeanTokLen}) THEN 'odd_token_len' END,
+       |  CASE WHEN n_tok > 0 AND (n_alpha-n_ar-n_cjk)*2 > n_alpha AND sr < ${th.minStopRatio} THEN 'low_stopword' END,
+       |  CASE WHEN n_tok > 0 AND ttr < ${th.minTtr} THEN 'repetitive' END) reasons""".stripMargin
   }
 
   // lang-id fragments (mirror TextAnalysis.langId) — shared by the
   // prediction and confusion oracles so the heuristic has ONE SQL twin
   private val LangIdCtes = {
     import graft.operators.TextAnalysis._
-    def lst(ws: Seq[String]) = ws.map(s => s"'$s'").mkString("[", ",", "]")
     s"""v AS (SELECT doc_id,
-       |  len(list_intersect(list_distinct(t), ${lst(StopwordsEn)})) ven,
-       |  len(list_intersect(list_distinct(t), ${lst(StopwordsDe)})) vde,
-       |  len(list_intersect(list_distinct(t), ${lst(StopwordsFr)})) vfr,
-       |  len(list_intersect(list_distinct(t), ${lst(StopwordsEs)})) ves
+       |  len(list_intersect(list_distinct(t), $StopEn)) ven,
+       |  len(list_intersect(list_distinct(t), ${wordList(StopwordsDe)})) vde,
+       |  len(list_intersect(list_distinct(t), ${wordList(StopwordsFr)})) vfr,
+       |  len(list_intersect(list_distinct(t), ${wordList(StopwordsEs)})) ves
        |  FROM toks),
        |r AS (SELECT doc_id,
-       |  length(text)-length(regexp_replace(text,'[؀-ۿ]','','g')) n_ar,
-       |  length(text)-length(regexp_replace(text,'[一-鿿]','','g')) n_cjk,
-       |  length(text)-length(regexp_replace(text,'[a-zA-Z؀-ۿ一-鿿]','','g')) n_alpha
+       |$ScriptCounts
        |  FROM documents)""".stripMargin
   }
   private val LangIdCase =
@@ -145,6 +198,21 @@ object Oracles {
   private def cosQ(a: String, b: String) =
     s"round(list_dot_product($a,$b)/(sqrt(list_dot_product($a,$a))*sqrt(list_dot_product($b,$b))),6)"
 
+  /** The single ANN probe `q` (qq): vec_id 0's quantized vector. */
+  private val ProbeQ = "q AS (SELECT qv qq FROM e WHERE vec_id=0)"
+
+  /** Similarity.exactTopK twin: top 20 of `src` (vec_id, qv) rows passing
+    * `where` by exact quantized cosine to the probe `q`. */
+  private def exactTopKSql(src: String, where: String = ""): String =
+    s"""SELECT vec_id, ${cosQ("qv", "qq")} cos FROM $src CROSS JOIN q
+       |${if (where.isEmpty) "" else s"WHERE $where\n"}ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin
+
+  /** Exact rescore of candidate ids `src` (vec_id) against `e`, top k. */
+  private def rescoreTopK(src: String, k: Int): String =
+    s"""SELECT e.vec_id, ${cosQ("e.qv", "q.qq")} cos
+       |FROM $src JOIN e USING(vec_id) CROSS JOIN q
+       |ORDER BY cos DESC, vec_id LIMIT $k""".stripMargin
+
   /** SQ8 encode CTE pair (VecFns.sq8CodesLocal / Similarity.sq8Codes
     * twin) — ONE fragment shared by the standalone `ann_sq8` oracle and
     * ivfSpillOracle's code-rank tail, so the two replays cannot diverge
@@ -163,15 +231,15 @@ object Oracles {
        |  FROM (SELECT ${keys}qq, list_max(list_transform(qq, x -> abs(x))) qm FROM q)
        |  WHERE qm > 0)""".stripMargin
 
-  /** Random-hyperplane bucket expression with the SAME literal signs as
-    * Similarity.lshBucket (derived on the driver from the shared md5
-    * family). */
   /** SQL list literal of hyperplane j's ±1 signs — ONE rendering shared
     * by the LSH-bucket and random-projection oracles. */
   private def signsSql(dim: Int, j: Int, seed: String): String =
     Similarity.hyperplaneSigns(dim, j, seed)
       .map(d => if (d > 0) "1.0" else "-1.0").mkString("[", ",", "]")
 
+  /** Random-hyperplane bucket expression with the SAME literal signs as
+    * Similarity.lshBucket (derived on the driver from the shared md5
+    * family). */
   private def bucketExpr(vcol: String, dim: Int, nBits: Int, seed: String): String =
     (0 until nBits).map { j =>
       s"(CASE WHEN list_dot_product($vcol, ${signsSql(dim, j, seed)}) > 0 THEN ${1L << j} ELSE 0 END)"
@@ -188,8 +256,32 @@ object Oracles {
 
   private def sq(s: String): String = s.replace("'", "''")
 
-  private val QuranGlob = "/root/reference/data/quran/surah_*.jsonl"
-  private val HadithGlob = "/root/reference/data/riyadussalihin/book_*.jsonl"
+  // the reference corpora, at the paths the engine rows read
+  private val QuranGlob = s"${Queries.QuranDir}/surah_*.jsonl"
+  private val HadithRead = s"read_json_auto('${Queries.HadithBooks}', union_by_name=true)"
+  /** Ingest.validated's gate: the language set is exactly {ar, en}. */
+  private val BilingualPred =
+    "list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en']"
+  private val BilingualHadith = s"$HadithRead\n  WHERE $BilingualPred"
+
+  // ── word k-gram shingles of `t` (mirror TextFns.shingles) ───────────
+  private def shingleEnd(k: Int): String = if (k == 2) "len(t)" else s"len(t)-${k - 2}"
+  /** The '_'-joined k-gram starting at 1-based token index `i`. */
+  private def shingleSql(k: Int, i: String): String =
+    s"list_aggr(t[$i:$i+${k - 1}],'string_agg','_')"
+  /** Every k-gram in order (none below k tokens) and their start indexes. */
+  private def shinglesSql(k: Int): String =
+    s"""CASE WHEN len(t)>=$k THEN
+       |  [${shingleSql(k, "i")} for i in range(1, ${shingleEnd(k)})]
+       |  ELSE [] END""".stripMargin
+  private def shingleStarts(k: Int): String =
+    s"CASE WHEN len(t)>=$k THEN range(1, ${shingleEnd(k)}) ELSE [] END"
+  /** Distinct word 3-gram sets `sh` (doc_id, s) — Dedup.shingleSets. */
+  private val ShingleSets3 = s"sh AS (SELECT doc_id, list_distinct(${shinglesSql(3)}) s FROM toks)"
+
+  // ── the shared token-minhash-LSH-verify chain (mirror Dedup): one
+  // builder per stage, used verbatim by every near-dup oracle, so the
+  // pair, incremental, n-gram, component and ingest twins cannot diverge
 
   /** MinHash universal-hash signature CTEs over a (doc_id, elem) relation
     * named `elems` — same md5-derived coefficients as Dedup.minhashCoeffs. */
@@ -203,9 +295,18 @@ object Oracles {
        |  FROM h0 CROSS JOIN (SELECT unnest(range(0,$numHashes)) seed) GROUP BY 1,2)""".stripMargin
   }
 
-  /** Shared token-minhash-LSH-verify chain (16 hashes, one 16-row band,
-    * exact-Jaccard CTE `j`) — used verbatim by the pair oracle and the
-    * connected-components oracle so they cannot diverge. */
+  private val TokenElems = "SELECT doc_id, unnest(list_distinct(t)) elem FROM toks"
+
+  /** Dedup.minhashFromElems + bandKeys twin: 16 MinHash signatures of the
+    * (doc_id, elem) query `elemsSql`, banded by `rowsPerBand` into
+    * `banded0` (doc_id, band, 60-bit md5 band_key). */
+  private def bandKeysCtes(elemsSql: String, rowsPerBand: Int): String =
+    s"""elems AS ($elemsSql),
+       |${minhashSigsCte(16)},
+       |banded0 AS (SELECT doc_id, seed//$rowsPerBand band,
+       |  ('0x' || substring(md5(string_agg(minh::VARCHAR, ':' ORDER BY seed)),1,15))::BIGINT band_key
+       |  FROM sigs GROUP BY doc_id, seed//$rowsPerBand)""".stripMargin
+
   /** Twin of `Dedup.capBuckets` (LSH skew guard): `hot_<out>` lists the
     * over-cap buckets of `src` on `keys`; `<out>` is `src` minus every
     * row in one. The default cap matches the Scala side's 10000; the
@@ -218,12 +319,36 @@ object Oracles {
        |$out AS (SELECT $src.* FROM $src ANTI JOIN hot_$out USING($ks))""".stripMargin
   }
 
-  /** Exact-Jaccard over the `dt` distinct-token sets (x = side a,
-    * y = side b) — the one verify expression every near-dup oracle leg
-    * shares. */
-  private val JaccExpr =
+  /** Dedup.candidatesFromBands twin (and incrementalNearDupPairs' probe
+    * form): distinct (a, b) pairs of `x` × `y` rows sharing a (band,
+    * band_key); a self-join (`x == y`) keeps a < b. */
+  private def bandPairsCte(out: String, x: String, y: String,
+                           xa: String = "x", ya: String = "y"): String = {
+    val lower = if (x == y) s" AND $xa.doc_id<$ya.doc_id" else ""
+    s"""$out AS (SELECT DISTINCT $xa.doc_id a, $ya.doc_id b FROM $x $xa JOIN $y $ya
+       |  ON $xa.band=$ya.band AND $xa.band_key=$ya.band_key$lower)""".stripMargin
+  }
+
+  private val TokenSetsCte =
+    "dt AS (SELECT doc_id, list_distinct(t) s, len(list_distinct(t)) n FROM toks)"
+
+  /** Dedup.verifyPairs twin: exact Jaccard `jacc` of the (a, b) pairs of
+    * `cand` over the (doc_id, s, n) sets `sets` (x = side a, y = side b). */
+  private def verifyJacc(cand: String, sets: String): String =
     "round(CAST(len(list_intersect(x.s,y.s)) AS DOUBLE)" +
-      "/(x.n+y.n-len(list_intersect(x.s,y.s))),6)"
+      "/(x.n+y.n-len(list_intersect(x.s,y.s))),6) jacc\n" +
+      s"  FROM $cand JOIN $sets x ON x.doc_id=a JOIN $sets y ON y.doc_id=b"
+
+  /** Dedup.connectedComponents twin, CTE names prefixed `p`: `reach`
+    * enumerates (node, reachable label) over the (a, b) `edges`; min per
+    * node (`comp`) IS the propagation fixpoint the operator reaches. */
+  private def componentsCtes(p: String, edges: String, withComp: Boolean = true): String =
+    s"""${p}sym AS (SELECT a, b FROM $edges UNION ALL SELECT b, a FROM $edges),
+       |${p}nodes AS (SELECT DISTINCT a AS node FROM ${p}sym),
+       |${p}reach AS (SELECT node, node AS label FROM ${p}nodes
+       |  UNION
+       |  SELECT s.b AS node, r.label FROM ${p}reach r JOIN ${p}sym s ON s.a = r.node)""".stripMargin +
+      (if (withComp) s",\n${p}comp AS (SELECT node, min(label) component FROM ${p}reach GROUP BY 1)" else "")
 
   /** SCALE-AWARE spherical spill-IVF replay (the r14 `ann_topk`
     * default — Similarity.withSpillIvf + ivfProbeSpill): derives K and
@@ -326,7 +451,7 @@ object Oracles {
               |      ORDER BY cos DESC, vec_id) AS INT) rn FROM sc)
               |WHERE rn <= $batchK ORDER BY probe_id, rn""".stripMargin
          else
-           s"""q AS (SELECT qv qq FROM e WHERE vec_id=0),
+           s"""$ProbeQ,
               |probe AS (SELECT cf.i FROM cf CROSS JOIN q
               |  QUALIFY row_number() OVER (
               |    ORDER BY list_dot_product(qq, cf.cqv)/${norm("cf.cqv")} DESC, cf.i) <= (SELECT np FROM kk)),
@@ -386,9 +511,7 @@ object Oracles {
               |  WHERE den2 > 0 AND qn > 0
               |  QUALIFY row_number() OVER (
               |    ORDER BY round(num/(qn*sqrt(den2)),6) DESC, rsc.vec_id ASC) <= ${20 * rpqRerank})
-              |SELECT e.vec_id, ${cosQ("e.qv", "q.qq")} cos
-              |FROM rrk JOIN e USING(vec_id) CROSS JOIN q
-              |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin
+              |${rescoreTopK("rrk", 20)}""".stripMargin
          } else if (pqRerank > 0)
            // composed IVF×PQ tail (Similarity.ivfPqProbe): books train
            // on the FULL corpus, ADC ranks the spill-probed candidates
@@ -397,8 +520,7 @@ object Oracles {
            s""",${pqCtes(pqM, pqKsub, pqIters)},
               |${pqRankTail("cand", pqRerank, 20)}""".stripMargin
          else if (sq8Rerank == 0)
-           s"""SELECT vec_id, ${cosQ("qv", "qq")} cos FROM cand CROSS JOIN q
-              |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin
+           exactTopKSql("cand")
          else
            // IVF+SQ8 tail (Similarity.ivfSq8Probe): candidates are
            // code-ranked (sq8Ctes — the SAME fragment as the ann_sq8
@@ -407,21 +529,9 @@ object Oracles {
               |r AS (SELECT vec_id, qv FROM cd CROSS JOIN qc
               |  QUALIFY row_number() OVER (
               |    ORDER BY ${cosQ("c8", "q8")} DESC, vec_id) <= $sq8Rerank)
-              |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM r CROSS JOIN q
-              |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin}""".stripMargin
+              |${exactTopKSql("r")}""".stripMargin}""".stripMargin
   }
 
-  /** Product-quantization replay (Similarity.pqTopK): m per-subspace
-    * euclidean Lloyd trainings on the integer grid — lowest-id seeds,
-    * assignment by the SHIFTED exact form c·c − 2·s·c (the row-constant
-    * s·s shifts every candidate equally; every term an exact integer
-    * ≤ 1.6e15 < 2⁵³, same form as the Scala side's bestSubCode),
-    * truncated-integer means (HUGEINT `//`), empty cells
-    * keep their previous centroid — then ADC: per-vector approx cosine
-    * Σⱼ q⁽ʲ⁾·c⁽ʲ⁾ / (|q|·√Σⱼ|c⁽ʲ⁾|²) over the trained books, top
-    * k·rerank by (round-6 approx DESC, vec_id), exact rescore, top k.
-    * Zero-norm reconstructions drop (den2 > 0 — the SQ8 qm > 0 rule's
-    * PQ analog); a zero-norm query yields zero rows. */
   /** The PQ training + coding + ADC CTE block — `p`-prefixed names so
     * it composes inside the spill replay (whose c0/a0/cells0 names it
     * would otherwise collide with). Trains on the FULL corpus relation
@@ -473,14 +583,23 @@ object Oracles {
        |  WHERE den2 > 0 AND qn > 0
        |  QUALIFY row_number() OVER (
        |    ORDER BY round(num/(qn*sqrt(den2)),6) DESC, padc.vec_id ASC) <= ${k * rerank})
-       |SELECT e.vec_id, ${cosQ("e.qv", "q.qq")} cos
-       |FROM rk JOIN e USING(vec_id) CROSS JOIN q
-       |ORDER BY cos DESC, vec_id LIMIT $k""".stripMargin
+       |${rescoreTopK("rk", k)}""".stripMargin
 
+  /** Product-quantization replay (Similarity.pqTopK): m per-subspace
+    * euclidean Lloyd trainings on the integer grid — lowest-id seeds,
+    * assignment by the SHIFTED exact form c·c − 2·s·c (the row-constant
+    * s·s shifts every candidate equally; every term an exact integer
+    * ≤ 1.6e15 < 2⁵³, same form as the Scala side's bestSubCode),
+    * truncated-integer means (HUGEINT `//`), empty cells
+    * keep their previous centroid — then ADC: per-vector approx cosine
+    * Σⱼ q⁽ʲ⁾·c⁽ʲ⁾ / (|q|·√Σⱼ|c⁽ʲ⁾|²) over the trained books, top
+    * k·rerank by (round-6 approx DESC, vec_id), exact rescore, top k.
+    * Zero-norm reconstructions drop (den2 > 0 — the SQ8 qm > 0 rule's
+    * PQ analog); a zero-norm query yields zero rows. */
   private def pqOracle(m: Int, ksub: Int, iters: Int, rerank: Int,
                        k: Int = 20): String =
     s"""WITH $EmbQ,
-       |q AS (SELECT qv qq FROM e WHERE vec_id=0),
+       |$ProbeQ,
        |${pqCtes(m, ksub, iters)},
        |${pqRankTail("e", rerank, k)}""".stripMargin
 
@@ -492,35 +611,124 @@ object Oracles {
   private def parityClosureCtes(p: String, parity: Int): String =
     s"""${p}0 AS (SELECT * FROM banded0 WHERE doc_id % 2 = $parity),
        |${capCte(s"${p}0", s"${p}b", Seq("band", "band_key"))},
-       |${p}cand AS (SELECT DISTINCT x.doc_id a, y.doc_id b FROM ${p}b x JOIN ${p}b y
-       |  ON x.band=y.band AND x.band_key=y.band_key AND x.doc_id<y.doc_id),
-       |${p}j AS (SELECT a, b FROM (SELECT a, b, $JaccExpr jacc
-       |  FROM ${p}cand JOIN dt x ON x.doc_id=a JOIN dt y ON y.doc_id=b)
+       |${bandPairsCte(s"${p}cand", s"${p}b", s"${p}b")},
+       |${p}j AS (SELECT a, b FROM (SELECT a, b, ${verifyJacc(s"${p}cand", "dt")})
        |  WHERE jacc>=0.9),
-       |${p}sym AS (SELECT a, b FROM ${p}j UNION ALL SELECT b, a FROM ${p}j),
-       |${p}nodes AS (SELECT DISTINCT a AS node FROM ${p}sym),
-       |${p}reach AS (SELECT node, node AS label FROM ${p}nodes
-       |  UNION
-       |  SELECT s.b AS node, r.label FROM ${p}reach r JOIN ${p}sym s ON s.a = r.node),
-       |${p}comp AS (SELECT node, min(label) component FROM ${p}reach GROUP BY 1),
+       |${componentsCtes(p, s"${p}j")},
        |${p}surv AS (SELECT doc_id FROM documents WHERE doc_id % 2 = $parity
        |  AND NOT EXISTS (SELECT 1 FROM ${p}comp
        |                  WHERE node = doc_id AND node <> component))""".stripMargin
 
+  /** Events.funnel twin: stage k's reach time = min event of stage k
+    * AT-OR-AFTER stage k-1's reach (the sequential constraint) and, with
+    * `maxStepNs`, at most that many ns after it; the rollup sums exact
+    * long deltas. */
+  private def funnelSql(maxStepNs: Option[Long]): String = {
+    def within(prev: String) = maxStepNs.fold("")(w => s" AND t<=$prev+$w")
+    s"""WITH ev AS (SELECT user_id u, epoch_ns(ts) t, event_type y FROM events
+       |            WHERE event_type IN ('signup','click','purchase')
+       |              AND user_id IS NOT NULL),
+       |s1 AS (SELECT u, min(t) t1 FROM ev WHERE y='signup' GROUP BY 1),
+       |s2 AS (SELECT e.u, min(t) t2 FROM ev e JOIN s1 USING(u)
+       |       WHERE y='click' AND t>=t1${within("t1")} GROUP BY 1),
+       |s3 AS (SELECT e.u, min(t) t3 FROM ev e JOIN s2 USING(u)
+       |       WHERE y='purchase' AND t>=t2${within("t2")} GROUP BY 1),
+       |u0 AS (SELECT DISTINCT u FROM ev),
+       |w AS (SELECT u0.u, t1, t2, t3 FROM u0
+       |      LEFT JOIN s1 USING(u) LEFT JOIN s2 USING(u) LEFT JOIN s3 USING(u)),
+       |r AS (
+       |  SELECT 1 stage_idx, 'signup' stage, CAST(count(t1) AS BIGINT) n_users,
+       |    CAST(sum(t1-t1) AS BIGINT) sum_dt_ns, CAST(max(t1-t1) AS BIGINT) max_dt_ns FROM w
+       |  UNION ALL
+       |  SELECT 2, 'click', CAST(count(t2) AS BIGINT),
+       |    CAST(sum(t2-t1) AS BIGINT), CAST(max(t2-t1) AS BIGINT) FROM w
+       |  UNION ALL
+       |  SELECT 3, 'purchase', CAST(count(t3) AS BIGINT),
+       |    CAST(sum(t3-t1) AS BIGINT), CAST(max(t3-t1) AS BIGINT) FROM w)
+       |SELECT * FROM r ORDER BY stage_idx""".stripMargin
+  }
+
+  // ── fragments shared by a few rows (vals: defined before `all`) ─────
+  /** Scoring's fts signal: bm25 squashed into [0, 1), 0.0 without a hit. */
+  private val FtsSignal =
+    "CASE WHEN bm25 IS NOT NULL THEN least(1.0, greatest(0.0, greatest(0.0,bm25)/(1.0+greatest(0.0,bm25)))) ELSE 0.0 END"
+
+  /** The hybrid searches' scored columns (no phrase or narrator bonus). */
+  private val HybridScoreCols =
+    """round(v,4) vector_similarity, round(f,4) fts_signal,
+      |  CAST(0.0 AS DOUBLE) phrase_bonus, round(cov,4) term_coverage,
+      |  round(least(1.0, greatest(0.0, 0.6*v + 0.4*f + 0.0 + 0.0 + 0.2*cov)),4) score""".stripMargin
+
+  private val HadithCatalogSql =
+    s"""WITH v AS (SELECT book_id, book_title_en, chapter_id
+       |  FROM $BilingualHadith)
+       |SELECT book_id, min(book_title_en) AS title_en, count(*) AS total_hadiths,
+       |count(DISTINCT chapter_id) AS total_chapters
+       |FROM v GROUP BY 1 ORDER BY 1""".stripMargin
+  private val NarratorsCte =
+    s"""v AS (SELECT book_id, ${canonSql("narrator")} cn
+       |  FROM $BilingualHadith)""".stripMargin
+
+  /** Seed-centroid IVF: the first 16 vectors as centroids `c`, each
+    * vector's max-dot centroid in `asg`. */
+  private val SeedIvfCtes =
+    """c AS (SELECT row_number() OVER (ORDER BY vec_id)-1 i, qv cqv
+      |      FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
+      |asg AS (SELECT vec_id, qv, i centroid FROM (
+      |  SELECT e.vec_id, e.qv, c.i,
+      |    row_number() OVER (PARTITION BY e.vec_id
+      |      ORDER BY list_dot_product(e.qv, c.cqv) DESC, c.i) rn
+      |  FROM e CROSS JOIN c) WHERE rn=1)""".stripMargin
+
+  /** Dedup.simhash twin: tf-weighted ±1 votes `s` per bit, the fingerprint column. */
+  private val SimhashCtes =
+    s"""$Toks, $Posting,
+       |b AS (SELECT doc_id, tf, ${h60("term")} h FROM p),
+       |e AS (SELECT doc_id, j, CASE WHEN (h // (1::BIGINT << j)) % 2 = 1 THEN tf ELSE -tf END c
+       |      FROM b CROSS JOIN (SELECT unnest(range(0,32)) j)),
+       |s AS (SELECT doc_id, j, sum(c) sc FROM e GROUP BY 1,2)""".stripMargin
+  private val SimhashCol =
+    "CAST(sum(CASE WHEN sc>0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) simhash"
+
+  /** The stream-stream join twins, inner and (`outer`) left outer. */
+  private def streamJoinSql(outer: Boolean): String =
+    s"""WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 tsm,
+       |  event_type, value FROM events),
+       |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
+       |v AS (SELECT * FROM e WHERE event_type = 'view')
+       |SELECT p.event_id AS purchase_id, p.user_id AS user_id,
+       |  p.tsm AS purchase_ts_us, p.value AS purchase_value,
+       |  v.event_id AS view_id, v.tsm AS view_ts_us, v.value AS view_value
+       |FROM p ${if (outer) "LEFT JOIN" else "JOIN"} v ON p.user_id = v.user_id
+       |  AND v.tsm BETWEEN p.tsm - 3600000000 AND p.tsm
+       |ORDER BY purchase_id, ${if (outer) "coalesce(view_id, -1)" else "view_id"}""".stripMargin
+
+  /** The incremental twins' checksums: `fresh` now, `prev` the earlier build. */
+  private val SnapshotCtes =
+    """fresh AS (SELECT doc_id, sha256(text) checksum FROM documents),
+      |prev AS (SELECT doc_id, CASE WHEN doc_id%50=0 THEN sha256(text||'x') ELSE sha256(text) END checksum
+      |         FROM documents WHERE doc_id<450)""".stripMargin
+
+  /** The strip oracles' output: `src` tokens minus their `covered` positions. */
+  private def stripRebuild(src: String): String =
+    s"""SELECT doc_id,
+       |  coalesce(array_to_string([t[i] for i in range(1, len(t)+1) if NOT list_contains(covered, i)], ' '), '') text_clean,
+       |  CAST(len(t) AS BIGINT) n_tokens,
+       |  CAST(len(covered) AS BIGINT) n_stripped
+       |FROM $src ORDER BY doc_id""".stripMargin
+
+  private val ChunkStartsCte =
+    """st AS (SELECT doc_id, t,
+      |  unnest(CASE WHEN len(t) > 0 THEN range(0, len(t), 24) ELSE [] END) s
+      |  FROM toks)""".stripMargin
+
   private lazy val MinhashPairCtes: String =
     s"""$Toks,
-       |elems AS (SELECT doc_id, unnest(list_distinct(t)) elem FROM toks),
-       |${minhashSigsCte(16)},
-       |banded0 AS (SELECT doc_id, seed//16 band,
-       |  ('0x' || substring(md5(string_agg(minh::VARCHAR, ':' ORDER BY seed)),1,15))::BIGINT band_key
-       |  FROM sigs GROUP BY doc_id, seed//16),
+       |${bandKeysCtes(TokenElems, 16)},
        |${capCte("banded0", "banded", Seq("band", "band_key"))},
-       |cand AS (SELECT DISTINCT x.doc_id a, y.doc_id b FROM banded x JOIN banded y
-       |  ON x.band=y.band AND x.band_key=y.band_key AND x.doc_id<y.doc_id),
-       |dt AS (SELECT doc_id, list_distinct(t) s, len(list_distinct(t)) n FROM toks),
-       |j AS (SELECT a, b, round(CAST(len(list_intersect(x.s,y.s)) AS DOUBLE)
-       |        /(x.n+y.n-len(list_intersect(x.s,y.s))),6) jacc
-       |      FROM cand JOIN dt x ON x.doc_id=a JOIN dt y ON y.doc_id=b)""".stripMargin
+       |${bandPairsCte("cand", "banded", "banded")},
+       |$TokenSetsCte,
+       |j AS (SELECT a, b, ${verifyJacc("cand", "dt")})""".stripMargin
 
   val all: Map[String, String] = Map(
     // ── relational core ────────────────────────────────────────────────
@@ -618,21 +826,15 @@ object Oracles {
     // the delta bands).
     "stream_near_dup_ingest" ->
       s"""WITH RECURSIVE $Toks,
-         |elems AS (SELECT doc_id, unnest(list_distinct(t)) elem FROM toks),
-         |${minhashSigsCte(16)},
-         |banded0 AS (SELECT doc_id, seed//16 band,
-         |  ('0x' || substring(md5(string_agg(minh::VARCHAR, ':' ORDER BY seed)),1,15))::BIGINT band_key
-         |  FROM sigs GROUP BY doc_id, seed//16),
-         |dt AS (SELECT doc_id, list_distinct(t) s, len(list_distinct(t)) n FROM toks),
+         |${bandKeysCtes(TokenElems, 16)},
+         |$TokenSetsCte,
          |${parityClosureCtes("e", 0)},
          |${parityClosureCtes("o", 1)},
          |ix0 AS (SELECT b0.* FROM banded0 b0 JOIN esurv s ON b0.doc_id = s.doc_id),
          |${capCte("ix0", "ixb", Seq("band", "band_key"))},
          |qb AS (SELECT b0.* FROM banded0 b0 JOIN osurv s ON b0.doc_id = s.doc_id),
-         |xcand AS (SELECT DISTINCT q.doc_id a, x.doc_id b FROM qb q JOIN ixb x
-         |  ON q.band=x.band AND q.band_key=x.band_key),
-         |xdrop AS (SELECT DISTINCT a FROM (SELECT a, $JaccExpr jacc
-         |  FROM xcand JOIN dt x ON x.doc_id=a JOIN dt y ON y.doc_id=b)
+         |${bandPairsCte("xcand", "qb", "ixb", "q", "x")},
+         |xdrop AS (SELECT DISTINCT a FROM (SELECT a, ${verifyJacc("xcand", "dt")})
          |  WHERE jacc>=0.9)
          |SELECT doc_id, CAST(doc_id % 2 AS BIGINT) ingest_batch FROM (
          |  SELECT doc_id FROM esurv
@@ -687,88 +889,21 @@ object Oracles {
     // null-padded — the streaming side's watermark-driven outer
     // emission (sentinel-advanced) lands on the plain LEFT JOIN; the
     // view_id coalesce keys the tie order for null rows on both engines
-    "stream_stream_join_outer" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 tsm,
-        |  event_type, value FROM events),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT * FROM e WHERE event_type = 'view')
-        |SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |  p.tsm AS purchase_ts_us, p.value AS purchase_value,
-        |  v.event_id AS view_id, v.tsm AS view_ts_us, v.value AS view_value
-        |FROM p LEFT JOIN v ON p.user_id = v.user_id
-        |  AND v.tsm BETWEEN p.tsm - 3600000000 AND p.tsm
-        |ORDER BY purchase_id, coalesce(view_id, -1)""".stripMargin,
+    "stream_stream_join_outer" -> streamJoinSql(outer = true),
     // stream_stream_join twin: the watermarked two-stream inner join's
     // pair set is micro-batching-invariant, so a plain SQL join over
     // the same events replays the streaming run exactly. Micros grid on
     // both engines (ts div 1000 ↔ epoch_ns//1000); BETWEEN gives the
     // same closed [p − 1 h, p] bound as the streaming condition.
-    "stream_stream_join" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 tsm,
-        |  event_type, value FROM events),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT * FROM e WHERE event_type = 'view')
-        |SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |  p.tsm AS purchase_ts_us, p.value AS purchase_value,
-        |  v.event_id AS view_id, v.tsm AS view_ts_us, v.value AS view_value
-        |FROM p JOIN v ON p.user_id = v.user_id
-        |  AND v.tsm BETWEEN p.tsm - 3600000000 AND p.tsm
-        |ORDER BY purchase_id, view_id""".stripMargin,
+    "stream_stream_join" -> streamJoinSql(outer = false),
     // the bucketed form is semantics-identical by contract — it must
     // reproduce the SAME oracle rows as the plain form
     "events_asof_bucketed" -> AsofSql,
-    // funnel twin: stage k's reach time = min event of stage k AT-OR-
-    // AFTER stage k-1's reach (the sequential constraint); rollup sums
-    // exact long deltas
-    "events_funnel" ->
-      """WITH ev AS (SELECT user_id u, epoch_ns(ts) t, event_type y FROM events
-        |            WHERE event_type IN ('signup','click','purchase')
-        |              AND user_id IS NOT NULL),
-        |s1 AS (SELECT u, min(t) t1 FROM ev WHERE y='signup' GROUP BY 1),
-        |s2 AS (SELECT e.u, min(t) t2 FROM ev e JOIN s1 USING(u)
-        |       WHERE y='click' AND t>=t1 GROUP BY 1),
-        |s3 AS (SELECT e.u, min(t) t3 FROM ev e JOIN s2 USING(u)
-        |       WHERE y='purchase' AND t>=t2 GROUP BY 1),
-        |u0 AS (SELECT DISTINCT u FROM ev),
-        |w AS (SELECT u0.u, t1, t2, t3 FROM u0
-        |      LEFT JOIN s1 USING(u) LEFT JOIN s2 USING(u) LEFT JOIN s3 USING(u)),
-        |r AS (
-        |  SELECT 1 stage_idx, 'signup' stage, CAST(count(t1) AS BIGINT) n_users,
-        |    CAST(sum(t1-t1) AS BIGINT) sum_dt_ns, CAST(max(t1-t1) AS BIGINT) max_dt_ns FROM w
-        |  UNION ALL
-        |  SELECT 2, 'click', CAST(count(t2) AS BIGINT),
-        |    CAST(sum(t2-t1) AS BIGINT), CAST(max(t2-t1) AS BIGINT) FROM w
-        |  UNION ALL
-        |  SELECT 3, 'purchase', CAST(count(t3) AS BIGINT),
-        |    CAST(sum(t3-t1) AS BIGINT), CAST(max(t3-t1) AS BIGINT) FROM w)
-        |SELECT * FROM r ORDER BY stage_idx""".stripMargin,
+    "events_funnel" -> funnelSql(None),
     // windowed twin: identical chain with each step's min constrained to
     // [t_{k-1}, t_{k-1} + W] — the window constant comes from Queries so
     // both sides can never drift
-    "funnel_windowed" -> {
-      val w = graft.Queries.FunnelWindowNs
-      s"""WITH ev AS (SELECT user_id u, epoch_ns(ts) t, event_type y FROM events
-         |            WHERE event_type IN ('signup','click','purchase')
-         |              AND user_id IS NOT NULL),
-         |s1 AS (SELECT u, min(t) t1 FROM ev WHERE y='signup' GROUP BY 1),
-         |s2 AS (SELECT e.u, min(t) t2 FROM ev e JOIN s1 USING(u)
-         |       WHERE y='click' AND t>=t1 AND t<=t1+$w GROUP BY 1),
-         |s3 AS (SELECT e.u, min(t) t3 FROM ev e JOIN s2 USING(u)
-         |       WHERE y='purchase' AND t>=t2 AND t<=t2+$w GROUP BY 1),
-         |u0 AS (SELECT DISTINCT u FROM ev),
-         |w AS (SELECT u0.u, t1, t2, t3 FROM u0
-         |      LEFT JOIN s1 USING(u) LEFT JOIN s2 USING(u) LEFT JOIN s3 USING(u)),
-         |r AS (
-         |  SELECT 1 stage_idx, 'signup' stage, CAST(count(t1) AS BIGINT) n_users,
-         |    CAST(sum(t1-t1) AS BIGINT) sum_dt_ns, CAST(max(t1-t1) AS BIGINT) max_dt_ns FROM w
-         |  UNION ALL
-         |  SELECT 2, 'click', CAST(count(t2) AS BIGINT),
-         |    CAST(sum(t2-t1) AS BIGINT), CAST(max(t2-t1) AS BIGINT) FROM w
-         |  UNION ALL
-         |  SELECT 3, 'purchase', CAST(count(t3) AS BIGINT),
-         |    CAST(sum(t3-t1) AS BIGINT), CAST(max(t3-t1) AS BIGINT) FROM w)
-         |SELECT * FROM r ORDER BY stage_idx""".stripMargin
-    },
+    "funnel_windowed" -> funnelSql(Some(graft.Queries.FunnelWindowNs)),
     "events_retention" ->
       """WITH ud AS (SELECT DISTINCT user_id u, epoch_ns(ts)//86400000000000 d FROM events),
         |f AS (SELECT u, min(d) cd FROM ud GROUP BY 1)
@@ -960,23 +1095,19 @@ object Oracles {
         |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) rn
         |  FROM documents) WHERE rn=1 ORDER BY doc_id""".stripMargin,
     "incremental_changed" ->
-      """WITH fresh AS (SELECT doc_id, sha256(text) checksum FROM documents),
-        |prev AS (SELECT doc_id, CASE WHEN doc_id%50=0 THEN sha256(text||'x') ELSE sha256(text) END checksum
-        |         FROM documents WHERE doc_id<450)
-        |SELECT f.doc_id, f.checksum FROM fresh f
-        |WHERE NOT EXISTS (SELECT 1 FROM prev p WHERE p.doc_id=f.doc_id AND p.checksum=f.checksum)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH $SnapshotCtes
+         |SELECT f.doc_id, f.checksum FROM fresh f
+         |WHERE NOT EXISTS (SELECT 1 FROM prev p WHERE p.doc_id=f.doc_id AND p.checksum=f.checksum)
+         |ORDER BY doc_id""".stripMargin,
     "incremental_upsert" ->
-      """WITH fresh AS (SELECT doc_id, sha256(text) checksum FROM documents),
-        |prev AS (SELECT doc_id, CASE WHEN doc_id%50=0 THEN sha256(text||'x') ELSE sha256(text) END checksum
-        |         FROM documents WHERE doc_id<450),
-        |changed AS (SELECT f.doc_id, f.checksum FROM fresh f
-        |  WHERE NOT EXISTS (SELECT 1 FROM prev p WHERE p.doc_id=f.doc_id AND p.checksum=f.checksum))
-        |SELECT doc_id, checksum FROM (
-        |  SELECT p.doc_id, p.checksum FROM prev p
-        |  WHERE NOT EXISTS (SELECT 1 FROM changed c WHERE c.doc_id=p.doc_id)
-        |  UNION ALL SELECT doc_id, checksum FROM changed)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH $SnapshotCtes,
+         |changed AS (SELECT f.doc_id, f.checksum FROM fresh f
+         |  WHERE NOT EXISTS (SELECT 1 FROM prev p WHERE p.doc_id=f.doc_id AND p.checksum=f.checksum))
+         |SELECT doc_id, checksum FROM (
+         |  SELECT p.doc_id, p.checksum FROM prev p
+         |  WHERE NOT EXISTS (SELECT 1 FROM changed c WHERE c.doc_id=p.doc_id)
+         |  UNION ALL SELECT doc_id, checksum FROM changed)
+         |ORDER BY doc_id""".stripMargin,
     // SCD2 twin: the merge semantics spelled out as a union — changed
     // keys (%6==0: the _v2 suffix always differs) close at 100 and
     // reopen; every other key (incl. touched-but-unchanged %3 odds)
@@ -1033,7 +1164,7 @@ object Oracles {
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
     "minhash_sigs" ->
       s"""WITH $Toks,
-         |elems AS (SELECT doc_id, unnest(list_distinct(t)) elem FROM toks),
+         |elems AS ($TokenElems),
          |${minhashSigsCte(16)}
          |SELECT doc_id, seed, minh FROM sigs ORDER BY doc_id, seed""".stripMargin,
     "minhash_lsh_pairs" ->
@@ -1043,9 +1174,7 @@ object Oracles {
     // sides, equi-join on the shingle, count per (doc, bench) pair
     "contamination_pairs" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END) s FROM toks),
+         |$ShingleSets3,
          |ex AS (SELECT doc_id, unnest(s) sh FROM sh),
          |c AS (SELECT doc_id, sh FROM ex WHERE doc_id % 50 <> 0),
          |b AS (SELECT doc_id bench_id, sh FROM ex WHERE doc_id % 50 = 0)
@@ -1056,20 +1185,13 @@ object Oracles {
     // probe the existing corpus's (capped) bands instead of self-joining
     "incremental_near_dup" ->
       s"""WITH $Toks,
-         |elems AS (SELECT doc_id, unnest(list_distinct(t)) elem FROM toks),
-         |${minhashSigsCte(16)},
-         |banded0 AS (SELECT doc_id, seed//16 band,
-         |  ('0x' || substring(md5(string_agg(minh::VARCHAR, ':' ORDER BY seed)),1,15))::BIGINT band_key
-         |  FROM sigs GROUP BY doc_id, seed//16),
+         |${bandKeysCtes(TokenElems, 16)},
          |ex0 AS (SELECT * FROM banded0 WHERE doc_id % 10 <> 0),
          |${capCte("ex0", "exb", Seq("band", "band_key"))},
          |db AS (SELECT * FROM banded0 WHERE doc_id % 10 = 0),
-         |cand AS (SELECT DISTINCT d.doc_id a, x.doc_id b FROM db d JOIN exb x
-         |  ON d.band=x.band AND d.band_key=x.band_key),
-         |dt AS (SELECT doc_id, list_distinct(t) s, len(list_distinct(t)) n FROM toks),
-         |j AS (SELECT a, b, round(CAST(len(list_intersect(x.s,y.s)) AS DOUBLE)
-         |        /(x.n+y.n-len(list_intersect(x.s,y.s))),6) jacc
-         |      FROM cand JOIN dt x ON x.doc_id=a JOIN dt y ON y.doc_id=b)
+         |${bandPairsCte("cand", "db", "exb", "d", "x")},
+         |$TokenSetsCte,
+         |j AS (SELECT a, b, ${verifyJacc("cand", "dt")})
          |SELECT a, b, jacc FROM j WHERE jacc>=0.9 ORDER BY a, b""".stripMargin,
     // pairs→groups twin: min-label closure as a recursive CTE — reach
     // enumerates (node, reachable label); min per node IS the unique
@@ -1077,11 +1199,7 @@ object Oracles {
     "near_dup_groups" ->
       s"""WITH RECURSIVE $MinhashPairCtes,
          |pairs AS (SELECT a, b FROM j WHERE jacc>=0.9),
-         |sym AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |nodes AS (SELECT DISTINCT a AS node FROM sym),
-         |reach AS (SELECT node, node AS label FROM nodes
-         |  UNION
-         |  SELECT s.b AS node, r.label FROM reach r JOIN sym s ON s.a = r.node)
+         |${componentsCtes("", "pairs", withComp = false)}
          |SELECT node AS doc_id, min(label) AS component
          |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin,
     // survivors twin: corpus minus every node whose component label is
@@ -1089,48 +1207,26 @@ object Oracles {
     "near_dup_survivors" ->
       s"""WITH RECURSIVE $MinhashPairCtes,
          |pairs AS (SELECT a, b FROM j WHERE jacc>=0.9),
-         |sym AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |nodes AS (SELECT DISTINCT a AS node FROM sym),
-         |reach AS (SELECT node, node AS label FROM nodes
-         |  UNION
-         |  SELECT s.b AS node, r.label FROM reach r JOIN sym s ON s.a = r.node),
-         |comp AS (SELECT node, min(label) component FROM reach GROUP BY 1)
+         |${componentsCtes("", "pairs")}
          |SELECT doc_id FROM documents
          |WHERE doc_id NOT IN (SELECT node FROM comp WHERE node <> component)
          |ORDER BY doc_id""".stripMargin,
     "ngram_jaccard_pairs" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END) s FROM toks),
-         |elems AS (SELECT doc_id, unnest(s) elem FROM sh),
-         |${minhashSigsCte(16)},
-         |banded0 AS (SELECT doc_id, seed//4 band,
-         |  ('0x' || substring(md5(string_agg(minh::VARCHAR, ':' ORDER BY seed)),1,15))::BIGINT band_key
-         |  FROM sigs GROUP BY doc_id, seed//4),
+         |$ShingleSets3,
+         |${bandKeysCtes("SELECT doc_id, unnest(s) elem FROM sh", 4)},
          |${capCte("banded0", "banded", Seq("band", "band_key"))},
-         |cand AS (SELECT DISTINCT x.doc_id a, y.doc_id b FROM banded x JOIN banded y
-         |  ON x.band=y.band AND x.band_key=y.band_key AND x.doc_id<y.doc_id),
+         |${bandPairsCte("cand", "banded", "banded")},
          |sized AS (SELECT doc_id, s, len(s) n FROM sh),
-         |j AS (SELECT a, b, round(CAST(len(list_intersect(x.s,y.s)) AS DOUBLE)
-         |        /(x.n+y.n-len(list_intersect(x.s,y.s))),6) jacc
-         |      FROM cand JOIN sized x ON x.doc_id=a JOIN sized y ON y.doc_id=b)
+         |j AS (SELECT a, b, ${verifyJacc("cand", "sized")})
          |SELECT a, b, jacc FROM j WHERE jacc>=0.1 ORDER BY a, b""".stripMargin,
     "simhash" ->
-      s"""WITH $Toks, $Posting,
-         |b AS (SELECT doc_id, tf, ${h60("term")} h FROM p),
-         |e AS (SELECT doc_id, j, CASE WHEN (h // (1::BIGINT << j)) % 2 = 1 THEN tf ELSE -tf END c
-         |      FROM b CROSS JOIN (SELECT unnest(range(0,32)) j)),
-         |s AS (SELECT doc_id, j, sum(c) sc FROM e GROUP BY 1,2)
-         |SELECT doc_id, CAST(sum(CASE WHEN sc>0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) simhash
+      s"""WITH $SimhashCtes
+         |SELECT doc_id, $SimhashCol
          |FROM s GROUP BY 1 ORDER BY doc_id""".stripMargin,
     "simhash_pairs" ->
-      s"""WITH $Toks, $Posting,
-         |b AS (SELECT doc_id, tf, ${h60("term")} h FROM p),
-         |e AS (SELECT doc_id, j, CASE WHEN (h // (1::BIGINT << j)) % 2 = 1 THEN tf ELSE -tf END c
-         |      FROM b CROSS JOIN (SELECT unnest(range(0,32)) j)),
-         |s AS (SELECT doc_id, j, sum(c) sc FROM e GROUP BY 1,2),
-         |sim AS (SELECT doc_id, CAST(sum(CASE WHEN sc>0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) simhash
+      s"""WITH $SimhashCtes,
+         |sim AS (SELECT doc_id, $SimhashCol
          |        FROM s GROUP BY 1),
          |ex0 AS (SELECT doc_id, simhash, band, (simhash >> CAST(band*8 AS INT)) & 255 bkey
          |       FROM sim CROSS JOIN (SELECT unnest(range(0,4)) band)),
@@ -1143,9 +1239,8 @@ object Oracles {
     // ── vector / similarity ────────────────────────────────────────────
     "cosine_topk" ->
       s"""WITH $EmbQ,
-         |q AS (SELECT qv qq FROM e WHERE vec_id=0)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM e CROSS JOIN q
-         |WHERE vec_id<>0 ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |$ProbeQ
+         |${exactTopKSql("e", "vec_id<>0")}""".stripMargin,
     "knn_join" ->
       s"""WITH $EmbQ,
          |pr AS (SELECT vec_id probe_id, qv pv FROM e WHERE vec_id<10),
@@ -1243,13 +1338,12 @@ object Oracles {
     // (round 6, vec_id tie-break), top-80 exact-reranked
     "ann_sq8" ->
       s"""WITH $EmbQ,
-         |q AS (SELECT qv qq FROM e WHERE vec_id=0),
+         |$ProbeQ,
          |${sq8Ctes("e")},
          |cand AS (SELECT vec_id, qv FROM cd CROSS JOIN qc
          |  QUALIFY row_number() OVER (
          |    ORDER BY ${cosQ("c8", "q8")} DESC, vec_id) <= 80)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM cand CROSS JOIN q
-         |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |${exactTopKSql("cand")}""".stripMargin,
     // high-recall rung (r14): the SAME scale-aware spill replay with
     // the WIDE probe schedule (~20% of lists) — recall@20 0.91, the
     // HNSW-class tier the r13 grid-16/10 rung hit at a 62% scan,
@@ -1261,8 +1355,7 @@ object Oracles {
       s"""WITH $EmbQ,
          |k AS (SELECT vec_id, qv, ${bucketExpr("qv", Queries.Dim, 4, "")} bucket FROM e),
          |q AS (SELECT qv qq, bucket qb FROM k WHERE vec_id=0)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM k CROSS JOIN q
-         |WHERE bucket=qb ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |${exactTopKSql("k", "bucket=qb")}""".stripMargin,
     // multi-table rung: 3 independent seeded hyperplane sets, OR of
     // single-bucket probes (the SQL mirror of the driver's per-table
     // literal buckets)
@@ -1273,32 +1366,20 @@ object Oracles {
          |  ${bucketExpr("qv", Queries.Dim, 4, "b1")} k1,
          |  ${bucketExpr("qv", Queries.Dim, 4, "b2")} k2 FROM e),
          |q AS (SELECT qv qq, k0 q0, k1 q1, k2 q2 FROM k WHERE vec_id=0)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM k CROSS JOIN q
-         |WHERE k0=q0 OR k1=q1 OR k2=q2
-         |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |${exactTopKSql("k", "k0=q0 OR k1=q1 OR k2=q2")}""".stripMargin,
     // Hamming-≤2 rung of the same ladder
     "ann_multiprobe" ->
       s"""WITH $EmbQ,
          |k AS (SELECT vec_id, qv, ${bucketExpr("qv", Queries.Dim, 4, "")} bucket FROM e),
          |q AS (SELECT qv qq, bucket qb FROM k WHERE vec_id=0)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM k CROSS JOIN q
-         |WHERE bit_count(xor(bucket, qb)) <= 2
-         |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |${exactTopKSql("k", "bit_count(xor(bucket, qb)) <= 2")}""".stripMargin,
     "ivf_topk" ->
       s"""WITH $EmbQ,
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id)-1 i, qv cqv
-         |      FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-         |asg AS (SELECT vec_id, qv, i centroid FROM (
-         |  SELECT e.vec_id, e.qv, c.i,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.qv, c.cqv) DESC, c.i) rn
-         |  FROM e CROSS JOIN c) WHERE rn=1),
-         |q AS (SELECT qv qq FROM e WHERE vec_id=0),
+         |$SeedIvfCtes,
+         |$ProbeQ,
          |probe AS (SELECT c.i FROM c CROSS JOIN q
          |          ORDER BY list_dot_product(qq, c.cqv) DESC, c.i LIMIT 4)
-         |SELECT vec_id, ${cosQ("qv", "qq")} cos FROM asg CROSS JOIN q
-         |WHERE centroid IN (SELECT i FROM probe)
-         |ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin,
+         |${exactTopKSql("asg", "centroid IN (SELECT i FROM probe)")}""".stripMargin,
     // cluster-cohesion twin: identical integer-relational arithmetic —
     // long per-dim sums, HUGEINT dot/|S|² (a double fold would be
     // summation-order-unstable past 2^53), floor-micro cosines, floored
@@ -1314,10 +1395,8 @@ object Oracles {
     "dup_span_stats" ->
       s"""WITH $Toks,
          |g AS (SELECT doc_id,
-         |  unnest(CASE WHEN len(t)>=5 THEN
-         |    [list_aggr(t[i:i+4],'string_agg','_') for i in range(1, len(t)-3)]
-         |    ELSE [] END) g,
-         |  unnest(CASE WHEN len(t)>=5 THEN range(1, len(t)-3) ELSE [] END) j
+         |  unnest(${shinglesSql(5)}) g,
+         |  unnest(${shingleStarts(5)}) j
          |  FROM toks),
          |dup AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) df FROM g
          |  GROUP BY 1) WHERE df >= 2),
@@ -1335,13 +1414,7 @@ object Oracles {
     // sits at cosine >= tau
     "semantic_dedup" ->
       s"""WITH $EmbQ,
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id)-1 i, qv cqv
-         |      FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-         |asg AS (SELECT vec_id, qv, i centroid FROM (
-         |  SELECT e.vec_id, e.qv, c.i,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.qv, c.cqv) DESC, c.i) rn
-         |  FROM e CROSS JOIN c) WHERE rn=1),
+         |$SeedIvfCtes,
          |dups AS (SELECT DISTINCT b.vec_id FROM asg a JOIN asg b
          |  ON a.centroid=b.centroid AND a.vec_id < b.vec_id
          |  WHERE ${cosQ("a.qv", "b.qv")} >= 0.3)
@@ -1368,61 +1441,47 @@ object Oracles {
          |-(CAST(neg6 AS DOUBLE))/1e6 avg_logprob,
          |round(exp(CAST(neg6 AS DOUBLE)/1e6), 6) ppl
          |FROM g ORDER BY doc_id""".stripMargin,
-    "text_quality" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
+    "text_quality" ->
       s"""WITH $Toks
          |SELECT doc_id,
          |CAST(length(text) AS BIGINT) n_chars,
          |CAST(len(t) AS BIGINT) n_tokens,
-         |CAST(len(list_distinct(t)) AS BIGINT) n_uniq,
-         |round(CAST(len(list_distinct(t)) AS DOUBLE)/len(t),6) ttr,
-         |round(CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/len(t),6) stop_ratio,
-         |round(CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/len(t),6) mean_tok_len
-         |FROM documents JOIN toks USING(doc_id) ORDER BY doc_id""".stripMargin
-    },
+         |CAST($NUniq AS BIGINT) n_uniq,
+         |$QualityRatios
+         |FROM documents JOIN toks USING(doc_id) ORDER BY doc_id""".stripMargin,
     // budget-select twin: the naive global ordered cumsum IS the spec
     // (same q_score grid as quality_top_decile; inclusive fit)
-    "budget_select" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
+    "budget_select" ->
       s"""WITH $Toks,
          |q AS (SELECT doc_id, CAST(len(t) AS BIGINT) n_tok, round(
-         |    (CASE WHEN len(t)>0 THEN round(CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/len(t),6) ELSE 0.0 END)*0.5
-         |  + (CASE WHEN len(t)>0 THEN round(CAST(len(list_distinct(t)) AS DOUBLE)/len(t),6) ELSE 0.0 END)*0.3
-         |  + least((CASE WHEN len(t)>0 THEN round(CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/len(t),6) ELSE 0.0 END)/10.0, 1.0)*0.2, 6) qs
+         |$QScoreSum, 6) qs
          |  FROM toks),
          |c AS (SELECT doc_id, qs, coalesce(n_tok, 0) n_tok,
          |  sum(coalesce(n_tok, 0)) OVER (ORDER BY qs DESC, doc_id
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) cum FROM q)
          |SELECT doc_id, qs AS q_score, n_tok, CAST(cum AS BIGINT) cum_tok
-         |FROM c WHERE cum <= 5000 ORDER BY doc_id""".stripMargin
-    },
+         |FROM c WHERE cum <= 5000 ORDER BY doc_id""".stripMargin,
     // curriculum twin: floor of the UNROUNDED composite (no round-half
     // anywhere — the half boundary diverges cross-engine, caught at
     // sf0.1), the histogram bucket formula as strata, the md5 order as
     // the intra-stratum shuffle
-    "curriculum_order" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
+    "curriculum_order" ->
       s"""WITH $Toks,
          |q AS (SELECT doc_id, CAST(floor((
-         |    (CASE WHEN len(t)>0 THEN round(CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/len(t),6) ELSE 0.0 END)*0.5
-         |  + (CASE WHEN len(t)>0 THEN round(CAST(len(list_distinct(t)) AS DOUBLE)/len(t),6) ELSE 0.0 END)*0.3
-         |  + least((CASE WHEN len(t)>0 THEN round(CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/len(t),6) ELSE 0.0 END)/10.0, 1.0)*0.2)
+         |$QScoreSum)
          |  * 1e6) AS BIGINT) q6 FROM toks),
          |b AS (SELECT min(q6) lo, max(q6) hi FROM q),
          |s AS (SELECT doc_id, q6, ((q6-lo)*10)//(hi-lo+1) stratum FROM q, b)
          |SELECT doc_id, q6, stratum,
          |  row_number() OVER (PARTITION BY stratum
          |    ORDER BY md5(concat('cur:', CAST(doc_id AS VARCHAR))), doc_id) pos
-         |FROM s ORDER BY doc_id""".stripMargin
-    },
+         |FROM s ORDER BY doc_id""".stripMargin,
     // chunking twin: window starts range(0, n, stride), 1-based
     // inclusive slice t[s+1 : s+32], short tail kept — the same
     // integer grammar as Shards.chunkDocs
     "chunk_docs" ->
       s"""WITH $Toks,
-         |st AS (SELECT doc_id, t,
-         |  unnest(CASE WHEN len(t) > 0 THEN range(0, len(t), 24) ELSE [] END) s
-         |  FROM toks)
+         |$ChunkStartsCte
          |SELECT doc_id, CAST(s // 24 AS INT) chunk_idx,
          |  array_to_string(t[s+1 : s+32], ' ') text_chunk,
          |  CAST(least(32, len(t) - s) AS BIGINT) n_tokens
@@ -1435,9 +1494,7 @@ object Oracles {
     // bit-identical. Zero-norm chunks excluded on both engines.
     "chunk_topk" ->
       s"""WITH $Toks,
-         |st AS (SELECT doc_id, t,
-         |  unnest(CASE WHEN len(t) > 0 THEN range(0, len(t), 24) ELSE [] END) s
-         |  FROM toks),
+         |$ChunkStartsCte,
          |t2 AS (SELECT doc_id, CAST(s // 24 AS INT) chunk_idx, unnest(t[s+1 : s+32]) tok
          |  FROM st),
          |sp AS (SELECT doc_id, chunk_idx, ${h31("tok")} % ${Queries.Dim} b,
@@ -1519,18 +1576,14 @@ object Oracles {
     // the contamination CTE; sub-n docs emit no row on either engine
     "repetition_stats" ->
       s"""WITH $Toks,
-         |g AS (SELECT doc_id, unnest(CASE WHEN len(t)>=2 THEN
-         |  [list_aggr(t[i:i+1],'string_agg','_') for i in range(1, len(t))]
-         |  ELSE [] END) g FROM toks),
+         |g AS (SELECT doc_id, unnest(${shinglesSql(2)}) g FROM toks),
          |c AS (SELECT doc_id, g, CAST(count(*) AS BIGINT) c FROM g GROUP BY 1,2)
          |SELECT doc_id, CAST(sum(c) AS BIGINT) n_grams, CAST(max(c) AS BIGINT) top_count,
          |round(CAST(max(c) AS DOUBLE)/sum(c),6) top_frac
          |FROM c GROUP BY 1 ORDER BY doc_id""".stripMargin,
     "boilerplate_ngrams" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END) s FROM toks),
+         |$ShingleSets3,
          |el AS (SELECT doc_id, unnest(s) ngram FROM sh)
          |SELECT ngram, CAST(count(*) AS BIGINT) df FROM el
          |GROUP BY 1 HAVING count(*) >= 5 ORDER BY ngram""".stripMargin,
@@ -1539,32 +1592,23 @@ object Oracles {
     // j..j+2 — identical position arithmetic, 1-based both engines)
     "strip_boilerplate" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, t, CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END g FROM toks),
+         |sh AS (SELECT doc_id, t, ${shinglesSql(3)} g FROM toks),
          |mined AS (SELECT ngram FROM (SELECT doc_id, unnest(list_distinct(g)) ngram FROM sh)
          |  GROUP BY 1 HAVING count(*) >= 5),
          |b AS (SELECT coalesce(list(ngram ORDER BY ngram), []) bl FROM mined),
          |st AS (SELECT doc_id, t,
-         |  [j for j in range(1, len(t)-1) if list_contains(b.bl, list_aggr(t[j:j+2],'string_agg','_'))] starts
+         |  [j for j in range(1, len(t)-1) if list_contains(b.bl, ${shingleSql(3, "j")})] starts
          |  FROM sh, b),
          |cv AS (SELECT doc_id, t,
          |  list_distinct(flatten([range(j, j+3) for j in starts])) covered FROM st)
-         |SELECT doc_id,
-         |  coalesce(array_to_string([t[i] for i in range(1, len(t)+1) if NOT list_contains(covered, i)], ' '), '') text_clean,
-         |  CAST(len(t) AS BIGINT) n_tokens,
-         |  CAST(len(covered) AS BIGINT) n_stripped
-         |FROM cv ORDER BY doc_id""".stripMargin,
+         |${stripRebuild("cv")}""".stripMargin,
     // top-decile twin: same rounded stats as text_quality, the same
     // composite signal, percent_rank over (lang; q_score, doc_id) — the
     // tie-break total order makes the kept set exact on both engines
-    "quality_top_decile" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
+    "quality_top_decile" ->
       s"""WITH $Toks,
          |q AS (SELECT doc_id,
-         |round(CAST(len(list_distinct(t)) AS DOUBLE)/len(t),6) ttr,
-         |round(CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/len(t),6) stop_ratio,
-         |round(CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/len(t),6) mean_tok_len
+         |$QualityRatios
          |FROM toks),
          |sc AS (SELECT doc_id, lang,
          |round(stop_ratio*0.5 + ttr*0.3 + least(mean_tok_len/10.0, 1.0)*0.2, 6) q_score
@@ -1572,35 +1616,17 @@ object Oracles {
          |r AS (SELECT doc_id, lang, q_score,
          |percent_rank() OVER (PARTITION BY lang ORDER BY q_score, doc_id) pr FROM sc)
          |SELECT doc_id, lang, q_score, round(pr,6) AS pr
-         |FROM r WHERE pr >= 0.9 ORDER BY doc_id""".stripMargin
-    },
+         |FROM r WHERE pr >= 0.9 ORDER BY doc_id""".stripMargin,
     // quality-filter cascade twin: same token stats as text_quality, the
     // same script counts as lang_id's r CTE, rules in the operator's
     // fixed order; concat_ws drops NULL branches on both engines
-    "quality_filter" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
-      val th = graft.operators.TextAnalysis.QualityThresholds()
+    "quality_filter" ->
       s"""WITH $Toks,
-         |st AS (SELECT doc_id, CAST(len(t) AS BIGINT) n_tok,
-         |  CAST(len(list_distinct(t)) AS DOUBLE)/NULLIF(len(t),0) ttr,
-         |  CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/NULLIF(len(t),0) sr,
-         |  CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/NULLIF(len(t),0) mtl
-         |  FROM toks),
-         |sc AS (SELECT doc_id,
-         |  length(text)-length(regexp_replace(text,'[؀-ۿ]','','g')) n_ar,
-         |  length(text)-length(regexp_replace(text,'[一-鿿]','','g')) n_cjk,
-         |  length(text)-length(regexp_replace(text,'[a-zA-Z؀-ۿ一-鿿]','','g')) n_alpha
-         |  FROM documents),
-         |r AS (SELECT doc_id, n_tok, concat_ws(',',
-         |  CASE WHEN n_tok < ${th.minTokens} THEN 'too_short' END,
-         |  CASE WHEN n_tok > ${th.maxTokens} THEN 'too_long' END,
-         |  CASE WHEN n_tok > 0 AND (mtl < ${th.minMeanTokLen} OR mtl > ${th.maxMeanTokLen}) THEN 'odd_token_len' END,
-         |  CASE WHEN n_tok > 0 AND (n_alpha-n_ar-n_cjk)*2 > n_alpha AND sr < ${th.minStopRatio} THEN 'low_stopword' END,
-         |  CASE WHEN n_tok > 0 AND ttr < ${th.minTtr} THEN 'repetitive' END) reasons
+         |$QualityStatsCtes,
+         |r AS (SELECT doc_id, n_tok, $QualityReasons
          |  FROM st JOIN sc USING(doc_id))
          |SELECT doc_id, n_tok AS n_tokens, reasons, reasons='' kept
-         |FROM r ORDER BY doc_id""".stripMargin
-    },
+         |FROM r ORDER BY doc_id""".stripMargin,
     // compaction roundtrip: the rewrite must preserve content exactly —
     // the oracle is simply the source of truth
     "parquet_compact_roundtrip" ->
@@ -1622,30 +1648,22 @@ object Oracles {
     // position arithmetic as strip_boilerplate's covered-union
     "strip_repeats" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, t, CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END g FROM toks),
+         |sh AS (SELECT doc_id, t, ${shinglesSql(3)} g FROM toks),
          |st AS (SELECT doc_id, t,
          |  [j for j in range(1, len(g)+1) if list_contains(g[1:j-1], g[j])] dstarts
          |  FROM sh),
          |cv AS (SELECT doc_id, t,
          |  list_distinct(flatten([range(j, j+3) for j in dstarts])) covered FROM st)
-         |SELECT doc_id,
-         |  coalesce(array_to_string([t[i] for i in range(1, len(t)+1) if NOT list_contains(covered, i)], ' '), '') text_clean,
-         |  CAST(len(t) AS BIGINT) n_tokens,
-         |  CAST(len(covered) AS BIGINT) n_stripped
-         |FROM cv ORDER BY doc_id""".stripMargin,
+         |${stripRebuild("cv")}""".stripMargin,
     // cross-dup strip twin: dup_span_stats' zipped-unnest occurrence
     // grammar (5-gram, 1-based j), canonical copy = min(doc_id) per
     // duplicated gram (min <> max ⟺ in ≥2 docs), coverage union via
     // list_distinct, and strip_repeats' rebuild comprehension
     "strip_cross_dups" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, t, CASE WHEN len(t)>=5 THEN
-         |  [list_aggr(t[i:i+4],'string_agg','_') for i in range(1, len(t)-3)]
-         |  ELSE [] END g FROM toks),
+         |sh AS (SELECT doc_id, t, ${shinglesSql(5)} g FROM toks),
          |oc AS (SELECT doc_id, unnest(g) gram,
-         |  unnest(CASE WHEN len(t)>=5 THEN range(1, len(t)-3) ELSE [] END) j
+         |  unnest(${shingleStarts(5)}) j
          |  FROM sh),
          |keep AS (SELECT gram, min(doc_id) keep_doc FROM oc GROUP BY 1
          |  HAVING min(doc_id) <> max(doc_id)),
@@ -1655,18 +1673,12 @@ object Oracles {
          |  GROUP BY o.doc_id),
          |st AS (SELECT s.doc_id, s.t, coalesce(c.covered, []) covered
          |  FROM sh s LEFT JOIN cv c USING(doc_id))
-         |SELECT doc_id,
-         |  coalesce(array_to_string([t[i] for i in range(1, len(t)+1) if NOT list_contains(covered, i)], ' '), '') text_clean,
-         |  CAST(len(t) AS BIGINT) n_tokens,
-         |  CAST(len(covered) AS BIGINT) n_stripped
-         |FROM st ORDER BY doc_id""".stripMargin,
+         |${stripRebuild("st")}""".stripMargin,
     // overlap twin: same distinct-shingle grammar, df cap by DOCUMENT
     // count, source-pair self-join with string-order dedup
     "source_overlap" ->
       s"""WITH $Toks,
-         |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(t)>=3 THEN
-         |  [list_aggr(t[i:i+2],'string_agg','_') for i in range(1, len(t)-1)]
-         |  ELSE [] END) g FROM toks),
+         |sh AS (SELECT doc_id, list_distinct(${shinglesSql(3)}) g FROM toks),
          |el AS (SELECT d.source, s.doc_id, unnest(s.g) sg
          |       FROM sh s JOIN documents d USING(doc_id)),
          |keep AS (SELECT sg FROM el GROUP BY 1
@@ -1679,26 +1691,10 @@ object Oracles {
     // rollup twin: per-doc q_score on the same rounded-stats grid as
     // quality_top_decile + the same cascade as quality_filter, then a
     // per-source aggregate whose mean rides the integer 1e-6 grid
-    "source_quality_rollup" -> {
-      val stop = graft.operators.TextAnalysis.StopwordsEn.map(s => s"'$s'").mkString("[", ",", "]")
-      val th = graft.operators.TextAnalysis.QualityThresholds()
+    "source_quality_rollup" ->
       s"""WITH $Toks,
-         |st AS (SELECT doc_id, CAST(len(t) AS BIGINT) n_tok,
-         |  CAST(len(list_distinct(t)) AS DOUBLE)/NULLIF(len(t),0) ttr,
-         |  CAST(len(list_filter(t, x -> list_contains($stop, x))) AS DOUBLE)/NULLIF(len(t),0) sr,
-         |  CAST(list_sum(list_transform(t, x -> len(x))) AS DOUBLE)/NULLIF(len(t),0) mtl
-         |  FROM toks),
-         |sc AS (SELECT doc_id,
-         |  length(text)-length(regexp_replace(text,'[؀-ۿ]','','g')) n_ar,
-         |  length(text)-length(regexp_replace(text,'[一-鿿]','','g')) n_cjk,
-         |  length(text)-length(regexp_replace(text,'[a-zA-Z؀-ۿ一-鿿]','','g')) n_alpha
-         |  FROM documents),
-         |r AS (SELECT doc_id, concat_ws(',',
-         |  CASE WHEN n_tok < ${th.minTokens} THEN 'too_short' END,
-         |  CASE WHEN n_tok > ${th.maxTokens} THEN 'too_long' END,
-         |  CASE WHEN n_tok > 0 AND (mtl < ${th.minMeanTokLen} OR mtl > ${th.maxMeanTokLen}) THEN 'odd_token_len' END,
-         |  CASE WHEN n_tok > 0 AND (n_alpha-n_ar-n_cjk)*2 > n_alpha AND sr < ${th.minStopRatio} THEN 'low_stopword' END,
-         |  CASE WHEN n_tok > 0 AND ttr < ${th.minTtr} THEN 'repetitive' END) reasons
+         |$QualityStatsCtes,
+         |r AS (SELECT doc_id, $QualityReasons
          |  FROM st JOIN sc USING(doc_id)),
          |q AS (SELECT doc_id, round(
          |    (CASE WHEN n_tok>0 THEN round(sr,6) ELSE 0.0 END)*0.5
@@ -1713,8 +1709,7 @@ object Oracles {
          |  floor(CAST(sum(kept) AS DOUBLE)/count(*)*1e6)/1e6 kept_frac,
          |  CAST(CAST(sum(q6) AS BIGINT)//count(*) AS DOUBLE)/1e6 mean_q,
          |  CAST(sum(kept) AS DOUBLE)/count(*) >= 0.5 keep_source
-         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
     "length_buckets" ->
       s"""WITH $Toks,
          |n AS (SELECT CAST(len(t) AS BIGINT) n_tokens FROM toks)
@@ -1930,9 +1925,7 @@ object Oracles {
       s"""WITH d AS (SELECT doc_id, 8 + doc_id % 9 w, 8 + doc_id % 7 h
          |  FROM documents WHERE doc_id < 64),
          |px AS (SELECT doc_id, w, h,
-         |    299*((doc_id*31 + x*7 + y*13) % 256)
-         |  + 587*((doc_id*17 + x*11 + y*3) % 256)
-         |  + 114*((doc_id*23 + x*5 + y*19) % 256) l
+         |${synthLuma("doc_id", "x", "y")} l
          |  FROM d
          |  CROSS JOIN (SELECT unnest(range(0, 17)) x)
          |  CROSS JOIN (SELECT unnest(range(0, 15)) y)
@@ -1948,9 +1941,7 @@ object Oracles {
       s"""WITH d AS (SELECT doc_id, 4 + doc_id % 5 w, 3 + doc_id % 4 h
          |  FROM documents WHERE doc_id < 64),
          |px AS (SELECT doc_id, w, h,
-         |    299*((doc_id*31 + ((x*16)//w)*7 + ((y*12)//h)*13) % 256)
-         |  + 587*((doc_id*17 + ((x*16)//w)*11 + ((y*12)//h)*3) % 256)
-         |  + 114*((doc_id*23 + ((x*16)//w)*5 + ((y*12)//h)*19) % 256) l
+         |${synthLuma("doc_id", "((x*16)//w)", "((y*12)//h)")} l
          |  FROM d
          |  CROSS JOIN (SELECT unnest(range(0, 9)) x)
          |  CROSS JOIN (SELECT unnest(range(0, 7)) y)
@@ -2022,28 +2013,16 @@ object Oracles {
 
     // ── hadith corpus (reference fixtures; absolute path) ──────────────
     "hadith_book_stats" ->
-      s"""WITH v AS (SELECT book_id, ${canonSql("narrator")} cn
-         |  FROM read_json_auto('$HadithGlob', union_by_name=true)
-         |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en'])
+      s"""WITH $NarratorsCte
          |SELECT book_id, count(*) AS total_hadith,
          |count(DISTINCT cn) AS unique_narrators
          |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
-    "hadith_catalog" ->
-      s"""WITH v AS (SELECT book_id, book_title_en, chapter_id
-         |  FROM read_json_auto('$HadithGlob', union_by_name=true)
-         |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en'])
-         |SELECT book_id, min(book_title_en) AS title_en, count(*) AS total_hadiths,
-         |count(DISTINCT chapter_id) AS total_chapters
-         |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
+    "hadith_catalog" -> HadithCatalogSql,
     "hadith_ingest_totals" ->
-      s"""WITH v AS (SELECT book_id, ${canonSql("narrator")} cn
-         |  FROM read_json_auto('$HadithGlob', union_by_name=true)
-         |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en']),
+      s"""WITH $NarratorsCte,
          |bs AS (SELECT book_id, count(*) th, count(DISTINCT cn) un FROM v GROUP BY 1)
          |SELECT count(*) AS books, CAST(sum(th) AS BIGINT) AS total_hadith,
          |CAST(sum(un) AS BIGINT) AS narrator_slots FROM bs""".stripMargin,
-    // S4 sink round-trip: aggregate re-derived from the RAW corpus; any
-    // row/field the JSONL sink drops or mangles breaks the hash
     // crawl_resume twin: replay the injected transport's presence and
     // body formulas over the (group, seq) lattice — the crawl's spool
     // must equal this set row for row (1..n_g pages, minus the g%3=0
@@ -2076,23 +2055,18 @@ object Oracles {
         |  CAST(CASE WHEN regime IN (0,1) THEN 200 WHEN regime=2 THEN 503 ELSE 404 END AS INT) status,
         |  CAST(CASE WHEN regime=0 THEN 1 WHEN regime=1 THEN 2 + n % 3 WHEN regime=2 THEN 6 ELSE 1 END AS INT) attempts
         |FROM r ORDER BY url""".stripMargin,
+    // S4 sink round-trip: aggregate re-derived from the RAW corpus; any
+    // row/field the JSONL sink drops or mangles breaks the hash
     "jsonl_sink_roundtrip" ->
       s"""WITH v AS (SELECT book_id, hadith_id_site, checksum
-         |  FROM read_json_auto('$HadithGlob', union_by_name=true)
-         |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en'])
+         |  FROM $BilingualHadith)
          |SELECT book_id, CAST(count(*) AS BIGINT) n_rows,
          |CAST(count(DISTINCT checksum) AS BIGINT) n_checksums,
          |min(hadith_id_site) first_site_id
          |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
     // sink round-trip: same relational derivation as hadith_catalog — if
     // the JSON sink drops or mangles anything, the hash check fails
-    "catalog_sink_roundtrip" ->
-      s"""WITH v AS (SELECT book_id, book_title_en, chapter_id
-         |  FROM read_json_auto('$HadithGlob', union_by_name=true)
-         |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en'])
-         |SELECT book_id, min(book_title_en) AS title_en, count(*) AS total_hadiths,
-         |count(DISTINCT chapter_id) AS total_chapters
-         |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
+    "catalog_sink_roundtrip" -> HadithCatalogSql,
 
     // ── HTML→record parser parity (r17) ────────────────────────────────
     // The engine parses the 20 RAW fixture pages; this side reads the
@@ -2112,7 +2086,7 @@ object Oracles {
          |CAST(len(topics) AS BIGINT) AS n_topics,
          |CAST(len(footnotes) AS BIGINT) AS n_footnotes,
          |source_url, checksum
-         |FROM read_json_auto('$HadithGlob', union_by_name=true)
+         |FROM $HadithRead
          |ORDER BY book_id, hadith_id_site""".stripMargin,
     // book rollup vs the shipped index.json `books` entries
     "parse_book_index" ->
@@ -2140,7 +2114,7 @@ object Oracles {
     // (the shipped JSONL again — key columns + the recomputed checksum)
     "stream_parse_ingest" ->
       s"""SELECT book_id, hadith_id_site, chapter_id, checksum
-         |FROM read_json_auto('$HadithGlob', union_by_name=true)
+         |FROM $HadithRead
          |ORDER BY book_id, hadith_id_site""".stripMargin,
     // hand-computed expectations for the synthetic edge page + index
     // (see Queries.SunnahEdgeBattery for the behavior each row pins)
@@ -2165,10 +2139,6 @@ object Oracles {
         |) AS t(kind, k, v1, v2, v3) ORDER BY kind, k""".stripMargin,
   )
 
-  /** Shared tafsir lexical-leg CTEs (corpus scan → tokenize → postings →
-    * BM25 → top-25), used VERBATIM by both quran oracles so the
-    * tokenizer/BM25-constant/tie-break semantics cannot diverge between
-    * them. Yields CTEs `raw/docs/.../top(doc_id, bm25)`. */
   /** The quran corpus/postings/dictionary/stats CTE base — shared by
     * the lexical-leg replays and the MATCH-syntax replay. */
   private def quranBaseCtes: String =
@@ -2186,16 +2156,17 @@ object Oracles {
     * candidate CTE `cand$sfx` when present — the formula is byte-shared
     * with the lexical leg so the two replays cannot drift. */
   private def bmCte(sfx: String, restrict: Boolean): String =
-    s"""bm$sfx AS (SELECT p.doc_id, round(sum(
-       |        ln((n_docs - df + 0.5)/(df + 0.5) + 1.0)
-       |        * (tf * 2.2) / (tf + 1.2*(1.0 - 0.75 + 0.75*dl/(CAST(sum_dl AS DOUBLE)/n_docs)))
-       |      ), 6) bm25
+    s"""bm$sfx AS (SELECT p.doc_id, ${bm25Sum("      ")}
        |  FROM p JOIN q$sfx USING(term) JOIN d USING(term) CROSS JOIN st
        |  ${if (restrict) s"WHERE p.doc_id IN (SELECT doc_id FROM cand$sfx)" else ""}
        |  GROUP BY 1)""".stripMargin
 
+  /** Shared tafsir lexical-leg CTEs (corpus scan → tokenize → postings →
+    * BM25 → top-25), used VERBATIM by both quran oracles so the
+    * tokenizer/BM25-constant/tie-break semantics cannot diverge between
+    * them. Yields CTEs `raw/docs/.../top(doc_id, bm25)`. */
   private def quranLexCtes: String = {
-    val terms = Router.embedTokens(Queries.QuranQuery).map(t => s"'$t'").mkString("[", ",", "]")
+    val terms = wordList(Router.embedTokens(Queries.QuranQuery))
     s"""$quranBaseCtes,
        |q AS (SELECT unnest($terms) term),
        |${bmCte("", restrict = false)},
@@ -2232,6 +2203,15 @@ object Oracles {
        |ORDER BY q, verse_key""".stripMargin
   }
 
+  /** Quran.search's tail: the best `src` hit per distinct preview, top 5. */
+  private def quranTop5(src: String, vec: String): String =
+    s"""r AS (SELECT *, row_number() OVER (PARTITION BY md5(text_preview)
+       |      ORDER BY score DESC, bm25 DESC, surah, ayah) rn FROM $src)
+       |SELECT verse_key, CAST(surah AS BIGINT) surah, CAST(ayah AS BIGINT) ayah,
+       |round(score,6) score, $vec vector_score,
+       |round(fts_score,6) fts_score, text_preview
+       |FROM r WHERE rn=1 ORDER BY score DESC, bm25 DESC, surah, ayah LIMIT 5""".stripMargin
+
   private def quranSearchFtsSql: String = {
     s"""WITH $quranLexCtes,
        |f AS (SELECT doc_id, bm25,
@@ -2239,12 +2219,7 @@ object Oracles {
        |h AS (SELECT d2.verse_key, d2.surah, d2.ayah, f.fts_score, f.bm25,
        |      substring(d2.text_plain,1,200) text_preview FROM f JOIN docs d2 USING(doc_id)),
        |sc AS (SELECT *, round(0.0*0.0 + 1.0*fts_score, 6) score FROM h),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY md5(text_preview)
-       |      ORDER BY score DESC, bm25 DESC, surah, ayah) rn FROM sc)
-       |SELECT verse_key, CAST(surah AS BIGINT) surah, CAST(ayah AS BIGINT) ayah,
-       |round(score,6) score, CAST(0.0 AS DOUBLE) vector_score,
-       |round(fts_score,6) fts_score, text_preview
-       |FROM r WHERE rn=1 ORDER BY score DESC, bm25 DESC, surah, ayah LIMIT 5""".stripMargin
+       |${quranTop5("sc", "CAST(0.0 AS DOUBLE)")}""".stripMargin
   }
 
   /** Full hybrid tafsir search twin (search.py:178-318 semantics): the
@@ -2279,12 +2254,7 @@ object Oracles {
        |h AS (SELECT sc.*, d2.surah, d2.ayah,
        |      substring(d2.text_plain,1,200) text_preview
        |      FROM sc JOIN docs d2 USING(verse_key)),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY md5(text_preview)
-       |      ORDER BY score DESC, bm25 DESC, surah, ayah) rn FROM h)
-       |SELECT verse_key, CAST(surah AS BIGINT) surah, CAST(ayah AS BIGINT) ayah,
-       |round(score,6) score, round(vector_score,6) vector_score,
-       |round(fts_score,6) fts_score, text_preview
-       |FROM r WHERE rn=1 ORDER BY score DESC, bm25 DESC, surah, ayah LIMIT 5""".stripMargin
+       |${quranTop5("h", "round(vector_score,6)")}""".stripMargin
   }
 
   /** F10/F19/F26/F27 battery twin — unescape mirrored by chained
@@ -2325,7 +2295,7 @@ object Oracles {
     s"""WITH b(rid, texts, corrupt) AS (VALUES
        |$values)
        |SELECT rid, coalesce(corrupt IS NULL AND
-       |  list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en'],
+       |  $BilingualPred,
        |  false) is_valid
        |FROM b ORDER BY rid""".stripMargin
   }
@@ -2402,7 +2372,7 @@ object Oracles {
        |$values),
        |c AS (SELECT sid,
        |  least(1.0, greatest(0.0, coalesce(vs, 0.0))) v,
-       |  CASE WHEN bm25 IS NOT NULL THEN least(1.0, greatest(0.0, greatest(0.0,bm25)/(1.0+greatest(0.0,bm25)))) ELSE 0.0 END f,
+       |  $FtsSignal f,
        |  CAST(CASE WHEN phrase IS NOT NULL AND strpos(lower(text), lower(phrase))>0 THEN 0.05 ELSE 0.0 END AS DOUBLE) pb,
        |  CASE WHEN len(tokens)>0
        |       THEN CAST(len(list_filter(tokens, s2 -> strpos(lower(text), s2)>0)) AS DOUBLE)/len(tokens)
@@ -2565,13 +2535,6 @@ object Oracles {
        |FROM e ORDER BY sid""".stripMargin
   }
 
-  /** The flagship hadith hybrid search, end to end in one statement:
-    * silver build (validation + canonicalization + payload render) →
-    * narrator-field postings + prefix BM25 top-50 → hashed-embedding
-    * cosine top-50 over the payload → full-outer fusion → backfill →
-    * priority scoring → top-10. Intent fields (probes, embed vector,
-    * coverage tokens) are computed by the SAME driver-side router the
-    * Spark query uses and embedded as literals. */
   /** Spec-mode exact-reference lookup twin: each probe's citation parses
     * driver-side (the same [[Router.parseExactRef]] call the registered
     * query makes — the PARSE itself is pinned by RouterSpec), and the
@@ -2592,8 +2555,7 @@ object Oracles {
          |  CAST(0.0 AS DOUBLE) term_coverage, CAST(1.0 AS DOUBLE) score
          |  FROM sv WHERE $conds ORDER BY doc_id LIMIT 10)""".stripMargin
     }
-    s"""WITH raw AS (SELECT * FROM read_json_auto('$HadithGlob', union_by_name=true)
-       |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en']),
+    s"""WITH raw AS (SELECT * FROM $BilingualHadith),
        |sv AS (SELECT
        |  collection_slug||':'||book_id||':'||hadith_id_site doc_id,
        |  book_id, ${canonSql("narrator")} narrator,
@@ -2607,26 +2569,22 @@ object Oracles {
        |ORDER BY probe_id, doc_id""".stripMargin
   }
 
+  /** The flagship hadith hybrid search, end to end in one statement:
+    * silver build (validation + canonicalization + payload render) →
+    * narrator-field postings + prefix BM25 top-50 → hashed-embedding
+    * cosine top-50 over the payload → full-outer fusion → backfill →
+    * priority scoring → top-10. Intent fields (probes, embed vector,
+    * coverage tokens) are computed by the SAME driver-side router the
+    * Spark query uses and embedded as literals. */
   private def hadithSearchSql: String = {
     val intent = Router.route(Queries.HadithQuery)
     val dim = Queries.HadithDim
-    val probes = (Router.tokenize(intent.narrator.get) match {
+    val probes = wordList(Router.tokenize(intent.narrator.get) match {
       case Nil => intent.tokens.take(6); case ts => ts.take(6)
-    }).map(t => s"'$t'").mkString("[", ",", "]")
-    val qn = VecFns.l2NormalizeLocal(
-      VecFns.hashEmbedLocal(Router.embedTokens(intent.normalized), dim))
-    val qq = qn.map(x => BigDecimal(x * VecFns.Scale)
-      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-    val qlit = qq.map(v => s"$v.0").mkString("[", ",", "]")
-    // synonym-group coverage literals: the expansion is driver-side query
-    // planning (Router.coverageGroups — phrase intents unexpanded),
-    // inlined exactly like the token and probe literals — the oracle
-    // replays coverage over the same groups
-    val grpList = Router.coverageGroups(intent)
-      .map(g => g.map(t => s"'${sq(t)}'").mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    s"""WITH raw AS (SELECT * FROM read_json_auto('$HadithGlob', union_by_name=true)
-       |  WHERE list_sort(list_distinct(list_transform(texts, t -> t.language))) = ['ar','en']),
+    })
+    val qlit = queryVecLit(intent, dim)
+    val grpList = groupsLit(intent)
+    s"""WITH raw AS (SELECT * FROM $BilingualHadith),
        |sv0 AS (SELECT
        |  collection_slug||':'||book_id||':'||hadith_id_site doc_id,
        |  book_id, ${canonSql("narrator")} narrator,
@@ -2649,14 +2607,47 @@ object Oracles {
        |expd AS (SELECT DISTINCT term, df FROM nd JOIN prb ON starts_with(term, probe)),
        |m AS (SELECT np.doc_id, np.dl, np.tf, expd.df, nst.n_docs, nst.sum_dl
        |      FROM np JOIN expd USING(term) CROSS JOIN nst),
-       |bm AS (SELECT doc_id, round(sum(
-       |        ln((n_docs - df + 0.5)/(df + 0.5) + 1.0)
-       |        * (tf * 2.2) / (tf + 1.2*(1.0 - 0.75 + 0.75*dl/(CAST(sum_dl AS DOUBLE)/n_docs)))
-       |      ), 6) bm25 FROM m GROUP BY 1),
+       |bm AS (SELECT doc_id, ${bm25Sum("      ")} FROM m GROUP BY 1),
        |lex AS (SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT 50),
        |etk AS (SELECT num_id doc_id, list_filter(regexp_split_to_array(lower(payload),
        |  '[^a-z0-9_؀-ۿ]+'), t -> len(t)>0) t FROM sv),
-       |ent0 AS (SELECT doc_id, unnest(t) tok FROM etk),
+       |${vectorFuseCtes("etk", dim, qlit)},
+       |bf AS (SELECT s2.doc_id hadith_id, s2.book_id, s2.narrator, s2.en, f.bm25, f.cos
+       |       FROM fused f JOIN sv s2 ON s2.num_id=f.doc_id),
+       |sc AS (SELECT hadith_id, book_id, narrator, en,
+       |  least(1.0, greatest(0.0, coalesce(cos, 0.0))) v,
+       |  $FtsSignal f,
+       |  CASE WHEN len($grpList)>0
+       |       THEN CAST(len(list_filter($grpList, g -> len(list_filter(g, t3 -> strpos(lower(en), t3)>0))>0)) AS DOUBLE)/len($grpList)
+       |       ELSE 0.0 END cov
+       |  FROM bf)
+       |SELECT hadith_id AS doc_id, book_id, narrator,
+       |  substring(trim(en),1,240) snippet,
+       |  $HybridScoreCols
+       |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
+  }
+
+  // ── hybrid fusion (mirror Hybrid.search / HadithSearch.search) ──────
+  /** The query's L2-normalized hashed embedding as a ×1e7 half-up SQL
+    * literal, from the same driver-side code the Spark query runs. */
+  private def queryVecLit(intent: Router.Intent, dim: Int): String =
+    VecFns.l2NormalizeLocal(VecFns.hashEmbedLocal(Router.embedTokens(intent.normalized), dim))
+      .map(x => BigDecimal(x * VecFns.Scale).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
+      .map(v => s"$v.0").mkString("[", ",", "]")
+
+  /** Synonym-group coverage literals: the expansion is driver-side query
+    * planning (Router.coverageGroups — phrase intents unexpanded),
+    * inlined exactly like the token and probe literals, so the oracle
+    * replays coverage over the same groups. */
+  private def groupsLit(intent: Router.Intent): String =
+    Router.coverageGroups(intent)
+      .map(g => g.map(t => s"'${sq(t)}'").mkString("[", ",", "]"))
+      .mkString("[", ",", "]")
+
+  /** The vector leg — hashed embeddings of the `etoks` (doc_id, t) lists,
+    * quantized cosine to `qlit`, top 50 — full-outer `fused` with `lex`. */
+  private def vectorFuseCtes(etoks: String, dim: Int, qlit: String): String =
+    s"""ent0 AS (SELECT doc_id, unnest(t) tok FROM $etoks),
        |ent1 AS (SELECT doc_id, ${h31("tok")} hv FROM ent0),
        |ent AS (SELECT doc_id, hv % $dim bucket,
        |        sum(CASE WHEN (hv // $dim) % 2 = 0 THEN 1.0 ELSE -1.0 END) v
@@ -2671,73 +2662,31 @@ object Oracles {
        |         FROM dv CROSS JOIN qlit),
        |vec AS (SELECT doc_id, cos FROM cosd ORDER BY cos DESC, doc_id LIMIT 50),
        |fused AS (SELECT coalesce(l.doc_id, v.doc_id) doc_id, l.bm25, v.cos
-       |          FROM lex l FULL OUTER JOIN vec v ON l.doc_id=v.doc_id),
-       |bf AS (SELECT s2.doc_id hadith_id, s2.book_id, s2.narrator, s2.en, f.bm25, f.cos
-       |       FROM fused f JOIN sv s2 ON s2.num_id=f.doc_id),
-       |sc AS (SELECT hadith_id, book_id, narrator, en,
-       |  least(1.0, greatest(0.0, coalesce(cos, 0.0))) v,
-       |  CASE WHEN bm25 IS NOT NULL THEN least(1.0, greatest(0.0, greatest(0.0,bm25)/(1.0+greatest(0.0,bm25)))) ELSE 0.0 END f,
-       |  CASE WHEN len($grpList)>0
-       |       THEN CAST(len(list_filter($grpList, g -> len(list_filter(g, t3 -> strpos(lower(en), t3)>0))>0)) AS DOUBLE)/len($grpList)
-       |       ELSE 0.0 END cov
-       |  FROM bf)
-       |SELECT hadith_id AS doc_id, book_id, narrator,
-       |  substring(trim(en),1,240) snippet,
-       |  round(v,4) vector_similarity, round(f,4) fts_signal,
-       |  CAST(0.0 AS DOUBLE) phrase_bonus, round(cov,4) term_coverage,
-       |  round(least(1.0, greatest(0.0, 0.6*v + 0.4*f + 0.0 + 0.0 + 0.2*cov)),4) score
-       |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
-  }
+       |          FROM lex l FULL OUTER JOIN vec v ON l.doc_id=v.doc_id)""".stripMargin
 
   private def hybridSearchSql: String = {
     val intent = Router.route(Queries.HybridQuery)
     val terms = intent.tokens.take(6)
-    val termList = terms.map(t => s"'$t'").mkString("[", ",", "]")
-    val qn = VecFns.l2NormalizeLocal(VecFns.hashEmbedLocal(Router.embedTokens(intent.normalized), Queries.Dim))
-    val qq = qn.map(x => BigDecimal(x * VecFns.Scale).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-    val qlit = qq.map(v => s"$v.0").mkString("[", ",", "]")
-    // group-coverage literals — same inlining doctrine as hadithSearchSql
-    val grpList = Router.coverageGroups(intent)
-      .map(g => g.map(t => s"'${sq(t)}'").mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
+    val qlit = queryVecLit(intent, Queries.Dim)
+    val grpList = groupsLit(intent)
     s"""WITH ${bm25Cte(terms)},
-       |probes AS (SELECT unnest($termList) probe),
+       |probes AS (SELECT unnest(${wordList(terms)}) probe),
        |expd AS (SELECT DISTINCT term FROM d JOIN probes ON starts_with(term, probe)),
        |mx AS (SELECT p.doc_id, p.dl, p.tf, d.df, st.n_docs, st.sum_dl
        |       FROM p JOIN expd USING(term) JOIN d USING(term) CROSS JOIN st),
-       |bmx AS (SELECT doc_id, round(sum(
-       |         ln((n_docs - df + 0.5)/(df + 0.5) + 1.0)
-       |         * (tf * 2.2) / (tf + 1.2*(1.0 - 0.75 + 0.75*dl/(CAST(sum_dl AS DOUBLE)/n_docs)))
-       |       ), 6) bm25 FROM mx GROUP BY 1),
+       |bmx AS (SELECT doc_id, ${bm25Sum("       ")} FROM mx GROUP BY 1),
        |lex AS (SELECT doc_id, bm25 FROM bmx ORDER BY bm25 DESC, doc_id LIMIT 50),
-       |ent0 AS (SELECT doc_id, unnest(t) tok FROM toks),
-       |ent1 AS (SELECT doc_id, ${h31("tok")} hv FROM ent0),
-       |ent AS (SELECT doc_id, hv % ${Queries.Dim} bucket,
-       |        sum(CASE WHEN (hv // ${Queries.Dim}) % 2 = 0 THEN 1.0 ELSE -1.0 END) v
-       |        FROM ent1 GROUP BY 1,2),
-       |nrm AS (SELECT doc_id, sqrt(sum(v*v)) n FROM ent GROUP BY 1),
-       |qlit AS (SELECT $qlit qq),
-       |slot AS (SELECT doc_id, bucket, round(round(v/n,6)*1e7) qs
-       |         FROM ent JOIN nrm USING(doc_id) WHERE n>0),
-       |dv AS (SELECT doc_id, sum(qs * qq[CAST(bucket+1 AS INT)]) dot, sqrt(sum(qs*qs)) na
-       |       FROM slot CROSS JOIN qlit GROUP BY 1),
-       |cosd AS (SELECT doc_id, round(dot/(na*sqrt(list_dot_product(qq,qq))),6) cos
-       |         FROM dv CROSS JOIN qlit),
-       |vec AS (SELECT doc_id, cos FROM cosd ORDER BY cos DESC, doc_id LIMIT 50),
-       |fused AS (SELECT coalesce(l.doc_id, v.doc_id) doc_id, l.bm25, v.cos
-       |          FROM lex l FULL OUTER JOIN vec v ON l.doc_id=v.doc_id),
+       |${vectorFuseCtes("toks", Queries.Dim, qlit)},
        |bf AS (SELECT f.doc_id, d2.text, f.bm25, f.cos FROM fused f JOIN documents d2 USING(doc_id)),
        |sc AS (SELECT doc_id, text,
        |  least(1.0, greatest(0.0, coalesce(cos, 0.0))) v,
-       |  CASE WHEN bm25 IS NOT NULL THEN least(1.0, greatest(0.0, greatest(0.0,bm25)/(1.0+greatest(0.0,bm25)))) ELSE 0.0 END f,
+       |  $FtsSignal f,
        |  CASE WHEN len($grpList)>0
        |       THEN CAST(len(list_filter($grpList, g -> len(list_filter(g, t2 -> strpos(lower(text), t2)>0))>0)) AS DOUBLE)/len($grpList)
        |       ELSE 0.0 END cov
        |  FROM bf)
        |SELECT doc_id, substring(trim(text),1,240) snippet,
-       |  round(v,4) vector_similarity, round(f,4) fts_signal,
-       |  CAST(0.0 AS DOUBLE) phrase_bonus, round(cov,4) term_coverage,
-       |  round(least(1.0, greatest(0.0, 0.6*v + 0.4*f + 0.0 + 0.0 + 0.2*cov)),4) score
+       |  $HybridScoreCols
        |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
   }
 }

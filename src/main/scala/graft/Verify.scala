@@ -10,12 +10,22 @@ object Verify {
   def unknownRows(requested: Set[String], registered: Set[String]): Seq[String] =
     (requested -- registered).toSeq.sorted
 
+  private val Usage = "usage: graft.Verify <sf_dir> <out_dir> [row,row,...]"
+
+  /** (sfDir, outDir, optional row names), or None for a wrong argument
+    * count. The optional third argument is a comma-list of query names
+    * to dump and compare, for fast single-oracle iteration. */
+  private[graft] def parseArgs(args: Array[String]): Option[(String, String, Option[Set[String]])] =
+    args match {
+      case Array(s, o)    => Some((s, o, None))
+      case Array(s, o, f) => Some((s, o, Some(f.split(',').toSet)))
+      case _              => None
+    }
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg (dev only — the driver passes two): comma-list of
-    // query names to dump/compare, for fast single-oracle iteration
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+    val (sfDir, outDir, only) = parseArgs(args).getOrElse {
+      System.err.println(s"[verify] $Usage")
+      sys.exit(2)
     }
     // checked before the Spark session starts: a mistyped name fails
     // in a second instead of after the whole selected dump

@@ -222,7 +222,7 @@ object HttpTransport {
   * reference's ssl_context dev runner). */
 object HttpMain {
   def main(args: Array[String]): Unit = {
-    val glob = args.headOption.getOrElse("/root/reference/data/riyadussalihin/book_*.jsonl")
+    val glob = args.headOption.getOrElse(graft.Queries.HadithBooks)
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(8000)
     val tls = if (args.contains("--tls")) Some(HttpTransport.Tls()) else None
     val spark = graft.GraftSession.local("graft-http")

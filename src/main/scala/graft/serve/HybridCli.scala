@@ -50,7 +50,7 @@ object HybridCli {
 
   /** runMain graft.serve.HybridCli [booksGlob] [k] [mode] */
   def main(args: Array[String]): Unit = {
-    val glob = args.headOption.getOrElse("/root/reference/data/riyadussalihin/book_*.jsonl")
+    val glob = args.headOption.getOrElse(graft.Queries.HadithBooks)
     val spark = graft.GraftSession.local("graft-cli")
     val eng = Graft.openHadith(spark, glob)
     graft.GraftSession.tuneForServing(spark)

@@ -183,7 +183,7 @@ object McpStdio {
   /** `python3 -m mcp_server.mcp_stdio` analog:
     * runMain graft.serve.McpStdio [booksGlob] [quranDir] */
   def main(args: Array[String]): Unit = {
-    val glob = args.headOption.getOrElse("/root/reference/data/riyadussalihin/book_*.jsonl")
+    val glob = args.headOption.getOrElse(graft.Queries.HadithBooks)
     val spark = graft.GraftSession.local("graft-mcp")
     val hadith = Graft.openHadith(spark, glob)
     val quran = args.lift(1).map(dir => Graft.openQuran(spark, dir))
