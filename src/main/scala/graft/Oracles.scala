@@ -297,7 +297,7 @@ object Oracles {
 
   private val TokenElems = "SELECT doc_id, unnest(list_distinct(t)) elem FROM toks"
 
-  /** Dedup.minhashFromElems + bandKeys twin: 16 MinHash signatures of the
+  /** Dedup.minhashSignatures + bandKeys twin: 16 MinHash signatures of the
     * (doc_id, elem) query `elemsSql`, banded by `rowsPerBand` into
     * `banded0` (doc_id, band, 60-bit md5 band_key). */
   private def bandKeysCtes(elemsSql: String, rowsPerBand: Int): String =
@@ -319,7 +319,7 @@ object Oracles {
        |$out AS (SELECT $src.* FROM $src ANTI JOIN hot_$out USING($ks))""".stripMargin
   }
 
-  /** Dedup.candidatesFromBands twin (and incrementalNearDupPairs' probe
+  /** Dedup.lshCandidatePairs twin (and incrementalNearDupPairs' probe
     * form): distinct (a, b) pairs of `x` × `y` rows sharing a (band,
     * band_key); a self-join (`x == y`) keeps a < b. */
   private def bandPairsCte(out: String, x: String, y: String,

@@ -99,6 +99,25 @@ object Queries {
       |GROUP BY c_nationkey
       |ORDER BY c_nationkey""".stripMargin
 
+  /** The `stream_parse_ingest` row over the pages matching `glob`. A
+    * file stream over a glob that matches nothing runs and yields no
+    * rows, which would read as a wrong answer; like the batch `parse_*`
+    * rows, the row fails instead when no file matches. */
+  private[graft] def streamParseIngest(s: SparkSession, glob: String): DataFrame = {
+    val g = new org.apache.hadoop.fs.Path(glob)
+    val fs = g.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (Option(fs.globStatus(g)).forall(_.isEmpty))
+      throw new java.io.FileNotFoundException(s"stream_parse_ingest: no file matches $glob")
+    val scratch = java.nio.file.Files
+      .createTempDirectory("graft-stream-parse").toString
+    registerScratchCleanup(scratch)
+    val pages = SunnahParse.readPagesStream(s, glob, maxFilesPerTrigger = 7)
+    val recs = SunnahParse.records(pages, SunnahSlug, SunnahName, SunnahBase)
+      .select("book_id", "hadith_id_site", "chapter_id", "checksum")
+    graft.streaming.Streams.runToParquet(recs, scratch)
+      .orderBy("book_id", "hadith_id_site")
+  }
+
   private val scratchHooks = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   /** Register a scratch directory for recursive deletion at JVM exit —
     * once per path, so repeated query runs don't stack hooks. */
@@ -2085,17 +2104,7 @@ object Queries {
       // batch into the transactional parquet sink, and the final corpus
       // must equal the batch parse — the shipped-JSONL oracle again,
       // key columns + checksum
-      "stream_parse_ingest" -> ((s, _) => {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-stream-parse").toString
-        registerScratchCleanup(scratch)
-        val pages = SunnahParse.readPagesStream(s, SunnahHtml,
-          maxFilesPerTrigger = 7)
-        val recs = SunnahParse.records(pages, SunnahSlug, SunnahName, SunnahBase)
-          .select("book_id", "hadith_id_site", "chapter_id", "checksum")
-        graft.streaming.Streams.runToParquet(recs, scratch)
-          .orderBy("book_id", "hadith_id_site")
-      }),
+      "stream_parse_ingest" -> ((s, _) => streamParseIngest(s, SunnahHtml)),
       // parser behaviors the bundled corpus never exercises, driven on
       // the synthetic [[SunnahEdgeBattery]] page through the SAME
       // DataFrame transforms and pinned by a hand-computed VALUES

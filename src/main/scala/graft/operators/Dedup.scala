@@ -163,27 +163,25 @@ object Dedup {
       (TextFns.hash31Local(s"mh-a:$s") | 1L, TextFns.hash31Local(s"mh-b:$s"))
     }.unzip
 
-  /** MinHash signatures over an exploded element set (doc_id, elem).
+  /** MinHash signatures over an exploded element set (doc_id, elem), one
+    * wide row per doc: (doc_id, sig) with `sig(s)` the seed-s minimum.
     * One shuffle of the element rows with numHashes parallel min
-    * aggregates (map-side combinable); the (doc, seed, minh) long form is
-    * unpivoted afterwards from numHashes columns per doc. */
-  def minhashFromElems(elems: DataFrame, numHashes: Int): DataFrame = {
+    * aggregates (map-side combinable). */
+  private def minhashSig(elems: DataFrame, numHashes: Int): DataFrame = {
     val (as_, bs) = minhashCoeffs(numHashes)
-    val projected = elems.select(col("doc_id"), TextFns.hash31(col("elem")).as("h0"))
-    val aggs = (0 until numHashes).map(s =>
-      min((lit(as_(s)) * col("h0") + lit(bs(s))) % lit(MinhashP)).as(s"m$s"))
-    val wide = projected.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    val pairs = array((0 until numHashes).map(s =>
-      struct(lit(s).as("seed"), col(s"m$s").as("minh"))): _*)
-    wide.select(col("doc_id"), explode(pairs).as("sm"))
-      .select(col("doc_id"), col("sm.seed").as("seed"), col("sm.minh").as("minh"))
+    elems.select(col("doc_id"), TextFns.hash31(col("elem")).as("h0"))
+      .groupBy("doc_id")
+      .agg(array((0 until numHashes).map(s =>
+        min((lit(as_(s)) * col("h0") + lit(bs(s))) % lit(MinhashP))): _*).as("sig"))
   }
 
-  /** MinHash signatures over the doc's distinct tokens. */
+  /** MinHash signatures over the doc's distinct tokens, in the long
+    * (doc_id, seed, minh) form. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int): DataFrame =
-    minhashFromElems(docs.select(col(idCol).cast("long").as("doc_id"),
+    minhashSig(docs.select(col(idCol).cast("long").as("doc_id"),
       explode(TextFns.distinctTokens(col(textCol))).as("elem")), numHashes)
+      .select(col("doc_id"), posexplode(col("sig")).as(Seq("seed", "minh")))
 
   /** Hot-bucket guard shared by every LSH-style candidate generator: a
     * bucket with m members emits m²/2 candidate rows in ONE join task, so
@@ -209,55 +207,74 @@ object Dedup {
     ex.groupBy(keys.map(col): _*).agg(count("*").as("bsize"))
       .where(col("bsize") > maxBucket)
 
-  /** LSH banding: group the signature into bands of `rowsPerBand`, hash each
-    * band, and emit candidate pairs (a < b) sharing any band bucket.
-    * The join key is (band, band_key) — candidates never require n².
-    * `maxBucket` caps per-bucket membership (skew guard, see
-    * [[capBuckets]]). */
-  /** Banded signature keys: one (doc_id, band, band_key) row per band —
-    * the LSH bucket identity every candidate generator (and the
-    * incremental probe) joins on. The key is the FUSED 60-bit hash of
-    * the band's minhash sequence (r19, VERDICT #7 / guide §2.3 narrower
-    * types): a band row is (long, int, long) instead of carrying a
-    * 32-char md5 hex string through every band self-join, bucket-size
-    * count and index write — same collision-free-in-practice bucket
-    * identity (the hash input string is unchanged; the oracle twin
-    * parses the same 15 hex chars of the same md5), ~60% narrower band
-    * frame in the exchanges. */
-  def bandKeys(sigs: DataFrame, rowsPerBand: Int): DataFrame =
-    sigs
-      .withColumn("band", (col("seed") / rowsPerBand).cast("int"))
-      .groupBy("doc_id", "band")
-      .agg(TextFns.hash60(concat_ws(":", transform(array_sort(collect_list(struct(col("seed"), col("minh")))),
-        s => s.getField("minh").cast("string")))).as("band_key"))
+  /** One (doc_id, band, band_key) row per LSH band — the bucket identity
+    * every candidate generator and the incremental probe join on — from
+    * (doc_id, sig) rows listing a doc's minhashes in seed order. Band b
+    * covers seeds [b·r, (b+1)·r), the last one shorter when r does not
+    * divide the signature; its key is the fused 60-bit hash of the
+    * band's ":"-joined minhashes (the oracle twin parses the same 15 hex
+    * chars of the same md5). The one band-key derivation: [[setBands]]
+    * and [[bandKeys]] both feed it. */
+  private def bandsOf(sigs: DataFrame, rowsPerBand: Int): DataFrame =
+    sigs.select(col("doc_id"), col("sig"),
+        explode(sequence(lit(0), size(col("sig")) - 1, lit(rowsPerBand))).as("lo"))
+      .select(col("doc_id"), (col("lo") / rowsPerBand).cast("int").as("band"),
+        TextFns.hash60(concat_ws(":",
+          slice(col("sig"), col("lo") + 1, lit(rowsPerBand)).cast("array<string>")))
+          .as("band_key"))
 
+  /** Number of bands [[bandsOf]] cuts a `numHashes` signature into. */
+  private[graft] def bandCount(numHashes: Int, rowsPerBand: Int): Int =
+    (numHashes + rowsPerBand - 1) / rowsPerBand
+
+  /** [[bandsOf]] over the long (doc_id, seed, minh) form, each doc's
+    * seeds 0 … n-1 regrouped into one seed-sorted list. */
+  def bandKeys(sigs: DataFrame, rowsPerBand: Int): DataFrame =
+    bandsOf(sigs.groupBy("doc_id").agg(
+      array_sort(collect_list(struct(col("seed"), col("minh")))).getField("minh").as("sig")),
+      rowsPerBand)
+
+  /** Band keys of a [[tokenSetsSized]]-shaped (doc_id, shingles, …) frame,
+    * banded straight from each doc's wide MinHash row — no regrouping. */
+  private[graft] def setBands(sized: DataFrame, numHashes: Int,
+                              rowsPerBand: Int): DataFrame =
+    bandsOf(minhashSig(sized.select(col("doc_id"), explode(col("shingles")).as("elem")),
+      numHashes), rowsPerBand)
+
+  /** LSH banding: candidate pairs (a < b) sharing any band bucket of the
+    * long-form signatures `sigs`. The join key is (band, band_key) —
+    * candidates never require n². `maxBucket` caps per-bucket membership
+    * (skew guard, see [[capBuckets]]). */
   def lshCandidatePairs(sigs: DataFrame, rowsPerBand: Int,
                         maxBucket: Int = 10000,
-                        materialize: Boolean = true): DataFrame = {
+                        materialize: Boolean = true): DataFrame =
+    lshCandidates(bandKeys(sigs, rowsPerBand), maxBucket, materialize)
+
+  private def lshCandidates(bands: DataFrame, maxBucket: Int,
+                            materialize: Boolean): DataFrame = {
     // cached: the bucket-size count and the candidate self-join all scan it
-    val banded = maybeCache(bandKeys(sigs, rowsPerBand), materialize)
-    scoped(materialize, banded)(candidatesFromBands(banded, maxBucket))
+    val banded = maybeCache(bands, materialize)
+    scoped(materialize, banded)(bandPairs(banded, maxBucket).distinct())
   }
 
-  /** Candidate pairs (a < b) from an already-built band-key frame — the
-    * core of [[lshCandidatePairs]], exposed for callers that CACHE the
-    * (|docs|·bands)-scale band frame themselves and derive several
-    * consumers from it (the streaming ingest's per-batch kit: candidate
-    * self-join, cross-batch probe, index append — one band build, three
-    * readers). */
-  private[graft] def candidatesFromBands(banded: DataFrame, maxBucket: Int): DataFrame = {
+  /** Pairs (a < b) of an already-built band-key frame, one row per shared
+    * bucket (NOT distinct) — the core of [[lshCandidatePairs]], exposed
+    * for callers that cache the band frame themselves, derive several
+    * consumers from it and take one distinct over all their candidates
+    * (the streaming ingest's per-batch kit). */
+  private[graft] def bandPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
     val capped = capBuckets(banded, Seq("band", "band_key"), maxBucket)
     val a = capped.select(col("band"), col("band_key"), col("doc_id").as("a"))
     val b = capped.select(col("band"), col("band_key"), col("doc_id").as("b"))
     a.join(b, Seq("band", "band_key"))
       .where(col("a") < col("b"))
-      .select("a", "b").distinct()
+      .select("a", "b")
   }
 
   /** (doc_id, shingles, n_sh) distinct-token sets — [[jaccardVerify]]'s
     * internal frame, exposed so a caller can cache it ONCE per batch and
     * feed several [[verifyPairs]] consumers (same rationale as
-    * [[candidatesFromBands]]). */
+    * [[bandPairs]]). */
   private[graft] def tokenSetsSized(docs: DataFrame, idCol: String,
                                     textCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
@@ -292,17 +309,16 @@ object Dedup {
     * ~105 s total). Both legs here read the same cached
     * [[tokenSetsSized]] frame, exactly like the streaming ingest's
     * per-batch kit. Output is identical to the composed form by
-    * construction: [[minhashFromElems]] over the exploded cached sets
-    * is the definition of [[minhashSignatures]], and the verify's
-    * shingle sets ARE `distinctTokens` rows either way. */
+    * construction: [[setBands]] over the cached sets bands the same
+    * signatures [[minhashSignatures]] unpivots (one [[bandsOf]] either
+    * way), and the verify's shingle sets ARE `distinctTokens` rows
+    * either way. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           numHashes: Int = 16, rowsPerBand: Int = 16,
                           threshold: Double = 0.9,
                           materialize: Boolean = true): DataFrame = {
     val sized = maybeCache(tokenSetsSized(docs, idCol, textCol), materialize)
-    val sigs = minhashFromElems(
-      sized.select(col("doc_id"), explode(col("shingles")).as("elem")), numHashes)
-    val cand = lshCandidatePairs(sigs, rowsPerBand, materialize = materialize)
+    val cand = lshCandidates(setBands(sized, numHashes, rowsPerBand), 10000, materialize)
     scoped(materialize, sized)(shingleJaccard(sized, cand, threshold))
   }
 
@@ -332,9 +348,7 @@ object Dedup {
     // cached: the signature build and the exact-Jaccard verify both scan
     // the (expensive) shingle sets
     val sized = sizedShingles(shingleSets(docs, idCol, textCol, n), materialize)
-    val sigs = minhashFromElems(
-      sized.select(col("doc_id"), explode(col("shingles")).as("elem")), numHashes)
-    val cand = lshCandidatePairs(sigs, rowsPerBand, materialize = materialize)
+    val cand = lshCandidates(setBands(sized, numHashes, rowsPerBand), 10000, materialize)
     scoped(materialize, sized)(shingleJaccard(sized, cand, threshold))
   }
 
@@ -427,16 +441,15 @@ object Dedup {
     def key(end: String) = end +: side.map(s => s"${end}_$s")
     def keyCols(end: String) =
       col("doc_id").as(end) +: side.map(s => col(s).as(s"${end}_$s"))
-    val ex = sized.select((col("doc_id") +: side.map(col)) :+
-      explode(col("shingles")).as("sh"): _*)
-    val sizes = sized.select((col("doc_id") +: side.map(col)) :+ col("n_sh"): _*)
-    val inter = pairs
-      .join(ex.select(keyCols("a") :+ col("sh"): _*), key("a"))
-      .join(ex.select(keyCols("b") :+ col("sh"): _*), key("b") :+ "sh")
-      .groupBy((key("a") ++ key("b")).map(col): _*).agg(count("*").as("inter"))
-    inter
-      .join(sizes.select(keyCols("a") :+ col("n_sh").as("na"): _*), key("a"))
-      .join(sizes.select(keyCols("b") :+ col("n_sh").as("nb"): _*), key("b"))
+    // each shingle row carries its set's size, so the pair aggregate
+    // groups by (a, b, na, nb) and needs no size join afterwards
+    val ex = sized.select((col("doc_id") +: side.map(col)) ++
+      Seq(col("n_sh"), explode(col("shingles")).as("sh")): _*)
+    pairs
+      .join(ex.select(keyCols("a") ++ Seq(col("n_sh").as("na"), col("sh")): _*), key("a"))
+      .join(ex.select(keyCols("b") ++ Seq(col("n_sh").as("nb"), col("sh")): _*), key("b") :+ "sh")
+      .groupBy((key("a") ++ key("b") ++ Seq("na", "nb")).map(col): _*)
+      .agg(count("*").as("inter"))
       .withColumn("jacc", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .where(col("jacc") >= threshold)
       .select((key("a") ++ key("b")).map(col) :+ col("jacc"): _*)
@@ -623,7 +636,7 @@ object Dedup {
                 numHashes: Int = 16, rowsPerBand: Int = 16,
                 maxBucket: Int = 10000): DataFrame =
     indexFromBands(
-      bandKeys(minhashSignatures(docs, idCol, textCol, numHashes), rowsPerBand),
+      setBands(tokenSetsSized(docs, idCol, textCol), numHashes, rowsPerBand),
       maxBucket)
 
   /** Incremental near-dup detection: a DELTA batch probed against an
@@ -643,11 +656,7 @@ object Dedup {
     // (r19 — the composed form tokenized the delta twice), mirroring
     // [[minhashNearDupPairs]]
     val deltaSized = maybeCache(tokenSetsSized(delta, idCol, textCol), materialize)
-    val deltaBands = bandKeys(
-      minhashFromElems(
-        deltaSized.select(col("doc_id"), explode(col("shingles")).as("elem")),
-        numHashes),
-      rowsPerBand)
+    val deltaBands = setBands(deltaSized, numHashes, rowsPerBand)
     val cand = deltaBands.select(col("band"), col("band_key"), col("doc_id").as("a"))
       .join(index.select(col("band"), col("band_key"), col("doc_id").as("b")),
         Seq("band", "band_key"))

@@ -443,10 +443,12 @@ object Streams {
     * appends only NOVEL documents to the corpus and their bands to the
     * index. This is the reference's incremental doctrine
     * (quran_mcp/embeddings.py:139-144) at stream cadence, and the shape a
-    * 100 TB firehose ingest needs: per batch the work is
-    * O(|batch| + band collisions), state grows append-only (no rewrite of
-    * existing files), and the next batch's probe meets the enlarged index
-    * in the same bucket-local join.
+    * 100 TB firehose ingest needs: per batch the compute and the writes
+    * are O(|batch| + band collisions), state grows append-only (no
+    * rewrite of existing files), and the next batch's probe meets the
+    * enlarged index in the same bucket-local join. The reads are not yet
+    * delta-sized: the index probe and the colliding-corpus prune scan
+    * every prior partition of both stores on every batch.
     *
     * Intra-batch near-dups resolve to the min-id survivor of each
     * verified component (two copies arriving in one micro-batch must not
@@ -602,6 +604,12 @@ object Streams {
       threshold: Double = 0.9, numHashes: Int = 16, rowsPerBand: Int = 16,
       maxBucket: Int = 10000): Unit = {
     val spark = batch0.sparkSession
+    // every job runs under its step's name, `near_dup_ingest.<step>`
+    val sc = spark.sparkContext
+    val streamDesc = sc.getLocalProperty("spark.job.description")
+    def step[T](name: String)(body: => T): T = {
+      sc.setJobDescription(s"near_dup_ingest.$name"); body
+    }
     val batch = batch0.cache()
     // The batch's token sets and band keys are built ONCE and cached —
     // both are |batch|-scale (one row per doc / per doc·band, never
@@ -612,11 +620,7 @@ object Streams {
     // consumers' concurrent stage jobs stampede, each re-running the
     // batch tokenize+sign (measured r19, guide §2.4).
     val sized = Dedup.tokenSetsSized(batch, idCol, textCol).cache()
-    val banded = Dedup.bandKeys(
-      Dedup.minhashFromElems(
-        sized.select(col("doc_id"), explode(col("shingles")).as("elem")),
-        numHashes),
-      rowsPerBand).cache()
+    val banded = Dedup.setBands(sized, numHashes, rowsPerBand).cache()
     val snapshots = scala.collection.mutable.Set.empty[Int]
     def snapshot(df: DataFrame): DataFrame = {
       val (out, ids) = Dedup.trackedSnapshot(df)
@@ -630,64 +634,71 @@ object Streams {
       spark.read.schema(schema).parquet(path)
         .where(col("ingest_batch") =!= batchId).drop("ingest_batch")
     try {
-      banded.count()
+      val nBanded = step("bands")(banded.count())
+      // a bucket holds at most one row per doc, so a cap the batch's doc
+      // count does not exceed drops nothing here nor from the index append
+      val cap =
+        if (nBanded <= maxBucket.toLong * Dedup.bandCount(numHashes, rowsPerBand)) Int.MaxValue
+        else maxBucket
       val hasPrior = hasPriorBatches(spark, corpusPath, batchId) &&
         hasPriorBatches(spark, indexPath, batchId)
       // 1. candidates (a, a_side, b, b_side), side 0 = batch, 1 = corpus:
-      //    the batch's own band pairs plus its bands' hits in the index
+      //    the batch's own band pairs plus its bands' hits in the index,
+      //    one distinct over both (the side tags keep them apart)
       // 2. token sets: the batch's cached sets, plus corpus-side sets for
       //    colliding ids only — tokenizing the whole prior corpus per
       //    batch is what the index probe exists to avoid
       // Both are snapshotted when a corpus exists: the candidates feed
       // the corpus-side prune and the verify, and the verify reads the
-      // token sets four times. Without one, both are batch-only frames
-      // read straight from the caches.
+      // token sets twice. Without one, both are batch-only frames read
+      // straight from the caches.
       def tagged(pairs: DataFrame, bSide: Int): DataFrame =
         pairs.select(col("a"), lit(0).as("a_side"), col("b"), lit(bSide).as("b_side"))
-      val intraCand = tagged(Dedup.candidatesFromBands(banded, maxBucket), 0)
+      val intraCand = tagged(Dedup.bandPairs(banded, cap), 0)
       val batchSets = sized.withColumn("side", lit(0))
       val (cand, sets) =
-        if (!hasPrior) (intraCand, batchSets)
+        if (!hasPrior) (intraCand.distinct(), batchSets)
         else {
-          val cand = snapshot(intraCand.unionByName(tagged(
+          val cand = step("candidates")(snapshot(intraCand.unionByName(tagged(
             banded.select(col("band"), col("band_key"), col("doc_id").as("a"))
               .join(prior(indexPath, IngestIndexSchema)
                 .select(col("band"), col("band_key"), col("doc_id").as("b")),
                 Seq("band", "band_key"))
-              .select("a", "b").distinct(), 1)))
+              .select("a", "b"), 1)).distinct()))
           val priorCorpus = prior(corpusPath,
             batch.schema.add("ingest_batch", LongType))
           val colliding = priorCorpus.join(
             cand.where(col("b_side") === 1).select(col("b").as("__cand_b")),
             priorCorpus(idCol).cast("long") === col("__cand_b"), "left_semi")
-          (cand, snapshot(batchSets.unionByName(
-            Dedup.tokenSetsSized(colliding, idCol, textCol).withColumn("side", lit(1)))))
+          (cand, step("sets")(snapshot(batchSets.unionByName(
+            Dedup.tokenSetsSized(colliding, idCol, textCol).withColumn("side", lit(1))))))
         }
       // 3. one verify; intra-batch edges close into min-id components,
       //    every batch doc verified against the corpus is a dup outright
-      val verified = snapshot(Dedup.verifyPairs(sets, cand, threshold))
-      val intraDup = Dedup.connectedComponents(verified.where(col("b_side") === 0))
+      val verified = step("verify")(snapshot(Dedup.verifyPairs(sets, cand, threshold)))
+      val intraDup = step("components")(
+        Dedup.connectedComponents(verified.where(col("b_side") === 0)))
         .where(col("doc_id") =!= col("component"))
         .select(col("doc_id").as("dup"))
       val crossDup = verified.where(col("b_side") === 1).select(col("a").as("dup"))
-      // evaluated once, feeds both writes below; the dup ids are a
-      // subset of the batch's, one long each, so they ride a broadcast
-      val novel = snapshot(batch.join(broadcast(intraDup.unionByName(crossDup)),
-        col(idCol).cast("long") === col("dup"), "left_anti"))
+      // the dup ids are a subset of the batch's, one long each, so they
+      // ride a broadcast into both writes; the cached bands minus the dups
+      // are Dedup.bandIndex of the stored docs, minus the rebuild
+      val dups = broadcast(intraDup.unionByName(crossDup))
       // 4. append-only state growth — at the BATCH granularity: new
       //    partitions accrete, existing ones are never rewritten (except a
-      //    retry overwriting its own), so per batch the I/O is
-      //    O(|batch| + collisions) regardless of corpus size. The index
-      //    append derives from the same cached bands (semi-join on the
-      //    novel ids == Dedup.bandIndex(novel), minus the rebuild).
-      novel.write.mode("overwrite")
-        .parquet(s"$corpusPath/ingest_batch=$batchId")
-      Dedup.indexFromBands(
-        banded.join(novel.select(col(idCol).cast("long").as("doc_id")),
-          Seq("doc_id"), "left_semi"),
-        maxBucket)
-        .write.mode("overwrite").parquet(s"$indexPath/ingest_batch=$batchId")
+      //    retry overwriting its own), so the WRITES of a batch are
+      //    O(|batch|) regardless of corpus size. The reads are not: the
+      //    index probe and the colliding-corpus prune above scan every
+      //    prior partition of both stores on every batch.
+      step("write_corpus")(
+        batch.join(dups, col(idCol).cast("long") === col("dup"), "left_anti")
+          .write.mode("overwrite").parquet(s"$corpusPath/ingest_batch=$batchId"))
+      step("write_index")(
+        Dedup.indexFromBands(banded.join(dups, col("doc_id") === col("dup"), "left_anti"), cap)
+          .write.mode("overwrite").parquet(s"$indexPath/ingest_batch=$batchId"))
     } finally {
+      sc.setJobDescription(streamDesc)
       Dedup.freeTracked(spark, snapshots.toSet)
       sized.unpersist(); banded.unpersist(); batch.unpersist()
     }

@@ -56,6 +56,93 @@ class DedupSpec extends SparkSpec {
     assert(joined.where(col("band_key") =!= col("bk")).count() === 0)
   }
 
+  // random docs over a small vocabulary (so sets overlap), with empty,
+  // null and one-token texts among them
+  private def randomDocs(rnd: scala.util.Random, n: Int, idBase: Long = 0L) =
+    (0 until n).map { i =>
+      val text = rnd.nextInt(10) match {
+        case 0 => ""
+        case 1 => null
+        case 2 => s"w${rnd.nextInt(12)}"
+        case _ => Seq.fill(1 + rnd.nextInt(12))(s"w${rnd.nextInt(12)}").mkString(" ")
+      }
+      (idBase + i, text)
+    }.toDF("doc_id", "text")
+
+  test("band keys from the wide MinHash row equal the regrouped long form (random docs)") {
+    // reference: the long-form derivation the wide row replaced — unpivot
+    // to (doc, seed, minh), regroup per (doc, band), join the band's
+    // seed-sorted minhashes
+    def refBands(docs: org.apache.spark.sql.DataFrame, n: Int, r: Int) = {
+      val (as_, bs) = Dedup.minhashCoeffs(n)
+      val elems = Dedup.tokenSetsSized(docs, "doc_id", "text")
+        .select(col("doc_id"), explode(col("shingles")).as("elem"))
+      val aggs = (0 until n).map(s => min((lit(as_(s)) * graft.functions.TextFns.hash31(col("elem")) +
+        lit(bs(s))) % lit(Dedup.MinhashP)).as(s"m$s"))
+      elems.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+        .select(col("doc_id"), explode(array((0 until n).map(s =>
+          struct(lit(s).as("seed"), col(s"m$s").as("minh"))): _*)).as("sm"))
+        .select(col("doc_id"), col("sm.seed").as("seed"), col("sm.minh").as("minh"))
+        .withColumn("band", (col("seed") / r).cast("int"))
+        .groupBy("doc_id", "band")
+        .agg(graft.functions.TextFns.hash60(concat_ws(":", transform(
+          array_sort(collect_list(struct(col("seed"), col("minh")))),
+          x => x.getField("minh").cast("string")))).as("band_key"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "band", "band_key").as[(Long, Int, Long)].collect().sorted.toSeq
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 3; (n, r) <- Seq((10, 4), (48, 4), (16, 16))) {
+      val docs = randomDocs(rnd, 60)
+      val want = rows(refBands(docs, n, r))
+      val nonEmpty = Dedup.tokenSetsSized(docs, "doc_id", "text").where(col("n_sh") > 0).count()
+      assert(want.length === nonEmpty * ((n + r - 1) / r), s"trial $trial n=$n r=$r band rows")
+      assert(rows(Dedup.setBands(Dedup.tokenSetsSized(docs, "doc_id", "text"), n, r)) === want,
+        s"trial $trial n=$n r=$r wide-row bands")
+      assert(rows(Dedup.bandKeys(Dedup.minhashSignatures(docs, "doc_id", "text", n), r)) === want,
+        s"trial $trial n=$n r=$r long-form bands")
+    }
+  }
+
+  test("verifyPairs and jaccardVerify equal a driver-side exact Jaccard (random sets)") {
+    def exact(x: Set[String], y: Set[String]): Option[Double] = {
+      val inter = (x & y).size
+      if (inter == 0) None // no shared token: the pair never reaches a threshold
+      else Some(BigDecimal(inter.toDouble / (x.size + y.size - inter))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    def sets(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.tokenSetsSized(docs, "doc_id", "text").select("doc_id", "shingles")
+        .as[(Long, Seq[String])].collect()
+        .map { case (d, s) => d -> Option(s).fold(Set.empty[String])(_.toSet) }.toMap
+    val rnd = new scala.util.Random(11)
+    for (trial <- 1 to 3; threshold <- Seq(0.2, 0.5)) {
+      val left = randomDocs(rnd, 30)
+      val right = randomDocs(rnd, 30) // the same ids, other texts
+      val (ls, rs) = (sets(left), sets(right))
+      // unsided: every pair a < b of one frame
+      val pairs = for (a <- ls.keys.toSeq; b <- ls.keys.toSeq if a < b) yield (a, b)
+      val want = pairs.flatMap { case (a, b) =>
+        exact(ls(a), ls(b)).filter(_ >= threshold).map(j => (a, b, j)) }.sorted
+      val got = Dedup.jaccardVerify(left, "doc_id", "text", pairs.toDF("a", "b"), threshold)
+        .select("a", "b", "jacc").as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(got === want, s"trial $trial threshold $threshold unsided")
+      // sided: side 0 is `left`, side 1 is `right`; ids overlap across sides
+      val sided = Dedup.tokenSetsSized(left, "doc_id", "text").withColumn("side", lit(0))
+        .unionByName(Dedup.tokenSetsSized(right, "doc_id", "text").withColumn("side", lit(1)))
+      val bySide = Map(0 -> ls, 1 -> rs)
+      val sidedPairs = for (a <- ls.keys.toSeq; b <- ls.keys.toSeq; bs <- Seq(0, 1)
+                            if a < b || bs == 1) yield (a, 0, b, bs)
+      val wantSided = sidedPairs.flatMap { case (a, as_, b, bs) =>
+        exact(bySide(as_)(a), bySide(bs)(b)).filter(_ >= threshold).map(j => (a, as_, b, bs, j))
+      }.sorted
+      val gotSided = Dedup.verifyPairs(sided, sidedPairs.toDF("a", "a_side", "b", "b_side"), threshold)
+        .select("a", "a_side", "b", "b_side", "jacc").as[(Long, Int, Long, Int, Double)]
+        .collect().sorted.toSeq
+      assert(gotSided === wantSided, s"trial $trial threshold $threshold sided")
+    }
+  }
+
   test("simhash pairs at hamming 0 contain the exact dup; banding loses nothing <= maxHamming") {
     val sim = Dedup.simhash(docs, "doc_id", "text", 32)
     val banded = Dedup.simhashPairs(sim, maxHamming = 3, bits = 32)

@@ -493,13 +493,49 @@ class StreamsSpec extends SparkSpec {
       // the first batch (nothing stored to probe) and every later one: a
       // lazy intermediate that two consumers re-derive adds jobs here
       // long before it shows as wall time
-      val (firstCeiling, ceiling) = (24, 29)
+      val (firstCeiling, ceiling) = (15, 20)
       assert(perBatch(0) <= firstCeiling && perBatch.tail.forall(_ <= ceiling),
         s"jobs per micro-batch ${perBatch.mkString(", ")} exceed the ceiling " +
           s"($firstCeiling for the first, $ceiling after)")
+      // every job of a batch that runs all steps is named after its step
+      val steps = Seq("bands", "candidates", "sets", "verify", "components",
+        "write_corpus", "write_index").map(s => s"near_dup_ingest.$s").toSet
+      val unnamed = jobs.filter(j => j.batchId.exists(Set("1", "2")) &&
+        !steps.contains(j.description))
+      assert(unnamed.isEmpty, s"jobs outside the named steps: " +
+        unnamed.map(j => s"${j.id} '${j.description}'").mkString(", "))
       assert(spark.read.parquet(s"$dir/corpus").select("doc_id").as[Long]
         .collect().toSet === Set(1L, 3L, 11L, 21L))
     } finally { tally.detach(); q.stop() }
+  }
+
+  test("near-dup ingest skips the bucket cap only when the batch cannot reach it") {
+    import spark.implicits._
+    val text = "spark shuffles partition data across the cluster"
+    val batch = Seq((1L, text), (2L, text), (3L, text)).toDF("doc_id", "text")
+    def run(maxBucket: Int): (Set[Long], Set[Long]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-stream-ndcap").toString
+      Streams.nearDupIngestBatch(batch, 0L, s"$dir/corpus", s"$dir/index",
+        "doc_id", "text", maxBucket = maxBucket)
+      def ids(store: String) = spark.read.parquet(s"$dir/$store")
+        .select("doc_id").as[Long].collect().toSet
+      (ids("corpus"), ids("index"))
+    }
+    // every bucket holds all three docs: over a cap of 2 the hot buckets
+    // are dropped, so no candidate pair forms, all three are stored and
+    // none of their bands is indexed
+    assert(run(maxBucket = 2) === ((Set(1L, 2L, 3L), Set.empty[Long])))
+    // a cap the batch's doc count does not exceed cannot drop a bucket:
+    // the three collapse to the min id, which alone is indexed
+    assert(run(maxBucket = 3) === ((Set(1L), Set(1L))))
+    assert(run(maxBucket = 10000) === ((Set(1L), Set(1L))))
+  }
+
+  test("stream_parse_ingest fails naming its glob when no page matches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-noparse").toString
+    val glob = s"$dir/*.html"
+    val e = intercept[java.io.FileNotFoundException](Queries.streamParseIngest(spark, glob))
+    assert(e.getMessage.contains(glob))
   }
 
   test("a 1-row batch rewrites only its own bucket partition, not the table") {
