@@ -1,6 +1,6 @@
 package graft
 import graft.obs.SparkTally
-import graft.operators.{Bm25, Postings}
+import graft.operators.{Bm25, IvfCode, Postings}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -91,7 +91,7 @@ object Bench {
       val ivfLists = graft.operators.Similarity.nListsFor(embN)
       val (ivfAsg0, ivfCents) = graft.operators.Similarity
         .ivfIndexSpill(embT, "vec_id", "embedding", nCentroids = ivfLists)
-      val ivfAsg = GraftIndexes.ivfSq8Rows(ivfAsg0).cache()
+      val ivfAsg = IvfCode.Sq8.rows(ivfAsg0).cache()
       ivfAsg.count()
       val ev = embT.where(col("vec_id") === 0)
         .head().getSeq[Float](1).toArray
@@ -170,8 +170,8 @@ object Bench {
           // index — the warm row must measure the query users actually
           // run, in the shape a serving session holds it (stored codes,
           // predicate spill-dedupe: scan → filter → two TakeOrdereds)
-          val df = graft.operators.Similarity.ivfSq8Probe(ivfAsg, ivfCents,
-            ev, graft.operators.Similarity.nProbeWideFor(ivfLists), k = 20)
+          val df = graft.operators.Similarity.ivfProbe(ivfAsg, ivfCents,
+            ev, graft.operators.Similarity.nProbeWideFor(ivfLists), k = 20, IvfCode.Sq8)
           () => df.collect(): Unit
         })
 
@@ -396,8 +396,8 @@ object Bench {
       cached ::= pqd
       val pqBooks = Similarity.pqTrain(pqd, Queries.Dim, m = 8, ksub = 16,
         iters = 1)
-      val pqCoded = pqd.withColumn("pcode",
-        Similarity.pqCodeExpr(col("qv"), pqBooks, Queries.Dim / 8)).cache()
+      val pq = IvfCode.Pq(pqBooks)
+      val pqCoded = pq.rows(pqd).cache()
       cached ::= pqCoded
       // mirrors the REGISTERED forms: ann_topk is the scale-aware
       // spherical spill IVF (r14 — the single-bucket probe is the
@@ -408,14 +408,13 @@ object Bench {
       // k-probe could surface at most k−1 true neighbors — the artifact
       // would sit ~1/k below the spec-pinned number for a regression
       // that never happened.
+      def spill(np: Int, code: IvfCode) = (_: DataFrame, qv: Array[Float]) =>
+        Similarity.ivfProbe(spillAsg, spillCents, qv, np, k = k + 1, code)
+      val nProbeWide = Similarity.nProbeWideFor(nLists)
       val forms: Seq[(String, (DataFrame, Array[Float]) => DataFrame)] = Seq(
         // r15 default: wide probe over SQ8 codes + top-80 exact rerank
-        ("ann_topk", (_, qv) =>
-          Similarity.ivfSq8Probe(spillAsg, spillCents, qv,
-            Similarity.nProbeWideFor(nLists), k = k + 1)),
-        ("ann_ivf_wide", (_, qv) =>
-          Similarity.ivfProbeSpill(spillAsg, spillCents, qv,
-            Similarity.nProbeWideFor(nLists), k = k + 1)),
+        ("ann_topk", spill(nProbeWide, IvfCode.Sq8)),
+        ("ann_ivf_wide", spill(nProbeWide, IvfCode.Raw)),
         ("ann_multiprobe_h1", (_, qv) =>
           Similarity.annTopKMultiProbe(annIdx, qv, Queries.Dim,
             nBits = 4, k = k + 1, hamming = 1)),
@@ -428,28 +427,22 @@ object Bench {
           Similarity.annTopKEnsemble(d, "vec_id", "embedding", qv,
             Queries.Dim, nBits = 4, nTables = 3, k = k + 1)),
         ("ivf_topk", (d, qv) =>
-          Similarity.ivfTopK(d, "vec_id", "embedding", typedLit(qv),
+          Similarity.ivfTopK(d, "vec_id", "embedding", qv,
             nCentroids = 16, nProbe = 4, k = k + 1)),
         ("ann_sq8", (d, qv) =>
           Similarity.sq8TopK(d, "vec_id", "embedding", qv, k = k + 1)),
-        ("ann_ivf_sq8", (_, qv) =>
-          Similarity.ivfSq8Probe(spillAsg, spillCents, qv, nProbe, k = k + 1)),
+        ("ann_ivf_sq8", spill(nProbe, IvfCode.Sq8)),
         // r16 PQ rung: books trained once (hoisted like spillAsg), the
         // coded frame cached — probes pay the m-byte ADC scan + rerank
-        // (rerank=8, the registered ann_pq sizing)
-        ("ann_pq", (_, qv) =>
-          Similarity.pqProbeCoded(pqCoded, pqBooks, qv, k = k + 1, rerank = 8)),
+        // (the registered ann_pq sizing)
+        ("ann_pq", (_, qv) => pq.topK(pqCoded, qv, k = k + 1)),
         // r16 composed IVF×PQ: wide-probe row pruning over the m-byte
         // codes — the ladder's deepest byte point (registered sizing)
-        ("ann_ivf_pq", (_, qv) =>
-          Similarity.ivfPqProbe(spillAsg, spillCents, pqBooks, qv,
-            Similarity.nProbeWideFor(nLists), k = k + 1, rerank = 8)))
+        ("ann_ivf_pq", spill(nProbeWide, pq)))
       // r17 residual rung: books trained on own-list residuals — same
       // bytes as ann_ivf_pq, measured +0.05 recall (the twelfth rung)
       val rpqBooks = Similarity.rpqTrain(spillAsg, spillCents, Queries.Dim)
-      val allForms = forms :+ (("ann_ivf_rpq", (_: DataFrame, qv: Array[Float]) =>
-        Similarity.ivfRpqProbe(spillAsg, spillCents, rpqBooks, qv,
-          Similarity.nProbeWideFor(nLists), k = k + 1, rerank = 8)))
+      val allForms = forms :+ (("ann_ivf_rpq", spill(nProbeWide, IvfCode.Rpq(rpqBooks))))
       val measured = allForms.map { case (name, approx) =>
         name -> recallFrom(e, pre, approx)
       }
@@ -464,7 +457,6 @@ object Bench {
       // fraction (r14's unit — a same-key cross-round diff must never
       // silently change meaning; code-review r15); the byte envelope
       // is the new `ann_topk_scan_bytes` key.
-      val nProbeWide = Similarity.nProbeWideFor(nLists)
       val scanRows = {
         val fs = pre.map { case (_, qv, _) =>
           val ps = Similarity.spillProbeSet(spillCents, qv, nProbeWide)

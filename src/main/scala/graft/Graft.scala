@@ -535,18 +535,13 @@ object GraftIndexes {
   /** Persist the SQ8 code layer — (vec_id, c8 array<TINYINT>): ONE byte
     * per dimension on disk and in the probe's scan, vs eight for the
     * integer-grid doubles — the materialized form of the `ann_sq8`
-    * rung's bandwidth claim. Codes are integral values in [-127,127]
-    * ([[graft.operators.Similarity.sq8Codes]]), so the byte cast is
-    * exact and a reopened probe is bit-identical to the in-memory
-    * rung. Zero-norm vectors are dropped (no direction to rank) —
-    * same guard as the rung. */
+    * rung's bandwidth claim. Codes come from [[IvfCode.Sq8]]'s one
+    * coding (integral values, exact byte cast), so a reopened probe is
+    * bit-identical to the in-memory rung. Zero-norm vectors are
+    * dropped (no direction to rank) — same guard as the rung. */
   private def sq8CodeFrame(emb: DataFrame, idCol: String,
                            vecCol: String): DataFrame =
-    Similarity.quantized(emb, idCol, vecCol)
-      .withColumn("qm", Similarity.sq8Max(col("qv")))
-      .where(col("qm") > 0)
-      .select(col("vec_id"),
-        transform(Similarity.sq8Codes(col("qv"), col("qm")), x => x.cast("byte")).as("c8"))
+    IvfCode.Sq8.coded(Similarity.quantized(emb, idCol, vecCol)).select("vec_id", "c8")
 
   def writeSq8(spark: SparkSession, emb: DataFrame, idCol: String,
                vecCol: String, dir: String): Unit =
@@ -577,29 +572,21 @@ object GraftIndexes {
     spark.read.parquet(s"$dir/codes")
 
   /** Probe a persisted SQ8 layer: the byte-code scan ranks the corpus
-    * (approx cosine, round-6, vec_id tie-break), the top k·rerank ids
-    * join BACK to the vector table for the exact rerank — the scan
-    * reads one byte per dimension; the full vectors are touched for
-    * ≤k·rerank rows only. Results are bit-identical to the in-memory
+    * (approx cosine, round-6, vec_id tie-break), the top
+    * k·[[IvfCode.Sq8]].rerank ids join BACK to the vector table for the
+    * exact rerank — the scan reads one byte per dimension; the full
+    * vectors are touched for ≤k·rerank rows only. Results are
+    * bit-identical to the in-memory
     * [[graft.operators.Similarity.sq8TopK]] (spec-pinned). */
   def sq8Probe(codes: DataFrame, emb: DataFrame, idCol: String,
-               vecCol: String, queryVec: Array[Float], k: Int,
-               rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(queryVec)
-    val q8 = VecFns.sq8CodesLocal(qq) match {
-      case Some(c) => c
-      case None => return Similarity.emptyTopK(codes) // zero query
+               vecCol: String, queryVec: Array[Float], k: Int): DataFrame =
+    Similarity.directedTopK(codes, queryVec) { qq =>
+      val q8 = VecFns.sq8CodesLocal(qq).get // nonzero: directedTopK guards
+      val cand = Similarity.approxCut(
+        codes.select(col("vec_id"), IvfCode.Sq8.approx(typedLit(q8))),
+        k * IvfCode.Sq8.rerank).select("vec_id")
+      Similarity.rerankIds(Similarity.quantized(emb, idCol, vecCol), cand, qq, k)
     }
-    val cand = codes
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("c8").cast("array<double>"), typedLit(q8)), 6)
-          .as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .select("vec_id")
-    Similarity.quantized(emb, idCol, vecCol)
-      .join(broadcast(cand), "vec_id")
-      .transform(Similarity.exactTopK(typedLit(qq), k))
-  }
 
   /** Persist the PQ layer — (vec_id, pcode array<TINYINT>) codes plus
     * the trained codebooks as a tiny sidecar (m·ksub rows of exact
@@ -616,8 +603,7 @@ object GraftIndexes {
     val qd = Similarity.quantized(emb, idCol, vecCol).cache()
     try {
       val books = Similarity.pqTrain(qd, dim, m, ksub, iters)
-      qd.select(col("vec_id"),
-          Similarity.pqCodeExpr(col("qv"), books, dim / m).as("pcode"))
+      IvfCode.Pq(books).rows(qd).select("vec_id", "pcode")
         .write.mode("overwrite").parquet(s"$dir/codes")
       writeBooks(spark, dir, books)
     } finally qd.unpersist()
@@ -651,36 +637,33 @@ object GraftIndexes {
   /** INCREMENTAL maintenance of a [[writePq]] layer: the delta encodes
     * against the READ-BACK codebooks (no retrain — sub-centroid
     * assignment is per-row, so base and append cannot drift) through
-    * the same [[graft.operators.Similarity.pqCodeExpr]] projection.
+    * the same [[IvfCode.Pq]] projection.
     * IDEMPOTENT-APPEND (the [[appendIvf]] rule): existing vec_ids
     * anti-join away, so a retried append is a no-op and the code-rank
     * cut can't be diluted. Retrain cadence is caller policy. */
   def appendPq(spark: SparkSession, delta: DataFrame, idCol: String,
                vecCol: String, dir: String): Unit = {
     val (codes, books) = openPq(spark, dir)
-    val dim = books.length * books.head.head.length
-    Similarity.quantized(delta, idCol, vecCol)
-      .select(col("vec_id"),
-        Similarity.pqCodeExpr(col("qv"), books, dim / books.length).as("pcode"))
+    IvfCode.Pq(books).rows(Similarity.quantized(delta, idCol, vecCol))
+      .select("vec_id", "pcode")
       .join(codes.select("vec_id"), Seq("vec_id"), "left_anti")
       .write.mode("append").parquet(s"$dir/codes")
   }
 
   /** Probe a persisted PQ layer: the m-byte-code scan ADC-ranks the
-    * corpus through [[graft.operators.Similarity.pqRankIds]] (the ONE
-    * rank tail the in-memory rung uses — bit-identical, spec-pinned),
-    * the top k·rerank ids join BACK to the vector table for the exact
-    * rerank. The scan reads m bytes per vector; full vectors are
-    * touched for ≤ k·rerank rows only. */
+    * corpus through [[IvfCode.Pq]]'s score (the ONE rank the in-memory
+    * rung uses — bit-identical, spec-pinned), the top k·rerank ids join
+    * BACK to the vector table for the exact rerank. The scan reads m
+    * bytes per vector; full vectors are touched for ≤ k·rerank rows
+    * only. */
   def pqProbe(codes: DataFrame, emb: DataFrame, idCol: String,
               vecCol: String, books: Array[Array[Array[Double]]],
-              queryVec: Array[Float], k: Int, rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(queryVec)
-    if (qq.map(x => x * x).sum == 0) return Similarity.emptyTopK(codes)
-    val ids = Similarity.pqRankIds(codes, books, qq, k * rerank)
-    Similarity.quantized(emb, idCol, vecCol)
-      .join(broadcast(ids), "vec_id")
-      .transform(Similarity.exactTopK(typedLit(qq.toSeq), k))
+              queryVec: Array[Float], k: Int): DataFrame = {
+    val pq = IvfCode.Pq(books)
+    Similarity.directedTopK(codes, queryVec) { qq =>
+      Similarity.rerankIds(Similarity.quantized(emb, idCol, vecCol),
+        pq.rankIds(codes, qq, k * pq.rerank), qq, k)
+    }
   }
 
   /** Persist the scale-aware spill-IVF index (the r14 `ann_topk`
@@ -728,26 +711,14 @@ object GraftIndexes {
     * overlap. Zero-norm vectors are dropped (no direction to rank —
     * the [[graft.operators.Similarity.sq8TopK]] guard). [[openIvf]]
     * opens this layout unchanged (the extra c8 column rides along),
-    * so [[graft.operators.Similarity.ivfProbeSpill]] and
+    * so [[graft.operators.Similarity.ivfProbe]] under any code and
     * [[graft.operators.Similarity.ivfProbeSpillJoin]] probe it too.
     * `nCentroids = 0` derives K from the corpus size. */
   def writeIvfSq8(spark: SparkSession, emb: DataFrame, idCol: String,
                   vecCol: String, dir: String, nCentroids: Int = 0,
                   lloydIters: Int = 3): Unit =
     writeSpillIvf(spark, emb, idCol, vecCol, dir, nCentroids, lloydIters)(
-      (asg, _) => ivfSq8Rows(asg))
-
-  /** The composed layout's row projection — ONE derivation shared by
-    * [[writeIvfSq8]], [[appendIvf]], and the bench's warm coded
-    * index, so base build, delta append, and the cached serving form
-    * cannot drift on what a code row is (the appendSq8 doctrine).
-    * Zero-norm vectors drop. */
-  private[graft] def ivfSq8Rows(asg: DataFrame): DataFrame =
-    asg.withColumn("qm", Similarity.sq8Max(col("qv")))
-      .where(col("qm") > 0)
-      .withColumn("c8",
-        transform(Similarity.sq8Codes(col("qv"), col("qm")), x => x.cast("byte")))
-      .select("vec_id", "qv", "c8", "primary", "centroid")
+      (asg, _) => IvfCode.Sq8.rows(asg))
 
   /** [[appendIvf]] under its earlier composed-layout name. */
   def appendIvfSq8(spark: SparkSession, delta: DataFrame, idCol: String,
@@ -757,7 +728,7 @@ object GraftIndexes {
   /** Persist a RESIDUAL IVF×PQ layer (the r17 `ann_ivf_rpq` rung's
     * serving face — FAISS IVFADC on disk): spill-IVF assignment rows
     * coded against their own list's centroid through the shared
-    * [[graft.operators.Similarity.rpqRows]] projection, partitioned by
+    * [[IvfCode.Rpq]] projection, partitioned by
     * centroid (probes partition-prune), plus the coarse centroids and
     * residual codebooks as planning sidecars (K·dim + m·ksub·dsub
     * integral doubles). */
@@ -770,14 +741,14 @@ object GraftIndexes {
       cached = Some(asg.cache())
       val books = Similarity.rpqTrain(asg, cents, dim, m, ksub, iters)
       writeBooks(spark, dir, books)
-      Similarity.rpqRows(asg, cents, books)
+      IvfCode.Rpq(books).rows(asg, IvfCode.lists(cents, cents.indices))
     } finally cached.foreach(_.unpersist())
   }
 
   /** Open a persisted residual layer: (assignment+codes frame, coarse
     * centroids, residual codebooks). Probe via
-    * [[graft.operators.Similarity.rpqProbeLayout]] — spec-pinned
-    * bit-identical to the in-memory rung. */
+    * [[graft.operators.Similarity.ivfProbe]] with [[IvfCode.Rpq]] of
+    * the books — spec-pinned bit-identical to the in-memory rung. */
   def openRpq(spark: SparkSession, dir: String)
       : (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val (asg, cents) = openIvf(spark, dir)
@@ -786,8 +757,8 @@ object GraftIndexes {
 
   /** Probe a persisted [[writeIvfSq8]] layout in the two-phase
     * narrow-read shape (the on-disk twin of
-    * [[graft.operators.Similarity.ivfSq8Probe]], bit-identical
-    * results — spec-pinned):
+    * [[graft.operators.Similarity.ivfProbe]] with [[IvfCode.Sq8]],
+    * bit-identical results — spec-pinned):
     *
     *  1. code rank: scan ONLY (vec_id, c8) of the nProbe probed
     *     partitions (partition pruning on the centroid literal;
@@ -802,21 +773,17 @@ object GraftIndexes {
     * probed partitions — both carry identical codes/vectors, so phase
     * 1 dedupes before the cut and phase 2 before the rescore. */
   def ivfSq8ProbeSplit(assigned: DataFrame, cents: Array[Array[Double]],
-                       q: Array[Float], nProbe: Int, k: Int,
-                       rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(q)
-    val q8 = VecFns.sq8CodesLocal(qq) match {
-      case Some(c) => c
-      case None => return Similarity.emptyTopK(assigned) // zero query
+                       q: Array[Float], nProbe: Int, k: Int): DataFrame =
+    Similarity.directedTopK(assigned, q) { qq =>
+      val q8 = VecFns.sq8CodesLocal(qq).get // nonzero: directedTopK guards
+      val probeSet = Similarity.spillProbeSet(cents, q, nProbe)
+      val ids = sq8CodeRankFrame(assigned, probeSet, q8, k * IvfCode.Sq8.rerank)
+        .collect().map(_.getLong(0)).toSeq
+      if (ids.isEmpty) Similarity.emptyTopK(assigned)
+      else Similarity.probeDeduped(assigned, probeSet)
+        .where(col("vec_id").isin(ids: _*))
+        .transform(Similarity.exactTopK(typedLit(qq), k))
     }
-    val probeSet = Similarity.spillProbeSet(cents, q, nProbe)
-    val ids = sq8CodeRankFrame(assigned, probeSet, q8, k * rerank)
-      .collect().map(_.getLong(0)).toSeq
-    if (ids.isEmpty) return Similarity.emptyTopK(assigned)
-    Similarity.probeDeduped(assigned, probeSet)
-      .where(col("vec_id").isin(ids: _*))
-      .transform(Similarity.exactTopK(typedLit(qq), k))
-  }
 
   /** [[ivfSq8ProbeSplit]]'s phase-1 code-rank frame, factored out so
     * the plan audit pins the REAL read shape: partition pruning on the
@@ -824,11 +791,8 @@ object GraftIndexes {
     * enters the scan. */
   private[graft] def sq8CodeRankFrame(assigned: DataFrame, probeSet: Seq[Int],
                                       q8: Array[Double], cut: Int): DataFrame =
-    Similarity.probeDeduped(assigned, probeSet)
-      .select(col("vec_id"),
-        round(VecFns.cosineQ(col("c8").cast("array<double>"), typedLit(q8)), 6)
-          .as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(cut)
+    Similarity.approxCut(Similarity.probeDeduped(assigned, probeSet)
+      .select(col("vec_id"), IvfCode.Sq8.approx(typedLit(q8))), cut)
       .select("vec_id")
 
   /** BATCHED probe of a persisted [[writeIvfSq8]] layout in the
@@ -865,12 +829,13 @@ object GraftIndexes {
     * and phase 2 its exact window over the identical candidate set. */
   def ivfSq8ProbeJoinSplit(assigned: DataFrame, cents: Array[Array[Double]],
                            probes: DataFrame, idCol: String, vecCol: String,
-                           nProbe: Int, k: Int, rerank: Int = 4): DataFrame = {
+                           nProbe: Int, k: Int): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val schedule = Similarity.sq8ScheduleFrame(probes, idCol, vecCol, cents,
       nProbe)
-    val winners = sq8CodeRankJoinFrame(assigned, schedule, k * rerank).collect()
+    val winners = sq8CodeRankJoinFrame(assigned, schedule,
+      k * IvfCode.Sq8.rerank).collect()
     if (winners.isEmpty)
       return Seq.empty[(Long, Long, Double, Int)]
         .toDF("probe_id", "vec_id", "cos", "rn")
@@ -888,15 +853,12 @@ object GraftIndexes {
     // both bounded, so AQE's runtime sizes pick the broadcast (the
     // registry-wide hint audit forbids forced hints over file scans
     // that aren't bounded by construction)
-    val pv = probes.select(col(idCol).cast("long").as("probe_id"),
-      VecFns.quantize(col(vecCol)).as("pv"))
-    val we = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id")).orderBy(desc("cos"), asc("vec_id"))
-    vecs.join(broadcast(pairs), "vec_id")
+    val pv = Similarity.quantized(probes, idCol, vecCol).toDF("probe_id", "pv")
+    val rescored = vecs.join(broadcast(pairs), "vec_id")
       .join(pv, "probe_id")
       .select(col("probe_id"), col("vec_id"),
         round(VecFns.cosineQ(col("qv"), col("pv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(we)).where(col("rn") <= k)
+    Similarity.perProbeTopK(rescored, "cos", "vec_id", k)
       .select("probe_id", "vec_id", "cos", "rn")
   }
 
@@ -914,14 +876,11 @@ object GraftIndexes {
   private[graft] def sq8CodeRankJoinFrame(assigned: DataFrame,
                                           schedule: DataFrame, cut: Int): DataFrame = {
     val narrow = assigned.select("vec_id", "c8", "primary", "centroid")
-    val base = narrow.join(broadcast(schedule), "centroid")
-      .withColumn("a8", col("c8").cast("array<double>"))
-    val cand = Similarity.scheduleDeduped(base, schedule)
+    val cand = Similarity.scheduleDeduped(narrow.join(broadcast(schedule), "centroid"),
+        schedule)
       .select(col("probe_id"), col("vec_id"), col("centroid"),
-        round(VecFns.cosineQ(col("a8"), col("p8")), 6).as("approx"))
-    val wa = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id")).orderBy(desc("approx"), asc("vec_id"))
-    cand.withColumn("ra", row_number().over(wa)).where(col("ra") <= cut)
+        IvfCode.Sq8.approx(col("p8")))
+    Similarity.perProbeTopK(cand, "approx", "vec_id", cut)
       .select("probe_id", "vec_id", "centroid")
   }
 
@@ -932,11 +891,12 @@ object GraftIndexes {
     * the appended assignment is exactly what a from-scratch assignment
     * over base+delta with these centroids produces) and appended to
     * the partitioned layout; only the delta's partitions gain files.
-    * The layout's schema (the footer [[openIvf]] reads) picks the code:
-    * `c8` → [[ivfSq8Rows]] ([[writeIvfSq8]]), `pcode` →
-    * [[graft.operators.Similarity.rpqRows]] against the read-back books
-    * ([[writeRpq]]; no retrain), neither → raw rows ([[writeIvf]]) — so
-    * an append can never mix coded and code-less files. Retraining
+    * The layout's schema (the footer [[openIvf]] reads) picks the code
+    * whose one projection ([[IvfCode]]) codes the delta: `c8` →
+    * [[IvfCode.Sq8]] ([[writeIvfSq8]]), `pcode` → [[IvfCode.Rpq]] of
+    * the read-back books ([[writeRpq]]; no retrain), neither → raw rows
+    * ([[writeIvf]]) — so an append can never mix coded and code-less
+    * files. Retraining
     * cadence is the caller's policy: re-run the layout's write when
     * the corpus has grown past the next K ∝ √N power-of-two boundary.
     *
@@ -955,13 +915,13 @@ object GraftIndexes {
   def appendIvf(spark: SparkSession, delta: DataFrame, idCol: String,
                 vecCol: String, dir: String): Unit = {
     val (asg, cents) = openIvf(spark, dir)
-    requirePrimary(asg, dir)
-    val assigned = Similarity.ivfAssignSpill(delta, idCol, vecCol, cents)
-    val rows =
-      if (asg.columns.contains("c8")) ivfSq8Rows(assigned)
-      else if (asg.columns.contains("pcode"))
-        Similarity.rpqRows(assigned, cents, readBooks(spark, dir))
-      else assigned
+    Similarity.requirePrimary(asg, s"$dir/assign")
+    val code =
+      if (asg.columns.contains(IvfCode.Sq8.column)) IvfCode.Sq8
+      else if (asg.columns.contains("pcode")) IvfCode.Rpq(readBooks(spark, dir))
+      else IvfCode.Raw
+    val rows = code.rows(Similarity.ivfAssignSpill(delta, idCol, vecCol, cents),
+      IvfCode.lists(cents, cents.indices))
     clusterForWrite(freshAssignRows(rows, asg), "centroid", cents.length)
       .write.mode("append").partitionBy("centroid").parquet(s"$dir/assign")
   }
@@ -977,22 +937,9 @@ object GraftIndexes {
     assignedDelta.join(existing.select("vec_id", "centroid"),
       Seq("vec_id", "centroid"), "left_anti")
 
-  /** Refuse to append r15 rows (which carry the `primary` centroid)
-    * onto a pre-r15 layout that lacks the column: the mixed layout
-    * would read old-file rows with primary = NULL, and the row-local
-    * spill-dedupe predicate drops NULL rows — every probe would
-    * SILENTLY return results drawn only from the appended delta.
-    * Loud error over silent wrongness (the nearDupIngest fresh-start
-    * doctrine); rebuild with writeIvf/writeIvfSq8 instead. */
-  private def requirePrimary(asg: DataFrame, dir: String): Unit =
-    require(asg.columns.contains("primary"),
-      s"$dir/assign is a pre-r15 layout without the `primary` column; " +
-        "appending r15 rows would mix schemas and make probes silently " +
-        "drop the base corpus — rebuild the layout with writeIvf/writeIvfSq8")
-
   /** Open a persisted spill-IVF: (assignment frame, trained centroids).
-    * Probe via [[graft.operators.Similarity.ivfProbeSpill]] — the
-    * centroid filter partition-prunes the layout. */
+    * Probe via [[graft.operators.Similarity.ivfProbe]] — the centroid
+    * filter partition-prunes the layout. */
   def openIvf(spark: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
     val cents = spark.read.parquet(s"$dir/centroids").orderBy("i")
       .collect().map(_.getSeq[Double](1).toArray)

@@ -351,7 +351,7 @@ object Oracles {
       (if (withComp) s",\n${p}comp AS (SELECT node, min(label) component FROM ${p}reach GROUP BY 1)" else "")
 
   /** SCALE-AWARE spherical spill-IVF replay (the r14 `ann_topk`
-    * default — Similarity.withSpillIvf + ivfProbeSpill): derives K and
+    * default — Similarity.withSpillIvf + ivfProbe): derives K and
     * nProbe from count(*) with the same pow2(round(log2(3·√N))) /
     * max(2, 7K//128) formulas as nListsFor/nProbeFor, trains `iters`
     * spherical Lloyd steps on the truncated-integer-mean grid
@@ -458,7 +458,7 @@ object Oracles {
               |cand AS (SELECT DISTINCT vec_id, qv FROM asg WHERE centroid IN (SELECT i FROM probe))""".stripMargin}
        |${if (batchPred.nonEmpty) ""
          else if (rpqRerank > 0) {
-           // residual IVF×PQ tail (Similarity.ivfRpqProbe): books train
+           // residual IVF×PQ tail (Similarity.ivfProbe, IvfCode.Rpq): books train
            // on PRIMARY-row residuals qv − own-list centroid (exact
            // integers — the spill centroids are truncated-integer
            // means), candidates dedupe by the row-local primary rule
@@ -513,7 +513,7 @@ object Oracles {
               |    ORDER BY round(num/(qn*sqrt(den2)),6) DESC, rsc.vec_id ASC) <= ${20 * rpqRerank})
               |${rescoreTopK("rrk", 20)}""".stripMargin
          } else if (pqRerank > 0)
-           // composed IVF×PQ tail (Similarity.ivfPqProbe): books train
+           // composed IVF×PQ tail (Similarity.ivfProbe, IvfCode.Pq): books train
            // on the FULL corpus, ADC ranks the spill-probed candidates
            // only, exact rerank — the pqCtes fragment is byte-shared
            // with the standalone ann_pq replay
@@ -522,7 +522,7 @@ object Oracles {
          else if (sq8Rerank == 0)
            exactTopKSql("cand")
          else
-           // IVF+SQ8 tail (Similarity.ivfSq8Probe): candidates are
+           // IVF+SQ8 tail (Similarity.ivfProbe, IvfCode.Sq8): candidates are
            // code-ranked (sq8Ctes — the SAME fragment as the ann_sq8
            // twin) and only the top sq8Rerank are exact-rescored
            s""",${sq8Ctes("cand")},
@@ -1319,7 +1319,7 @@ object Oracles {
     // PQ twin (Similarity.pqTopK): 8 subspaces × 16 sub-centroids,
     // 1 euclidean Lloyd step each, ADC rank, top-160 exact rerank
     "ann_pq" -> pqOracle(m = 8, ksub = 16, iters = 1, rerank = 8),
-    // composed IVF×PQ twin (Similarity.ivfPqProbe): the spill replay at
+    // composed IVF×PQ twin (Similarity.ivfProbe, IvfCode.Pq): the spill replay at
     // the wide schedule with the PQ ADC tail over the candidates
     "ann_ivf_pq" -> ivfSpillOracle(iters = 3,
       probeMult = 26, probeFloor = 4, pqRerank = 8),

@@ -21,6 +21,22 @@ object Queries {
   private def docs(s: SparkSession, dir: String) = Tables(s, dir, "documents")
   private def emb(s: SparkSession, dir: String) = Tables(s, dir, "embeddings")
 
+  /** A registered single-query spill-IVF row: vec_id 0's vector probes
+    * the cold scale-aware index (K = nListsFor(N), 3 spherical Lloyd
+    * iterations — [[Similarity.withSpillIvf]]) through the code `code`
+    * builds from (quantized corpus, assignment, centroids) — a code
+    * that trains books does so inside the scope — at the narrow
+    * (nProbeFor) or wide (nProbeWideFor) schedule, top 20. */
+  private def spillIvfRow(wide: Boolean)(
+      code: (DataFrame, DataFrame, Array[Array[Double]]) => IvfCode): Q = (s, dir) => {
+    val e = emb(s, dir)
+    val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
+    val nLists = Similarity.nListsFor(e.count())
+    val nProbe = if (wide) Similarity.nProbeWideFor(nLists) else Similarity.nProbeFor(nLists)
+    Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((qd, asg, cents) =>
+      Similarity.ivfProbe(asg, cents, q.toArray, nProbe, k = 20, code(qd, asg, cents)))
+  }
+
   // shared constants (kept in sync with Oracles)
   val Bm25Terms = Seq("dup", "spark", "window")
   val HybridQuery = "spark join stream data window"
@@ -116,6 +132,15 @@ object Queries {
       .select("book_id", "hadith_id_site", "chapter_id", "checksum")
     graft.streaming.Streams.runToParquet(recs, scratch)
       .orderBy("book_id", "hadith_id_site")
+  }
+
+  /** A fixed per-application scratch directory under java.io.tmpdir
+    * (a re-run within the JVM overwrites it), removed at JVM exit. */
+  private def appScratch(s: SparkSession, name: String): String = {
+    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-$name-${s.sparkContext.applicationId}").toString
+    registerScratchCleanup(dir)
+    dir
   }
 
   private val scratchHooks = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -1006,13 +1031,7 @@ object Queries {
     // spherical training, spill, probe, code-rank, and rerank
     // bit-for-bit). The narrow-probe composition stays registered as
     // ann_ivf_sq8 (the cheap end); row-pruning-only as ann_ivf_wide.
-    "ann_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      val nLists = Similarity.nListsFor(e.count())
-      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
-        Similarity.ivfSq8Probe(asg, cents, q.toArray, Similarity.nProbeWideFor(nLists), k = 20))
-    }),
+    "ann_topk" -> spillIvfRow(wide = true)((_, _, _) => IvfCode.Sq8),
     // incremental index LIFECYCLE, driver-oracled end-to-end: build the
     // persisted spill-IVF on the even half, APPEND the odd half against
     // the read-back centroids (GraftIndexes.appendIvf — no retrain),
@@ -1022,10 +1041,7 @@ object Queries {
     // parquet_compact_roundtrip doctrine): writeIvf's overwrite +
     // one append keeps re-runs idempotent within a JVM.
     "ivf_append_probe" -> ((s, dir) => {
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft-ivf-append-${s.sparkContext.applicationId}").toString
-      registerScratchCleanup(tmp)
+      val tmp = appScratch(s, "ivf-append")
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       // K=64 / lloydIters=1: this row pins APPEND semantics, not
@@ -1037,8 +1053,8 @@ object Queries {
       GraftIndexes.appendIvf(s, e.where(pmod(col("vec_id"), lit(2)) === 1),
         "vec_id", "embedding", tmp)
       val (asg, cents) = GraftIndexes.openIvf(s, tmp)
-      Similarity.ivfProbeSpill(asg, cents, q.toArray,
-        Similarity.nProbeFor(cents.length), k = 20)
+      Similarity.ivfProbe(asg, cents, q.toArray,
+        Similarity.nProbeFor(cents.length), k = 20, IvfCode.Raw)
     }),
     // BATCHED trained-index probing (r15): a DataFrame of 5 query rows
     // probes ONE spill-IVF index in a single distributed plan — each
@@ -1085,10 +1101,7 @@ object Queries {
     // retrieval job inherits the single-query split probe's byte
     // envelope at 100 TB (r15 verdict #1).
     "ann_probe_join_split" -> ((s, dir) => {
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft-ivfsq8-split-${s.sparkContext.applicationId}").toString
-      registerScratchCleanup(tmp)
+      val tmp = appScratch(s, "ivfsq8-split")
       val e = emb(s, dir)
       val nLists = Similarity.nListsFor(e.count())
       GraftIndexes.writeIvfSq8(s, e, "vec_id", "embedding", tmp,
@@ -1114,8 +1127,7 @@ object Queries {
     "ann_pq" -> ((s, dir) => {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      Similarity.pqTopK(e, "vec_id", "embedding", q.toArray, k = 20, dim = Dim,
-        rerank = 8)
+      Similarity.pqTopK(e, "vec_id", "embedding", q.toArray, k = 20, dim = Dim)
     }),
     // the COMPOSED deep-byte stack (r16 — FAISS IVFPQ): spill IVF
     // prunes to the wide schedule's 21.5% of rows, PQ shrinks those to
@@ -1123,52 +1135,34 @@ object Queries {
     // rerank — the ladder's deepest registered point), exact rerank on
     // top. Books train corpus-global; the oracle composes the spill
     // replay with the SAME pqCtes fragment as ann_pq.
-    "ann_ivf_pq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      val nLists = Similarity.nListsFor(e.count())
-      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (qd, asg, cents) =>
-        Similarity.ivfPqProbe(asg, cents,
-          Similarity.pqTrain(qd, Dim, m = 8, ksub = 16, iters = 1), q.toArray,
-          nProbe = Similarity.nProbeWideFor(nLists), k = 20)
-      }
-    }),
+    "ann_ivf_pq" -> spillIvfRow(wide = true)((qd, _, _) =>
+      IvfCode.Pq(Similarity.pqTrain(qd, Dim, m = 8, ksub = 16, iters = 1))),
     // RESIDUAL IVF×PQ (r17 — r16 verdict #3, FAISS IVFADC): books train
     // on (vector − own-list centroid) residuals instead of raw vectors,
     // so the 16 sub-centroids per subspace describe LOCAL structure —
     // measured recall@20 0.90 vs flat ann_ivf_pq's 0.85 at IDENTICAL
     // byte cost (m=8 codes over probed rows + 160-row exact rerank)
-    "ann_ivf_rpq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      val nLists = Similarity.nListsFor(e.count())
-      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists) { (_, asg, cents) =>
-        Similarity.ivfRpqProbe(asg, cents, Similarity.rpqTrain(asg, cents, Dim),
-          q.toArray, nProbe = Similarity.nProbeWideFor(nLists), k = 20)
-      }
-    }),
+    "ann_ivf_rpq" -> spillIvfRow(wide = true)((_, asg, cents) =>
+      IvfCode.Rpq(Similarity.rpqTrain(asg, cents, Dim))),
     // PROBE-VISIBLE persisted residual rung (r19, r18 verdict #5): the
     // deep rung's bench row was all build (b=3.1/p=0.0 — Lloyd + rpq
     // training), so the regression tracker watched training noise, not
     // probe cost. This row writes+opens the persisted rpq layout INSIDE
     // the query fn (the bench's lifecycle split bills that to build_s)
     // and returns the LAYOUT probe as the measured action — probe_s
-    // finally keys the deep rung. rpqProbeLayout is spec-pinned
+    // finally keys the deep rung. The layout probe is spec-pinned
     // bit-identical to the in-memory rung, so the oracle is
     // ann_ivf_rpq's replay verbatim.
     "ann_rpq_probe_layout" -> ((s, dir) => {
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft-rpq-layout-${s.sparkContext.applicationId}").toString
-      registerScratchCleanup(tmp)
+      val tmp = appScratch(s, "rpq-layout")
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
       val nLists = Similarity.nListsFor(e.count())
       GraftIndexes.writeRpq(s, e, "vec_id", "embedding", tmp,
         dim = Dim, nCentroids = nLists)
       val (asg, cents, books) = GraftIndexes.openRpq(s, tmp)
-      Similarity.rpqProbeLayout(asg, cents, books, q.toArray,
-        nProbe = Similarity.nProbeWideFor(nLists), k = 20, rerank = 8)
+      Similarity.ivfProbe(asg, cents, q.toArray,
+        nProbe = Similarity.nProbeWideFor(nLists), k = 20, IvfCode.Rpq(books))
     }),
     // scan-fraction FLOOR variant: one bucket = 1/16 of the corpus
     // scanned; recall ≈ 0.04 on uniform vectors — registered to keep the
@@ -1203,24 +1197,12 @@ object Queries {
     // rows: the reference's HNSW-class quality tier, previously paid
     // for with a 62% scan (the r13 grid-16/10 rung). AnnRecallSpec
     // pins ≥0.8 recall and ≤0.25 scan at these registered parameters.
-    "ann_ivf_wide" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      val nLists = Similarity.nListsFor(e.count())
-      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
-        Similarity.ivfProbeSpill(asg, cents, q.toArray, Similarity.nProbeWideFor(nLists), k = 20))
-    }),
+    "ann_ivf_wide" -> spillIvfRow(wide = true)((_, _, _) => IvfCode.Raw),
     // COMPOSED 100 TB stack (r14): spill IVF prunes rows (~5.9% nominal
     // scan at the default sizing), SQ8 codes shrink the surviving bytes
     // (ADC over int8), top-80 exact-reranked — the canonical IVF+SQ
     // design. Same K/nProbe derivation as ann_topk.
-    "ann_ivf_sq8" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      val nLists = Similarity.nListsFor(e.count())
-      Similarity.withSpillIvf(e, "vec_id", "embedding", nLists)((_, asg, cents) =>
-        Similarity.ivfSq8Probe(asg, cents, q.toArray, Similarity.nProbeFor(nLists), k = 20))
-    }),
+    "ann_ivf_sq8" -> spillIvfRow(wide = false)((_, _, _) => IvfCode.Sq8),
     // MEMORY-BANDWIDTH rung (r14): SQ8 scalar quantization — full-row
     // scan over int8 codes (8x less bandwidth than the grid where codes
     // are the persisted scan), top-80 approx candidates exact-reranked.
@@ -1234,7 +1216,7 @@ object Queries {
     "ivf_topk" -> ((s, dir) => {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0)
-      Similarity.ivfTopK(e, "vec_id", "embedding", typedLit(q.toArray),
+      Similarity.ivfTopK(e, "vec_id", "embedding", q.toArray,
         nCentroids = 16, nProbe = 4, k = 20)
     }),
     // SemDeDup-style cluster-scoped semantic dedup (survivors). tau=0.3
@@ -1395,10 +1377,7 @@ object Queries {
       // JVM, so without the hook every run would LEAVE two corpus
       // copies and refill the temp FS across rounds). Exit-time, not
       // in-query: the returned frame reads $tmp/out lazily.
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft-compact-roundtrip-${s.sparkContext.applicationId}").toString
-      registerScratchCleanup(tmp)
+      val tmp = appScratch(s, "compact-roundtrip")
       docs(s, dir).repartition(64).write.mode("overwrite").parquet(s"$tmp/frag")
       Compact.compactParquet(s, s"$tmp/frag", s"$tmp/out",
         targetBytes = 1L << 30, clusterBy = Seq("doc_id"))

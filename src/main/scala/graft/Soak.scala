@@ -1,7 +1,7 @@
 package graft
 
 import graft.obs.SparkTally
-import graft.operators.Dedup
+import graft.operators.{Dedup, IvfCode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -210,9 +210,9 @@ object Soak {
         try {
           val pre = Bench.recallBaselines(emb, Seq(0L, 7L), 20)
           val recall = Bench.recallFrom(emb, pre, (_, qv) =>
-            Similarity.ivfProbeSpill(asg, cents, qv, nProbe, k = 21))
+            Similarity.ivfProbe(asg, cents, qv, nProbe, k = 21, IvfCode.Raw))
           val recallDef = Bench.recallFrom(emb, pre, (_, qv) =>
-            Similarity.ivfSq8Probe(asg, cents, qv, nProbeW, k = 21))
+            Similarity.ivfProbe(asg, cents, qv, nProbeW, k = 21, IvfCode.Sq8))
           def scanAt(np: Int) = pre.map { case (_, qv, _) =>
             val ps = Similarity.spillProbeSet(cents, qv, np)
             asg.where(col("centroid").isin(ps.map(x => x: Any): _*))
@@ -231,7 +231,7 @@ object Soak {
           val (books, tPq) = Bench.secs(Similarity.pqTrain(
             asg.select(col("vec_id"), col("qv")), Queries.Dim, m, 16, 1))
           val pqRec = Bench.recallFrom(emb, pre, (_, qv) =>
-            Similarity.ivfPqProbe(asg, cents, books, qv, nProbeW, k = 21))
+            Similarity.ivfProbe(asg, cents, qv, nProbeW, k = 21, IvfCode.Pq(books)))
           val pqFrac = scanW * (m / (Queries.Dim * 4.0)) +
             (21.0 * 8) / nV.toDouble
           val (_, tB) = Bench.secs(Similarity.ivfProbeSpillJoin(asg, cents,

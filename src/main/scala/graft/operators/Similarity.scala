@@ -47,7 +47,18 @@ object Similarity {
     * guard. */
   def sq8Max(vecQ: Column): Column = array_max(transform(vecQ, x => abs(x)))
 
-  /** Empty (vec_id, cos) frame — the SQ8 rungs' answer to a zero-norm
+  /** `df` with `vec`'s SQ8 codes ([[sq8Codes]], integral doubles) as
+    * `out`, zero-norm rows dropped — a zero vector has no direction to
+    * rank (the oracle twins' qm > 0 filter). The one spelling of SQ8
+    * coding: corpus rows, code layers and batched probe rows all code
+    * through it. */
+  private[graft] def sq8Coded(df: DataFrame, vec: String, out: String): DataFrame =
+    df.withColumn("qm", sq8Max(col(vec)))
+      .where(col("qm") > 0)
+      .withColumn(out, sq8Codes(col(vec), col("qm")))
+      .drop("qm")
+
+  /** Empty (vec_id, cos) frame — the coded rungs' answer to a zero-norm
     * QUERY vector (matches the oracle twins, whose qm > 0 filter drops
     * the query row and yields zero rows — error vs empty must not
     * diverge between the engine and its replay). */
@@ -57,6 +68,15 @@ object Similarity {
     Seq.empty[(Long, Double)].toDF("vec_id", "cos")
   }
 
+  /** The coded rungs' zero-query guard: `probe` runs on the query's
+    * grid values, unless the query is the zero vector, which gets
+    * [[emptyTopK]]. */
+  private[graft] def directedTopK(like: DataFrame, q: Array[Float])(
+      probe: Array[Double] => DataFrame): DataFrame = {
+    val qq = VecFns.quantizeLocal(q)
+    if (qq.forall(_ == 0.0)) emptyTopK(like) else probe(qq)
+  }
+
   /** The exact-rerank tail every ANN probe ends in (apply with
     * `.transform`): round-6 cosine of each candidate's quantized `qv`
     * against the query `q`, top k by (cos desc, vec_id asc). */
@@ -64,10 +84,33 @@ object Similarity {
     cand.select(col("vec_id"), round(VecFns.cosineQ(col("qv"), q), 6).as("cos"))
       .orderBy(desc("cos"), asc("vec_id")).limit(k)
 
+  /** The top `cut` rows of a frame carrying an `approx` score, by
+    * (approx desc, vec_id asc) — the approximate stage of every coded
+    * probe. */
+  private[graft] def approxCut(scored: DataFrame, cut: Int): DataFrame =
+    scored.orderBy(desc("approx"), asc("vec_id")).limit(cut)
+
+  /** Exact rerank of a bounded id set: the `ids` join back (broadcast)
+    * to `vecs`' (vec_id, qv) rows, then [[exactTopK]] against the
+    * query's grid values `qq`. */
+  private[graft] def rerankIds(vecs: DataFrame, ids: DataFrame, qq: Array[Double],
+                               k: Int): DataFrame =
+    vecs.join(broadcast(ids), "vec_id").transform(exactTopK(typedLit(qq.toSeq), k))
+
+  /** Per-probe top `k` by (`score` desc, `id` asc), ranked 1..k in
+    * `rn` — the one window of every batched probe. */
+  private[graft] def perProbeTopK(df: DataFrame, score: String, id: String,
+                                  k: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id")).orderBy(desc(score), asc(id))
+    df.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+  }
+
   /** SQ8 cosine top-k — the MEMORY-BANDWIDTH rung of the ANN ladder
     * (scalar quantization, the FAISS SQ8 design): rank the corpus by
-    * int8-code cosine, keep the top k·rerank candidates, exact-rerank
-    * those on the full quantized vectors. Unlike the IVF rungs this
+    * int8-code cosine ([[IvfCode.Sq8]]), keep the top k·rerank
+    * candidates, exact-rerank those on the full quantized vectors. The
+    * codes are derived per call (doubles; the byte layer is
+    * [[graft.GraftIndexes.writeSq8]]). Unlike the IVF rungs this
     * scans every ROW, but the scan is over 1-byte codes instead of the
     * 8-byte grid (8× less bandwidth where the code column is the
     * persisted scan; compose with the spill IVF's partition pruning for
@@ -77,36 +120,20 @@ object Similarity {
     * TakeOrderedAndProject — zero shuffles, zero joins (candidates
     * carry their vectors, so the rerank is local). */
   def sq8TopK(emb: DataFrame, idCol: String, vecCol: String,
-              queryVec: Array[Float], k: Int, rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(queryVec)
-    val q8 = VecFns.sq8CodesLocal(qq) match {
-      case Some(c) => c
-      case None => return emptyTopK(emb) // zero query: no direction to rank
-    }
-    val coded = quantized(emb, idCol, vecCol)
-      .withColumn("qm", sq8Max(col("qv")))
-      .where(col("qm") > 0) // a zero vector has no direction to rank
-      .select(col("vec_id"), col("qv"),
-        round(VecFns.cosineQ(sq8Codes(col("qv"), col("qm")), typedLit(q8)), 6).as("approx"))
-    coded.orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .transform(exactTopK(typedLit(qq), k))
-  }
+              queryVec: Array[Float], k: Int): DataFrame =
+    IvfCode.Sq8.topK(sq8Coded(quantized(emb, idCol, vecCol), "qv", "c8"), queryVec, k)
 
   /** k-NN join: top-k neighbors for every probe row. Probes are broadcast
     * (they are the small side); ranking is a per-probe window. */
   def knnJoin(emb: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
               k: Int): DataFrame = {
-    val corpus = emb.select(col(idCol).cast("long").as("nbr_id"),
-      VecFns.quantize(col(vecCol)).as("qv"))
-    val probeQ = probes.select(col(idCol).cast("long").as("probe_id"),
-      VecFns.quantize(col(vecCol)).as("pv"))
+    val corpus = quantized(emb, idCol, vecCol).toDF("nbr_id", "qv")
+    val probeQ = quantized(probes, idCol, vecCol).toDF("probe_id", "pv")
     val scored = corpus.crossJoin(broadcast(probeQ))
       .where(col("nbr_id") =!= col("probe_id"))
       .select(col("probe_id"), col("nbr_id"),
         round(VecFns.cosineQ(col("pv"), col("qv")), 6).as("cos"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc("nbr_id"))
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-      .select("probe_id", "nbr_id", "cos", "rn")
+    perProbeTopK(scored, "cos", "nbr_id", k).select("probe_id", "nbr_id", "cos", "rn")
   }
 
   /** Bucketed k-NN join — the scale path when the probe side is beyond
@@ -125,8 +152,7 @@ object Similarity {
                       nBands: Int = 4, maxBucket: Int = 10000,
                       materialize: Boolean = true): DataFrame = {
     def keyed(df: DataFrame, idAs: String, vAs: String) = {
-      val q = df.select(col(idCol).cast("long").as(idAs),
-        VecFns.quantize(col(vecCol)).as(vAs))
+      val q = quantized(df, idCol, vecCol).toDF(idAs, vAs)
       val buckets = array((0 until nBands).map(b =>
         struct(lit(b).as("band"), lshBucket(col(vAs), dim, nBits, s"b$b").as("bkey"))): _*)
       q.withColumn("bk", explode(buckets))
@@ -140,10 +166,8 @@ object Similarity {
       .select(col("probe_id"), col("nbr_id"),
         round(VecFns.cosineQ(col("pv"), col("qv")), 6).as("cos"))
       .groupBy("probe_id", "nbr_id").agg(max("cos").as("cos"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc("nbr_id"))
     Dedup.scoped(materialize, corpus) {
-      scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-        .select("probe_id", "nbr_id", "cos", "rn")
+      perProbeTopK(scored, "cos", "nbr_id", k).select("probe_id", "nbr_id", "cos", "rn")
     }
   }
 
@@ -177,7 +201,7 @@ object Similarity {
                    dim: Int, nBits: Int = 8, nBands: Int = 4,
                    maxBucket: Int = 10000,
                    materialize: Boolean = true): DataFrame = {
-    val q = emb.select(col(idCol).cast("long").as("id"), VecFns.quantize(col(vecCol)).as("qv"))
+    val q = quantized(emb, idCol, vecCol).toDF("id", "qv")
     val buckets = array((0 until nBands).map(b =>
       struct(lit(b).as("band"), lshBucket(col("qv"), dim, nBits, s"b$b").as("bkey"))): _*)
     // cached: bucket-size count + both self-join sides scan it
@@ -207,27 +231,26 @@ object Similarity {
     * corpus: the assignment is computed once (one narrow pass), and each
     * probe reads ~nProbe/K of the data. All math is on the quantized
     * integer grid, so assignment and ranking are oracle-reproducible. */
-  def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, queryVec: Column,
+  def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, queryVec: Array[Float],
               nCentroids: Int, nProbe: Int, k: Int): DataFrame = {
     val q = quantized(emb, idCol, vecCol)
     val cents = seedCentroids(q, nCentroids)
     val assigned = q.withColumn("centroid", bestCentroid(col("qv"), cents))
     // centroid ranking for the query happens on the driver (K tiny)
-    val qRow = q.sparkSession.range(1).select(VecFns.quantize(queryVec).as("qv"))
-      .head().getSeq[Double](0).toArray
+    val qRow = VecFns.quantizeLocal(queryVec)
     val probeSet = cents.zipWithIndex
       .map { case (cv, i) => (dotLocal(qRow, cv), i) }
       .sortBy { case (d, i) => (-d, i) }.take(nProbe).map(_._2)
     assigned.where(col("centroid").isin(probeSet: _*))
-      // qRow (the query's quantized values, already evaluated once)
-      // enters as a LITERAL — a quantize expression would re-quantize
-      // the query per scanned row
+      // qRow (the query's driver-quantized values) enters as a
+      // LITERAL — a quantize expression would re-quantize the query per
+      // scanned row
       .transform(exactTopK(typedLit(qRow.toSeq), k))
   }
 
   /** (vec_id, qv): the id cast to long and the vector on the
     * quantized integer grid — the one input projection of every index
-    * build and probe. */
+    * build and probe (probe sides rename it with `toDF`). */
   private[graft] def quantized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("vec_id"), VecFns.quantize(col(vecCol)).as("qv"))
 
@@ -407,18 +430,29 @@ object Similarity {
   /** Shuffle-free spill dedupe for SINGLE-query probes: the probed
     * rows filtered so exactly one copy of each vector survives — the
     * primary copy when its list is probed too, else the spill copy.
-    * Falls back to dropDuplicates for frames without the `primary`
-    * column (pre-r15 persisted layouts). The batched join forms keep
-    * their aggregate dedupe: there the probe set is per-probe_id, not
-    * a row-local literal. */
+    * The batched join forms use [[scheduleDeduped]]: there the probe
+    * set is per-probe_id, not a row-local literal. */
   private[graft] def probeDeduped(assigned: DataFrame,
                                   probeSet: Seq[Int]): DataFrame = {
-    val probed = assigned.where(col("centroid").isin(probeSet: _*))
-    if (assigned.columns.contains("primary"))
-      probed.where(col("centroid") === col("primary") ||
+    requirePrimary(assigned, "the probed assignment")
+    assigned.where(col("centroid").isin(probeSet: _*))
+      .where(col("centroid") === col("primary") ||
         !col("primary").isin(probeSet: _*))
-    else probed.dropDuplicates("vec_id")
   }
+
+  /** Refuse a spill-IVF assignment without the `primary` column (a
+    * pre-r15 layout; no writer has emitted one since). Both spill
+    * dedupes key on it, and an append of r15 rows onto such a layout
+    * would read the old files' rows with primary = NULL, which the
+    * dedupe predicates drop — every probe would SILENTLY answer from
+    * the appended delta alone. Loud error over silent wrongness (the
+    * nearDupIngest fresh-start doctrine). */
+  private[graft] def requirePrimary(asg: DataFrame, what: String): Unit =
+    require(asg.columns.contains("primary"),
+      s"$what is a pre-r15 spill-IVF layout without the `primary` column; " +
+        "its spill copies cannot be deduped and appended rows would make " +
+        "probes silently drop the base corpus — rebuild the layout with " +
+        "writeIvf/writeIvfSq8")
 
   /** [[assignSpillQ]] over raw (id, vector) columns — the incremental
     * index-maintenance entry ([[graft.GraftIndexes.appendIvf]]). */
@@ -426,25 +460,42 @@ object Similarity {
                      cents: Array[Array[Double]]): DataFrame =
     assignSpillQ(quantized(emb, idCol, vecCol), cents)
 
-  /** Probe a prebuilt [[ivfIndexSpill]]: centroids ranked on the DRIVER
-    * by spherical score (K tiny — planning data), the nProbe list
-    * filter is a LITERAL isin (partition pruning on a persisted
-    * layout), spilled duplicates collapse through [[probeDeduped]]'s
-    * row-local `primary` predicate (r15; both copies carry identical
-    * qv, so keeping either is exact), then exact cosine rerank. */
-  def ivfProbeSpill(assigned: DataFrame, cents: Array[Array[Double]],
-                    q: Array[Float], nProbe: Int, k: Int): DataFrame = {
-    val qRow = VecFns.quantizeLocal(q)
+  /** Probe a prebuilt [[ivfIndexSpill]] — in memory, or a persisted
+    * layout opened by [[graft.GraftIndexes.openIvf]] — through `code`:
+    *
+    *  1. centroids ranked on the DRIVER by spherical score
+    *     ([[spillProbeSet]]; K tiny — planning data), so the nProbe list
+    *     filter is a LITERAL isin (partition pruning on a persisted
+    *     layout);
+    *  2. spilled duplicates collapse through [[probeDeduped]]'s row-local
+    *     `primary` predicate (r15; both copies carry identical vectors
+    *     and codes, so keeping either is exact);
+    *  3. the candidates' code rows: a frame that CARRIES the code column
+    *     (an open of the code's layout, or a cached coded index) ranks on
+    *     its stored codes — at disk scale the stored codes are the scan
+    *     column, the byte claim; any other frame codes its probed rows
+    *     through the code's one projection ([[IvfCode.rows]]);
+    *  4. the code's top k ([[IvfCode.topK]]): the uncoded form reranks
+    *     every candidate exactly; a coded form keeps the top k·rerank
+    *     by approx score, then exact-reranks those — a zero query gets
+    *     the empty answer there.
+    *
+    * Stored and freshly derived codes rank bit-identically (codes are
+    * integral values; the byte→double cast is exact — spec-pinned). */
+  def ivfProbe(assigned: DataFrame, cents: Array[Array[Double]],
+               q: Array[Float], nProbe: Int, k: Int, code: IvfCode): DataFrame = {
     val probeSet = spillProbeSet(cents, q, nProbe)
-    probeDeduped(assigned, probeSet)
-      .transform(exactTopK(typedLit(qRow.toSeq), k))
+    val lists = IvfCode.lists(cents, probeSet)
+    val probed = probeDeduped(assigned, probeSet)
+    val coded = if (probed.columns.contains(code.column)) probed else code.rows(probed, lists)
+    code.topK(coded, q, k, lists)
   }
 
   /** BATCHED probe of a prebuilt [[ivfIndexSpill]] — the trained-index
     * path for a query SET (offline eval suites, contrastive mining,
     * embedding-dedup sweeps): every probe row gets its top-k in ONE
     * distributed plan, closing the driver-loop gap of the
-    * one-`Array[Float]` [[ivfProbeSpill]] entry. Shape mirrors
+    * one-`Array[Float]` [[ivfProbe]] entry. Shape mirrors
     * [[knnJoinBucketed]]:
     *
     *  1. each probe row ranks ALL K centroids as an EXPRESSION — the
@@ -473,7 +524,7 @@ object Similarity {
     * once. The exploded schedule is broadcast (right for probe sets up
     * to millions of rows — nProbe ints + one quantized vector each).
     * Returns (probe_id, vec_id, cos, rn) like [[knnJoin]]; the probe's
-    * own row is NOT excluded (parity with [[ivfProbeSpill]], whose
+    * own row is NOT excluded (parity with [[ivfProbe]], whose
     * query is free to be a corpus member). */
   def ivfProbeSpillJoin(assigned: DataFrame, cents: Array[Array[Double]],
                         probes: DataFrame, idCol: String, vecCol: String,
@@ -483,9 +534,7 @@ object Similarity {
         schedule)
       .select(col("probe_id"), col("vec_id"),
         round(VecFns.cosineQ(col("pv"), col("qv")), 6).as("cos"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc("vec_id"))
-    cand.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-      .select("probe_id", "vec_id", "cos", "rn")
+    perProbeTopK(cand, "cos", "vec_id", k).select("probe_id", "vec_id", "cos", "rn")
   }
 
   /** Shuffle-free spill dedupe for the BATCHED joins — the per-probe
@@ -496,19 +545,16 @@ object Similarity {
     * (a broadcast left-join of the schedule's (probe_id, centroid)
     * keys against the row's `primary`) decides keep/drop row-locally:
     * keep the primary copy always, the spill copy only when its
-    * primary list is unprobed. Falls back to a (probe_id, vec_id)
-    * max-agnostic dropDuplicates for indexes without the `primary`
-    * column (pre-r15 frames). */
+    * primary list is unprobed. */
   private[graft] def scheduleDeduped(cand: DataFrame,
-                                     schedule: DataFrame): DataFrame =
-    if (!cand.columns.contains("primary")) cand.dropDuplicates("probe_id", "vec_id")
-    else {
-      val keys = schedule.select(col("probe_id"),
-        col("centroid").as("primary"), lit(1).as("__pin"))
-      cand.join(broadcast(keys), Seq("probe_id", "primary"), "left")
-        .where(col("centroid") === col("primary") || col("__pin").isNull)
-        .drop("__pin")
-    }
+                                     schedule: DataFrame): DataFrame = {
+    requirePrimary(cand, "the probed assignment")
+    val keys = schedule.select(col("probe_id"),
+      col("centroid").as("primary"), lit(1).as("__pin"))
+    cand.join(broadcast(keys), Seq("probe_id", "primary"), "left")
+      .where(col("centroid") === col("primary") || col("__pin").isNull)
+      .drop("__pin")
+  }
 
   /** The batched probes' exploded list schedule — ONE derivation for
     * [[ivfProbeSpillJoin]] and [[ivfSq8ProbeJoin]]: each probe row
@@ -530,8 +576,7 @@ object Similarity {
       s"batched-probe id column `$idCol` must be integral (got $idType): " +
         "a silent long cast would null non-numeric ids and merge their " +
         "probes into one window partition")
-    val q = probes.select(col(idCol).cast("long").as("probe_id"),
-      VecFns.quantize(col(vecCol)).as("pv"))
+    val q = quantized(probes, idCol, vecCol).toDF("probe_id", "pv")
     val scored = q.withColumn("dn",
       transform(sphDots(col("pv"), cents), (x, i) =>
         struct(x.as("s"), i.as("i"))))
@@ -555,11 +600,7 @@ object Similarity {
                                       vecCol: String,
                                       cents: Array[Array[Double]],
                                       nProbe: Int): DataFrame =
-    spillScheduleFrame(probes, idCol, vecCol, cents, nProbe)
-      .withColumn("pm", sq8Max(col("pv")))
-      .where(col("pm") > 0)
-      .withColumn("p8", sq8Codes(col("pv"), col("pm")))
-      .drop("pm")
+    sq8Coded(spillScheduleFrame(probes, idCol, vecCol, cents, nProbe), "pv", "p8")
 
   /** BATCHED probe through the SQ8 code path — [[ivfProbeSpillJoin]]'s
     * composed twin: the schedule equi-joins the index on `centroid`
@@ -568,9 +609,10 @@ object Similarity {
     * probe by CODE cosine (the probe's own int8 codes ride the
     * schedule as an expression over pv; an index that already CARRIES
     * `c8` — a [[graft.GraftIndexes.writeIvfSq8]] open — is ranked on
-    * its stored codes instead of re-deriving them per candidate),
-    * only the per-probe top k·rerank survive to the exact rerank, and
-    * a second per-probe window takes the top k.
+    * its stored codes, any other index codes its rows through
+    * [[IvfCode.Sq8]]'s projection), only the per-probe top
+    * k·[[IvfCode.Sq8]].rerank survive to the exact rerank, and a
+    * second per-probe window takes the top k.
     *
     * Byte-cost honesty: this is ONE plan, so over a persisted layout
     * the scan reads qv for every candidate (the rerank needs it in
@@ -578,7 +620,7 @@ object Similarity {
     * bytes. The byte-narrow scan shapes are the single-query forms,
     * where the candidate cut is a bounded driver literal
     * ([[graft.GraftIndexes.ivfSq8ProbeSplit]]'s two-phase read,
-    * [[ivfSq8Probe]] over a cached coded index); a batched job
+    * [[ivfProbe]] over a cached coded index); a batched job
     * that must stay byte-narrow at 100 TB should run the code-rank
     * pass as its own job and join the bounded winners back.
     *
@@ -588,29 +630,18 @@ object Similarity {
     * (probe_id, vec_id, cos, rn) like [[ivfProbeSpillJoin]]. */
   def ivfSq8ProbeJoin(assigned: DataFrame, cents: Array[Array[Double]],
                       probes: DataFrame, idCol: String, vecCol: String,
-                      nProbe: Int, k: Int, rerank: Int = 4): DataFrame = {
+                      nProbe: Int, k: Int): DataFrame = {
     val schedule = sq8ScheduleFrame(probes, idCol, vecCol, cents, nProbe)
-    val sched = broadcast(schedule)
-    val hasStoredCodes = assigned.columns.contains("c8")
-    val base =
-      if (hasStoredCodes) assigned.join(sched, "centroid")
-        .withColumn("a8", col("c8").cast("array<double>"))
-      else assigned.join(sched, "centroid")
-        .withColumn("qm", sq8Max(col("qv")))
-        .where(col("qm") > 0)
-        .withColumn("a8", sq8Codes(col("qv"), col("qm")))
-    val cand = scheduleDeduped(base, schedule)
+    val coded =
+      if (assigned.columns.contains(IvfCode.Sq8.column)) assigned
+      else IvfCode.Sq8.rows(assigned)
+    val cand = scheduleDeduped(coded.join(broadcast(schedule), "centroid"), schedule)
       .select(col("probe_id"), col("vec_id"), col("qv"), col("pv"),
-        round(VecFns.cosineQ(col("a8"), col("p8")), 6).as("approx"))
-    val wa = Window.partitionBy(col("probe_id"))
-      .orderBy(desc("approx"), asc("vec_id"))
-    val we = Window.partitionBy(col("probe_id"))
-      .orderBy(desc("cos"), asc("vec_id"))
-    cand.withColumn("ra", row_number().over(wa)).where(col("ra") <= k * rerank)
+        IvfCode.Sq8.approx(col("p8")))
+    val exact = perProbeTopK(cand, "approx", "vec_id", k * IvfCode.Sq8.rerank)
       .select(col("probe_id"), col("vec_id"),
         round(VecFns.cosineQ(col("qv"), col("pv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(we)).where(col("rn") <= k)
-      .select("probe_id", "vec_id", "cos", "rn")
+    perProbeTopK(exact, "cos", "vec_id", k).select("probe_id", "vec_id", "cos", "rn")
   }
 
   /** The cold spill-IVF scope of the registered IVF rows: quantize
@@ -635,7 +666,7 @@ object Similarity {
   }
 
   /** The nProbe spherically-nearest centroid indices for a query —
-    * [[ivfProbeSpill]]'s list schedule, exposed so the bench can count
+    * [[ivfProbe]]'s list schedule, exposed so the bench can count
     * the SCANNED rows of a probe (the ≤6%-scan pin) without re-deriving
     * the ranking. */
   def spillProbeSet(cents: Array[Array[Double]], q: Array[Float],
@@ -647,50 +678,10 @@ object Similarity {
       .sortBy { case (d, i) => (-d, i) }.take(nProbe).map(_._2).toSeq
   }
 
-  /** IVF+SQ8 probe — the composed 100 TB stack (FAISS's IVF+SQ design):
-    * the spill IVF prunes ROWS (nProbe lists ≈ 5.9% nominal scan), the
-    * SQ8 codes shrink the BYTES of what remains (ADC over int8 codes;
-    * with [[graft.GraftIndexes]]-persisted codes partitioned by
-    * centroid the probe reads nProbe partitions × 1 byte/dim), and the
-    * exact rerank touches only k·rerank full vectors. Same dedup rule
-    * as [[ivfProbeSpill]] (spill double-assignments keep one row per
-    * vec_id).
-    *
-    * An index whose rows already CARRY their codes in a `c8` column (an
-    * open — cached or not — of the [[graft.GraftIndexes.writeIvfSq8]]
-    * layout) is ranked on the STORED codes — the warm serving form,
-    * and at disk scale the stored codes are the scan column (the byte
-    * claim). Zero-norm rows were dropped at coding time there. Any
-    * other index derives the codes from qv per probe call, dropping
-    * zero-norm candidates first ([[sq8Codes]]'s guard). The two forms
-    * are bit-identical (codes are integral values; the byte→double
-    * cast is exact — spec-pinned), the same choice [[ivfSq8ProbeJoin]]
-    * makes. */
-  def ivfSq8Probe(assigned: DataFrame, cents: Array[Array[Double]],
-                  q: Array[Float], nProbe: Int, k: Int,
-                  rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(q)
-    val q8 = VecFns.sq8CodesLocal(qq) match {
-      case Some(c) => c
-      case None => return emptyTopK(assigned)
-    }
-    val probed = probeDeduped(assigned, spillProbeSet(cents, q, nProbe))
-    val (cand, codes) =
-      if (assigned.columns.contains("c8"))
-        (probed, col("c8").cast("array<double>"))
-      else
-        (probed.withColumn("qm", sq8Max(col("qv"))).where(col("qm") > 0),
-          sq8Codes(col("qv"), col("qm")))
-    cand.select(col("vec_id"), col("qv"),
-        round(VecFns.cosineQ(codes, typedLit(q8)), 6).as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(k * rerank)
-      .transform(exactTopK(typedLit(qq), k))
-  }
-
   // ---- Product quantization (PQ) — the byte rung BELOW SQ8 ----
 
   /** Sub-vector j of a quantized vector (1-based slice). */
-  private def subSlice(v: Column, j: Int, dsub: Int): Column =
+  private[operators] def subSlice(v: Column, j: Int, dsub: Int): Column =
     slice(v, j * dsub + 1, dsub)
 
   /** Nearest sub-centroid index (euclidean, ties → lowest index — the
@@ -704,7 +695,7 @@ object Similarity {
     * form. The codebook rides as ONE array-of-arrays literal under a
     * transform (a per-centroid expression fan-out blew past the
     * codegen method limit and fell back to interpreted eval). */
-  private def bestSubCode(s: Column, cents: Array[Array[Double]]): Column = {
+  private[operators] def bestSubCode(s: Column, cents: Array[Array[Double]]): Column = {
     val cbLit = typedLit(cents.map(_.toSeq).toSeq)
     val n2Lit = typedLit(cents.map(cv => dotLocal(cv, cv)).toSeq)
     val d = zip_with(n2Lit, transform(cbLit, cv => VecFns.dot(s, cv)),
@@ -774,126 +765,37 @@ object Similarity {
     books
   }
 
-  /** Per-row PQ code array: element j = nearest sub-centroid of
-    * subspace j. One byte per SUBSPACE (m bytes/vector — 8× narrower
-    * than SQ8's dim bytes at m = dim/8, 64× narrower than the 8-byte
-    * grid), the persisted scan column of the PQ rung. */
-  private[graft] def pqCodeExpr(v: Column, books: Array[Array[Array[Double]]],
-                                dsub: Int): Column =
-    array(books.zipWithIndex.map { case (cb, j) =>
-      bestSubCode(subSlice(v, j, dsub), cb).cast("byte")
-    }: _*)
-
-  /** ADC rank + exact rerank over a coded frame — the probe tail shared
-    * by the in-memory rung ([[pqTopK]]) and the persisted layer
-    * ([[graft.GraftIndexes.pqProbe]], whose codes come off disk):
-    * approximate cosine reconstructs each candidate as its sub-centroid
-    * concatenation via two per-(subspace, code) LUTs riding the plan as
-    * LITERALS — numerator Σⱼ q⁽ʲ⁾·c⁽ʲ⁾[code], norm² Σⱼ |c⁽ʲ⁾[code]|²,
-    * both exact-integer sums (≤ m·8e14 < 2⁵³) — so the scan touches
-    * ONLY the m-byte code column; the top k·rerank rows are
-    * exact-rescored on their full vectors. Zero-norm reconstructions
-    * drop (no direction to rank — the SQ8 qm > 0 rule's PQ analog,
-    * mirrored by the oracle's den2 > 0 filter). `coded` must carry
-    * (vec_id, pcode) and, for the rerank, qv — [[pqRankIds]] is the
-    * qv-free phase-1 for split reads. */
-  private[graft] def pqRankIds(coded: DataFrame,
-                               books: Array[Array[Array[Double]]],
-                               qq: Array[Double], cut: Int): DataFrame = {
-    val (num, den2) = adcTerms(books, qq)
-    adcRankIds(coded.withColumn("num", num).withColumn("den2", den2), qq, cut)
-  }
-
-  /** The flat ADC (numerator, norm²) columns over `pcode`: Σⱼ of the
-    * per-subspace query×book dot LUT and book norm² LUT, each a
-    * literal indexed by the code byte — shared by [[pqRankIds]] and the
-    * residual [[rpqProbeCoded]], which adds its per-list terms. */
-  private def adcTerms(books: Array[Array[Array[Double]]],
-                       qq: Array[Double]): (Column, Column) = {
-    val dsub = books.head.head.length
-    def lutSum(luts: Array[Seq[Double]]): Column =
-      luts.zipWithIndex.map { case (l, j) =>
-        element_at(typedLit(l), col("pcode")(j).cast("int") + 1)
-      }.reduce(_ + _)
-    (lutSum(books.zipWithIndex.map { case (cb, j) =>
-      val qs = qq.slice(j * dsub, (j + 1) * dsub)
-      cb.map(cv => dotLocal(qs, cv)).toSeq
-    }), lutSum(books.map(_.map(cv => dotLocal(cv, cv)).toSeq)))
-  }
-
-  /** Rank a frame carrying ADC `num`/`den2` columns by approx cosine
-    * (zero-norm reconstructions drop; round 6, vec_id tie-break) and
-    * keep the top `cut` ids. */
-  private def adcRankIds(scored: DataFrame, qq: Array[Double], cut: Int): DataFrame =
-    scored.where(col("den2") > 0)
-      .select(col("vec_id"), round(col("num") /
-        (lit(math.sqrt(dotLocal(qq, qq))) * sqrt(col("den2"))), 6).as("approx"))
-      .orderBy(desc("approx"), asc("vec_id")).limit(cut)
-      .select("vec_id")
-
-  /** ADC rank + exact rerank over a coded frame that CARRIES its
-    * vectors (vec_id, qv, pcode) — the warm serving form (train/encode
-    * once, probe per query), and the tail [[pqTopK]] runs cold. A
-    * persisted code layer (codes only, no qv) probes through
-    * [[graft.GraftIndexes.pqProbe]] instead. */
-  def pqProbeCoded(coded: DataFrame, books: Array[Array[Array[Double]]],
-                   q: Array[Float], k: Int, rerank: Int = 4): DataFrame = {
-    val qq = VecFns.quantizeLocal(q)
-    if (dotLocal(qq, qq) == 0) return emptyTopK(coded) // no direction to rank
-    val ids = pqRankIds(coded, books, qq, k * rerank)
-    coded.join(broadcast(ids), "vec_id")
-      .transform(exactTopK(typedLit(qq.toSeq), k))
-  }
-
   /** PQ cosine top-k — the 100 TB byte ladder's rung BELOW SQ8: scan
     * m bytes per vector (vs SQ8's dim bytes, vs the grid's 8·dim),
-    * ADC-rank, exact-rerank the top k·rerank. Plan shape mirrors
-    * [[sq8TopK]]: narrow scan → TakeOrdered → bounded rescore. Cold
-    * form trains the codebooks in-call; serving persists them with
+    * ADC-rank ([[IvfCode.Pq]]), exact-rerank the top
+    * k·[[IvfCode.Pq]].rerank. Plan shape mirrors [[sq8TopK]]: narrow
+    * scan → TakeOrdered → bounded rescore. Cold form trains the
+    * codebooks in-call; serving persists them with
     * [[graft.GraftIndexes.writePq]]. */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              q: Array[Float], k: Int, dim: Int, m: Int = 8, ksub: Int = 16,
-             iters: Int = 1, rerank: Int = 4,
-             materialize: Boolean = true): DataFrame = {
+             iters: Int = 1, materialize: Boolean = true): DataFrame = {
     val qd = Dedup.maybeCache(quantized(emb, idCol, vecCol), materialize)
-    val books = pqTrain(qd, dim, m, ksub, iters)
-    val coded = qd.withColumn("pcode", pqCodeExpr(col("qv"), books, dim / m))
-    Dedup.scoped(materialize, qd)(pqProbeCoded(coded, books, q, k, rerank))
-  }
-
-  /** IVF×PQ — the composed DEEP-byte stack (FAISS IVFPQ): the spill
-    * IVF prunes ROWS (nProbe of K lists), PQ shrinks the BYTES of what
-    * remains to m per vector (vs SQ8's dim — the composition below
-    * [[ivfSq8Probe]] on the byte ladder), and the exact rerank touches
-    * only k·rerank full vectors. Books train on the FULL corpus
-    * (codebook quality is corpus-global; per-list residual codebooks
-    * are the next refinement and change the oracle contract). Same
-    * spill dedupe as every probe of the assigned frame. */
-  def ivfPqProbe(assigned: DataFrame, cents: Array[Array[Double]],
-                 books: Array[Array[Array[Double]]], q: Array[Float],
-                 nProbe: Int, k: Int, rerank: Int = 8): DataFrame = {
-    val probeSet = spillProbeSet(cents, q, nProbe)
-    val dim = books.length * books.head.head.length
-    val coded = probeDeduped(assigned, probeSet)
-      .withColumn("pcode", pqCodeExpr(col("qv"), books, dim / books.length))
-    pqProbeCoded(coded, books, q, k, rerank)
+    val code = IvfCode.Pq(pqTrain(qd, dim, m, ksub, iters))
+    Dedup.scoped(materialize, qd)(code.topK(code.rows(qd), q, k))
   }
 
   // ---- Residual IVF×PQ (rPQ) — recall lift at IDENTICAL byte cost ----
 
   /** Residual view of an assignment frame: adds `rqv` = qv −
-    * cent[centroid], elementwise on the integer grid. The spill
+    * cent[centroid], elementwise on the integer grid, with `lists`
+    * holding the centroid of every list the rows sit in. The spill
     * centroids are truncated-integer means (integral doubles), so
     * residuals are EXACT integers and the training/encoding replay
     * stays bit-for-bit in the DuckDB oracle. A spilled copy's residual
     * is against the list HOLDING the copy (FAISS IVFPQ's invariant:
     * codes reconstruct against their own list's centroid). */
-  private def residualFrame(assigned: DataFrame,
-                            cents: Array[Array[Double]]): DataFrame = {
-    val centsLit = typedLit(cents.map(_.toSeq).toSeq)
+  private[operators] def residualFrame(assigned: DataFrame,
+                                       lists: IvfCode.Lists): DataFrame = {
+    require(lists.nonEmpty, "residuals need the centroids of their rows' lists")
     assigned.withColumn("rqv",
-      zip_with(col("qv"), element_at(centsLit, col("centroid") + 1),
-        (v, c) => v - c))
+      zip_with(col("qv"), element_at(typedLit(lists.map { case (l, c) => l -> c.toSeq }),
+        col("centroid")), (v, c) => v - c))
   }
 
   /** Train residual-PQ codebooks (Jégou et al. 2011 §IV — IVFADC
@@ -917,100 +819,14 @@ object Similarity {
     // row) plus the K·dim-literal residual subtraction — measured 9.5 s
     // → ~2 s for the registered rung at the sf0.1 fixture
     val rqd = residualFrame(
-        assigned.where(col("centroid") === col("primary")), cents)
+        assigned.where(col("centroid") === col("primary")),
+        IvfCode.lists(cents, cents.indices))
       .select(col("vec_id"), col("rqv").as("qv")).cache()
     try {
       rqd.count() // fill the cache before the concurrent trainings race it
       pqTrain(rqd, dim, m, ksub, iters)
     } finally { rqd.unpersist(): Unit }
   }
-
-  /** Probe an IVF assignment with RESIDUAL codebooks — same bytes as
-    * [[ivfPqProbe]] (m code bytes per scanned row + k·rerank exact
-    * vectors), higher recall. ADC reconstructs a candidate in list L
-    * as cent_L + concat_j(book_j[code_j]), so the approx cosine
-    * decomposes into per-list planning scalars (q·cent_L, |cent_L|²),
-    * the query×book LUT, and a per-(list, subspace, code) CROSS LUT
-    * (cent_L⁽ʲ⁾·book entries) riding the plan as one map literal over
-    * the probed lists — nProbe·m·ksub doubles, planning data. Every
-    * term is an exact-integer product on the grid; both engines sum in
-    * the same order, so round-6 ranks are engine-independent. */
-  def ivfRpqProbe(assigned: DataFrame, cents: Array[Array[Double]],
-                  books: Array[Array[Array[Double]]], q: Array[Float],
-                  nProbe: Int, k: Int, rerank: Int = 8): DataFrame = {
-    val probeSet = spillProbeSet(cents, q, nProbe)
-    // probe-side residuals only ever subtract a PROBED list's centroid
-    // — carry an nProbe-sized map literal, not the full K·dim array
-    // (the K=128 full literal rode the plan twice — rank + rerank scans
-    // — and its codegen dominated the probe wall at small fixtures)
-    val probedCents: Map[Int, Seq[Double]] =
-      probeSet.map(l => l -> cents(l).toSeq).toMap
-    val coded = probeDeduped(assigned, probeSet)
-      .withColumn("rqv", zip_with(col("qv"),
-        element_at(typedLit(probedCents), col("centroid")), (v, c) => v - c))
-      .withColumn("pcode",
-        pqCodeExpr(col("rqv"), books, books.head.head.length))
-    rpqProbeCoded(coded, cents, books, q, probeSet, k, rerank)
-  }
-
-  /** [[ivfRpqProbe]] over an ALREADY-CODED layout — the persisted form
-    * ([[graft.GraftIndexes.writeRpq]] stores (vec_id, qv, pcode,
-    * primary, centroid) partitioned by list): probe-prune + spill-
-    * dedupe, then score the stored codes directly. */
-  def rpqProbeLayout(assign: DataFrame, cents: Array[Array[Double]],
-                     books: Array[Array[Array[Double]]], q: Array[Float],
-                     nProbe: Int, k: Int, rerank: Int = 8): DataFrame = {
-    val probeSet = spillProbeSet(cents, q, nProbe)
-    rpqProbeCoded(probeDeduped(assign, probeSet), cents, books, q,
-      probeSet, k, rerank)
-  }
-
-  /** Residual-ADC rank + exact rerank over a frame carrying (vec_id,
-    * qv, centroid, pcode) — the scoring tail shared by the in-memory
-    * rung and the persisted layout (one derivation, so the two cannot
-    * drift on what a residual score is). */
-  private[graft] def rpqProbeCoded(coded: DataFrame,
-      cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      q: Array[Float], probeSet: Seq[Int], k: Int,
-      rerank: Int): DataFrame = {
-    val qq = VecFns.quantizeLocal(q)
-    if (dotLocal(qq, qq) == 0)
-      return emptyTopK(coded.select(col("vec_id"), col("qv")))
-    val m = books.length
-    val dsub = books.head.head.length
-    val crossLut: Map[Int, Seq[Seq[Double]]] = probeSet.map { l =>
-      l -> books.zipWithIndex.map { case (cb, j) =>
-        val cs = cents(l).slice(j * dsub, (j + 1) * dsub)
-        cb.map(cv => dotLocal(cs, cv)).toSeq
-      }.toSeq
-    }.toMap
-    val qdotc: Map[Int, Double] =
-      probeSet.map(l => l -> dotLocal(qq, cents(l))).toMap
-    val cn2: Map[Int, Double] =
-      probeSet.map(l => l -> dotLocal(cents(l), cents(l))).toMap
-    val crossCol = (0 until m).map { j =>
-      element_at(element_at(element_at(typedLit(crossLut), col("centroid")),
-        j + 1), col("pcode")(j).cast("int") + 1)
-    }.reduce(_ + _)
-    val (num, den2) = adcTerms(books, qq)
-    val ranked = adcRankIds(coded
-      .withColumn("num", element_at(typedLit(qdotc), col("centroid")) + num)
-      .withColumn("den2", element_at(typedLit(cn2), col("centroid")) +
-        lit(2.0) * crossCol + den2), qq, k * rerank)
-    coded.join(broadcast(ranked), "vec_id")
-      .transform(exactTopK(typedLit(qq.toSeq), k))
-  }
-
-  /** The residual layout's row projection — ONE derivation shared by
-    * [[graft.GraftIndexes.writeRpq]] and [[graft.GraftIndexes.appendIvf]]
-    * (the ivfSq8Rows doctrine): each assignment row coded against ITS
-    * list's centroid. */
-  private[graft] def rpqRows(asg: DataFrame, cents: Array[Array[Double]],
-                             books: Array[Array[Array[Double]]]): DataFrame =
-    residualFrame(asg, cents)
-      .withColumn("pcode",
-        pqCodeExpr(col("rqv"), books, books.head.head.length))
-      .select("vec_id", "qv", "pcode", "primary", "centroid")
 
   /** Deterministic coarse-quantizer seeds: the K lowest-id vectors. */
   private def seedCentroids(q: DataFrame, nCentroids: Int): Array[Array[Double]] =
@@ -1026,7 +842,7 @@ object Similarity {
     (array_position(dots, array_max(dots)) - 1).cast("int")
   }
 
-  private def dotLocal(a: Array[Double], b: Array[Double]): Double = {
+  private[operators] def dotLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }; s
   }
@@ -1073,24 +889,14 @@ object Similarity {
     quantized(emb, idCol, vecCol)
       .withColumn("bucket", lshBucket(col("qv"), dim, nBits))
 
-  /** Probe a prebuilt [[annIndex]]: candidates share the query's bucket,
-    * then exact rerank. Column form — the bucket/quantization ride as
-    * (unfoldable) expressions evaluated per row; when the raw query
-    * ARRAY is in hand, prefer the overload below. */
-  def annTopKWith(idx: DataFrame, queryVec: Column,
-                  dim: Int, nBits: Int, k: Int): DataFrame = {
-    val qvec = VecFns.quantize(queryVec)
-    val qBucket = lshBucket(qvec, dim, nBits)
-    idx.where(col("bucket") === qBucket)
-      .transform(exactTopK(qvec, k))
-  }
-
-  /** Array-query probe: bucket and quantization computed ON THE DRIVER
-    * (bit-equal twins [[queryBucket]] / `VecFns.quantizeLocal`, pinned
-    * in AnnRecallSpec), so the bucket filter is a LITERAL — cached
-    * batch stats and persisted partitions can prune on it, and the scan
-    * stops re-deriving the query's own bucket/quantization per row (the
-    * column form embeds higher-order functions Catalyst cannot
+  /** Probe a prebuilt [[annIndex]]: candidates share the query's
+    * bucket, then exact rerank. Bucket and quantization are computed ON
+    * THE DRIVER (bit-equal twins [[queryBucket]] /
+    * `VecFns.quantizeLocal`, pinned in AnnRecallSpec and VecFnsSpec),
+    * so the bucket filter is a LITERAL — cached batch stats and
+    * persisted partitions can prune on it, and the scan never
+    * re-derives the query's own bucket/quantization per row (a query
+    * COLUMN embeds higher-order functions Catalyst cannot
     * constant-fold — that re-derivation was the bulk of warm ANN probe
     * latency: 89 ms → ~25 ms on the resident sf0.1 index). */
   def annTopKWith(idx: DataFrame, q: Array[Float],
@@ -1102,11 +908,6 @@ object Similarity {
 
   /** Bucketed ANN, cold form — builds the index inline.
     * (Recall < 1 by construction; the exact path remains the oracle.) */
-  def annTopK(emb: DataFrame, idCol: String, vecCol: String, queryVec: Column,
-              dim: Int, nBits: Int, k: Int): DataFrame =
-    annTopKWith(annIndex(emb, idCol, vecCol, dim, nBits), queryVec, dim, nBits, k)
-
-  /** Array-query cold form (driver-literal bucket + quantization). */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String, q: Array[Float],
               dim: Int, nBits: Int, k: Int): DataFrame =
     annTopKWith(annIndex(emb, idCol, vecCol, dim, nBits), q, dim, nBits, k)
@@ -1183,7 +984,7 @@ object Similarity {
                         nBits: Int, k: Int, hamming: Int = 1): DataFrame = {
     val buckets = probeBuckets(q, dim, nBits, hamming)
     // driver-quantized literal, not quantize(typedLit(q)): the column
-    // form re-quantizes the query per row (see annTopKWith overload)
+    // form re-quantizes the query per row (see annTopKWith)
     val qvec = typedLit(VecFns.quantizeLocal(q).toSeq)
     idx.where(col("bucket").isin(buckets: _*))
       .transform(exactTopK(qvec, k))

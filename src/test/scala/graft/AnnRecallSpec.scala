@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{IvfCode, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,7 @@ class AnnRecallSpec extends SparkSpec {
 
   test("ivfTopK recall@20 vs exact cosine (16 centroids, nProbe=4 — 1/4 of the corpus scanned)") {
     val r = recallAt(Seq(0L, 7L, 42L, 99L, 123L), (e, qv) =>
-      Similarity.ivfTopK(e, "vec_id", "embedding", typedLit(qv),
+      Similarity.ivfTopK(e, "vec_id", "embedding", qv,
         nCentroids = 16, nProbe = 4, k = K + 1))
     info(f"ivf recall@20 = $r%.3f")
     assert(r >= 0.45, f"IVF recall degraded: $r%.3f (uniform-vector floor 0.45 at nProbe/K=1/4)")
@@ -71,30 +71,11 @@ class AnnRecallSpec extends SparkSpec {
     }
   }
 
-  test("array-query ANN probe (driver-literal bucket+quantization) is row-identical to the column form") {
-    import graft.functions.VecFns
-    val e = Tables(spark, sf, "embeddings")
-    val idx = Similarity.annIndex(e, "vec_id", "embedding", Queries.Dim, 4).cache()
-    idx.count()
-    for (qid <- Seq(0L, 42L, 123L)) {
-      val qv = e.where(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0).toArray
-      // quantizeLocal is element-identical to the quantize column
-      val colQ = e.sparkSession.range(1)
-        .select(VecFns.quantize(typedLit(qv)).as("q")).head().getSeq[Double](0)
-      assert(VecFns.quantizeLocal(qv).toSeq === colQ, s"quantize drift qid=$qid")
-      assert(Similarity.annTopKWith(idx, qv, Queries.Dim, 4, K).collect().toSeq ===
-        Similarity.annTopKWith(idx, typedLit(qv), Queries.Dim, 4, K).collect().toSeq,
-        s"probe drift qid=$qid")
-    }
-    idx.unpersist()
-  }
-
   test("multi-probe at hamming=0 degenerates to the single-bucket probe") {
     val e = Tables(spark, sf, "embeddings")
     val qv = e.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
     val idx = Similarity.annIndex(e, "vec_id", "embedding", Queries.Dim, nBits = 4).cache()
-    val single = Similarity.annTopKWith(idx, typedLit(qv), Queries.Dim, nBits = 4, k = 21)
+    val single = Similarity.annTopKWith(idx, qv, Queries.Dim, nBits = 4, k = 21)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val multi0 = Similarity.annTopKMultiProbe(idx, qv, Queries.Dim, nBits = 4, k = 21, hamming = 0)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -138,7 +119,7 @@ class AnnRecallSpec extends SparkSpec {
         val qids = Seq(0L, 7L, 42L, 99L, 123L)
         val pre = Bench.recallBaselines(e, qids, K)
         val r = Bench.recallFrom(e, pre, (_, qv) =>
-          Similarity.ivfSq8Probe(asg, cents, qv, nProbe, K + 1))
+          Similarity.ivfProbe(asg, cents, qv, nProbe, K + 1, IvfCode.Sq8))
         val scanRows = pre.map { case (_, qv, _) =>
           val ps = Similarity.spillProbeSet(cents, qv, nProbe)
           asg.where(col("centroid").isin(ps.map(x => x: Any): _*))
@@ -174,7 +155,7 @@ class AnnRecallSpec extends SparkSpec {
         (0L until 5L).foreach { pid =>
           val qv = e.where(col("vec_id") === pid)
             .select("embedding").head().getSeq[Float](0).toArray
-          val single = Similarity.ivfProbeSpill(asg, cents, qv, nProbe, k = 10)
+          val single = Similarity.ivfProbe(asg, cents, qv, nProbe, k = 10, IvfCode.Raw)
             .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
           val batchRows = batched.filter(_.getLong(0) == pid).sortBy(_.getInt(3))
             .map(r => (r.getLong(1), r.getDouble(2))).toSeq
@@ -202,7 +183,7 @@ class AnnRecallSpec extends SparkSpec {
         (0L until 5L).foreach { pid =>
           val qv = e.where(col("vec_id") === pid)
             .select("embedding").head().getSeq[Float](0).toArray
-          val single = Similarity.ivfSq8Probe(asg, cents, qv, nProbe, k = 10)
+          val single = Similarity.ivfProbe(asg, cents, qv, nProbe, k = 10, IvfCode.Sq8)
             .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
           val batchRows = batched.filter(_.getLong(0) == pid).sortBy(_.getInt(3))
             .map(r => (r.getLong(1), r.getDouble(2))).toSeq
@@ -220,7 +201,7 @@ class AnnRecallSpec extends SparkSpec {
     val qv = e.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
     val (asg, cents) = Similarity.ivfIndexSpill(e, "vec_id", "embedding",
       nCentroids = 16, lloydIters = 1)
-    val full = Similarity.ivfProbeSpill(asg, cents, qv, nProbe = 16, k = K)
+    val full = Similarity.ivfProbe(asg, cents, qv, nProbe = 16, k = K, IvfCode.Raw)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Similarity.cosineTopK(e, "vec_id", "embedding",
         typedLit(qv), K)
@@ -244,7 +225,7 @@ class AnnRecallSpec extends SparkSpec {
         val qids = Seq(0L, 7L, 42L, 99L, 123L)
         val pre = Bench.recallBaselines(e, qids, K)
         val r = Bench.recallFrom(e, pre, (_, qv) =>
-          Similarity.ivfProbeSpill(asg, cents, qv, nProbe, K + 1))
+          Similarity.ivfProbe(asg, cents, qv, nProbe, K + 1, IvfCode.Raw))
         val scan = pre.map { case (_, qv, _) =>
           val ps = Similarity.spillProbeSet(cents, qv, nProbe)
           asg.where(col("centroid").isin(ps.map(x => x: Any): _*))
@@ -272,13 +253,13 @@ class AnnRecallSpec extends SparkSpec {
       try {
         val books = Similarity.pqTrain(qd, Queries.Dim, m = 8, ksub = 16,
           iters = 1)
-        val coded = qd.withColumn("pcode",
-          Similarity.pqCodeExpr(col("qv"), books, Queries.Dim / 8)).cache()
+        val pq = IvfCode.Pq(books)
+        val coded = pq.rows(qd).cache()
         try {
           val qids = Seq(0L, 7L, 42L, 99L, 123L)
           val pre = Bench.recallBaselines(e, qids, K)
           val r = Bench.recallFrom(e, pre, (_, qv) =>
-            Similarity.pqProbeCoded(coded, books, qv, k = K + 1, rerank = 8))
+            pq.topK(coded, qv, k = K + 1))
           // the byte claim is structural: m bytes scanned per vector
           val byteFrac = 8.0 / (8.0 * Queries.Dim)
           info(f"ann_pq recall@20 = $r%.3f at byte scan $byteFrac%.4f (+160-row rerank)")
@@ -295,8 +276,8 @@ class AnnRecallSpec extends SparkSpec {
           val asg = asg0.cache()
           try {
             val rc = Bench.recallFrom(e, pre, (_, qv) =>
-              Similarity.ivfPqProbe(asg, cents, books, qv,
-                Similarity.nProbeWideFor(nLists), k = K + 1, rerank = 8))
+              Similarity.ivfProbe(asg, cents, qv,
+                Similarity.nProbeWideFor(nLists), k = K + 1, pq))
             // measured 0.85 — ABOVE flat PQ's 0.71: the row pruning
             // removes the distant distractors PQ distortion would
             // otherwise rank into the rerank set
@@ -308,8 +289,8 @@ class AnnRecallSpec extends SparkSpec {
             // lift-over-flat pinned while leaving fixture noise room
             val rbooks = Similarity.rpqTrain(asg, cents, Queries.Dim)
             val rr = Bench.recallFrom(e, pre, (_, qv) =>
-              Similarity.ivfRpqProbe(asg, cents, rbooks, qv,
-                Similarity.nProbeWideFor(nLists), k = K + 1, rerank = 8))
+              Similarity.ivfProbe(asg, cents, qv,
+                Similarity.nProbeWideFor(nLists), k = K + 1, IvfCode.Rpq(rbooks)))
             info(f"ann_ivf_rpq recall@20 = $rr%.3f")
             assert(rr >= 0.85, f"residual IVF×PQ degraded: $rr%.3f (floor 0.85)")
             assert(rr >= rc - 0.05,
@@ -346,8 +327,8 @@ class AnnRecallSpec extends SparkSpec {
         val qids = Seq(0L, 7L, 42L, 99L, 123L)
         val pre = Bench.recallBaselines(e, qids, K)
         val r = Bench.recallFrom(e, pre, (_, qv) =>
-          Similarity.ivfSq8Probe(asg, cents, qv,
-            Similarity.nProbeFor(nLists), k = K + 1))
+          Similarity.ivfProbe(asg, cents, qv,
+            Similarity.nProbeFor(nLists), k = K + 1, IvfCode.Sq8))
         info(f"ivf+sq8 recall@20 = $r%.3f")
         assert(r >= 0.7, f"composed IVF+SQ8 rung degraded: $r%.3f")
       } finally asg.unpersist(): Unit
@@ -372,11 +353,37 @@ class AnnRecallSpec extends SparkSpec {
     val zero = Array(0f, 0f, 0f, 0f)
     assert(Similarity.sq8TopK(emb, "vec_id", "embedding", zero, k = 5).count() === 0L)
     val (asg, cents) = Similarity.ivfIndexSpill(emb, "vec_id", "embedding", 2)
-    assert(Similarity.ivfSq8Probe(asg, cents, zero, nProbe = 1, k = 5).count() === 0L)
+    // every approx code of the one spill-IVF probe: int8, PQ and
+    // residual PQ (2 subspaces × 2 sub-centroids over the 4-dim rows)
+    val qd = Similarity.quantized(emb, "vec_id", "embedding")
+    val codes = Seq(IvfCode.Sq8,
+      IvfCode.Pq(Similarity.pqTrain(qd, 4, m = 2, ksub = 2, iters = 1)),
+      IvfCode.Rpq(Similarity.rpqTrain(asg, cents, 4, m = 2, ksub = 2)))
+    codes.foreach(code => assert(
+      Similarity.ivfProbe(asg, cents, zero, nProbe = 1, k = 5, code).count() === 0L, s"$code"))
     val dir = java.nio.file.Files.createTempDirectory("sq8-zero").toString
     GraftIndexes.writeSq8(spark, emb, "vec_id", "embedding", s"$dir/sq8")
     assert(GraftIndexes.sq8Probe(GraftIndexes.openSq8(spark, s"$dir/sq8"),
       emb, "vec_id", "embedding", zero, k = 5).count() === 0L)
+  }
+
+  test("probing a spill-IVF assignment without `primary` fails with the rebuild message") {
+    import spark.implicits._
+    val emb = Seq((0L, Array(1f, 2f, 3f, 4f)), (1L, Array(4f, 3f, 2f, 1f)))
+      .toDF("vec_id", "embedding")
+    val (asg, cents) = Similarity.ivfIndexSpill(emb, "vec_id", "embedding", 2)
+    val old = asg.drop("primary")
+    val q = Array(1f, 2f, 3f, 4f)
+    val probes = Seq[() => DataFrame](
+      () => Similarity.ivfProbe(old, cents, q, nProbe = 1, k = 5, IvfCode.Raw),
+      () => Similarity.ivfProbe(old, cents, q, nProbe = 2, k = 5, IvfCode.Sq8),
+      () => Similarity.ivfProbeSpillJoin(old, cents, emb, "vec_id", "embedding",
+        nProbe = 1, k = 5))
+    probes.foreach { probe =>
+      val e = intercept[IllegalArgumentException](probe())
+      assert(e.getMessage.contains("rebuild the layout with writeIvf/writeIvfSq8"),
+        e.getMessage)
+    }
   }
 
   test("sq8Codes stay in [-127,127] on the int8 grid and preserve direction") {
@@ -454,7 +461,7 @@ class AnnRecallSpec extends SparkSpec {
     // trade from broken bucketing: probing a WRONG bucket scores at the
     // background rate K/N = 20/2000 = 0.01.
     val r = recallAt(Seq(0L, 7L, 42L, 99L, 123L), (e, qv) =>
-      Similarity.annTopK(e, "vec_id", "embedding", typedLit(qv),
+      Similarity.annTopK(e, "vec_id", "embedding", qv,
         dim = Queries.Dim, nBits = 3, k = K + 1))
     info(f"ann recall@20 = $r%.3f")
     assert(r >= 0.05, f"LSH recall degraded: $r%.3f (uniform-vector floor 0.05 at 1/8 scan)")

@@ -223,7 +223,7 @@ class GraftEngineSpec extends SparkSpec {
     assert(pruned.queryExecution.executedPlan.toString
       .contains("PartitionFilters: [isnotnull(bucket"))
     val idx = GraftIndexes.openAnn(spark, s"$dir/ann")
-    val qv = typedLit(e.where(col("vec_id") === 0).head().getSeq[Float](1).toArray)
+    val qv = e.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
     assert(Similarity.annTopKWith(idx, qv, 64, 4, 10).collect().toSeq ===
       Similarity.annTopK(e, "vec_id", "embedding", qv, 64, 4, 10).collect().toSeq)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.IvfCode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,12 +42,11 @@ class PlanAuditSpec extends SparkSpec {
     }
     // the registered ivf_topk (seed-centroid IVF) is a lazy pipeline
     import graft.operators.Similarity
-    import org.apache.spark.sql.functions.typedLit
     val e = Tables(spark, sf, "embeddings")
     val qv = e.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
     val p = plan(Similarity.ivfTopK(e, "vec_id", "embedding",
-      typedLit(qv), nCentroids = 16, nProbe = 5, k = 20))
+      qv, nCentroids = 16, nProbe = 5, k = 20))
     assert(p.contains("TakeOrderedAndProject"), "ivf_topk lacks TakeOrdered")
     // the probe is partition pruning on the centroid literal set, never
     // a join against the centroid table
@@ -57,7 +57,7 @@ class PlanAuditSpec extends SparkSpec {
     // pruning), no join, top-k as TakeOrdered
     val lazySpill = Similarity.withSpillIvf(e, "vec_id", "embedding", 16,
         lloydIters = 1, materialize = false) { (_, asg, cents) =>
-      Similarity.ivfProbeSpill(asg, cents, qv, nProbe = 2, k = 20)
+      Similarity.ivfProbe(asg, cents, qv, nProbe = 2, k = 20, IvfCode.Raw)
     }
     val ps = plan(lazySpill)
     assert(ps.contains("TakeOrderedAndProject"), "ann_topk spill (lazy) lacks TakeOrdered")
@@ -575,7 +575,7 @@ class PlanAuditSpec extends SparkSpec {
       val probeSet = Similarity.spillProbeSet(cents, q, nProbe = 3)
       val existing = probeSet.count(c =>
         new java.io.File(s"$dir/ivf/assign/centroid=$c").isDirectory)
-      val df = Similarity.ivfProbeSpill(asg, cents, q, nProbe = 3, k = 10)
+      val df = Similarity.ivfProbe(asg, cents, q, nProbe = 3, k = 10, IvfCode.Raw)
       // the reopened probe is bit-identical to the in-memory one
       // (centroids round-trip bitwise through the parquet sidecar)
       val (memAsg, memCents) = Similarity.ivfIndexSpill(emb, "vec_id", "embedding",
@@ -583,7 +583,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(cents.map(_.toSeq).toSeq === memCents.map(_.toSeq).toSeq,
         "persisted centroids drifted from the in-memory training")
       assert(df.collect().toSeq ===
-        Similarity.ivfProbeSpill(memAsg, memCents, q, nProbe = 3, k = 10).collect().toSeq)
+        Similarity.ivfProbe(memAsg, memCents, q, nProbe = 3, k = 10, IvfCode.Raw).collect().toSeq)
       val p = df.queryExecution.executedPlan.toString
       assert("""PartitionFilters: \[[^\]]*centroid[^\]]* IN""".r.findFirstIn(p).isDefined,
         s"probe is not a partition filter:\n${p.take(500)}")
@@ -662,14 +662,14 @@ class PlanAuditSpec extends SparkSpec {
     // the split probe is bit-identical to the in-memory composed rung
     val (memAsg, memCents) = Similarity.ivfIndexSpill(emb, "vec_id", "embedding",
       nCentroids = 16, lloydIters = 1)
-    val mem = Similarity.ivfSq8Probe(memAsg, memCents, q, nProbe = 3, k = 10)
+    val mem = Similarity.ivfProbe(memAsg, memCents, q, nProbe = 3, k = 10, IvfCode.Sq8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq === mem,
       "persisted split probe diverged from the in-memory composed rung")
     // the warm serving form (one plan over the opened c8 layout) ranks
     // on the STORED codes and is also bit-identical — byte→double cast
     // of integral codes is exact
-    val coded = Similarity.ivfSq8Probe(asg, cents, q, nProbe = 3, k = 10)
+    val coded = Similarity.ivfProbe(asg, cents, q, nProbe = 3, k = 10, IvfCode.Sq8)
     val codedProbe = coded.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert("""ReadSchema: [^\n]*c8""".r.findFirstIn(plan(coded)).isDefined,
       s"probe over the coded layout does not read the stored codes:\n${plan(coded).take(500)}")
@@ -773,7 +773,7 @@ class PlanAuditSpec extends SparkSpec {
       nCentroids = 16, lloydIters = 1)
     val centsBefore = GraftIndexes.openIvf(spark, s"$dir/ivf")._2
     // the one append reads `c8` off the layout and codes the delta with
-    // ivfSq8Rows (appendIvfSq8 forwards here)
+    // IvfCode.Sq8's rows (appendIvfSq8 forwards here)
     GraftIndexes.appendIvf(spark, delta, "vec_id", "embedding", s"$dir/ivf")
     val (asg, cents) = GraftIndexes.openIvf(spark, s"$dir/ivf")
     // no retrain on append
@@ -784,7 +784,7 @@ class PlanAuditSpec extends SparkSpec {
     val got = GraftIndexes.ivfSq8ProbeSplit(asg, cents, q, nProbe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val memAsg = Similarity.ivfAssignSpill(emb, "vec_id", "embedding", cents)
-    val want = Similarity.ivfSq8Probe(memAsg, cents, q, nProbe = 3, k = 10)
+    val want = Similarity.ivfProbe(memAsg, cents, q, nProbe = 3, k = 10, IvfCode.Sq8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got === want, "appended composed layout diverged from one-shot probe")
   }
@@ -861,10 +861,10 @@ class PlanAuditSpec extends SparkSpec {
     // bitwise: integral doubles)
     val q = emb.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
     val persisted = GraftIndexes.pqProbe(codes, emb, "vec_id", "embedding",
-        books, q, k = 20, rerank = 8)
+        books, q, k = 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val mem = Similarity.pqTopK(emb, "vec_id", "embedding", q, k = 20,
-        dim = Queries.Dim, rerank = 8)
+        dim = Queries.Dim)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(persisted === mem, "persisted PQ probe diverged from the in-memory rung")
     // incremental append face: encode-only against the read-back books
@@ -883,11 +883,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(codes3.count() === once, "retried appendPq duplicated code rows")
     assert(booksAfter.map(_.map(_.toSeq).toSeq).toSeq ===
       booksBefore.map(_.map(_.toSeq).toSeq).toSeq, "appendPq retrained books")
-    // append encodes through the ONE pqCodeExpr projection: the
+    // append encodes through the ONE IvfCode.Pq projection: the
     // appended rows' codes equal a one-shot encode to the same books
-    val oneShot = delta.select(col("vec_id").cast("long").as("vec_id"),
-        Similarity.pqCodeExpr(graft.functions.VecFns.quantize(col("embedding")),
-          booksBefore, Queries.Dim / booksBefore.length).as("pcode"))
+    val oneShot = IvfCode.Pq(booksBefore)
+      .rows(Similarity.quantized(delta, "vec_id", "embedding")).select("vec_id", "pcode")
       .collect().map(r => (r.getLong(0), r.getSeq[Byte](1))).toSet
     val appended = codes3.join(delta.select(col("vec_id").cast("long").as("vec_id")),
         Seq("vec_id"), "left_semi")
@@ -915,12 +914,12 @@ class PlanAuditSpec extends SparkSpec {
     // books are integral doubles — bitwise parquet round-trip; the cold
     // form retrains from the same deterministic seeds)
     val q = emb.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
-    val persisted = Similarity.rpqProbeLayout(asg, cents, books, q,
-        nProbe, k = 20).collect()
+    val persisted = Similarity.ivfProbe(asg, cents, q,
+        nProbe, k = 20, IvfCode.Rpq(books)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val mem = Similarity.withSpillIvf(emb, "vec_id", "embedding", nLists) {
-        (_, a, c) => Similarity.ivfRpqProbe(a, c,
-          Similarity.rpqTrain(a, c, Queries.Dim), q, nProbe, k = 20)
+        (_, a, c) => Similarity.ivfProbe(a, c, q, nProbe, k = 20,
+          IvfCode.Rpq(Similarity.rpqTrain(a, c, Queries.Dim)))
       }.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(persisted === mem,
       "persisted residual probe diverged from the in-memory rung")
@@ -939,11 +938,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(asg2.count() === once, "retried residual-layout appendIvf duplicated rows")
     assert(booksAfter.map(_.map(_.toSeq).toSeq).toSeq ===
       booksBefore.map(_.map(_.toSeq).toSeq).toSeq, "appendIvf retrained books")
-    // appended rows code through the ONE rpqRows projection: equal to a
-    // one-shot encode of the delta against the same sidecars
-    val oneShot = Similarity.rpqRows(
+    // appended rows code through the ONE IvfCode.Rpq projection: equal
+    // to a one-shot encode of the delta against the same sidecars
+    val oneShot = IvfCode.Rpq(booksAfter).rows(
         Similarity.ivfAssignSpill(delta, "vec_id", "embedding", cents2),
-        cents2, booksAfter)
+        IvfCode.lists(cents2, cents2.indices))
       .collect().map(r => (r.getLong(0), r.getAs[Int]("centroid"),
         r.getSeq[Byte](2))).toSet
     val appended = asg2.join(delta.select(col("vec_id").cast("long").as("vec_id")),

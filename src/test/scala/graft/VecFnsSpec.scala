@@ -30,6 +30,17 @@ class VecFnsSpec extends SparkSpec {
     assert(plan.contains("WholeStageCodegen") || plan.contains("*("), "no codegen")
   }
 
+  test("driver quantizeLocal equals the quantize column element for element") {
+    // every driver-literal query (the ANN probes, ivfTopK) relies on it
+    val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    for (qid <- Seq(0L, 42L, 123L)) {
+      val row = e.where($"vec_id" === qid)
+        .select($"embedding", VecFns.quantize($"embedding")).head()
+      assert(VecFns.quantizeLocal(row.getSeq[Float](0).toArray).toSeq ===
+        row.getSeq[Double](1), s"quantize drift qid=$qid")
+    }
+  }
+
   test("cosine of a vector with itself is 1") {
     val df = Seq((1L, Array(0.3f, -0.4f, 0.5f))).toDF("id", "v")
     val c = df.select(VecFns.cosine($"v", $"v")).head().getDouble(0)
@@ -54,9 +65,9 @@ class VecFnsSpec extends SparkSpec {
 
   test("IVF with all centroids probed equals exact top-k; fewer probes is a subset") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = typedLit(e.where($"vec_id" === 0).head().getSeq[Float](1).toArray)
+    val q = e.where($"vec_id" === 0).head().getSeq[Float](1).toArray
     def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSeq
-    val exact = ids(Similarity.cosineTopK(e, "vec_id", "embedding", q, 10))
+    val exact = ids(Similarity.cosineTopK(e, "vec_id", "embedding", typedLit(q), 10))
     val full = ids(Similarity.ivfTopK(e, "vec_id", "embedding", q, 8, 8, 10))
     val pruned = ids(Similarity.ivfTopK(e, "vec_id", "embedding", q, 8, 2, 10))
     assert(full === exact) // probing every list IS the exact scan
